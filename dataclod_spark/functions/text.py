@@ -202,12 +202,6 @@ def _trigram_score_from(trigrams: Column, lang: str) -> Column:
     return F.size(F.filter(trigrams, lambda t: t.isin(*profile)))
 
 
-def trigram_score(col: Column, lang: str) -> Column:
-    """Count of the document's trigrams that appear in the language's
-    profile (frequency-weighted membership — the n-gram heuristic)."""
-    return _trigram_score_from(char_trigrams(col), lang)
-
-
 def _langid_ngram_from(trigrams: Column) -> Column:
     """Argmax of profile-hit counts over a staged trigram array; ties
     broken by LANG_PRIORITY, 'und' when all zero."""

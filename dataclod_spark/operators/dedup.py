@@ -414,19 +414,9 @@ def connected_components(
     import numpy as np
     import pyarrow.compute as pc
 
-    try:
-        tbl = probe.toArrow()
-        n_edges = tbl.num_rows
-        col_a, col_b = tbl.column("a"), tbl.column("b")
-    except AttributeError:  # pre-4.0 fallback: Rows keep longs exact
-        import pyarrow as pa
-
-        rows_ab = probe.collect()
-        n_edges = len(rows_ab)
-        # chunked_array: the pc.filter/drop_null results below are
-        # combine_chunks()'d, which plain Arrays don't implement
-        col_a = pa.chunked_array([pa.array([r["a"] for r in rows_ab], type=pa.int64())])
-        col_b = pa.chunked_array([pa.array([r["b"] for r in rows_ab], type=pa.int64())])
+    tbl = probe.toArrow()
+    n_edges = tbl.num_rows
+    col_a, col_b = tbl.column("a"), tbl.column("b")
 
     if n_edges <= driver_edge_limit:
         if stats is not None:

@@ -45,7 +45,7 @@ import math
 from typing import Iterable, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -441,21 +441,69 @@ def envelope_wkb(x1: pd.Series, y1: pd.Series, x2: pd.Series, y2: pd.Series) -> 
     return pd.Series(out)
 
 
-def with_bbox(df: DataFrame, geom_col: str, prefix: str) -> DataFrame:
-    """Add {prefix}xmin..{prefix}ymax bbox columns for a WKB geometry column."""
-    b = _bbox_udf(F.col(geom_col))
-    return (
-        df.withColumn("__bb", b)
-        .select(
-            "*",
-            F.col("__bb.xmin").alias(f"{prefix}xmin"),
-            F.col("__bb.ymin").alias(f"{prefix}ymin"),
-            F.col("__bb.xmax").alias(f"{prefix}xmax"),
-            F.col("__bb.ymax").alias(f"{prefix}ymax"),
-            F.col("__bb.bbox_exact").alias(f"{prefix}exact"),
-        )
-        .drop("__bb")
-    )
+def _sql_double(v: float) -> str:
+    """``v`` as a SQL DOUBLE literal.  Finite values are spelled by
+    ``repr``, which round-trips every double exactly; ±inf and NaN have no
+    numeric spelling in the SQL grammar and are cast from their names."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"CAST({v!r} AS DOUBLE)"
+    name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _bucket_sql(bounds: list[float], coord: str) -> str:
+    """Index of the grid cell containing ``coord`` = #boundaries <= coord.
+
+    A flat sum of CASE terms — a plain expression tree that stays inside
+    whole-stage codegen.  (A higher-order ``aggregate`` over a literal
+    array computes the same thing but is evaluated interpreted per row,
+    ~10x slower in the hot explode/join path.)  Bounds ride into the plan
+    as literals — the Spark analogue of the reference broadcasting
+    partition boundaries to every probe task."""
+    if not bounds:
+        return "0"
+    return "(" + " + ".join(
+        f"(CASE WHEN {coord} >= {_sql_double(b)} THEN 1 ELSE 0 END)" for b in bounds
+    ) + ")"
+
+
+# the bbox operand of a side without precomputed bbox expressions: the
+# fields of the ``__bb`` struct the bbox UDF returns
+_UDF_BBOX = ("__bb.xmin", "__bb.ymin", "__bb.xmax", "__bb.ymax", "__bb.bbox_exact")
+
+
+def _flat_bbox_sql(bbox: tuple) -> list[str]:
+    """Select items attaching a bbox operand as the flat columns
+    ``__bbx0, __bby0, __bbx1, __bby1`` (doubles) and ``__bbe`` (exact).
+
+    ``bbox`` holds SQL expressions over the side's own columns: four
+    (xmin, ymin, xmax, ymax) assert the geometries bbox-exact (points /
+    axis-aligned rectangles); a fifth is the exactness flag."""
+    x0, y0, x1, y1, *exact = bbox
+    return [
+        f"CAST(({x0}) AS DOUBLE) AS __bbx0",
+        f"CAST(({y0}) AS DOUBLE) AS __bby0",
+        f"CAST(({x1}) AS DOUBLE) AS __bbx1",
+        f"CAST(({y1}) AS DOUBLE) AS __bby1",
+        f"{exact[0] if exact else 'true'} AS __bbe",
+    ]
+
+
+def _asserted_exact(bbox: Optional[tuple]) -> bool:
+    """True when a bbox operand declares every geometry bbox-exact."""
+    return bbox is not None and tuple(bbox[4:]) in ((), ("true",))
+
+
+def _rowid_sql(cols: list[str]) -> str:
+    """Deterministic 128-bit row id: two independent xxhash64 seeds
+    (default and 0x9E3779B9) over the natural columns.  Unlike monotonically_increasing_id it survives
+    partition recomputation, so the outer/semi completions are exact
+    without pinning the inputs in cache (≈ the reference's positional
+    visited bitmaps, which are likewise recompute-stable).  Identical rows
+    share an id; that is correct here — twins match or miss identically."""
+    refs = ", ".join(f"`{c}`" for c in cols)
+    return f"named_struct('h1', xxhash64({refs}), 'h2', xxhash64(2654435769, {refs}))"
 
 
 class _Grid:
@@ -470,6 +518,11 @@ class _Grid:
     (first/last cell extend to ±inf), so out-of-sample rows always land in
     a cell (partition contract: rows are never dropped —
     ``partitioning/mod.rs:42-77``).
+
+    The grid join is built only from SQL fragments — this class's side
+    projection and candidate conjuncts, and the bucket, tightening and
+    verdict functions beside it.  The DataFrame operator applies them with
+    ``selectExpr``/``F.expr``; the SQL dispatch splices them into text.
     """
 
     def __init__(self, samples: list[tuple[float, float, float, float]], cell_target: int):
@@ -493,86 +546,62 @@ class _Grid:
                 bounds.append(v)
         return bounds
 
-    @staticmethod
-    def _bucket(bounds: list[float], coord: Column) -> Column:
-        """Index of the cell containing ``coord`` = #boundaries <= coord.
+    def cells_sql(self, expand: float) -> list[list[str]]:
+        """The side projection, as SELECT lists applied in order over a
+        relation carrying the flat bbox columns (:func:`_flat_bbox_sql`):
+        the (expanded) bbox's min/max cell indices, then one row per grid
+        cell it intersects — two plain ``explode(sequence(lo, hi))``
+        generators (x then y), ordinary expressions that stay in codegen —
+        then ``__cell``.
 
-        Built as a flat sum of ``when`` terms — a plain expression tree that
-        stays inside whole-stage codegen.  (A higher-order ``aggregate``
-        over a literal array computes the same thing but is evaluated
-        interpreted per row, ~10x slower in the hot explode/join path.)
-        Bounds ride into the plan as literals — the Spark analogue of the
-        reference broadcasting partition boundaries to every probe task.
-        """
-        expr: Column = F.lit(0)
-        for b in bounds:
-            expr = expr + F.when(coord >= float(b), 1).otherwise(0)
-        return expr
-
-    @staticmethod
-    def _bucket_expr(bounds: list[float], coord_sql: str) -> Column:
-        """:meth:`_bucket` built as ONE parsed SQL string (the identical
-        CASE-sum Catalyst tree the dispatch path's ``_bucket_sql`` emits).
-        The per-term Column build costs ~4 py4j round trips per boundary ×
-        8 bucket chains per join — measured 0.35 s of g6's ~1.0 s plan
-        CONSTRUCTION per run (driver-side, guide §5); one ``F.expr`` parse
-        replaces all of it.  Falls back to the Column build when a boundary
-        is non-finite (repr round-trips only finite doubles through the
-        SQL parser)."""
-        if not bounds:
-            return F.lit(0)
-        if all(math.isfinite(b) for b in bounds):
-            return F.expr(
-                "(" + " + ".join(
-                    f"(CASE WHEN {coord_sql} >= CAST({float(b)!r} AS DOUBLE) "
-                    "THEN 1 ELSE 0 END)"
-                    for b in bounds
-                ) + ")"
-            )
-        return _Grid._bucket(bounds, F.expr(coord_sql))
-
-    def explode_cells(self, df: DataFrame, prefix: str, expand: float) -> DataFrame:
-        """Add ``__cell`` rows for every grid cell the (expanded) bbox
-        intersects: two plain ``explode(sequence(lo, hi))`` generators (x
-        then y) — ordinary expressions that stay in codegen, no
-        higher-order array construction.
-
-        The min cell indices ride along as ``__{prefix}ix0``/``__{prefix}iy0``
-        so the per-pair reference-point dedup downstream is O(1): the bucket
+        The min cell indices ride along as ``__ix0``/``__iy0`` so the
+        per-pair reference-point dedup downstream is O(1): the bucket
         function is monotone, hence bucket(max(a, b)) = max(bucket(a),
         bucket(b)) — the O(#boundaries) bucket scan runs once per input row
         here, never per candidate pair."""
-        ex = float(expand)
-        ix0 = self._bucket_expr(self.xb, f"(`{prefix}xmin` - CAST({ex!r} AS DOUBLE))")
-        ix1 = self._bucket_expr(self.xb, f"(`{prefix}xmax` + CAST({ex!r} AS DOUBLE))")
-        iy0 = self._bucket_expr(self.yb, f"(`{prefix}ymin` - CAST({ex!r} AS DOUBLE))")
-        iy1 = self._bucket_expr(self.yb, f"(`{prefix}ymax` + CAST({ex!r} AS DOUBLE))")
-        return (
-            df.withColumn(f"__{prefix}ix0", ix0)
-            .withColumn(f"__{prefix}iy0", iy0)
-            .withColumn("__cx", F.explode(F.sequence(F.col(f"__{prefix}ix0"), ix1)))
-            .withColumn("__cy", F.explode(F.sequence(F.col(f"__{prefix}iy0"), iy1)))
-            .withColumn("__cell", F.col("__cx") * self.ny + F.col("__cy"))
-            .drop("__cx", "__cy")
-        )
+        e = _sql_double(expand)
+        return [
+            [
+                "*",
+                f"{_bucket_sql(self.xb, f'(__bbx0 - {e})')} AS __ix0",
+                f"{_bucket_sql(self.xb, f'(__bbx1 + {e})')} AS __ix1",
+                f"{_bucket_sql(self.yb, f'(__bby0 - {e})')} AS __iy0",
+                f"{_bucket_sql(self.yb, f'(__bby1 + {e})')} AS __iy1",
+            ],
+            ["*", "explode(sequence(__ix0, __ix1)) AS __cx"],
+            ["*", "explode(sequence(__iy0, __iy1)) AS __cy"],
+            ["* EXCEPT (__cx, __cy, __ix1, __iy1)", f"__cx * {self.ny} + __cy AS __cell"],
+        ]
 
-    def ref_point_in_cell(self) -> Column:
-        """Reference-point dedup: emit the pair only in the cell holding the
-        top-left corner of the (expanded) bbox intersection — each pair
-        survives exactly once with no distinct/shuffle (replaces the
-        reference's Multi-cell visited bitmaps, ``stream.rs:82-86``).
+    def candidate_sql(self, l: str, r: str, lbox: tuple, rbox: tuple, expand: float) -> list[str]:
+        """Candidate-pair conjuncts of the grid equi-join between two
+        sides built by :meth:`cells_sql` (``l``/``r`` qualify their
+        ``__cell``/``__ix0``/``__iy0``; ``lbox``/``rbox`` spell their
+        (xmin, ymin, xmax, ymax)): cell equality, bbox overlap with the left
+        side expanded by ``expand``, and the reference-point dedup — a pair
+        is kept only in the cell holding the top-left corner of the
+        (expanded) bbox intersection, so each pair survives exactly once
+        with no distinct/shuffle (replaces the reference's Multi-cell
+        visited bitmaps, ``stream.rs:82-86``).  That corner's cell is the
+        ``max`` of the two sides' min cell indices (bucket is monotone), a
+        constant-work predicate per pair."""
+        e = _sql_double(expand)
+        lx0, ly0, lx1, ly1 = lbox
+        rx0, ry0, rx1, ry1 = rbox
+        return [
+            f"{l}__cell = {r}__cell",
+            f"{lx0} - {e} <= {rx1}",
+            f"{rx0} <= {lx1} + {e}",
+            f"{ly0} - {e} <= {ry1}",
+            f"{ry0} <= {ly1} + {e}",
+            f"(greatest({l}__ix0, {r}__ix0) * {self.ny}"
+            f" + greatest({l}__iy0, {r}__iy0)) = {l}__cell",
+        ]
 
-        The intersection corner's cell is ``max`` of the two sides'
-        precomputed min cell indices (bucket is monotone), so this is a
-        constant-work predicate per candidate pair."""
-        cell = (
-            F.greatest(F.col("__l_ix0"), F.col("__r_ix0")) * self.ny
-            + F.greatest(F.col("__l_iy0"), F.col("__r_iy0"))
-        )
-        return cell == F.col("__cell")
 
-
-def exact_verdict(predicate: str, distance: Optional[float]) -> Column:
+def _verdict_sql(
+    key: str, lf: tuple, rf: tuple, e: float = 0.0, strict: bool = False
+) -> str:
     """Exact predicate verdict for pairs where BOTH geometries equal their
     own bbox (point or axis-aligned rectangle — ``bbox_exact``): every join
     predicate is then decidable from the bbox coordinates alone, entirely
@@ -580,103 +609,103 @@ def exact_verdict(predicate: str, distance: Optional[float]) -> Column:
     reference's dedicated point/rect refinement fast paths — for workloads
     of points and axis rectangles no row ever crosses into Python.
 
+    ``lf``/``rf`` are (xmin, ymin, xmax, ymax) SQL expressions in the
+    predicate's argument order; ``key`` ``bbox`` is plain overlap; ``e`` is
+    the dwithin distance, ``strict`` its ``<`` form.
+
     OGC semantics notes (interior/boundary handled per dimension pairing):
     a bbox-exact geometry is a POINT iff its bbox is degenerate in both
     axes; otherwise it is a non-degenerate axis rectangle POLYGON.
     """
-    lx0, ly0 = F.col("l_xmin"), F.col("l_ymin")
-    lx1, ly1 = F.col("l_xmax"), F.col("l_ymax")
-    rx0, ry0 = F.col("r_xmin"), F.col("r_ymin")
-    rx1, ry1 = F.col("r_xmax"), F.col("r_ymax")
-    lpt = (lx0 == lx1) & (ly0 == ly1)
-    rpt = (rx0 == rx1) & (ry0 == ry1)
-    overlap = (lx0 <= rx1) & (rx0 <= lx1) & (ly0 <= ry1) & (ry0 <= ly1)
-    eq = (lx0 == rx0) & (lx1 == rx1) & (ly0 == ry0) & (ly1 == ry1)
-    l_in_r = (rx0 <= lx0) & (lx1 <= rx1) & (ry0 <= ly0) & (ly1 <= ry1)
-    r_in_l = (lx0 <= rx0) & (rx1 <= lx1) & (ly0 <= ry0) & (ry1 <= ly1)
+    lx0, ly0, lx1, ly1 = lf
+    rx0, ry0, rx1, ry1 = rf
+    lpt = f"({lx0} = {lx1} AND {ly0} = {ly1})"
+    rpt = f"({rx0} = {rx1} AND {ry0} = {ry1})"
+    overlap = f"({lx0} <= {rx1} AND {rx0} <= {lx1} AND {ly0} <= {ry1} AND {ry0} <= {ly1})"
+    eq = f"({lx0} = {rx0} AND {lx1} = {rx1} AND {ly0} = {ry0} AND {ly1} = {ry1})"
+    l_in_r = f"({rx0} <= {lx0} AND {lx1} <= {rx1} AND {ry0} <= {ly0} AND {ly1} <= {ry1})"
+    r_in_l = f"({lx0} <= {rx0} AND {rx1} <= {lx1} AND {ly0} <= {ry0} AND {ry1} <= {ly1})"
     # strictly inside the other's interior
-    l_in_r_open = (rx0 < lx0) & (lx1 < rx1) & (ry0 < ly0) & (ly1 < ry1)
-    r_in_l_open = (lx0 < rx0) & (rx1 < lx1) & (ly0 < ry0) & (ry1 < ly1)
-    if predicate == "intersects":
+    l_in_r_open = f"({rx0} < {lx0} AND {lx1} < {rx1} AND {ry0} < {ly0} AND {ly1} < {ry1})"
+    r_in_l_open = f"({lx0} < {rx0} AND {rx1} < {lx1} AND {ly0} < {ry0} AND {ry1} < {ly1})"
+    if key in ("intersects", "bbox"):
         return overlap
-    if predicate == "equals":
+    if key == "equals":
         return eq
-    if predicate == "covered_by":
+    if key == "covered_by":
         return l_in_r
-    if predicate == "covers":
+    if key == "covers":
         return r_in_l
-    if predicate == "within":
+    if key == "within":
         # point-on-rect-boundary is NOT within (interior test is strict);
         # rect-in-rect may share boundary (interiors still intersect)
         return (
-            F.when(lpt & rpt, eq)
-            .when(lpt, l_in_r_open)
-            .when(rpt, F.lit(False))
-            .otherwise(l_in_r)
+            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
+            f"WHEN {lpt} THEN {l_in_r_open} "
+            f"WHEN {rpt} THEN false ELSE {l_in_r} END)"
         )
-    if predicate == "contains":
+    if key == "contains":
         return (
-            F.when(lpt & rpt, eq)
-            .when(rpt, r_in_l_open)
-            .when(lpt, F.lit(False))
-            .otherwise(r_in_l)
+            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
+            f"WHEN {rpt} THEN {r_in_l_open} "
+            f"WHEN {lpt} THEN false ELSE {r_in_l} END)"
         )
-    if predicate == "touches":
+    if key == "touches":
         # boundaries meet, interiors don't
-        degenerate = (F.greatest(lx0, rx0) == F.least(lx1, rx1)) | (
-            F.greatest(ly0, ry0) == F.least(ly1, ry1)
+        degen = (
+            f"(greatest({lx0}, {rx0}) = least({lx1}, {rx1}) "
+            f"OR greatest({ly0}, {ry0}) = least({ly1}, {ry1}))"
         )
-        l_on_r_bnd = overlap & ((lx0 == rx0) | (lx0 == rx1) | (ly0 == ry0) | (ly0 == ry1))
-        r_on_l_bnd = overlap & ((rx0 == lx0) | (rx0 == lx1) | (ry0 == ly0) | (ry0 == ly1))
+        l_on_r = f"({overlap} AND ({lx0} = {rx0} OR {lx0} = {rx1} OR {ly0} = {ry0} OR {ly0} = {ry1}))"
+        r_on_l = f"({overlap} AND ({rx0} = {lx0} OR {rx0} = {lx1} OR {ry0} = {ly0} OR {ry0} = {ly1}))"
         return (
-            F.when(lpt & rpt, F.lit(False))
-            .when(lpt, l_on_r_bnd)
-            .when(rpt, r_on_l_bnd)
-            .otherwise(overlap & degenerate)
+            f"(CASE WHEN {lpt} AND {rpt} THEN false "
+            f"WHEN {lpt} THEN {l_on_r} WHEN {rpt} THEN {r_on_l} "
+            f"ELSE ({overlap} AND {degen}) END)"
         )
-    if predicate == "overlaps":
+    if key == "overlaps":
         # same-dimension proper overlap: 2D interior intersection, neither
         # side contained in the other; any point operand -> false
-        proper = (F.greatest(lx0, rx0) < F.least(lx1, rx1)) & (
-            F.greatest(ly0, ry0) < F.least(ly1, ry1)
+        proper = (
+            f"(greatest({lx0}, {rx0}) < least({lx1}, {rx1}) "
+            f"AND greatest({ly0}, {ry0}) < least({ly1}, {ry1}))"
         )
-        return F.when(lpt | rpt, F.lit(False)).otherwise(proper & ~l_in_r & ~r_in_l)
-    if predicate == "crosses":
+        return (
+            f"(CASE WHEN {lpt} OR {rpt} THEN false "
+            f"ELSE ({proper} AND NOT {l_in_r} AND NOT {r_in_l}) END)"
+        )
+    if key == "crosses":
         # bbox-exact operands are points (dim 0) or axis rectangles (dim 2):
         # P×P and R×R have equal non-lineal dims (false); P×R intersecting
         # is always fully covered ("all interior points in common") — false
-        return F.lit(False)
-    if predicate == "dwithin":
-        d = float(distance or 0.0)
-        dx = F.greatest(lx0 - rx1, rx0 - lx1, F.lit(0.0))
-        dy = F.greatest(ly0 - ry1, ry0 - ly1, F.lit(0.0))
-        return dx * dx + dy * dy <= F.lit(d * d)
-    raise ValueError(f"unknown predicate {predicate}")
+        return "false"
+    if key == "dwithin":
+        dx = f"greatest({lx0} - {rx1}, {rx0} - {lx1}, CAST(0.0 AS DOUBLE))"
+        dy = f"greatest({ly0} - {ry1}, {ry0} - {ly1}, CAST(0.0 AS DOUBLE))"
+        op = "<" if strict else "<="
+        return f"(({dx}) * ({dx}) + ({dy}) * ({dy}) {op} {_sql_double(e * e)})"
+    raise ValueError(f"unknown predicate {key}")
 
 
-def bbox_prefilter(predicate: str) -> Optional[Column]:
+# predicate -> the closed bbox relation it implies for ANY geometry
+_TIGHTENING = {
+    "within": "covered_by",
+    "covered_by": "covered_by",
+    "contains": "covers",
+    "covers": "covers",
+    "equals": "equals",
+}
+
+
+def _tighten_sql(key: str, lf: tuple, rf: tuple) -> Optional[str]:
     """Necessary bbox condition per predicate — tightens the generic bbox
     overlap before refinement for ANY geometry (≈ the reference evaluating
     the predicate's bbox implication during candidate generation).
     ``within(l, r)`` implies bbox(l) ⊆ bbox(r), ``equals`` implies equal
-    bboxes, etc.  Returns None when plain overlap is already tight.
-    """
-    lx0, ly0 = F.col("l_xmin"), F.col("l_ymin")
-    lx1, ly1 = F.col("l_xmax"), F.col("l_ymax")
-    rx0, ry0 = F.col("r_xmin"), F.col("r_ymin")
-    rx1, ry1 = F.col("r_xmax"), F.col("r_ymax")
-    if predicate in ("within", "covered_by"):
-        return (rx0 <= lx0) & (lx1 <= rx1) & (ry0 <= ly0) & (ly1 <= ry1)
-    if predicate in ("contains", "covers"):
-        return (lx0 <= rx0) & (rx1 <= lx1) & (ly0 <= ry0) & (ry1 <= ly1)
-    if predicate == "equals":
-        return (lx0 == rx0) & (lx1 == rx1) & (ly0 == ry0) & (ly1 == ry1)
-    return None
-
-
-def _bbcol(c) -> Column:
-    """Bbox operand: a column name or a Column expression."""
-    return c if isinstance(c, Column) else F.col(c)
+    bboxes, etc. — exactly the verdict of the closed bbox relation.
+    Returns None when plain overlap is already tight."""
+    rel = _TIGHTENING.get(key)
+    return None if rel is None else _verdict_sql(rel, lf, rf)
 
 
 # Session-lifetime bbox-sample cache: repeated spatial joins over a
@@ -707,12 +736,11 @@ def _cached_sample(pool: DataFrame) -> list[tuple]:
     return _plan_memoized(_SAMPLE_CACHE, pool, compute)
 
 
-def collect_bbox_sample_cols(src: DataFrame, cols: tuple) -> list[tuple]:
-    """Bbox sample from precomputed coordinate columns — same seeded
-    sample/limit policy as :func:`collect_bbox_sample`, zero Python."""
-    base = src.select(
-        *[_bbcol(c).cast("double").alias(a) for c, a in zip(cols[:4], "abcd")]
-    ).dropna()
+def collect_bbox_sample_cols(src: DataFrame, bbox: tuple) -> list[tuple]:
+    """Bbox sample from a bbox operand (SQL expressions over ``src``'s
+    columns) — same seeded sample/limit policy as
+    :func:`collect_bbox_sample`, zero Python."""
+    base = src.selectExpr(*_flat_bbox_sql(bbox)[:4]).dropna()
     samp = base.sample(fraction=BBOX_SAMPLE_RATE, seed=SAMPLE_SEED).limit(
         MAX_BBOX_SAMPLES
     )
@@ -741,10 +769,37 @@ def collect_bbox_sample(src: DataFrame, geom_col: str) -> list[tuple]:
     )
     pool = samp.unionAll(base.limit(MIN_BBOX_SAMPLES)).coalesce(1)
     return _cached_sample(
-        with_bbox(pool, "__g", "s_")
-        .select("s_xmin", "s_ymin", "s_xmax", "s_ymax")
+        pool.select(_bbox_udf(F.col("__g")).alias("__bb"))
+        .selectExpr(*_flat_bbox_sql(_UDF_BBOX)[:4])
         .dropna()
     )
+
+
+def _sample_grid(
+    build: DataFrame,
+    build_geom: str,
+    build_bbox: Optional[tuple],
+    probe: DataFrame,
+    probe_geom: str,
+    probe_bbox: Optional[tuple],
+    cell_target: Optional[int],
+) -> _Grid:
+    """Quantile grid from a seeded 1% sample of the build side, 10k cap /
+    1k min (option.rs:60-70), falling back to the probe side when the
+    build side has no geometries.  ``cell_target`` None sizes the grid
+    from the sample (:func:`auto_cell_target`)."""
+
+    def sample(df: DataFrame, geom: str, bbox: Optional[tuple]) -> list[tuple]:
+        if bbox is None:
+            return collect_bbox_sample(df, geom)
+        return collect_bbox_sample_cols(df, bbox)
+
+    s = (
+        sample(build, build_geom, build_bbox)
+        or sample(probe, probe_geom, probe_bbox)
+        or [(0.0, 0.0, 1.0, 1.0)]
+    )
+    return _Grid(s, cell_target or auto_cell_target(s))
 
 
 def spatial_join(
@@ -768,12 +823,12 @@ def spatial_join(
                overlaps|equals|dwithin (dwithin requires ``distance``).
     how: inner|left|right|full|left_semi|left_anti.
 
-    left_bbox/right_bbox: optional (xmin, ymin, xmax, ymax) column-name
-    tuples with the geometry's bbox already materialized — skips the bbox
-    UDF on that side AND makes grid sampling pure JVM (≈ the reference's
-    OperandEvaluator consuming a precomputed box operand).  An optional 5th
-    name supplies the ``bbox_exact`` flag; with 4 names the geometries are
-    asserted bbox-exact (points / axis-aligned rectangles).
+    left_bbox/right_bbox: optional tuples of SQL expressions over that
+    side's own columns giving each geometry's (xmin, ymin, xmax, ymax) —
+    skips the bbox UDF on that side AND makes grid sampling pure JVM (≈ the
+    reference's OperandEvaluator consuming a precomputed box operand).  An
+    optional 5th expression is the ``bbox_exact`` flag; with 4 the
+    geometries are asserted bbox-exact (points / axis-aligned rectangles).
 
     cell_target: grid cell budget; ``None`` (default) sizes the grid from
     the bbox sample's statistics (:func:`auto_cell_target`) — row count
@@ -819,46 +874,13 @@ def spatial_join(
     lcols = left.columns
     rcols = right.columns
     overlap = set(lcols) & set(rcols)
-    right_renamed = right
-    for c in overlap:
-        right_renamed = right_renamed.withColumnRenamed(c, f"{c}_right")
     rcols_out = [c if c not in overlap else f"{c}_right" for c in rcols]
-    rgeom = right_geom if right_geom not in overlap else f"{right_geom}_right"
 
-    # Deterministic 128-bit row ids (two independent xxhash64 seeds over the
-    # natural columns).  Unlike monotonically_increasing_id, these survive
-    # partition recomputation, so the outer-join anti-joins below are exact
-    # without pinning the inputs in cache (≈ the reference's positional
-    # visited bitmaps, which are likewise recompute-stable).  Identical rows
-    # share an id; that is correct here — twins match or miss identically.
-    def _rowid(cols: list[str]) -> Column:
-        return F.struct(
-            F.xxhash64(*[F.col(c) for c in cols]).alias("h1"),
-            F.xxhash64(F.lit(0x9E3779B9), *[F.col(c) for c in cols]).alias("h2"),
-        )
-
-    # bbox column names renamed alongside the rest of the right side
-    # (Column expressions pass through untouched)
-    rbbox = right_bbox
-    if rbbox is not None:
-        rbbox = tuple(
-            f"{c}_right" if isinstance(c, str) and c in overlap else c for c in rbbox
-        )
-
-    # grid from a seeded 1% sample of the right (build) side, 10k cap / 1k
-    # min (option.rs:60-70); taken from the raw (pre-repartition) input so
-    # the sampling job stays narrow.  Falls back to the left side if the
-    # right has no geometries.
-    if rbbox is not None:
-        sample = collect_bbox_sample_cols(right_renamed, rbbox)
-    else:
-        sample = collect_bbox_sample(right_renamed, rgeom)
-    if not sample:
-        if left_bbox is not None:
-            sample = collect_bbox_sample_cols(left, left_bbox)
-        else:
-            sample = collect_bbox_sample(left, left_geom)
-    sample = sample or [(0.0, 0.0, 1.0, 1.0)]
+    # grid sampled from the raw (pre-repartition) build side so the
+    # sampling job stays narrow
+    grid = _sample_grid(
+        right, right_geom, right_bbox, left, left_geom, left_bbox, cell_target
+    )
 
     # Parallelism guard: a small local input may arrive as a single file
     # split, serializing the whole pipeline onto one core.  Round-robin
@@ -867,48 +889,37 @@ def spatial_join(
     par = left.sparkSession.sparkContext.defaultParallelism
     if left.rdd.getNumPartitions() < par:
         left = left.repartition(par)
-    if right_renamed.rdd.getNumPartitions() < par:
-        right_renamed = right_renamed.repartition(par)
+    if right.rdd.getNumPartitions() < par:
+        right = right.repartition(par)
 
-    def _attach_bbox(df: DataFrame, bbox: Optional[tuple], geom: str, p: str) -> DataFrame:
+    # Each side gains its flat bbox (the bbox expressions resolve against
+    # the side's own column names — overlapping right columns are renamed
+    # only in the output) and its row id, then explodes to its grid cells.
+    # No explicit null-bbox filter: a null bbox explodes to no cell — an
+    # explicit dropna would split the bbox UDF into a second
+    # ArrowEvalPython (Catalyst pushes the filter through the projection,
+    # duplicating the Python call per side).
+    def _side(df: DataFrame, cols: list, bbox: Optional[tuple], geom: str, rid: str) -> DataFrame:
         if bbox is None:
-            return with_bbox(df, geom, p)
-        exact = _bbcol(bbox[4]) if len(bbox) > 4 else F.lit(True)
-        return df.select(
-            "*",
-            _bbcol(bbox[0]).cast("double").alias(f"{p}xmin"),
-            _bbcol(bbox[1]).cast("double").alias(f"{p}ymin"),
-            _bbcol(bbox[2]).cast("double").alias(f"{p}xmax"),
-            _bbcol(bbox[3]).cast("double").alias(f"{p}ymax"),
-            exact.alias(f"{p}exact"),
+            df, bbox = df.withColumn("__bb", _bbox_udf(F.col(geom))), _UDF_BBOX
+        return df.selectExpr(
+            *[f"`{c}`" for c in cols], *_flat_bbox_sql(bbox), f"{_rowid_sql(cols)} AS {rid}"
         )
 
-    l = _attach_bbox(left, left_bbox, left_geom, "l_").withColumn("__lid", _rowid(lcols))
-    r = _attach_bbox(right_renamed, rbbox, rgeom, "r_").withColumn("__rid", _rowid(rcols_out))
+    def _cells(df: DataFrame, e: float, alias: str) -> DataFrame:
+        for items in grid.cells_sql(e):
+            df = df.selectExpr(*items)
+        return df.alias(alias)
 
-    if cell_target is None:
-        cell_target = auto_cell_target(sample)
-    grid = _Grid(sample, cell_target)
-
-    # No explicit null-bbox filter: explode(sequence(...)) over a null bbox
-    # yields cell 0 and the null bbox comparisons below drop the row — an
-    # explicit dropna would split the bbox UDF into a second ArrowEvalPython
-    # (Catalyst pushes the filter through the projection, duplicating the
-    # Python call per side).
-    le = grid.explode_cells(l, "l_", expand)
-    re = grid.explode_cells(r, "r_", 0.0)
-
-    bbox_cond = (
-        (F.col("l_xmin") - expand <= F.col("r_xmax"))
-        & (F.col("r_xmin") <= F.col("l_xmax") + expand)
-        & (F.col("l_ymin") - expand <= F.col("r_ymax"))
-        & (F.col("r_ymin") <= F.col("l_ymax") + expand)
-    )
-    cand = le.join(re, "__cell").filter(bbox_cond)
-    pre = bbox_prefilter(predicate)
-    if pre is not None:
-        cand = cand.filter(pre)
-    cand = cand.filter(grid.ref_point_in_cell())
+    l = _side(left, lcols, left_bbox, left_geom, "__lid")
+    r = _side(right, rcols, right_bbox, right_geom, "__rid")
+    lb = ("l.__bbx0", "l.__bby0", "l.__bbx1", "l.__bby1")
+    rb = ("r.__bbx0", "r.__bby0", "r.__bbx1", "r.__bby1")
+    on = grid.candidate_sql("l.", "r.", lb, rb, expand)
+    tight = _tighten_sql(predicate, lb, rb)
+    if tight is not None:
+        on.append(tight)
+    cand = _cells(l, expand, "l").join(_cells(r, 0.0, "r"), F.expr(" AND ".join(on)))
 
     # Pairs where both geometries equal their own bbox (points / axis
     # rectangles) get an exact pure-JVM verdict; only the remaining pairs'
@@ -918,8 +929,9 @@ def spatial_join(
     # batch carries no geometry bytes and the UDF short-circuits on them.
     # refine="none" drops the Python stage entirely (caller asserts
     # bbox-exactness; the verdict is then the exact predicate).
+    verdict = F.expr(_verdict_sql(predicate, lb, rb, expand))
     if refine == "none":
-        matched = cand.filter(exact_verdict(predicate, distance))
+        matched = cand.filter(verdict)
         chosen_mode = "none"
     else:
         if exec_mode == "speculative":
@@ -927,7 +939,7 @@ def spatial_join(
             # probe stats only); distance predicates and bbox-declared-exact
             # probe sides (points/rects by contract) resolve without the
             # sampling job — select_without_probe_stats parity
-            if predicate == "dwithin" or (left_bbox is not None and len(left_bbox) == 4):
+            if predicate == "dwithin" or _asserted_exact(left_bbox):
                 chosen_mode = "none"
             else:
                 chosen_mode = select_exec_mode(
@@ -936,24 +948,21 @@ def spatial_join(
         else:
             chosen_mode = exec_mode
         refine_udf = _refine_udf(predicate, distance, prepare=chosen_mode == "prepare")
-        both_exact = F.col("l_exact") & F.col("r_exact")
+        both_exact = F.expr("l.__bbe AND r.__bbe")
         refined = refine_udf(
-            F.when(~both_exact, F.col(left_geom)),
-            F.when(~both_exact, F.col(rgeom)),
+            F.when(~both_exact, F.col(f"l.`{left_geom}`")),
+            F.when(~both_exact, F.col(f"r.`{right_geom}`")),
         )
         matched = cand.filter(
-            F.when(both_exact, exact_verdict(predicate, distance)).otherwise(
-                F.coalesce(refined, F.lit(False))
-            )
+            F.when(both_exact, verdict).otherwise(F.coalesce(refined, F.lit(False)))
         )
 
-    bbox_helper = [
-        c
-        for c in matched.columns
-        if c.startswith(("l_x", "l_y", "r_x", "r_y", "__l_i", "__r_i"))
-        or c in ("l_exact", "r_exact")
-    ]
-    pairs = matched.drop("__cell", *bbox_helper)
+    pairs = matched.selectExpr(
+        *[f"l.`{c}`" for c in lcols],
+        *[f"r.`{c}`" + (f" AS `{o}`" if o != c else "") for c, o in zip(rcols, rcols_out)],
+        "l.__lid",
+        "r.__rid",
+    )
     if extra_condition is not None:
         # extra ON conjuncts (SQL expr over the OUTPUT columns: left names
         # + overlap-renamed right names).  Filtering the matched pairs
@@ -979,19 +988,19 @@ def spatial_join(
         keep = pairs.select("__lid").distinct()
         return _finish(l.join(keep, "__lid", "left_anti").select(*lcols))
 
-    out_cols = lcols + rcols_out
-    inner = pairs.select(*out_cols, "__lid", "__rid")
     if how in ("left", "full"):
-        unmatched_l = l.join(inner.select("__lid").distinct(), "__lid", "left_anti")
+        unmatched_l = l.join(pairs.select("__lid").distinct(), "__lid", "left_anti")
         null_r = unmatched_l.select(
-            *lcols, *[F.lit(None).cast(r.schema[c].dataType).alias(c) for c in rcols_out]
+            *lcols,
+            *[F.lit(None).cast(r.schema[c].dataType).alias(o) for c, o in zip(rcols, rcols_out)],
         )
     if how in ("right", "full"):
-        unmatched_r = r.join(inner.select("__rid").distinct(), "__rid", "left_anti")
+        unmatched_r = r.join(pairs.select("__rid").distinct(), "__rid", "left_anti")
         null_l = unmatched_r.select(
-            *[F.lit(None).cast(l.schema[c].dataType).alias(c) for c in lcols], *rcols_out
+            *[F.lit(None).cast(l.schema[c].dataType).alias(c) for c in lcols],
+            *[F.col(f"`{c}`").alias(o) for c, o in zip(rcols, rcols_out)],
         )
-    res = inner.drop("__lid", "__rid")
+    res = pairs.drop("__lid", "__rid")
     if how == "left":
         return _finish(res.unionByName(null_r))
     if how == "right":

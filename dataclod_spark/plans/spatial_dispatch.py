@@ -514,108 +514,6 @@ def _match_spatial_conjunct(c: str):
     return None
 
 
-def _verdict_sql(key: str, b1: str, b2: str, e: float = 0.0, strict: bool = False) -> str:
-    """SQL spelling of ``operators.spatial_join.exact_verdict`` over two
-    ``__bb`` struct references — the exact predicate for bbox-exact pairs
-    (point / axis rectangle), decided fully JVM-side.  ``b1``/``b2`` follow
-    the predicate's argument order (g1 = b1's geometry)."""
-    return _verdict_sql_fields(
-        key,
-        (f"{b1}.xmin", f"{b1}.ymin", f"{b1}.xmax", f"{b1}.ymax"),
-        (f"{b2}.xmin", f"{b2}.ymin", f"{b2}.xmax", f"{b2}.ymax"),
-        e,
-        strict,
-    )
-
-
-def _verdict_sql_fields(
-    key: str,
-    lf: tuple[str, str, str, str],
-    rf: tuple[str, str, str, str],
-    e: float = 0.0,
-    strict: bool = False,
-) -> str:
-    """:func:`_verdict_sql` over explicit (xmin, ymin, xmax, ymax) SQL
-    field expressions — shared with the filter pushdown's exact
-    elimination so the boundary semantics (open intervals for point
-    within/contains) cannot drift between the two paths."""
-    lx0, ly0, lx1, ly1 = lf
-    rx0, ry0, rx1, ry1 = rf
-    lpt = f"({lx0} = {lx1} AND {ly0} = {ly1})"
-    rpt = f"({rx0} = {rx1} AND {ry0} = {ry1})"
-    overlap = f"({lx0} <= {rx1} AND {rx0} <= {lx1} AND {ly0} <= {ry1} AND {ry0} <= {ly1})"
-    eq = f"({lx0} = {rx0} AND {lx1} = {rx1} AND {ly0} = {ry0} AND {ly1} = {ry1})"
-    l_in_r = f"({rx0} <= {lx0} AND {lx1} <= {rx1} AND {ry0} <= {ly0} AND {ly1} <= {ry1})"
-    r_in_l = f"({lx0} <= {rx0} AND {rx1} <= {lx1} AND {ly0} <= {ry0} AND {ry1} <= {ly1})"
-    l_in_r_open = f"({rx0} < {lx0} AND {lx1} < {rx1} AND {ry0} < {ly0} AND {ly1} < {ry1})"
-    r_in_l_open = f"({lx0} < {rx0} AND {rx1} < {lx1} AND {ly0} < {ry0} AND {ry1} < {ly1})"
-    if key in ("intersects", "bbox"):
-        return overlap
-    if key == "equals":
-        return eq
-    if key == "covered_by":
-        return l_in_r
-    if key == "covers":
-        return r_in_l
-    if key == "within":
-        return (
-            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
-            f"WHEN {lpt} THEN {l_in_r_open} "
-            f"WHEN {rpt} THEN false ELSE {l_in_r} END)"
-        )
-    if key == "contains":
-        return (
-            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
-            f"WHEN {rpt} THEN {r_in_l_open} "
-            f"WHEN {lpt} THEN false ELSE {r_in_l} END)"
-        )
-    if key == "touches":
-        degen = (
-            f"(greatest({lx0}, {rx0}) = least({lx1}, {rx1}) "
-            f"OR greatest({ly0}, {ry0}) = least({ly1}, {ry1}))"
-        )
-        l_on_r = f"({overlap} AND ({lx0} = {rx0} OR {lx0} = {rx1} OR {ly0} = {ry0} OR {ly0} = {ry1}))"
-        r_on_l = f"({overlap} AND ({rx0} = {lx0} OR {rx0} = {lx1} OR {ry0} = {ly0} OR {ry0} = {ly1}))"
-        return (
-            f"(CASE WHEN {lpt} AND {rpt} THEN false "
-            f"WHEN {lpt} THEN {l_on_r} WHEN {rpt} THEN {r_on_l} "
-            f"ELSE ({overlap} AND {degen}) END)"
-        )
-    if key == "overlaps":
-        proper = (
-            f"(greatest({lx0}, {rx0}) < least({lx1}, {rx1}) "
-            f"AND greatest({ly0}, {ry0}) < least({ly1}, {ry1}))"
-        )
-        return (
-            f"(CASE WHEN {lpt} OR {rpt} THEN false "
-            f"ELSE ({proper} AND NOT {l_in_r} AND NOT {r_in_l}) END)"
-        )
-    if key == "crosses":
-        # bbox-exact pairs are points/axis-rects: crosses is always false
-        # (equal non-lineal dims, or point fully covered by the rect)
-        return "false"
-    if key == "dwithin":
-        dx = f"greatest({lx0} - {rx1}, {rx0} - {lx1}, CAST(0.0 AS DOUBLE))"
-        dy = f"greatest({ly0} - {ry1}, {ry0} - {ly1}, CAST(0.0 AS DOUBLE))"
-        op = "<" if strict else "<="
-        return f"(({dx}) * ({dx}) + ({dy}) * ({dy}) {op} CAST({e * e!r} AS DOUBLE))"
-    raise ValueError(f"unknown predicate key {key}")
-
-
-def _bucket_sql(bounds: list[float], coord: str) -> str:
-    """#boundaries <= coord as a flat sum of CASE terms — a plain
-    expression tree that stays inside whole-stage codegen (same shape as
-    ``operators.spatial_join._Grid._bucket``; a higher-order ``aggregate``
-    over a literal array is evaluated interpreted and is ~10x slower in
-    the hot join path)."""
-    if not bounds:
-        return "0"
-    return "(" + " + ".join(
-        f"(CASE WHEN {coord} >= CAST({b!r} AS DOUBLE) THEN 1 ELSE 0 END)"
-        for b in bounds
-    ) + ")"
-
-
 def _side_sql(
     table: str,
     geom_col: str,
@@ -625,10 +523,10 @@ def _side_sql(
     bbox_meta=None,
 ) -> str:
     """Derived relation with ``__bb`` + one ``__cell`` row per grid cell the
-    (expanded) bbox intersects — two plain explode(sequence(..)) generators,
-    mirroring ``_Grid.explode_cells``.  The min cell indices stay exposed as
-    ``__ix0``/``__iy0`` so the per-pair reference-point dedup in the ON
-    clause is O(1) (bucket is monotone: bucket(max) = max(bucket)).
+    (expanded) bbox intersects — the grid's side projection
+    (``_Grid.cells_sql``), nested as subqueries.  The min cell indices stay
+    exposed as ``__ix0``/``__iy0`` so the per-pair reference-point dedup in
+    the ON clause is O(1).
 
     ``repartition`` injects a REPARTITION hint below the bbox UDF when the
     source scan has fewer splits than the cluster's parallelism (the
@@ -638,42 +536,28 @@ def _side_sql(
     UDF with pure codegen expressions over the view's own columns — the
     bbox pass then costs zero Python (and lets Catalyst prune the geometry
     column entirely when the refine stage is skipped too)."""
-    e = float(expand)
+    from dataclod_spark.operators.spatial_join import _UDF_BBOX, _flat_bbox_sql
+
     src = table
     if repartition:
         src = f"(SELECT /*+ REPARTITION({int(repartition)}) */ * FROM {table})"
     if bbox_meta is not None:
-        # flat codegen columns straight from the registered expressions
-        flat = (
-            f"(SELECT *, CAST(({bbox_meta.xmin}) AS DOUBLE) AS __bbx0, "
-            f"CAST(({bbox_meta.ymin}) AS DOUBLE) AS __bby0, "
-            f"CAST(({bbox_meta.xmax}) AS DOUBLE) AS __bbx1, "
-            f"CAST(({bbox_meta.ymax}) AS DOUBLE) AS __bby1, "
-            f"{'true' if bbox_meta.exact else 'false'} AS __bbe FROM {src})"
-        )
+        rel = f"(SELECT *, {', '.join(_flat_bbox_sql(bbox_meta.bbox))} FROM {src})"
     else:
-        flat = (
-            f"(SELECT * EXCEPT (__bb), __bb.xmin AS __bbx0, __bb.ymin AS __bby0, "
-            f"__bb.xmax AS __bbx1, __bb.ymax AS __bby1, __bb.bbox_exact AS __bbe FROM "
+        rel = (
+            f"(SELECT * EXCEPT (__bb), {', '.join(_flat_bbox_sql(_UDF_BBOX))} FROM "
             f"(SELECT *, __st_bbox(`{geom_col}`) AS __bb FROM {src}))"
         )
-    ix0 = _bucket_sql(grid.xb, f"(__bbx0 - {e!r})")
-    ix1 = _bucket_sql(grid.xb, f"(__bbx1 + {e!r})")
-    iy0 = _bucket_sql(grid.yb, f"(__bby0 - {e!r})")
-    iy1 = _bucket_sql(grid.yb, f"(__bby1 + {e!r})")
+    for i, items in enumerate(grid.cells_sql(expand), 1):
+        rel = f"(SELECT {', '.join(items)} FROM {rel} __s{i})"
     # the bbox rides through the explodes as FLAT doubles; the __bb struct is
     # rebuilt above the Generates (struct extraction over a top-level
     # named_struct folds in SimplifyExtractValueOps — pushing extraction
     # through Generate trips Catalyst's nested-column aliasing instead)
     return (
-        f"(SELECT * EXCEPT (__cx, __cy, __ix1, __iy1, __bbx0, __bby0, __bbx1, __bby1, __bbe), "
-        f"__cx * {grid.ny} + __cy AS __cell, "
-        f"named_struct('xmin', __bbx0, 'ymin', __bby0, 'xmax', __bbx1, 'ymax', __bby1, "
-        f"'bbox_exact', __bbe) AS __bb FROM "
-        f"(SELECT __s3.*, explode(sequence(__s3.__iy0, __s3.__iy1)) AS __cy FROM "
-        f"(SELECT __s2.*, explode(sequence(__s2.__ix0, __s2.__ix1)) AS __cx FROM "
-        f"(SELECT *, {ix0} AS __ix0, {ix1} AS __ix1, {iy0} AS __iy0, {iy1} AS __iy1 FROM "
-        f"{flat} __s1) __s2) __s3) __s4)"
+        "(SELECT * EXCEPT (__bbx0, __bby0, __bbx1, __bby1, __bbe), "
+        "named_struct('xmin', __bbx0, 'ymin', __bby0, 'xmax', __bbx1, 'ymax', __bby1, "
+        f"'bbox_exact', __bbe) AS __bb FROM {rel} __s)"
     )
 
 
@@ -736,83 +620,66 @@ def _resolve_relation(session, sql: str, name: str):
         return None
 
 
-def _meta_cols_exprs(meta):
-    from pyspark.sql import functions as F
-
-    return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
+def _bbox_meta(session, table: str, geom_col: str):
+    """The bbox registered for (table, geometry column), or None."""
+    return session.bbox_meta(table, geom_col) if hasattr(session, "bbox_meta") else None
 
 
 def _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta):
     """Session-cached quantile grid sampled from the build (right) side,
     falling back to the probe side when the build sample is empty."""
-    from dataclod_spark.operators.spatial_join import (
-        auto_cell_target,
-        collect_bbox_sample,
-        collect_bbox_sample_cols,
-        _Grid,
-    )
+    from dataclod_spark.operators.spatial_join import _sample_grid
 
     cache_key = (rt.lower(), rgeom.lower(), session.spatial_join_cells)
     grid = getattr(session, "_grid_cache", {}).get(cache_key)
     if grid is not None:
         return grid
-    if rmeta is not None:
-        sample = collect_bbox_sample_cols(rdf, _meta_cols_exprs(rmeta))
-    else:
-        sample = collect_bbox_sample(rdf, rgeom)
-    if not sample:
-        if lmeta is not None:
-            sample = collect_bbox_sample_cols(ldf, _meta_cols_exprs(lmeta))
-        else:
-            sample = collect_bbox_sample(ldf, lgeom)
-    if not sample:
-        sample = [(0.0, 0.0, 1.0, 1.0)]
-    cells = session.spatial_join_cells or auto_cell_target(sample)
-    grid = _Grid(sample, cells)
+    grid = _sample_grid(
+        rdf, rgeom, rmeta and rmeta.bbox, ldf, lgeom, lmeta and lmeta.bbox,
+        session.spatial_join_cells,
+    )
     if hasattr(session, "_grid_cache"):
         session._grid_cache[cache_key] = grid
     return grid
+
+
+def _operator_args(session, lt, lgeom, rt, rgeom, expand, predicate) -> dict:
+    """``spatial_join`` arguments for a dispatched join of two named
+    relations: geometry columns, distance, the session's cell budget, the
+    registered bbox operands (exactness flag included), and
+    ``refine="none"`` when both sides are declared bbox-exact."""
+    lmeta, rmeta = _bbox_meta(session, lt, lgeom), _bbox_meta(session, rt, rgeom)
+    both_exact = lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact
+    return dict(
+        left_geom=lgeom,
+        right_geom=rgeom,
+        distance=(expand if predicate == "dwithin" else None),
+        cell_target=getattr(session, "spatial_join_cells", None),
+        left_bbox=lmeta and lmeta.bbox,
+        right_bbox=rmeta and rmeta.bbox,
+        refine="none" if both_exact else "auto",
+    )
 
 
 def _grid_on_parts(
     la, ra, a1, c1, a2, c2, grid, e, pred_key, strict,
     lmeta, rmeta, conjuncts, spatial_idx,
 ) -> list[str]:
-    """ON-clause conjuncts of the grid equi-join: cell equality, bbox
-    overlap, reference-point dedup, predicate-specific bbox tightening, the
-    NULL-masked exact refine, and any extra user conjuncts."""
-    bb = lambda a, f: f"{a}.__bb.{f}"  # noqa: E731
-    on_parts = [
-        f"{la}.__cell = {ra}.__cell",
-        f"{bb(la,'xmin')} - {e!r} <= {bb(ra,'xmax')}",
-        f"{bb(ra,'xmin')} <= {bb(la,'xmax')} + {e!r}",
-        f"{bb(la,'ymin')} - {e!r} <= {bb(ra,'ymax')}",
-        f"{bb(ra,'ymin')} <= {bb(la,'ymax')} + {e!r}",
-        # reference-point dedup from the precomputed min cell indices —
-        # O(1) per pair (bucket is monotone, so the intersection corner's
-        # bucket is the max of the two sides' min indices)
-        f"(greatest({la}.__ix0, {ra}.__ix0) * {grid.ny}"
-        f" + greatest({la}.__iy0, {ra}.__iy0)) = {la}.__cell",
-    ]
+    """ON-clause conjuncts of the grid equi-join: the grid's candidate
+    conjuncts (cell equality, bbox overlap, reference-point dedup), the
+    predicate-specific bbox tightening, the NULL-masked exact refine, and
+    any extra user conjuncts."""
+    from dataclod_spark.operators.spatial_join import _tighten_sql, _verdict_sql
+
+    def bb(a: str) -> tuple:
+        return tuple(f"{a}.__bb.{f}" for f in ("xmin", "ymin", "xmax", "ymax"))
+
+    on_parts = grid.candidate_sql(f"{la}.", f"{ra}.", bb(la), bb(ra), e)
     # predicate-direction bbox refs (a1 holds the predicate's 1st argument)
-    b1 = f"{a1}.__bb"
-    b2 = f"{a2}.__bb"
-    # necessary bbox tightening per predicate (any geometry)
-    if pred_key in ("within", "covered_by"):
-        on_parts.append(
-            f"({b2}.xmin <= {b1}.xmin AND {b1}.xmax <= {b2}.xmax "
-            f"AND {b2}.ymin <= {b1}.ymin AND {b1}.ymax <= {b2}.ymax)"
-        )
-    elif pred_key in ("contains", "covers"):
-        on_parts.append(
-            f"({b1}.xmin <= {b2}.xmin AND {b2}.xmax <= {b1}.xmax "
-            f"AND {b1}.ymin <= {b2}.ymin AND {b2}.ymax <= {b1}.ymax)"
-        )
-    elif pred_key == "equals":
-        on_parts.append(
-            f"({b1}.xmin = {b2}.xmin AND {b1}.xmax = {b2}.xmax "
-            f"AND {b1}.ymin = {b2}.ymin AND {b1}.ymax = {b2}.ymax)"
-        )
+    b1, b2 = bb(a1), bb(a2)
+    tight = _tighten_sql(pred_key, b1, b2)
+    if tight is not None:
+        on_parts.append(tight)
 
     # the spatial conjunct itself: bbox-exact pairs (points / axis rects)
     # resolve with the pure-JVM verdict; only the rest cross into the ST_*
@@ -827,7 +694,7 @@ def _grid_on_parts(
         # column is pruned from the scan entirely
         spatial_sql = _verdict_sql(pred_key, b1, b2, e, strict)
     else:
-        both = f"({bb(la,'bbox_exact')} AND {bb(ra,'bbox_exact')})"
+        both = f"({la}.__bb.bbox_exact AND {ra}.__bb.bbox_exact)"
         verdict = _verdict_sql(pred_key, b1, b2, e, strict)
         g1 = f"IF(NOT {both}, {a1}.`{c1}`, NULL)"
         g2 = f"IF(NOT {both}, {a2}.`{c2}`, NULL)"
@@ -890,14 +757,6 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
     lgeom = c1 if a1.lower() == la.lower() else c2
     rgeom = c2 if a2.lower() == ra.lower() else c1
 
-    from pyspark.sql import functions as F
-
-    from dataclod_spark.operators.spatial_join import (
-        _Grid,
-        collect_bbox_sample,
-        collect_bbox_sample_cols,
-    )
-
     rdf = _resolve_relation(session, sql, rt)
     ldf = _resolve_relation(session, sql, lt)
     if rdf is None or ldf is None:
@@ -906,12 +765,7 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
         return None
     # registered bbox expressions (session.register_bbox): bbox pass and
     # grid sampling become pure JVM on that side
-    lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-    rmeta = session.bbox_meta(rt, rgeom) if hasattr(session, "bbox_meta") else None
-
-    def _meta_cols(meta):
-        return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
-
+    lmeta, rmeta = _bbox_meta(session, lt, lgeom), _bbox_meta(session, rt, rgeom)
     grid = _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
 
     # parallelism guard (mirrors the DataFrame operator): repartition a
@@ -1028,8 +882,7 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
                 return None
             if lgeom not in ldf.columns or rgeom not in rdf.columns:
                 return None
-            lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-            rmeta = session.bbox_meta(jt, rgeom) if hasattr(session, "bbox_meta") else None
+            lmeta, rmeta = _bbox_meta(session, lt, lgeom), _bbox_meta(session, jt, rgeom)
             grid = _get_grid(session, jt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
             par = session.spark.sparkContext.defaultParallelism
             lpar = par if ldf.rdd.getNumPartitions() < par else None
@@ -1251,23 +1104,7 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
             mapped_parts.append(f"({mc})")
         extra_cond = " AND ".join(mapped_parts)
 
-    from pyspark.sql import functions as F
-
     from dataclod_spark.operators.spatial_join import spatial_join
-
-    lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-    rmeta = session.bbox_meta(rt, rgeom) if hasattr(session, "bbox_meta") else None
-
-    def _meta_bbox(meta):
-        if meta is None:
-            return None
-        return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
-
-    refine = (
-        "none"
-        if (lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact)
-        else "auto"
-    )
 
     lcols = set(ldf.columns)
 
@@ -1305,15 +1142,9 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
         ldf,
         rdf,
         predicate,
-        left_geom=lgeom,
-        right_geom=rgeom,
         how=how,
-        distance=(expand if predicate == "dwithin" else None),
-        cell_target=getattr(session, "spatial_join_cells", None),
-        left_bbox=_meta_bbox(lmeta),
-        right_bbox=_meta_bbox(rmeta),
-        refine=refine,
         extra_condition=extra_cond,
+        **_operator_args(session, lt, lgeom, rt, rgeom, expand, predicate),
     )
     view = f"__spatial_outer_join_{next(_outer_view_counter)}"
     joined.createOrReplaceTempView(view)
@@ -1476,9 +1307,7 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
                 )
             )
 
-    from pyspark.sql import functions as F
-
-    from dataclod_spark.operators.spatial_join import spatial_join
+    from dataclod_spark.operators.spatial_join import _rowid_sql, spatial_join
 
     for flt in right_filters:
         try:
@@ -1486,28 +1315,7 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
         except Exception:
             return None
 
-    lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-    rmeta = session.bbox_meta(rt, rgeom) if hasattr(session, "bbox_meta") else None
-
-    def _meta_bbox(meta):
-        if meta is None:
-            return None
-        return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
-
-    refine = (
-        "none"
-        if (lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact)
-        else "auto"
-    )
-    common = dict(
-        left_geom=lgeom,
-        right_geom=rgeom,
-        distance=(expand if predicate == "dwithin" else None),
-        cell_target=getattr(session, "spatial_join_cells", None),
-        left_bbox=_meta_bbox(lmeta),
-        right_bbox=_meta_bbox(rmeta),
-        refine=refine,
-    )
+    common = _operator_args(session, lt, lgeom, rt, rgeom, expand, predicate)
     how = "left_anti" if neg else "left_semi"
     if not correlated_filters:
         joined = spatial_join(ldf, rdf, predicate, how=how, **common)
@@ -1536,23 +1344,12 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
             + ")"
             for c in correlated_filters
         )
-
-        def _rowid(df):
-            cols = [F.col(c) for c in ldf.columns]
-            return F.struct(
-                F.xxhash64(*cols).alias("h1"),
-                F.xxhash64(F.lit(0x9E3779B9), *cols).alias("h2"),
-            )
-
+        eid = f"{_rowid_sql(ldf.columns)} AS __eid"
         try:
-            matched = inner.where(flt).select(_rowid(inner).alias("__eid")).distinct()
+            matched = inner.where(flt).selectExpr(eid).distinct()
         except Exception:
             return None
-        joined = (
-            ldf.withColumn("__eid", _rowid(ldf))
-            .join(matched, "__eid", how)
-            .drop("__eid")
-        )
+        joined = ldf.selectExpr("*", eid).join(matched, "__eid", how).drop("__eid")
     view = f"__spatial_semi_join_{next(_outer_view_counter)}"
     joined.createOrReplaceTempView(view)
 
@@ -1673,6 +1470,11 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
 
     from dataclod_spark.geo.core import wkt_parse
     from dataclod_spark.geo.algos import bounds as gbounds
+    from dataclod_spark.operators.spatial_join import (
+        _sql_double,
+        _tighten_sql,
+        _verdict_sql,
+    )
 
     changed = False
 
@@ -1699,7 +1501,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
             return orig
         if al is not None and (alias is None or al.lower() != alias.lower()):
             return orig
-        meta = session.bbox_meta(table, col) if hasattr(session, "bbox_meta") else None
+        meta = _bbox_meta(session, table, col)
         if meta is None:
             return orig
         try:
@@ -1710,32 +1512,23 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
         if lb is None:
             return orig
         e = float(dtxt) if pred_key == "dwithin" else 0.0
-        x0, y0, x1, y1 = lb[0] - e, lb[1] - e, lb[2] + e, lb[3] + e
+        lit_box = tuple(
+            _sql_double(v) for v in (lb[0] - e, lb[1] - e, lb[2] + e, lb[3] + e)
+        )
+        col_box = tuple(f"({c})" for c in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
         # predicate direction: col-first means the column geometry is the
         # predicate's first argument
         key = pred_key if col_first else _SWAPPED[pred_key]
-        cx0, cy0, cx1, cy1 = meta.xmin, meta.ymin, meta.xmax, meta.ymax
-        if key in ("within", "covered_by"):
-            conj = (
-                f"({cx0}) >= {x0!r} AND ({cx1}) <= {x1!r} "
-                f"AND ({cy0}) >= {y0!r} AND ({cy1}) <= {y1!r}"
-            )
-        elif key in ("contains", "covers"):
-            conj = (
-                f"({cx0}) <= {x0!r} AND ({cx1}) >= {x1!r} "
-                f"AND ({cy0}) <= {y0!r} AND ({cy1}) >= {y1!r}"
-            )
-        else:  # overlap classes: intersects/touches/overlaps/crosses/equals/dwithin
-            conj = (
-                f"({cx0}) <= {x1!r} AND ({cx1}) >= {x0!r} "
-                f"AND ({cy0}) <= {y1!r} AND ({cy1}) >= {y0!r}"
-            )
+        # covering conjuncts: the predicate's bbox tightening, else overlap
+        conj = _tighten_sql(key, col_box, lit_box) or _verdict_sql(
+            "intersects", col_box, lit_box
+        )
         changed = True
         # exact elimination: covering is exact (bbox IS the geometry) and
         # the literal is an axis rectangle → the shared JVM verdict IS the
         # predicate (NOT the closed-interval covering conjuncts alone:
         # ST_Within is false for a point ON the boundary, so within/
-        # contains need _verdict_sql's open-interval point cases).  The
+        # contains need the verdict table's open-interval point cases).  The
         # simple covering conjuncts still ride along — they are the part
         # that reaches the parquet scan as PushedFilters.
         if (
@@ -1743,13 +1536,8 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
             and _axis_rect_bounds(lit) is not None
             and key in ("intersects", "within", "covered_by", "contains", "covers")
         ):
-            verdict = _verdict_sql_fields(
-                key,
-                (f"({cx0})", f"({cy0})", f"({cx1})", f"({cy1})"),
-                (f"{x0!r}", f"{y0!r}", f"{x1!r}", f"{y1!r}"),
-            )
-            return f"(({conj}) AND {verdict})"
-        return f"(({conj}) AND {orig})"
+            return f"({conj} AND {_verdict_sql(key, col_box, lit_box)})"
+        return f"({conj} AND {orig})"
 
     out = _LIT_PRED_RE.sub(_repl, sql)
     return out if changed else None

@@ -306,8 +306,8 @@ def g8_rect_within_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         small,
         big,
         "within",
-        left_bbox=("sx", "sy", F.col("sx") + 2, F.col("sy") + 2),
-        right_bbox=("bx", "by", F.col("bx") + 12, F.col("by") + 12),
+        left_bbox=("sx", "sy", "sx + 2", "sy + 2"),
+        right_bbox=("bx", "by", "bx + 12", "by + 12"),
     )
     return joined.agg(F.count(F.lit(1)).alias("n_within"))
 

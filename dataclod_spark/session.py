@@ -144,10 +144,6 @@ def get_spark(
     return spark
 
 
-class _EmptyResult:
-    """Sentinel DataFrame-ish empty result for swallowed statements."""
-
-
 class _BBoxMeta:
     """Bbox SQL expressions registered for a view's geometry column."""
 
@@ -159,6 +155,12 @@ class _BBoxMeta:
         self.xmax = xmax
         self.ymax = ymax
         self.exact = exact
+
+    @property
+    def bbox(self) -> tuple:
+        """The bbox operand ``spatial_join`` takes: the four expressions
+        and the exactness flag, all SQL."""
+        return (self.xmin, self.ymin, self.xmax, self.ymax, "true" if self.exact else "false")
 
 
 class EngineSession:

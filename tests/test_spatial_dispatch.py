@@ -875,3 +875,241 @@ def test_backticked_alias_star_and_literal_blindness(engine, sdata):
     )
     assert df.count() > 0
     assert "BroadcastNestedLoopJoin" not in _plan(df)
+
+
+# --- one grid join: the operator and the dispatch agree ----------------
+
+
+def _wkb_rows(df, key: str) -> dict:
+    return {r[key]: GC.wkb_parse(bytes(r.geom)) for r in df.select(key, "geom").collect()}
+
+
+@pytest.fixture(scope="module")
+def circles(engine):
+    """Buffered circles (bbox registered NOT exact) and points at their
+    centres and at bbox corners just outside the circles."""
+    from pyspark.sql import functions as F
+
+    from dataclod_spark.operators.spatial_join import point_wkb
+
+    spark = engine.spark
+    circ = [(i, 10.0 * i, 5.0, 1.0 + i % 2) for i in range(6)]
+    spark.createDataFrame(circ, "cid long, cx double, cy double, r double") \
+        .createOrReplaceTempView("circ_src")
+    engine.sql(
+        "CREATE OR REPLACE TEMP VIEW circ_circles AS SELECT cid, cx, cy, r, "
+        "ST_Buffer(ST_MakePoint(cx, cy), r) AS geom FROM circ_src"
+    )
+    engine.register_bbox("circ_circles", "geom", "cx - r", "cy - r", "cx + r", "cy + r")
+    pts = [(i, cx, cy) for i, cx, cy, _ in circ] + [
+        (100 + i, cx + 0.9 * r, cy + 0.9 * r) for i, cx, cy, r in circ
+    ]
+    spark.createDataFrame(pts, "pid long, px double, py double").select(
+        "pid", "px", "py", point_wkb(F.col("px"), F.col("py")).alias("geom")
+    ).createOrReplaceTempView("circ_pts")
+    engine.register_bbox("circ_pts", "geom", "px", "py", "px", "py", exact=True)
+    points = _wkb_rows(spark.table("circ_pts"), "pid")
+    discs = _wkb_rows(spark.table("circ_circles"), "cid")
+    return points, discs
+
+
+def test_outer_and_exists_dispatch_refine_non_exact_bbox(engine, circles):
+    """A bbox registered ``exact=False`` must keep the exact refine on the
+    outer and EXISTS dispatch paths: a point in a circle's bbox corner is
+    not in the circle."""
+    points, discs = circles
+    matched = {
+        (p, c) for p, pg in points.items() for c, cg in discs.items()
+        if GP.intersects(pg, cg)
+    }
+    assert len({p for p, _ in matched}) == 6  # the centres only
+    on = "ON ST_Intersects(p.geom, c.geom)"
+    left = engine.sql(f"SELECT p.pid, c.cid FROM circ_pts p LEFT JOIN circ_circles c {on}")
+    full = engine.sql(f"SELECT p.pid, c.cid FROM circ_pts p FULL JOIN circ_circles c {on}")
+    mp = {p for p, _ in matched}
+    mc = {c for _, c in matched}
+    want_left = matched | {(p, None) for p in points if p not in mp}
+    assert {(r.pid, r.cid) for r in left.collect()} == want_left
+    assert {(r.pid, r.cid) for r in full.collect()} == want_left | {
+        (None, c) for c in discs if c not in mc
+    }
+    sub = "(SELECT 1 FROM circ_circles c WHERE ST_Intersects(p.geom, c.geom))"
+    ex = engine.sql(f"SELECT p.pid FROM circ_pts p WHERE EXISTS {sub}")
+    nex = engine.sql(f"SELECT p.pid FROM circ_pts p WHERE NOT EXISTS {sub}")
+    assert {r.pid for r in ex.collect()} == mp
+    assert {r.pid for r in nex.collect()} == set(points) - mp
+    for df in (left, full, ex, nex):
+        assert "BroadcastNestedLoopJoin" not in _plan(df)
+
+
+def test_infinite_grid_bound_both_paths(engine):
+    """60% of the build bboxes reach xmax = +inf, so with 64 cells a grid
+    quantile bound is infinite; both the operator and the dispatch must
+    write it as a valid literal and stay exact."""
+    from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb, spatial_join
+
+    spark = engine.spark
+    rnd = random.Random(5)
+    boxes = []
+    for i in range(50):
+        x, y = rnd.uniform(0, 50), rnd.uniform(0, 50)
+        boxes.append((i, x, y, float("inf") if i % 5 < 3 else x + 5, y + 5))
+    pts = [(i, rnd.uniform(0, 60), rnd.uniform(0, 60)) for i in range(150)]
+    want = {
+        (p, b) for p, px, py in pts for b, x0, y0, x1, y1 in boxes
+        if x0 <= px <= x1 and y0 <= py <= y1
+    }
+    bdf = spark.createDataFrame(boxes, "bid long, x0 double, y0 double, x1 double, y1 double")
+    bdf = bdf.select("*", envelope_wkb("x0", "y0", "x1", "y1").alias("geom"))
+    pdf = spark.createDataFrame(pts, "pid long, px double, py double")
+    pdf = pdf.select("*", point_wkb("px", "py").alias("geom"))
+
+    got = spatial_join(
+        pdf, bdf, left_bbox=("px", "py", "px", "py"),
+        right_bbox=("x0", "y0", "x1", "y1"), cell_target=64, refine="none",
+    )
+    assert {(r.pid, r.bid) for r in got.collect()} == want and want
+
+    bdf.createOrReplaceTempView("inf_boxes")
+    pdf.createOrReplaceTempView("inf_pts")
+    engine.register_bbox("inf_boxes", "geom", "x0", "y0", "x1", "y1", exact=True)
+    engine.register_bbox("inf_pts", "geom", "px", "py", "px", "py", exact=True)
+    cells = engine.spatial_join_cells
+    engine.spatial_join_cells = 64
+    try:
+        df = engine.sql(
+            "SELECT p.pid, b.bid FROM inf_pts p JOIN inf_boxes b "
+            "ON ST_Intersects(p.geom, b.geom)"
+        )
+        assert {(r.pid, r.bid) for r in df.collect()} == want
+        assert "__cell" in _plan(df)
+    finally:
+        engine.spatial_join_cells = cells
+
+
+def test_outer_self_join_over_registered_bbox(engine):
+    """Outer self-join over a bbox-registered view: the bbox expressions
+    resolve against the right side's own names, not the renamed
+    ``*_right`` output columns."""
+    from pyspark.sql import functions as F
+
+    from dataclod_spark.operators.spatial_join import point_wkb
+
+    rnd = random.Random(9)
+    rows = [(i, rnd.uniform(0, 10), rnd.uniform(0, 10)) for i in range(60)]
+    engine.spark.createDataFrame(rows, "pid long, px double, py double").select(
+        "pid", "px", "py", point_wkb(F.col("px"), F.col("py")).alias("geom")
+    ).createOrReplaceTempView("selfj_pts")
+    engine.register_bbox("selfj_pts", "geom", "px", "py", "px", "py", exact=True)
+    df = engine.sql(
+        "SELECT a.pid AS apid, b.pid AS bpid FROM selfj_pts a LEFT JOIN selfj_pts b "
+        "ON ST_DWithin(a.geom, b.geom, 1.0) AND a.pid < b.pid"
+    )
+    geoms = {i: make_point(x, y) for i, x, y in rows}
+    matched = {
+        (a, b) for a in geoms for b in geoms
+        if a < b and GP.dwithin(geoms[a], geoms[b], 1.0)
+    }
+    ma = {a for a, _ in matched}
+    want = matched | {(a, None) for a in geoms if a not in ma}
+    assert {(r.apid, r.bpid) for r in df.collect()} == want and matched
+    assert "BroadcastNestedLoopJoin" not in _plan(df)
+
+
+# points and axis rectangles whose pairs sit on every boundary case of the
+# bbox-exact verdict table: a point on an edge, on a corner, inside and
+# outside a rectangle; equal points; equal rectangles; nested rectangles
+# sharing an edge and strictly nested; rectangles touching at an edge and
+# at a corner; overlapping and disjoint rectangles; and a point exactly
+# the dwithin distance from a rectangle
+_BOUNDARY_BOXES = [
+    (0, 0.0, 2.0, 0.0, 2.0),    # on the left edge of rect 10
+    (1, 0.0, 0.0, 0.0, 0.0),    # on its corner
+    (2, 2.0, 2.0, 2.0, 2.0),    # interior
+    (3, 2.0, 2.0, 2.0, 2.0),    # equal to point 2
+    (4, 9.0, 9.0, 9.0, 9.0),    # outside
+    (5, 5.0, 2.0, 5.0, 2.0),    # exactly 1.0 from rect 10
+    (10, 0.0, 0.0, 4.0, 4.0),
+    (11, 0.0, 0.0, 4.0, 4.0),   # equal to rect 10
+    (12, 0.0, 1.0, 2.0, 3.0),   # nested, shares the left edge
+    (13, 1.0, 1.0, 3.0, 3.0),   # strictly nested
+    (14, 4.0, 0.0, 6.0, 4.0),   # touches rect 10 along an edge
+    (15, 4.0, 4.0, 6.0, 6.0),   # touches rect 10 at a corner
+    (16, 2.0, 2.0, 6.0, 6.0),   # overlaps rect 10
+    (17, 10.0, 10.0, 12.0, 12.0),  # disjoint
+]
+_BOUNDARY_SQL = {
+    "intersects": "ST_Intersects(a.geom, b.geom)",
+    "contains": "ST_Contains(a.geom, b.geom)",
+    "within": "ST_Within(a.geom, b.geom)",
+    "covers": "ST_Covers(a.geom, b.geom)",
+    "covered_by": "ST_CoveredBy(a.geom, b.geom)",
+    "touches": "ST_Touches(a.geom, b.geom)",
+    "overlaps": "ST_Overlaps(a.geom, b.geom)",
+    "equals": "ST_Equals(a.geom, b.geom)",
+    "crosses": "ST_Crosses(a.geom, b.geom)",
+    "dwithin": "ST_DWithin(a.geom, b.geom, 1.0)",
+}
+
+
+_BOUNDARY_TRUTH = {
+    "intersects": GP.intersects,
+    "contains": GP.contains,
+    "within": GP.within,
+    "covers": GP.covers,
+    "covered_by": GP.covered_by,
+    "touches": GP.touches,
+    "overlaps": GP.overlaps,
+    "equals": GP.equals,
+    "crosses": GP.crosses,
+    "dwithin": lambda a, b: GP.dwithin(a, b, 1.0),
+}
+
+
+@pytest.fixture(scope="module")
+def boundary_views(engine):
+    from pyspark.sql import functions as F
+
+    from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb
+
+    geoms = {
+        i: make_point(x0, y0) if (x0, y0) == (x1, y1) else make_envelope(x0, y0, x1, y1)
+        for i, x0, y0, x1, y1 in _BOUNDARY_BOXES
+    }
+    df = engine.spark.createDataFrame(
+        _BOUNDARY_BOXES, "gid long, x0 double, y0 double, x1 double, y1 double"
+    ).select(
+        "*",
+        F.when((F.col("x0") == F.col("x1")) & (F.col("y0") == F.col("y1")),
+               point_wkb("x0", "y0"))
+        .otherwise(envelope_wkb("x0", "y0", "x1", "y1")).alias("geom"),
+    )
+    for v in ("bnd_a", "bnd_b"):
+        df.createOrReplaceTempView(v)
+        engine.register_bbox(v, "geom", "x0", "y0", "x1", "y1", exact=True)
+    return df, geoms
+
+
+@pytest.mark.parametrize("predicate", sorted(_BOUNDARY_SQL))
+def test_verdict_table_boundaries_both_paths(engine, boundary_views, predicate):
+    """The bbox-exact verdict table against geo.predicates on boundary
+    pairs, through the operator (refine="none") and the dispatch (both
+    sides registered exact) — neither path runs a Python refine."""
+    from dataclod_spark.operators.spatial_join import spatial_join
+
+    df, geoms = boundary_views
+    fn = _BOUNDARY_TRUTH[predicate]
+    want = {(a, b) for a in geoms for b in geoms if fn(geoms[a], geoms[b])}
+    bbox = ("x0", "y0", "x1", "y1")
+    op = spatial_join(
+        df, df, predicate, left_bbox=bbox, right_bbox=bbox, refine="none",
+        distance=1.0 if predicate == "dwithin" else None,
+    )
+    assert {(r.gid, r.gid_right) for r in op.collect()} == want, "operator"
+    sql = engine.sql(
+        f"SELECT a.gid AS ga, b.gid AS gb FROM bnd_a a JOIN bnd_b b ON {_BOUNDARY_SQL[predicate]}"
+    )
+    assert {(r.ga, r.gb) for r in sql.collect()} == want, "dispatch"
+    plan = _plan(sql)  # crosses folds to an empty relation
+    assert "EvalPython" not in plan and "BroadcastNestedLoopJoin" not in plan
+

@@ -137,7 +137,11 @@ def test_skewed_extent_balanced_cells(spark):
     """Build data clustered in one corner + probe spread wide: the
     equi-depth grid must (a) stay correct and (b) concentrate boundaries
     where the data is, so no single cell holds almost all build rows."""
-    from dataclod_spark.operators.spatial_join import _Grid, spatial_join, with_bbox
+    from dataclod_spark.operators.spatial_join import (
+        _Grid,
+        collect_bbox_sample,
+        spatial_join,
+    )
 
     rnd = random.Random(7)
     # 95% of boxes live in the [0,1]x[0,1] corner of a [0,1000]^2 extent
@@ -163,12 +167,7 @@ def test_skewed_extent_balanced_cells(spark):
     # partition balance: with an equi-depth grid over the build sample, the
     # largest cell must hold a bounded share of build rows (a uniform grid
     # would put ~95% of them into one corner cell)
-    sample = [
-        (r[0], r[1], r[2], r[3])
-        for r in with_bbox(bdf, "geom", "b_")
-        .select("b_xmin", "b_ymin", "b_xmax", "b_ymax")
-        .collect()
-    ]
+    sample = collect_bbox_sample(bdf, "geom")
     grid = _Grid(sample, 64)
     counts: dict[int, int] = {}
     for (x0, y0, x1, y1) in sample:
