@@ -8,8 +8,7 @@ Each query is executed to completion with a CONTENT-FORCING action:
 every row, so projection-only work (window columns, expression columns) is
 measured too — ``count()`` lets Catalyst prune unreferenced projections
 (SCALE.md pitfall #5), under-measuring projection-shaped queries like w1
-and x1.  Set ``SPARK_GRAFT_BENCH_ACTION=count`` to reproduce the r1–r4
-action for cross-round comparability (same 15-query set since r1).
+and x1.
 
 Alongside the one-shot timings (which carry per-query codegen/JIT and are
 host-noise-sensitive — see the round-5 verdict), a second pass records
@@ -56,8 +55,6 @@ def main() -> None:
         warm_dir = sf_dir  # fall back to the bench data itself
     from pyspark.sql import functions as F
 
-    use_count = os.environ.get("SPARK_GRAFT_BENCH_ACTION") == "count"
-
     def force(df) -> None:
         """The measured action: content-forcing hash over every column of
         every row — nothing prunable (bit_xor, not sum: summing int64
@@ -65,22 +62,15 @@ def main() -> None:
         with dots or parens resolve as column names, not nested-field
         paths.  One definition shared by warmup and timed loop so they
         JIT the same whole-stage classes."""
-        if use_count:
-            df.count()
-        else:
-            cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
-            df.agg(F.bit_xor(F.xxhash64(F.struct(*cols)))).collect()
+        cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
+        df.agg(F.bit_xor(F.xxhash64(F.struct(*cols)))).collect()
 
     # q1 warms the relational paths; g6 warms the spatial grid join's
     # codegen + Arrow python-worker round trip; d2 warms the higher-order-
     # function array/md5 path (all one-time session costs that would
-    # otherwise land on the first timed query using them).  count mode
-    # reproduces the r1-r4 harness exactly, which warmed q1 only — so
-    # g6/d2 JIT stays inside their timings there.
-    warm_queries = ("q1_pricing_summary",) if use_count else (
-        "q1_pricing_summary", "g6_spatial_join_points_in_boxes",
-        "d2_minhash_signatures")
-    for warm_query in warm_queries:
+    # otherwise land on the first timed query using them)
+    for warm_query in ("q1_pricing_summary", "g6_spatial_join_points_in_boxes",
+                       "d2_minhash_signatures"):
         try:
             force(registry[warm_query].fn(spark, warm_dir))
         except Exception as exc:

@@ -1196,10 +1196,11 @@ def semantic_dedup(
     true for the group representative.
 
     100 TB shape: the deterministic k-means fit is shared machinery
-    (:func:`~dataclod_spark.operators.embeddings.kmeans_fit` — one corpus
-    scan per round, k-row aggregates); the pair stage is the paper's own
-    design point — all-pairs only WITHIN a cell, so ``k`` must grow with
-    the corpus to keep |cell|² affordable.  ``k=None`` (the default)
+    (:func:`~dataclod_spark.operators.embeddings.pq_fit_spans` with the
+    single span ``[(1, dim)]`` — one corpus scan per round, k×dim-row
+    aggregates); the pair stage is the paper's own design point —
+    all-pairs only WITHIN a cell, so ``k`` must grow with the corpus to
+    keep |cell|² affordable.  ``k=None`` (the default)
     applies the paper's own contract — k ≈ corpus / ``cell_target``
     (SemDeDup uses ~10k vectors per cell), floored at 8 — from one cheap
     count job, so callers get the scale-safe shape without knowing the
@@ -1210,10 +1211,11 @@ def semantic_dedup(
     the dominant term (measured 33× wall at ×64 replication, SCALE.md) —
     ``assign="routed"`` swaps both the fit's and the final assignment
     for the √k-routed IVF approximation
-    (:func:`~dataclod_spark.operators.embeddings.routed_argmin_cid`,
-    ~√k + k/√k folds per row), trading exact cell boundaries for
-    linear-in-√k assignment exactly the way IVF search does; default
-    stays exact (the d13 oracle's contract).
+    (:func:`~dataclod_spark.operators.embeddings.routed_argmin_cid`, a
+    zero-shuffle map-literal projection, ~√k + k/√k folds per row),
+    trading exact cell boundaries for linear-in-√k assignment exactly
+    the way IVF search does; default stays exact (the d13 oracle's
+    contract).
     The assignment projection is localCheckpoint-ed before the self-join
     so both pair sides and the final labeling read ONE assignment pass
     (the x11 discipline; swap for persist on a real cluster) — and the
@@ -1223,30 +1225,26 @@ def semantic_dedup(
     from dataclod_spark.operators.embeddings import (
         _argmin_cid,
         _kmeans_base,
-        kmeans_fit,
-        routed_assign,
+        pq_fit_spans,
+        routed_argmin_cid,
     )
     from dataclod_spark.operators.similarity import dot, norm
 
     if assign not in ("exact", "routed"):
         raise ValueError(f"semantic_dedup: assign must be exact|routed, got {assign!r}")
+    routed = assign == "routed"
     base = _kmeans_base(df, vec, dim, id_col)
     if k is None:
         n_valid = base.count()
         k = max(8, -(-n_valid // cell_target))
-    cents = kmeans_fit(df, vec, dim, k, iters, id_col, routed=(assign == "routed"))
-    if assign == "routed":
-        labeled = routed_assign(base, cents, "__v", "__id").select(
-            "__id", "__v", F.col("__a")["cid"].cast("bigint").alias("__cell")
-        )
-    else:
-        labeled = base.select(
+    cents = pq_fit_spans(df, vec, dim, [(1, dim)], k, iters, id_col, routed=routed)[0]
+    argmin = routed_argmin_cid if routed else _argmin_cid
+    assigned = (
+        base.select(
             F.col("__id"),
             F.col("__v"),
-            _argmin_cid(F.col("__v"), cents)["cid"].cast("bigint").alias("__cell"),
+            argmin(F.col("__v"), cents)["cid"].cast("bigint").alias("__cell"),
         )
-    assigned = (
-        labeled
         .withColumn("__n", norm(F.col("__v")))
         .localCheckpoint(eager=True)
     )

@@ -1,28 +1,37 @@
 """Embedding-column operators: centroids, cosine-to-centroid, scalar
-quantization — the vector-side toolkit of a training-data pipeline
-(complementing the ANN search in :mod:`operators.similarity`).
+quantization, Lloyd k-means — the vector-side toolkit of a training-data
+pipeline (complementing the ANN search in :mod:`operators.similarity`).
 
 Everything here is pure ``pyspark.sql.functions`` expression code (no
-Python UDFs) and at most ONE aggregation pass over the corpus:
+Python UDFs) and at most ONE aggregation pass over the corpus (per Lloyd
+round, for the trainer):
 
-* :func:`label_centroids` — per-label mean vector via ``dim`` DECIMAL-
-  accumulated column aggregates (partial+final map-side combine; the
-  result is |labels| rows → broadcastable);
+* :func:`label_centroids` — per-label mean vector via one posexplode +
+  ``groupBy(label, position)`` DECIMAL-exact aggregate (partial+final
+  map-side combine; the result is |labels| rows → broadcastable);
 * :func:`cosine_to_centroid` — broadcast-join the centroids back and fold
   the dot/norms **in index order** (``F.aggregate`` over ``zip_with``),
   so the FP summation sequence is deterministic and engine-independent;
 * :func:`scalar_quantize` — classic int8 per-dimension scalar quantization
-  (FAISS ``ScalarQuantizer``-style): one global min/max reduce (1 row,
-  broadcast), then codes/reconstruction/error as zero-shuffle projections.
+  (FAISS ``ScalarQuantizer``-style): one global per-position min/max
+  reduce (1 row, broadcast), then codes/reconstruction/error as
+  zero-shuffle projections;
+* :func:`pq_fit_spans` — THE Lloyd trainer: one codebook per vector span
+  (a single full-width span for plain k-means), every span in the same
+  bounded jobs.
 
 Determinism contract (what the DuckDB oracles rely on): cross-row float
 aggregation always goes through DECIMAL accumulation (exact, order-free);
 within-vector reductions always fold left-to-right over the array index —
 both engines then produce bit-identical doubles.
 
-Scale: centroids and min/max are classic partial aggregates (bytes per
-task, regardless of corpus size); the per-vector math is whole-stage
-codegen over the array column.  Nothing shuffles the corpus itself.
+Scale: every cross-row aggregate has a FIXED handful of expressions
+grouped by vector position, whatever the dimensionality (an unrolled
+dim-column aggregate would be thousands of expressions at production dims
+— janino constant-pool territory).  The explode feeds straight into a
+map-side partial aggregate, so the shuffle carries tasks×dim partial rows,
+never the exploded corpus; the per-vector math is whole-stage codegen over
+the array column.
 """
 
 from __future__ import annotations
@@ -37,46 +46,23 @@ __all__ = [
     "label_centroids",
     "cosine_to_centroid",
     "scalar_quantize",
-    "kmeans_fit",
     "pq_fit_spans",
     "kmeans_clusters",
     "dim_stats",
     "route_centroids",
     "routed_argmin_cid",
-    "routed_assign",
 ]
 
 # exact accumulator type for cross-row sums of double-cast floats
 _ACC = "decimal(27,10)"
-
-# Above this dimensionality the dim-column-aggregate formulation (one agg
-# with O(dim) expressions) switches to a posexplode+groupBy(position)
-# formulation: at production dims (1536-3072) the former is 7k-15k
-# aggregate expressions in one operator — janino constant-pool /
-# compile-time territory (round-5 verdict) — while the exploded form has
-# a FIXED handful of expressions grouped by position.  The explode feeds
-# straight into a map-side partial aggregate (the shuffle carries
-# tasks×dim partial rows, never the exploded corpus), so it scales the
-# same; it just pays the Generate loop instead of unrolled column math.
-#
-# Measured at dim=64 / sf0.1 / local[32] (warmed best-of-2, round 6), the
-# exploded form already wins on every member — the O(dim) expression
-# forest costs more to codegen/evaluate per run than the Generate loop:
-# dim_stats 8.76→1.11 s, label_centroids 2.22→0.76 s, scalar_quantize
-# 2.33→1.12 s, kmeans 4.17→2.63 s.  The threshold therefore sits at 16:
-# only tiny vectors keep the unrolled form (compact plans, explode
-# overhead relatively largest); results are bit-identical either way
-# (tests/test_embeddings_ops.py::test_wide_paths_match_narrow).
-WIDE_DIM_THRESHOLD = 16
 
 
 def _exploded_positions(df: DataFrame, vec: str, dim: int, *keep: str) -> DataFrame:
     """``(keep..., __pos int 0-based, __x double)`` — EXACTLY ``dim`` rows
     per input row: vectors are NULL-padded/truncated to ``dim`` before the
     posexplode, so every position group exists for every row (NULL where
-    the vector was short/NULL/empty — the same value ``F.get`` yields in
-    the narrow formulation), and a ``__pos == 0`` count equals the ROW
-    count exactly like ``F.count(F.lit(1))`` does there."""
+    the vector was short/NULL/empty, as ``F.get`` past the end would
+    yield), and a ``__pos == 0`` count equals the ROW count."""
     x = F.transform(F.col(vec), lambda v: v.cast("double"))
     pad = F.array_repeat(F.lit(None).cast("double"), dim)
     padded = F.slice(
@@ -104,46 +90,29 @@ def l2_normalize(vec: Column) -> Column:
 def label_centroids(df: DataFrame, label: str, vec: str, dim: int) -> DataFrame:
     """Per-label mean vector: ``(label, centroid array<double>, n_vectors)``.
 
-    ``dim`` column aggregates (exact DECIMAL sums / count), reassembled
-    into one array — a single partial+final hash aggregate, no explode
-    (explode would multiply the corpus ×dim before the shuffle).  Above
-    ``WIDE_DIM_THRESHOLD`` the equivalent posexplode+groupBy(label, pos)
-    form runs instead (see the constant's comment); ``n_vectors`` counts
-    rows in both forms (the position-0 sentinel trick)."""
-    if dim > WIDE_DIM_THRESHOLD:
-        ux = _exploded_positions(
-            df.select(F.col(label).alias("__lbl"), vec), vec, dim, "__lbl"
-        )
-        g = ux.groupBy("__lbl", "__pos").agg(
-            F.sum(F.col("__x").cast(_ACC)).alias("__s"),
-            F.count(F.lit(1)).alias("__n"),
-        )
-        per_label = g.groupBy("__lbl").agg(
-            F.max(F.when(F.col("__pos") == 0, F.col("__n"))).alias("n_vectors"),
-            F.array_sort(
-                F.collect_list(F.struct("__pos", "__s"))
-            ).alias("__ss"),
-        )
-        centroid = F.transform(
-            F.col("__ss"), lambda p: p["__s"].cast("double") / F.col("n_vectors")
-        )
-        return per_label.select(
-            F.col("__lbl").alias(label), centroid.alias("centroid"), "n_vectors"
-        )
-    aggs = [
-        # F.get, not vec[i]: NULL past the end instead of an ANSI
-        # INVALID_ARRAY_INDEX crash on a ragged/empty vector (same
-        # tolerance as dim_stats and the wide form above)
-        F.sum(F.get(F.col(vec), F.lit(i)).cast("double").cast(_ACC)).alias(f"__s{i}")
-        for i in range(dim)
-    ]
-    g = df.groupBy(F.col(label).alias("__lbl")).agg(
-        F.count(F.lit(1)).alias("n_vectors"), *aggs
+    One posexplode + ``groupBy(label, position)`` aggregate of exact
+    DECIMAL sums, map-side partial-aggregated (the shuffle carries
+    label×position partials, never the exploded corpus), then a
+    |labels|-row regroup that reassembles each centroid in position
+    order.  ``n_vectors`` counts ROWS, NULL/empty vectors included (the
+    position-0 group's count)."""
+    ux = _exploded_positions(
+        df.select(F.col(label).alias("__lbl"), vec), vec, dim, "__lbl"
     )
-    centroid = F.array(
-        *[(F.col(f"__s{i}").cast("double") / F.col("n_vectors")) for i in range(dim)]
+    g = ux.groupBy("__lbl", "__pos").agg(
+        F.sum(F.col("__x").cast(_ACC)).alias("__s"),
+        F.count(F.lit(1)).alias("__n"),
     )
-    return g.select(F.col("__lbl").alias(label), centroid.alias("centroid"), "n_vectors")
+    per_label = g.groupBy("__lbl").agg(
+        F.max(F.when(F.col("__pos") == 0, F.col("__n"))).alias("n_vectors"),
+        F.array_sort(F.collect_list(F.struct("__pos", "__s"))).alias("__ss"),
+    )
+    centroid = F.transform(
+        F.col("__ss"), lambda p: p["__s"].cast("double") / F.col("n_vectors")
+    )
+    return per_label.select(
+        F.col("__lbl").alias(label), centroid.alias("centroid"), "n_vectors"
+    )
 
 
 def cosine_to_centroid(df: DataFrame, label: str, vec: str, dim: int) -> DataFrame:
@@ -167,34 +136,18 @@ def scalar_quantize(df: DataFrame, vec: str, dim: int) -> DataFrame:
     Constant dimensions (max==min) encode as 0 with exact reconstruction.
     The min/max reduce is one 1-row aggregate broadcast to every task —
     the same two-pass shape FAISS trains its ScalarQuantizer with."""
-    if dim > WIDE_DIM_THRESHOLD:
-        # posexplode form of the same 1-row min/max train pass (see
-        # WIDE_DIM_THRESHOLD); collect_list here is dim structs — bounded
-        ux = _exploded_positions(df, vec, dim)
-        per_pos = ux.groupBy("__pos").agg(
-            F.min("__x").alias("__mn"), F.max("__x").alias("__mx")
-        )
-        stats = per_pos.agg(
-            F.array_sort(
-                F.collect_list(F.struct("__pos", "__mn", "__mx"))
-            ).alias("__t")
-        ).select(
-            F.transform(F.col("__t"), lambda p: p["__mn"]).alias("__mins"),
-            F.transform(F.col("__t"), lambda p: p["__mx"]).alias("__maxs"),
-        )
-    else:
-        mins = [
-            F.min(F.get(F.col(vec), F.lit(i)).cast("double")).alias(f"__mn{i}")
-            for i in range(dim)
-        ]
-        maxs = [
-            F.max(F.get(F.col(vec), F.lit(i)).cast("double")).alias(f"__mx{i}")
-            for i in range(dim)
-        ]
-        stats = df.agg(*mins, *maxs).select(
-            F.array(*[F.col(f"__mn{i}") for i in range(dim)]).alias("__mins"),
-            F.array(*[F.col(f"__mx{i}") for i in range(dim)]).alias("__maxs"),
-        )
+    # per-position min/max, then one 1-row regroup (collect_list of dim
+    # structs — bounded) that broadcasts to every task
+    ux = _exploded_positions(df, vec, dim)
+    per_pos = ux.groupBy("__pos").agg(
+        F.min("__x").alias("__mn"), F.max("__x").alias("__mx")
+    )
+    stats = per_pos.agg(
+        F.array_sort(F.collect_list(F.struct("__pos", "__mn", "__mx"))).alias("__t")
+    ).select(
+        F.transform(F.col("__t"), lambda p: p["__mn"]).alias("__mins"),
+        F.transform(F.col("__t"), lambda p: p["__mx"]).alias("__maxs"),
+    )
     j = df.crossJoin(F.broadcast(stats))
     scales = F.zip_with(
         F.col("__maxs"), F.col("__mins"), lambda mx, mn: (mx - mn) / F.lit(255.0)
@@ -303,66 +256,22 @@ def routed_argmin_cid(
     cents: list[tuple[int, list[float]]],
     n_groups: int | None = None,
 ) -> Column:
-    """IVF-routed approximate nearest centroid as a pure PROJECTION:
-    argmin over ⌈√k⌉ group representatives picks a routing group, then a
-    when-chain evaluates only that group's inner argmin — ~√k + k/√k
-    distance folds evaluated per row.  Same (dist, cid) struct contract
-    as :func:`_argmin_cid`; approximate exactly the way an IVF probe is
-    (a vector near a group boundary may assign to its group's best
-    rather than the global best).  ``n_groups=1`` is exact by
-    construction.
-
-    Column-expression form for SMALL k only: the when-chain still
-    CONTAINS all k member folds, and past a few dozen groups the
-    generated code falls out of whole-stage codegen into interpreted
-    HOF evaluation (measured: k=512 never finished where the flat exact
-    argmin ran in minutes).  Large-k callers use :func:`routed_assign`,
-    the zero-shuffle map-literal projection form."""
+    """IVF-routed approximate nearest centroid as a pure ZERO-SHUFFLE
+    PROJECTION that survives any k: a ⌈√k⌉-fold argmin over the group
+    representatives routes each row to a group, two constant-folded MAP
+    literals (gid → member-cid array, gid → member-vec array-of-arrays —
+    k entries total, driver-bounded) select that group's members, and one
+    ``zip_with`` + ``array_min`` evaluates only the ~k/√k member folds of
+    the winning group.  No expression holds more than √k inline folds, so
+    whole-stage codegen holds at large k, and there is no join or exchange
+    carrying the vector payload anywhere.  Same (dist, cid) struct
+    contract and tie-break (lexicographic struct min → lowest cid) as
+    :func:`_argmin_cid`; approximate exactly the way an IVF probe is (a
+    vector near a group boundary may assign to its group's best rather
+    than the global best).  ``n_groups=1`` is exact by construction."""
     reps, groups = route_centroids(cents, n_groups)
     if len(groups) == 1:
         return _argmin_cid(vec, cents)
-    gid = F.array_min(
-        F.array(
-            *[
-                F.struct(_sq_l2(vec, F.lit(rv)).alias("dist"), F.lit(g).alias("cid"))
-                for g, rv in reps
-            ]
-        )
-    ).getField("cid")
-    ordered = sorted(groups.items())
-    expr = _argmin_cid(vec, ordered[-1][1])
-    for g, members in reversed(ordered[:-1]):
-        expr = F.when(gid == F.lit(g), _argmin_cid(vec, members)).otherwise(expr)
-    return expr
-
-
-def routed_assign(
-    df: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    vec_col: str = "__v",
-    id_col: str = "__id",
-    n_groups: int | None = None,
-) -> DataFrame:
-    """IVF-routed assignment in the shape that survives ANY k, as a pure
-    ZERO-SHUFFLE projection: a √k-fold gid projection routes each row to
-    a group, two constant-folded MAP literals (gid → member-cid array,
-    gid → member-vec array-of-arrays — k entries total, driver-bounded)
-    select that group's members, and one ``zip_with`` + ``array_min``
-    evaluates only the ~k/√k member folds for the winning group.  No
-    expression holds more than √k inline folds (the k-fold when-chain
-    form, :func:`routed_argmin_cid`, drops out of codegen at large k),
-    and unlike the earlier broadcast-join + min(struct) form there is no
-    exchange at all — the r7 verdict flagged that form for carrying the
-    vector payload (≈12 KB/row at dim 1536) through the aggregate
-    shuffle; this form carries nothing anywhere.
-    Returns ``(id_col, vec_col, __a)`` with the same struct contract and
-    tie-break (lexicographic struct min → lowest cid) as
-    :func:`_argmin_cid`."""
-    reps, groups = route_centroids(cents, n_groups)
-    if len(groups) == 1:
-        return df.select(
-            id_col, vec_col, _argmin_cid(F.col(vec_col), cents).alias("__a")
-        )
     ordered = sorted(groups.items())
     cid_map = F.create_map(
         *[
@@ -378,17 +287,14 @@ def routed_assign(
             for x in (F.lit(g), F.lit([[float(v) for v in cv] for _, cv in ms]))
         ]
     )
-    gid = _argmin_cid(F.col(vec_col), reps).getField("cid").cast("int")
-    best = F.array_min(
+    gid = _argmin_cid(vec, reps).getField("cid").cast("int")
+    return F.array_min(
         F.zip_with(
             F.element_at(vec_map, gid),
             F.element_at(cid_map, gid),
-            lambda v, c: F.struct(
-                _sq_l2(F.col(vec_col), v).alias("dist"), c.alias("cid")
-            ),
+            lambda v, c: F.struct(_sq_l2(vec, v).alias("dist"), c.alias("cid")),
         )
     )
-    return df.select(id_col, vec_col, best.alias("__a"))
 
 
 def _kmeans_base(df: DataFrame, vec: str, dim: int, id_col: str) -> DataFrame:
@@ -407,122 +313,51 @@ def _kmeans_base(df: DataFrame, vec: str, dim: int, id_col: str) -> DataFrame:
     ).select(F.col(id_col).alias("__id"), v.alias("__v"))
 
 
-def kmeans_fit(
-    df: DataFrame,
-    vec: str = "embedding",
-    dim: int = 64,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    routed: bool = False,
-) -> list[tuple[int, list[float]]]:
-    """Train the Lloyd centroids and return them as driver-side
-    ``[(cid, centroid), ...]`` — the piece :func:`kmeans_clusters` and
-    ``operators.dedup.semantic_dedup`` share.  Deterministic lowest-id
-    init; ``iters - 1`` assign/update rounds (the final assignment is the
-    caller's).  Each round is one corpus scan + a k-row (narrow) or
-    k·dim-row (wide, see WIDE_DIM_THRESHOLD) DECIMAL-exact aggregate.
-    ``routed=True`` swaps the per-round assignment for the √k-routed
-    approximation (:func:`routed_assign`, the map-literal projection that
-    survives any k) — the large-k scale path; the update step is
-    unchanged."""
-    base = _kmeans_base(df, vec, dim, id_col)
-    cents = [
-        (i, [float(x) for x in r["__v"]])
-        for i, r in enumerate(base.orderBy("__id").limit(k).collect())
-    ]
-    for _ in range(iters - 1):
-        if routed:
-            assigned = routed_assign(base, cents, "__v", "__id")
-        else:
-            assigned = base.withColumn("__a", _argmin_cid(F.col("__v"), cents))
-        if dim > WIDE_DIM_THRESHOLD:
-            # posexplode update (see WIDE_DIM_THRESHOLD): k·dim partial
-            # rows shuffle and k·dim rows collect — bounded by construction
-            ex = assigned.select(
-                F.col("__a.cid").alias("__cid"),
-                F.posexplode(F.col("__v")).alias("__pos", "__x"),
-            )
-            rows = (
-                ex.groupBy("__cid", "__pos")
-                .agg(
-                    F.sum(F.col("__x").cast(_ACC)).alias("__s"),
-                    F.count(F.lit(1)).alias("__n"),
-                )
-                .collect()
-            )
-            acc: dict[int, list] = {}
-            counts: dict[int, int] = {}
-            for r in rows:
-                acc.setdefault(int(r["__cid"]), [None] * dim)[int(r["__pos"])] = r["__s"]
-                counts[int(r["__cid"])] = r["__n"]  # fixed-width: same per pos
-            cents = sorted(
-                (cid, [float(s) / counts[cid] for s in acc[cid]]) for cid in acc
-            )
-        else:
-            sums = [
-                F.sum(F.col("__v")[i].cast(_ACC)).alias(f"__s{i}") for i in range(dim)
-            ]
-            rows = (
-                assigned.groupBy(F.col("__a.cid").alias("__cid"))
-                .agg(F.count(F.lit(1)).alias("__n"), *sums)
-                .collect()
-            )
-            cents = sorted(
-                (
-                    int(r["__cid"]),
-                    [float(r[f"__s{i}"]) / r["__n"] for i in range(dim)],
-                )
-                for r in rows
-            )
-    return cents
-
-
 def pq_fit_spans(
     df: DataFrame,
     vec: str,
+    dim: int,
     spans: list[tuple[int, int]],
     k: int,
     iters: int = 2,
     id_col: str = "vec_id",
+    routed: bool = False,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Train one Lloyd codebook per vector span — ALL spans in the same
-    bounded Spark jobs (optimization guide §1.2: don't run 2-3 separate
-    kmeans_fit pipelines over the same corpus when one pass carries them
-    all).  ``spans`` are 1-based inclusive ``(lo, hi)`` slices; they may
-    overlap (v13 trains the full-width coarse quantizer alongside the two
-    PQ subspaces).  Returns codebooks aligned with ``spans``, each in
-    :func:`kmeans_fit`'s ``[(cid, centroid), ...]`` format.
+    """The Lloyd trainer: one codebook per vector span, ALL spans in the
+    same bounded Spark jobs (optimization guide §1.2: one pass over the
+    corpus carries every fit).  ``spans`` are 1-based inclusive ``(lo,
+    hi)`` slices of the ``dim``-wide vector; they may overlap (v13 trains
+    the full-width coarse quantizer alongside the two PQ subspaces), and
+    plain k-means (:func:`kmeans_clusters`, ``semantic_dedup``) is the
+    single span ``[(1, dim)]``.  Returns codebooks aligned with ``spans``,
+    each a driver-side ``[(cid, centroid), ...]`` list.
 
-    Bit-identical to calling ``kmeans_fit(df.select(id, slice), ...)`` per
-    span (pinned by tests/test_embeddings_ops.py):
-
-    * seeds — ONE ``orderBy(id).limit(k)`` collect of the full vectors,
-      sliced driver-side (``cast(float as double)`` is exact elementwise,
-      so slicing before or after the cast/collect is the same floats);
-    * each round's assignment uses the same ``_argmin_cid`` fold over the
-      same sliced expression;
-    * the update is ONE explode+aggregate job for every span: each row
+    * rows — ``_kmeans_base``'s gate: a NULL, wrong-width or
+      NULL-element vector is dropped from every span's fit (it would
+      crash the seed collect or NULL the DECIMAL sums);
+    * seeds — deterministic lowest-id init: ONE ``orderBy(id).limit(k)``
+      collect of the full vectors, sliced driver-side (``cast(float as
+      double)`` is exact elementwise, so slicing before or after the
+      cast/collect is the same floats);
+    * ``iters - 1`` assign/update rounds (the final assignment is the
+      caller's).  Each round assigns every span with the ``_argmin_cid``
+      fold over its slice — or, with ``routed=True``, the √k-routed
+      approximation :func:`routed_argmin_cid` (the large-k scale path) —
+      and updates ALL spans in ONE explode+aggregate job: each row
       contributes a ``(span, cid_of_that_span, local_pos, x)`` struct per
-      span element, and ``groupBy(span, cid, pos)`` accumulates the same
-      DECIMAL-exact sums / counts kmeans_fit's wide path does (sums are
-      order-independent, so fusing the spans into one aggregate cannot
-      move a bit).
+      span element, and ``groupBy(span, cid, pos)`` accumulates
+      DECIMAL-exact sums / counts (order-independent, so fusing spans
+      cannot move a bit: the fused fit is bit-identical to single-span
+      fits of each slice, pinned by tests/test_embeddings_ops.py).
 
     Job count: ``1 + (iters - 1)`` corpus jobs total, vs ``len(spans) *
     iters`` for separate fits (v13: 6 -> 2).  The shuffle stays bounded —
     the aggregate is partial-aggregated to ``len(spans) * k * span_dim``
-    rows regardless of corpus size.
-
-    PRECONDITION (callers enforce, v11-v13 do): rows are pre-validated —
-    vector non-null, full width, no null elements — i.e. each span slice
-    would pass ``_kmeans_base``'s gate.  (A null ELEMENT would otherwise
-    drop the row from the affected span's fit only; the fused form does
-    not reproduce that per-span row set and the DuckDB oracles are
-    undefined on such data anyway.)
+    rows regardless of corpus size.  Empty clusters drop out of the
+    update (their id disappears), identically in the DuckDB oracles.
     """
-    full = F.transform(F.col(vec), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col).alias("__id"), full.alias("__v"))
+    argmin = routed_argmin_cid if routed else _argmin_cid
+    base = _kmeans_base(df, vec, dim, id_col)
     seed_rows = base.orderBy("__id").limit(k).collect()
     books: list[list[tuple[int, list[float]]]] = [
         [
@@ -532,23 +367,28 @@ def pq_fit_spans(
         for lo, hi in spans
     ]
     for _ in range(iters - 1):
-        # per-span nearest-centroid cid, over the same sliced fold as the
-        # per-span fit (slice of the staged double vector)
-        cids = [
-            _argmin_cid(F.slice(F.col("__v"), lo, hi - lo + 1), books[s]).getField(
-                "cid"
-            )
-            for s, (lo, hi) in enumerate(spans)
-        ]
-        # one struct per (span, element): explode once, aggregate once
-        # (bind the span index via a closure factory — a default argument
-        # would read as a third lambda parameter to F.transform)
+        # per-span nearest-centroid cid over its slice, computed ONCE per
+        # row in the projection below the explode: referenced inside the
+        # per-element transform lambda it would be re-evaluated for every
+        # element of the span
+        kcols = [f"__k{s}" for s in range(len(spans))]
+        staged = base.select(
+            "__v",
+            *[
+                argmin(F.slice(F.col("__v"), lo, hi - lo + 1), books[s])
+                .getField("cid")
+                .alias(kcols[s])
+                for s, (lo, hi) in enumerate(spans)
+            ],
+        )
+
+        # one (span, local_pos, x) struct per span element: explode once,
+        # aggregate once (bind the span index via a closure factory — a
+        # default argument would read as a third lambda parameter to
+        # F.transform)
         def _contrib(s: int):
             return lambda x, i: F.struct(
-                F.lit(s).alias("sp"),
-                cids[s].alias("cid"),
-                i.alias("pos"),
-                x.alias("x"),
+                F.lit(s).alias("sp"), i.alias("pos"), x.alias("x")
             )
 
         contribs = F.flatten(
@@ -561,11 +401,12 @@ def pq_fit_spans(
         )
         from dataclod_spark.functions.text import explode_nonnull
 
-        ex = explode_nonnull(base.select(contribs.alias("__cs")), [], F.col("__cs"), "__c")
+        ex = explode_nonnull(staged, kcols, contribs, "__c")
+        span_cid = F.element_at(F.array(*[F.col(c) for c in kcols]), F.col("__c.sp") + 1)
         rows = (
             ex.groupBy(
                 F.col("__c.sp").alias("__sp"),
-                F.col("__c.cid").alias("__cid"),
+                span_cid.alias("__cid"),
                 F.col("__c.pos").alias("__pos"),
             )
             .agg(
@@ -611,13 +452,15 @@ def kmeans_clusters(
     * **assign** — nearest-centroid id as a zero-Python projection
       (centroids ride into the plan as literals; argmin via ``array_min``
       over (dist, cid) structs, distances folded in index order);
-    * **update** — per-cluster per-dim mean via ``dim`` DECIMAL-exact
-      column aggregates (one partial+final hash aggregate, no explode),
-      collected to the driver (≤ k rows × dim — bounded by construction).
+    * **update** — per-cluster per-position mean via one posexplode +
+      ``groupBy(cid, pos)`` DECIMAL-exact aggregate (:func:`pq_fit_spans`
+      with the single span ``[(1, dim)]``), collected to the driver
+      (≤ k × dim rows — bounded by construction).
 
-    100 TB story: each round is one corpus scan + one k-row aggregate;
-    the corpus never shuffles (assignment is a projection, the update agg
-    is partial-aggregated to k rows).  Driver state is k×dim floats.
+    100 TB story: each round is one corpus scan + one k×dim-row
+    aggregate; the corpus never shuffles (assignment is a projection, the
+    update agg is partial-aggregated to k×dim rows).  Driver state is
+    k×dim floats.
     Empty clusters simply drop out of the update (their id disappears),
     identically in both engines.
 
@@ -625,7 +468,7 @@ def kmeans_clusters(
     inertia`` (mean squared distance to the final centroid, DECIMAL-
     accumulated, rounded to 6)."""
     base = _kmeans_base(df, vec, dim, id_col)
-    cents = kmeans_fit(df, vec, dim, k, iters, id_col)
+    cents = pq_fit_spans(df, vec, dim, [(1, dim)], k, iters, id_col)[0]
     final = base.withColumn("__a", _argmin_cid(F.col("__v"), cents))
     return (
         final.groupBy(F.col("__a.cid").cast("bigint").alias("cluster_id"))
@@ -646,98 +489,46 @@ def dim_stats(df: DataFrame, vec: str, dim: int) -> DataFrame:
     a vector store runs before trusting distances (a dimension with ~0
     std contributes nothing; one with a huge range dominates L2).
 
-    Same discipline as :func:`label_centroids`: ``dim`` column aggregates
-    in ONE global partial+final pass (no explode — explode would multiply
-    the corpus ×dim before the shuffle), sums carried in exact DECIMAL so
-    the means/stds are order-independent, then the 1-row result pivots to
-    ``dim`` rows driver-free via posexplode of an inline struct array.
+    Same discipline as :func:`label_centroids`: one posexplode +
+    ``groupBy(position)`` pass, map-side partial-aggregated, with sums
+    carried in exact DECIMAL so the means/stds are order-independent.
     std uses the population form sqrt(E[x²] − E[x]²) computed in IEEE
     doubles from the exact sums — deterministic across engines.
 
-    Ragged corpora are tolerated, not assumed away: element access is
-    ``F.get`` (NULL past the end — ``vec[i]`` raises INVALID_ARRAY_INDEX
-    under Spark 4's ANSI mode on any vector shorter than ``dim``), so a
-    short vector simply contributes nothing to the tail dims and a NULL
-    element at a valid position is skipped — the same semantics as the
-    oracle's position-bounded NULL-filtered unnest (ADVICE r5).
-
-    Above ``WIDE_DIM_THRESHOLD`` the posexplode+groupBy(position) form
-    runs instead (see the constant's comment); a left join against a
-    1..dim spine keeps zero-coverage dims present (n=0), matching the
-    narrow form's always-dim-rows output."""
-    if dim > WIDE_DIM_THRESHOLD:
-        ux = _exploded_positions(df, vec, dim).filter(F.col("__x").isNotNull())
-        g = ux.groupBy("__pos").agg(
-            F.count("__x").alias("__n"),
-            F.sum(F.col("__x").cast(_ACC)).alias("__s"),
-            F.sum((F.col("__x") * F.col("__x")).cast(_ACC)).alias("__q"),
-            F.min("__x").alias("__mn"),
-            F.max("__x").alias("__mx"),
-        )
-        spine = df.sparkSession.range(dim).select(
-            F.col("id").cast("int").alias("__pos")
-        )
-        g = spine.join(g, "__pos", "left")
-        mean = F.col("__s").cast("double") / F.col("__n")
-        return g.select(
-            (F.col("__pos") + 1).cast("int").alias("dim"),
-            F.coalesce(F.col("__n"), F.lit(0)).alias("n"),
-            F.round(mean, 8).alias("mean"),
-            F.round(
-                F.sqrt(
-                    F.greatest(
-                        F.col("__q").cast("double") / F.col("__n") - mean * mean,
-                        F.lit(0.0),
-                    )
-                ),
-                8,
-            ).alias("std"),
-            F.round(F.col("__mn"), 8).alias("dim_min"),
-            F.round(F.col("__mx"), 8).alias("dim_max"),
-        )
-    x = lambda i: F.get(F.col(vec), F.lit(i)).cast("double")
-    aggs = []
-    for i in range(dim):
-        aggs += [
-            # per-dim COUNT, not the row count: sum/min/max skip nulls, so
-            # dividing a null-skipping sum by the total row count would
-            # bias mean/std for short vectors or null elements (and
-            # diverge from the oracle's unnest formulation, which only
-            # sees present elements)
-            F.count(x(i)).alias(f"__n{i}"),
-            F.sum(x(i).cast(_ACC)).alias(f"__s{i}"),
-            F.sum((x(i) * x(i)).cast(_ACC)).alias(f"__q{i}"),
-            F.min(x(i)).alias(f"__mn{i}"),
-            F.max(x(i)).alias(f"__mx{i}"),
-        ]
-    g = df.agg(*aggs)
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(i + 1).alias("dim"),
-                F.col(f"__n{i}").alias("n"),
-                (F.col(f"__s{i}").cast("double") / F.col(f"__n{i}")).alias("mean"),
-                F.sqrt(
-                    F.greatest(
-                        F.col(f"__q{i}").cast("double") / F.col(f"__n{i}")
-                        - (F.col(f"__s{i}").cast("double") / F.col(f"__n{i}"))
-                        * (F.col(f"__s{i}").cast("double") / F.col(f"__n{i}")),
-                        F.lit(0.0),
-                    )
-                ).alias("std"),
-                F.col(f"__mn{i}").alias("mn"),
-                F.col(f"__mx{i}").alias("mx"),
-            )
-            for i in range(dim)
-        ]
+    Ragged corpora are tolerated, not assumed away: vectors are
+    NULL-padded/truncated to ``dim`` positions and NULL elements are
+    filtered before the aggregate, so ``n`` is a per-dim COUNT of present
+    elements (a short vector contributes nothing to the tail dims, a NULL
+    element at a valid position is skipped) — the same semantics as the
+    oracle's position-bounded NULL-filtered unnest (ADVICE r5).  A left
+    join against a 1..dim spine keeps zero-coverage dims present (n=0),
+    so the output always has ``dim`` rows."""
+    ux = _exploded_positions(df, vec, dim).filter(F.col("__x").isNotNull())
+    g = ux.groupBy("__pos").agg(
+        F.count("__x").alias("__n"),
+        F.sum(F.col("__x").cast(_ACC)).alias("__s"),
+        F.sum((F.col("__x") * F.col("__x")).cast(_ACC)).alias("__q"),
+        F.min("__x").alias("__mn"),
+        F.max("__x").alias("__mx"),
     )
-    return g.select(F.explode(rows).alias("__r")).select(
-        F.col("__r.dim").alias("dim"),
-        F.col("__r.n").alias("n"),
-        F.round(F.col("__r.mean"), 8).alias("mean"),
-        F.round(F.col("__r.std"), 8).alias("std"),
-        F.round(F.col("__r.mn"), 8).alias("dim_min"),
-        F.round(F.col("__r.mx"), 8).alias("dim_max"),
+    spine = df.sparkSession.range(dim).select(F.col("id").cast("int").alias("__pos"))
+    g = spine.join(g, "__pos", "left")
+    mean = F.col("__s").cast("double") / F.col("__n")
+    return g.select(
+        (F.col("__pos") + 1).cast("int").alias("dim"),
+        F.coalesce(F.col("__n"), F.lit(0)).alias("n"),
+        F.round(mean, 8).alias("mean"),
+        F.round(
+            F.sqrt(
+                F.greatest(
+                    F.col("__q").cast("double") / F.col("__n") - mean * mean,
+                    F.lit(0.0),
+                )
+            ),
+            8,
+        ).alias("std"),
+        F.round(F.col("__mn"), 8).alias("dim_min"),
+        F.round(F.col("__mx"), 8).alias("dim_max"),
     )
 
 

@@ -577,7 +577,7 @@ ORDER BY asg.vec_id
 """,
 )
 def d13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators.dedup.semantic_dedup — the kmeans_fit centroids ride into
+    """operators.dedup.semantic_dedup — the pq_fit_spans centroids ride into
     the assignment projection as array literals (zero Python, zero corpus
     shuffle), the pair join shuffles on the cell id only, and components
     collapse transitive duplicate chains.  The oracle replays the same

@@ -379,9 +379,10 @@ def v6_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared Lloyd CTE chain (k=8, dim=64, 2 rounds, lowest-id init) ending in
-# a2(vec_id, cid, dist) — the deterministic SQL replica of
-# operators.embeddings.kmeans_fit at the driver-data defaults; reused by
-# v7's cluster summary and d13's semantic-dedup oracle (queries/dedup.py)
+# a2(vec_id, cid, dist) — the deterministic SQL replica of the
+# single-span operators.embeddings.pq_fit_spans at the driver-data
+# defaults; reused by v7's cluster summary and d13's semantic-dedup
+# oracle (queries/dedup.py)
 LLOYD_K8_CTES = """e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
@@ -425,7 +426,7 @@ LLOYD_K8_CTES = """e AS (
     doc="Lloyd k-means (k=8, 2 rounds, deterministic lowest-id init) over "
     "the embedding corpus — per-cluster size + inertia "
     "(operators/embeddings.kmeans_clusters): assignment is a literal-"
-    "centroid codegen projection, the update is a k-row DECIMAL-exact "
+    "centroid codegen projection, the update is a k×dim-row DECIMAL-exact "
     "aggregate; the corpus never shuffles",
     oracle=f"""
 WITH {LLOYD_K8_CTES}
@@ -577,11 +578,12 @@ ORDER BY dim
 """,
 )
 def v9_embedding_dim_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators.embeddings.dim_stats — dim column aggregates in ONE
-    global partial+final pass (no ×dim explode of the corpus; the oracle
-    spells the unnest formulation), exact-DECIMAL sums so the moments are
-    summation-order-independent, 1-row → dim-rows pivot via posexplode.
-    At 100 TB this is a single all-reduce of 4·dim accumulators."""
+    """operators.embeddings.dim_stats — one posexplode +
+    groupBy(position) pass, map-side partial-aggregated so only
+    tasks×dim partial rows shuffle (the oracle spells the same unnest
+    formulation), exact-DECIMAL sums so the moments are
+    summation-order-independent.  At 100 TB this is a single all-reduce
+    of 5·dim accumulators."""
     from dataclod_spark.operators.embeddings import dim_stats
 
     e = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
@@ -710,14 +712,14 @@ def v11_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook rows are the only driver state.  The error sum is spelled
     subspace-0-then-1 on both engines so the doubles are bit-identical.
     Both subspace codebooks train in the SAME two bounded jobs (r12,
-    guide §1.2): bit-identical to the per-span kmeans_fit calls this
-    replaced (see pq_fit_spans), at half the corpus-job count."""
+    guide §1.2): bit-identical to single-span fits of each subspace (see
+    pq_fit_spans), at half the corpus-job count."""
     from dataclod_spark.operators.embeddings import _argmin_cid, pq_fit_spans
 
     e = load(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") == 64)
     )
-    subs = pq_fit_spans(e, "embedding", [(1, 32), (33, 64)], k=4, iters=2)
+    subs = pq_fit_spans(e, "embedding", _DIM, [(1, 32), (33, 64)], k=4, iters=2)
     a0 = _argmin_cid(
         F.transform(F.slice("embedding", 1, 32), lambda x: x.cast("double")), subs[0]
     )
@@ -785,7 +787,7 @@ LIMIT 10
 """,
 )
 def v12_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v11's codebooks (shared kmeans_fit) + a driver-built when-chain
+    """v11's codebooks (shared pq_fit_spans) + a driver-built when-chain
     LUT: per subspace, the probe-to-centroid squared L2 is a CONSTANT
     expression (two array literals through the same index-ordered
     ``_sq_l2`` fold the oracle's list_sum mirrors), selected by the
@@ -800,7 +802,7 @@ def v12_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") == 64)
     )
-    subs = pq_fit_spans(e, "embedding", [(1, 32), (33, 64)], k=4, iters=2)
+    subs = pq_fit_spans(e, "embedding", _DIM, [(1, 32), (33, 64)], k=4, iters=2)
 
     def lut_dist(cid_col: F.Column, cents, lo: int, hi: int) -> F.Column:
         qsub = F.lit([_adc_q(i) for i in range(lo, hi + 1)])
@@ -885,8 +887,8 @@ def v13_ivf_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition/cluster key of a real deployment, so the filter is
     partition PRUNING, not a scan-and-drop; codes + cell ids are the
     only columns read.  The coarse quantizer and BOTH subspace codebooks
-    train in the SAME two bounded jobs (r12, guide §1.2: the three
-    kmeans_fit pipelines ran 6 corpus jobs for identical results — see
+    train in the SAME two bounded jobs (r12, guide §1.2: three separate
+    single-span fits ran 6 corpus jobs for identical results — see
     pq_fit_spans; the coarse k=4 seeds are the same 4 lowest-id rows the
     subspace seeds slice)."""
     from dataclod_spark.operators.embeddings import _argmin_cid, _sq_l2, pq_fit_spans
@@ -895,7 +897,7 @@ def v13_ivf_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").isNotNull() & (F.size("embedding") == 64)
     )
     coarse, *subs = pq_fit_spans(
-        e, "embedding", [(1, 64), (1, 32), (33, 64)], k=4, iters=2
+        e, "embedding", _DIM, [(1, 64), (1, 32), (33, 64)], k=4, iters=2
     )
     qfull = [_adc_q(i) for i in range(1, 65)]
     probe_cells = sorted(

@@ -99,14 +99,24 @@ def test_centroid_plan_no_corpus_shuffle_after_agg(vecs):
     assert "SortMergeJoin" not in plan
 
 
-def test_quantize_plan_broadcast_stats(vecs):
-    plan = (
-        scalar_quantize(vecs, "embedding", DIM)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # the 1-row stats frame broadcasts; the corpus never hash-partitions
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "Exchange hashpartitioning" not in plan
+def test_quantize_plan_broadcast_stats(spark):
+    """The 1-row stats frame broadcasts, and corpus rows never shuffle:
+    every hash Exchange sits directly above a partial aggregate, so only
+    per-task per-position partials cross the network."""
+    for dim in (4, 64):
+        df = spark.createDataFrame(
+            [Row(vec_id=i, embedding=[float(i + j) for j in range(dim)]) for i in range(10)]
+        )
+        plan = (
+            scalar_quantize(df, "embedding", dim)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+        lines = plan.splitlines()
+        for i, line in enumerate(lines):
+            if "Exchange hashpartitioning" in line:
+                child = lines[i + 1]
+                assert "HashAggregate(" in child and "partial_" in child, (dim, plan)
 
 
 def test_kmeans_separates_planted_clusters(spark):
@@ -221,48 +231,10 @@ FROM ux GROUP BY dim ORDER BY dim
     assert got[1][1] == 3 and got[3][1] == 3 and len(got) == 4
 
 
-def test_wide_paths_match_narrow(spark, monkeypatch):
-    """VERDICT r5 #5: above WIDE_DIM_THRESHOLD the dim-column-aggregate
-    family switches to posexplode+groupBy.  Forcing the wide path at a
-    small dim must reproduce the narrow path bit-for-bit on all four
-    operators."""
-    import numpy as np
-    from pyspark.sql import Row
-
-    import dataclod_spark.operators.embeddings as E
-
-    rng = np.random.default_rng(11)
-    m = rng.normal(0, 2, size=(120, 6)).astype(np.float64)
-    df = spark.createDataFrame(
-        [
-            Row(vec_id=i, label=f"l{i % 3}", embedding=[float(v) for v in row])
-            for i, row in enumerate(m)
-        ],
-        "vec_id long, label string, embedding array<double>",
-    )
-
-    def snap():
-        ds = sorted(map(tuple, E.dim_stats(df, "embedding", 6).collect()))
-        lc = sorted(
-            (r.label, r.n_vectors, tuple(round(c, 12) for c in r.centroid))
-            for r in E.label_centroids(df, "label", "embedding", 6).collect()
-        )
-        sq = sorted(
-            (r.vec_id, tuple(r.codes), round(r.mean_abs_err, 12), round(r.max_abs_err, 12))
-            for r in E.scalar_quantize(df, "embedding", 6).collect()
-        )
-        km = sorted(map(tuple, E.kmeans_clusters(df, "embedding", 6, k=4, iters=3).collect()))
-        return ds, lc, sq, km
-
-    narrow = snap()
-    monkeypatch.setattr(E, "WIDE_DIM_THRESHOLD", 0)
-    wide = snap()
-    assert narrow == wide
-
-
-def test_wide_paths_null_and_empty_vectors(spark, monkeypatch):
+def test_wide_paths_null_and_empty_vectors(spark):
     """Row accounting under dirty input: NULL/empty vectors count toward
-    n_vectors (centroids divide by the ROW count) in both forms."""
+    n_vectors (centroids divide by the ROW count), and a label whose only
+    vector is empty gets an all-NULL centroid."""
     from pyspark.sql import Row
 
     import dataclod_spark.operators.embeddings as E
@@ -276,28 +248,24 @@ def test_wide_paths_null_and_empty_vectors(spark, monkeypatch):
         ],
         "vec_id long, label string, embedding array<double>",
     )
-    narrow = sorted(
+    got = sorted(
         (r.label, r.n_vectors, tuple(r.centroid))
         for r in E.label_centroids(df, "label", "embedding", 2).collect()
     )
-    monkeypatch.setattr(E, "WIDE_DIM_THRESHOLD", 0)
-    wide = sorted(
-        (r.label, r.n_vectors, tuple(r.centroid))
-        for r in E.label_centroids(df, "label", "embedding", 2).collect()
-    )
-    assert narrow == wide
-    assert narrow[0] == ("a", 3, (2.0, 4.0))  # sums / ROW count incl. NULL row
+    assert got == [
+        ("a", 3, (2.0, 4.0)),  # sums / ROW count incl. NULL row
+        ("b", 1, (None, None)),
+    ]
 
 
 def test_dim_1024_all_four_operators(spark):
     """The production-dim gate: dim=1024 must run in reasonable time on
-    all four operators (the narrow form would be ~5k aggregate
+    all four operators (an unrolled dim-column aggregate would be ~5k
     expressions — janino territory); results sanity-checked vs numpy."""
     import numpy as np
     from pyspark.sql import Row
 
     from dataclod_spark.operators.embeddings import (
-        WIDE_DIM_THRESHOLD,
         dim_stats,
         kmeans_clusters,
         label_centroids,
@@ -305,7 +273,6 @@ def test_dim_1024_all_four_operators(spark):
     )
 
     dim = 1024
-    assert dim > WIDE_DIM_THRESHOLD
     rng = np.random.default_rng(3)
     m = rng.normal(0, 1, size=(60, dim)).astype(np.float64)
     df = spark.createDataFrame(
@@ -364,12 +331,12 @@ def test_matryoshka_energy_matches_numpy(spark):
 
 
 def test_product_quantize_planted_subspace_blobs(spark):
-    """PQ via per-subspace kmeans_fit: two tight blobs per subspace ->
-    codes separate them and reconstruction error stays near the blob
-    radius; subspaces are coded independently."""
+    """PQ via pq_fit_spans: two tight blobs per subspace -> codes
+    separate them and reconstruction error stays near the blob radius;
+    subspaces are coded independently."""
     from pyspark.sql import Row
 
-    from dataclod_spark.operators.embeddings import _argmin_cid, kmeans_fit
+    from dataclod_spark.operators.embeddings import _argmin_cid, pq_fit_spans
 
     rows = []
     for i in range(40):
@@ -379,12 +346,7 @@ def test_product_quantize_planted_subspace_blobs(spark):
         rows.append(Row(vec_id=i, embedding=[v + eps for v in left + right]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    subs = []
-    for lo in (1, 3):
-        sliced = df.select(
-            "vec_id", F.slice("embedding", lo, 2).alias("__sub")
-        )
-        subs.append(kmeans_fit(sliced, vec="__sub", dim=2, k=2, iters=3))
+    subs = pq_fit_spans(df, "embedding", 4, [(1, 2), (3, 4)], k=2, iters=3)
     out = df.select(
         "vec_id",
         _argmin_cid(F.slice("embedding", 1, 2), subs[0])["cid"].alias("c0"),
@@ -407,14 +369,14 @@ def test_product_quantize_planted_subspace_blobs(spark):
 def test_pq_fit_spans_bit_identical_to_per_span_kmeans(spark):
     """pq_fit_spans fuses all spans' Lloyd fits into one seed collect +
     one update aggregate per round; the codebooks must be BIT-identical
-    to independent per-span kmeans_fit calls (the v11-v13 oracles depend
-    on exact doubles), including an overlapping full-width span (v13's
-    coarse quantizer) and a span with an empty cluster."""
+    to independent single-span fits of each slice (the v11-v13 oracles
+    depend on exact doubles), including an overlapping full-width span
+    (v13's coarse quantizer) and a span with an empty cluster."""
     import random
 
     from pyspark.sql import Row
 
-    from dataclod_spark.operators.embeddings import kmeans_fit, pq_fit_spans
+    from dataclod_spark.operators.embeddings import pq_fit_spans
 
     rng = random.Random(7)
     rows = [
@@ -424,16 +386,72 @@ def test_pq_fit_spans_bit_identical_to_per_span_kmeans(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     spans = [(1, 8), (1, 4), (5, 8)]
     for iters in (1, 2, 3):
-        fused = pq_fit_spans(df, "embedding", spans, k=3, iters=iters)
+        fused = pq_fit_spans(df, "embedding", 8, spans, k=3, iters=iters)
         for (lo, hi), book in zip(spans, fused):
+            width = hi - lo + 1
             sliced = df.select(
                 "vec_id",
                 F.transform(
-                    F.slice("embedding", lo, hi - lo + 1), lambda x: x.cast("double")
+                    F.slice("embedding", lo, width), lambda x: x.cast("double")
                 ).alias("__sub"),
             )
-            ref = kmeans_fit(sliced, vec="__sub", dim=hi - lo + 1, k=3, iters=iters)
+            ref = pq_fit_spans(sliced, "__sub", width, [(1, width)], k=3, iters=iters)[0]
             assert book == ref, (iters, lo, hi)
+
+
+# Lloyd codebooks (dim 4, k 3, iters 3) recorded from the earlier
+# dedicated k-means trainer (an unrolled dim-column update at this width;
+# exact argmin, and the map-literal routed assignment), so the single
+# trainer stays pinned to the exact doubles it produced
+_GOLDEN_EXACT = [
+    (0, [2.8945, 3.11025, 0.95125, -1.1735]),
+    (1, [1.057, -0.9584166666666666, 0.5415833333333333, -1.0205416666666667]),
+    (2, [-1.6784500000000002, 1.1804999999999999, -1.23735, 0.8554999999999999]),
+]
+_GOLDEN_ROUTED = [
+    (0, [2.3705454545454545, 0.17663636363636365, 1.641727272727273, -2.2460909090909094]),
+    (1, [-0.02855, -0.9704499999999999, -0.24220000000000003, -0.7978500000000001]),
+    (2, [-1.3016470588235294, 1.795, -1.2446470588235294, 1.6815882352941176]),
+]
+
+
+def _golden_frame(spark):
+    import random
+
+    rng = random.Random(23)
+    rows = [
+        Row(vec_id=i, embedding=[round(rng.uniform(-4, 4), 3) for _ in range(4)])
+        for i in range(48)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("routed", [False, True], ids=["exact", "routed"])
+def test_lloyd_golden_codebooks(spark, routed):
+    from dataclod_spark.operators.embeddings import pq_fit_spans
+
+    book = pq_fit_spans(
+        _golden_frame(spark), "embedding", 4, [(1, 4)], k=3, iters=3, routed=routed
+    )[0]
+    assert book == (_GOLDEN_ROUTED if routed else _GOLDEN_EXACT)
+
+
+def test_pq_fit_spans_drops_null_element_rows(spark):
+    """_kmeans_base's gate holds in the multi-span trainer: a lowest-id
+    row with a NULL element must neither crash the seed collect nor skew
+    any span — the fit equals the fit without that row."""
+    df = _golden_frame(spark)
+    dirty = df.union(
+        spark.createDataFrame(
+            [Row(vec_id=-1, embedding=[1.0, None, 2.0, 3.0])],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    from dataclod_spark.operators.embeddings import pq_fit_spans
+
+    spans = [(1, 4), (1, 2), (3, 4)]
+    got = pq_fit_spans(dirty, "embedding", 4, spans, k=3, iters=3)
+    assert got == pq_fit_spans(df, "embedding", 4, spans, k=3, iters=3)
 
 
 def test_routed_argmin_single_group_is_exact(spark):
@@ -500,7 +518,7 @@ def test_routed_argmin_high_agreement_and_determinism(spark):
     assert agree >= 0.95, agree
 
 
-def test_semantic_dedup_routed_assignment(spark):
+def test_semantic_dedup_routed_mode(spark):
     """assign='routed' still collapses a planted near-dup pair (identical
     inputs route identically) and labels every vector; bad mode raises."""
     import random

@@ -1452,8 +1452,9 @@ def test_dsir_weights_direction_and_counts(spark):
 def test_pq_adc_codes_match_v11_and_distances_are_lut_exact(spark):
     """v12's codes must equal v11's (same codebooks, same assignment) and
     each adc_dist must equal the probe-to-assigned-centroid distance
-    recomputed in Python from the same kmeans_fit output."""
-    from dataclod_spark.operators.embeddings import kmeans_fit
+    recomputed in Python from independent single-span pq_fit_spans
+    codebooks."""
+    from dataclod_spark.operators.embeddings import pq_fit_spans
     from dataclod_spark.queries.similarity import _adc_q, v12_pq_adc_topk
     from dataclod_spark.registry import load
 
@@ -1466,13 +1467,7 @@ def test_pq_adc_codes_match_v11_and_distances_are_lut_exact(spark):
     )
     luts = []
     for lo, hi in ((1, 32), (33, 64)):
-        sliced = e.select(
-            "vec_id",
-            F.transform(
-                F.slice("embedding", lo, hi - lo + 1), lambda x: x.cast("double")
-            ).alias("__sub"),
-        )
-        cents = kmeans_fit(sliced, vec="__sub", dim=hi - lo + 1, k=4, iters=2)
+        cents = pq_fit_spans(e, "embedding", 64, [(lo, hi)], k=4, iters=2)[0]
         q = [_adc_q(i) for i in range(lo, hi + 1)]
         luts.append({cid: sum((a - b) * (a - b) for a, b in zip(q, cv)) for cid, cv in cents})
     from dataclod_spark.queries.similarity import v11_product_quantize
@@ -2108,11 +2103,11 @@ def test_dim_sign_signature_short_vector_is_not_fatal(spark):
 
 
 def test_kmeans_ignores_null_element_vectors(spark):
-    from dataclod_spark.operators.embeddings import kmeans_fit
+    from dataclod_spark.operators.embeddings import pq_fit_spans
 
     rows = [(0, [None, 1.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = kmeans_fit(df, dim=2, k=2, iters=2)
+    cents = pq_fit_spans(df, "embedding", 2, [(1, 2)], k=2, iters=2)[0]
     assert len(cents) == 2
     assert all(all(x is not None for x in c) for _, c in cents)
 

@@ -292,19 +292,20 @@ def test_sp7_dsir_broadcast_weight_joins(spark):
     assert "partial_" in plan
 
 
-def test_routed_assign_zero_shuffle_projection(spark):
-    """routed_assign's plan: a pure projection — the member centroids
+def test_routed_argmin_cid_zero_shuffle_projection(spark):
+    """routed_argmin_cid's plan: a pure projection — the member centroids
     live in constant-folded map literals and the per-row argmin is a
     zip_with fold, so there is NO exchange, join, or aggregate anywhere
     (the r7 broadcast-join form shuffled the vector payload through its
     final min(struct) aggregate; see SCALE.md round-8 note).  No k-fold
-    expression either (the when-chain form falls out of codegen at
-    large k)."""
+    expression either (a when-chain form falls out of codegen at large
+    k)."""
     import random
 
     from pyspark.sql import Row
+    from pyspark.sql import functions as F
 
-    from dataclod_spark.operators.embeddings import routed_assign
+    from dataclod_spark.operators.embeddings import routed_argmin_cid
 
     rnd = random.Random(2)
     cents = [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(64)]
@@ -312,7 +313,7 @@ def test_routed_assign_zero_shuffle_projection(spark):
         [Row(__id=i, __v=[rnd.gauss(0, 1) for _ in range(8)]) for i in range(50)],
         "__id long, __v array<double>",
     )
-    out = routed_assign(df, cents, "__v", "__id")
+    out = df.select("__id", "__v", routed_argmin_cid(F.col("__v"), cents).alias("__a"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Join" not in plan

@@ -1,69 +1,9 @@
-"""Structured Streaming wrappers + multimodal plumbing tests."""
+"""Multimodal plumbing tests."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def test_tumbling_agg_streaming_rate_source(spark):
-    """End-to-end micro-batch: rate source → tumbling agg → memory sink."""
-    from dataclod_spark.streaming.windows import tumbling_agg
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "50").load()
-        .withColumn("event_type", (F.col("value") % 3).cast("string"))
-    )
-    agg = tumbling_agg(
-        stream, window="1 second", ts_col="timestamp", keys=("event_type",),
-        watermark="0 seconds",
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_tumbling")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        deadline = time.time() + 30
-        rows = []
-        while time.time() < deadline:
-            q.processAllAvailable()
-            rows = spark.sql("SELECT * FROM t_tumbling").collect()
-            if rows:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert rows, "no streaming output produced"
-    assert {"win", "event_type", "n_events"} <= set(rows[0].asDict().keys())
-
-
-def test_session_agg_batch_twin(spark):
-    """session_window grouping on a batch frame: 2 sessions with 30m gap."""
-    from dataclod_spark.streaming.windows import session_agg
-
-    schema = T.StructType(
-        [T.StructField("ts", T.TimestampType()), T.StructField("user_id", T.LongType())]
-    )
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (base, 1),
-        (base + dt.timedelta(minutes=10), 1),
-        (base + dt.timedelta(minutes=70), 1),  # > 30m gap → new session
-        (base, 2),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    out = session_agg(df, gap="30 minutes").collect()
-    per_user = {}
-    for r in out:
-        per_user.setdefault(r.user_id, []).append(r.n_events)
-    assert sorted(per_user[1]) == [1, 2]
-    assert per_user[2] == [1]
 
 
 def test_multimodal_decode_and_frames(spark):
