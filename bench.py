@@ -24,6 +24,8 @@ import os
 import sys
 import time
 
+from pyspark.sql import functions as F
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,51 +37,7 @@ def main() -> None:
     spark = get_spark(app_name="dataclod_spark_bench")
     registry = load_all_queries()
     headline = {name: qd for name, qd in registry.items() if qd.bench}
-
-    # warm the JVM + parquet footer cache with one tiny action, and pay the
-    # one-time engine registration (57 spatial UDFs + catalog views) OUTSIDE
-    # any query's timing — queries constructing an EngineSession over this
-    # session hit the once-per-session guards and re-register nothing
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    from dataclod_spark.session import EngineSession
-
-    EngineSession(spark)
-    # one untimed throwaway query at the smallest available scale factor
-    # warms the shared JVM paths (codegen compiler, shuffle machinery,
-    # whole-stage classes) the same way for every timed query — measured:
-    # the first timed query otherwise absorbs ~1.3 s of one-time JIT that
-    # belongs to the session, not the query (same policy as
-    # registration-outside-timings above)
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir  # fall back to the bench data itself
-    from pyspark.sql import functions as F
-
-    def force(df) -> None:
-        """The measured action: content-forcing hash over every column of
-        every row — nothing prunable (bit_xor, not sum: summing int64
-        hashes overflows ANSI mode); backticked so auto-generated names
-        with dots or parens resolve as column names, not nested-field
-        paths.  One definition shared by warmup and timed loop so they
-        JIT the same whole-stage classes."""
-        cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
-        df.agg(F.bit_xor(F.xxhash64(F.struct(*cols)))).collect()
-
-    # q1 warms the relational paths; g6 warms the spatial grid join's
-    # codegen + Arrow python-worker round trip; d2 warms the higher-order-
-    # function array/md5 path (all one-time session costs that would
-    # otherwise land on the first timed query using them)
-    for warm_query in ("q1_pricing_summary", "g6_spatial_join_points_in_boxes",
-                       "d2_minhash_signatures"):
-        try:
-            force(registry[warm_query].fn(spark, warm_dir))
-        except Exception as exc:
-            # a silently-skipped warmup would skew the first timed query
-            print(
-                f"bench warmup {warm_query} failed ({exc}); "
-                "first-query JIT included",
-                file=sys.stderr,
-            )
+    warm_up(spark, registry, sf_dir)
 
     timings: dict[str, float] = {}
     for name, qd in sorted(headline.items()):
@@ -135,6 +93,54 @@ def main() -> None:
     print(json.dumps(out))
     spark.stop()
 
+
+def force(df) -> None:
+    """The measured action: content-forcing hash over every column of
+    every row — nothing prunable (bit_xor, not sum: summing int64
+    hashes overflows ANSI mode); backticked so auto-generated names
+    with dots or parens resolve as column names, not nested-field
+    paths.  One definition shared by warmup and timed loop so they
+    JIT the same whole-stage classes."""
+    cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
+    df.agg(F.bit_xor(F.xxhash64(F.struct(*cols)))).collect()
+
+
+def warm_up(spark, registry, sf_dir: str) -> str:
+    """Pay the session's one-time costs before anything is timed; returns
+    the smallest available scale dir, where the warm-up queries ran."""
+    # warm the JVM + parquet footer cache with one tiny action, and pay the
+    # one-time engine registration (57 spatial UDFs + catalog views) OUTSIDE
+    # any query's timing — queries constructing an EngineSession over this
+    # session hit the once-per-session guards and re-register nothing
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    from dataclod_spark.session import EngineSession
+
+    EngineSession(spark)
+    # one untimed throwaway query at the smallest available scale factor
+    # warms the shared JVM paths (codegen compiler, shuffle machinery,
+    # whole-stage classes) the same way for every timed query — measured:
+    # the first timed query otherwise absorbs ~1.3 s of one-time JIT that
+    # belongs to the session, not the query (same policy as
+    # registration-outside-timings above)
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir  # fall back to the bench data itself
+    # q1 warms the relational paths; g6 warms the spatial grid join's
+    # codegen + Arrow python-worker round trip; d2 warms the higher-order-
+    # function array/md5 path (all one-time session costs that would
+    # otherwise land on the first timed query using them)
+    for warm_query in ("q1_pricing_summary", "g6_spatial_join_points_in_boxes",
+                       "d2_minhash_signatures"):
+        try:
+            force(registry[warm_query].fn(spark, warm_dir))
+        except Exception as exc:
+            # a silently-skipped warmup would skew the first timed query
+            print(
+                f"bench warmup {warm_query} failed ({exc}); "
+                "first-query JIT included",
+                file=sys.stderr,
+            )
+    return warm_dir
 
 if __name__ == "__main__":
     main()

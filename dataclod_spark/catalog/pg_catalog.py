@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from dataclod_spark.session import local_frame
+
 # (oid, typname, typnamespace, typcategory, typrelid, typelem, typbasetype,
 #  typtypmod) — the exposed pg_type view schema (pg_type.rs:103-114), values
 # from the static table in common/utils/src/pg_type.rs.
@@ -127,7 +129,7 @@ def register_pg_catalog(spark: SparkSession) -> None:
         ("pg_description", [], PG_DESCRIPTION_SCHEMA),
     ]
     for name, rows, schema in tables:
-        df = spark.createDataFrame(rows, schema)
+        df = local_frame(spark, rows, schema)
         df.createOrReplaceTempView(name)
         df.createOrReplaceTempView(f"pg_catalog_{name}")
     # flag AFTER success so a failed registration retries next session

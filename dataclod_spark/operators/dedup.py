@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataclod_spark.functions.text import (
     explode_nonnull,
@@ -30,6 +31,7 @@ from dataclod_spark.functions.text import (
     posexplode_nonnull,
     tokens,
 )
+from dataclod_spark.session import local_frame
 
 SHINGLE_SIZE = 8
 MINHASH_K = 4  # number of md5 "permutations"; mh_0..mh_{k-1} columns
@@ -345,6 +347,11 @@ def exact_dedup(
     return kept.select(*[F.col(f"__row.{c}").alias(c) for c in cols])
 
 
+_COMPONENTS_SCHEMA = T.StructType(
+    [T.StructField("id", T.LongType()), T.StructField("component", T.LongType())]
+)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_1",
@@ -443,7 +450,7 @@ def connected_components(
             ).astype(np.int64, copy=False)
         )
         if nodes.size == 0:
-            return spark.createDataFrame([], "id long, component long")
+            return local_frame(spark, [], _COMPONENTS_SCHEMA)
         # dense indices: nodes is sorted, so smaller index == smaller id
         # and union-by-min-index makes the root the component label
         ia = np.searchsorted(nodes, ea.astype(np.int64, copy=False))

@@ -376,18 +376,25 @@ def rewrite_pgcompat_calls(sql: str) -> str:
     )
 
 
-_INFO_SCHEMA_QUAL_RE = re.compile(
-    r"\binformation_schema\s*\.\s*(tables|columns|schemata)", re.IGNORECASE
+# the qualified spelling and the temp view name it maps to
+_INFO_SCHEMA_REF_RE = re.compile(
+    r"\binformation_schema(?:\s*\.\s*|_)(tables|columns|schemata)", re.IGNORECASE
 )
 
 
-def rewrite_information_schema_refs(sql: str) -> str:
+def rewrite_information_schema_refs(sql: str) -> tuple[str, set[str]]:
     """``information_schema.X`` → ``information_schema_X`` temp views
     (rebuilt on use by EngineSession.sql; reference enables DataFusion's
-    information_schema at context.rs:33).  Code spans only."""
-    return _sub_outside_noncode(
-        sql, _INFO_SCHEMA_QUAL_RE, lambda m: f"information_schema_{m.group(1).lower()}"
-    )
+    information_schema at context.rs:33).  Code spans only.  Returns the
+    rewritten statement and the views (``tables``/``columns``/
+    ``schemata``) it reads, in either spelling."""
+    views: set[str] = set()
+
+    def repl(m: "re.Match[str]") -> str:
+        views.add(m.group(1).lower())
+        return f"information_schema_{m.group(1).lower()}"
+
+    return _sub_outside_noncode(sql, _INFO_SCHEMA_REF_RE, repl), views
 
 
 # --- GROUPS window frames -> dense_rank + RANGE emulation ------------------

@@ -58,7 +58,9 @@ def e1_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "new_session",
         F.when(
             F.lag("ts").over(w).isNull()
-            | (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w)) > 1800),
+            # microsecond-exact gap, as the oracle's fractional epoch():
+            # whole-second unix_timestamp would merge a 1,800.5 s gap
+            | (F.col("ts") - F.lag("ts").over(w) > F.expr("INTERVAL 1800 SECONDS")),
             1,
         ).otherwise(0),
     )

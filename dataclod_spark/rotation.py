@@ -31,11 +31,8 @@ _ROUND_RE = re.compile(r"_r(\d+)\.json$")
 def iter_round_files(repo_dir: str, prefix: str):
     """Yield ``(round_number, parsed_json)`` for every readable
     ``<prefix>_r<N>.json`` ledger file in ``repo_dir``, ascending by
-    filename.  The single scanner for per-round driver artifacts —
-    correctness history (``CORRECTNESS``) and bench floors (``BENCH``)
-    both consume it, so the file-naming/tolerance convention lives in
-    ONE place.  Unreadable or non-JSON files are skipped (the consumers
-    degrade gracefully rather than crash the driver's import)."""
+    filename.  Unreadable or non-JSON files are skipped (the rotation
+    degrades gracefully rather than crash the driver's import)."""
     for path in sorted(glob.glob(os.path.join(repo_dir, f"{prefix}_r*.json"))):
         m = _ROUND_RE.search(path)
         if not m:

@@ -23,6 +23,7 @@ import re
 from typing import Any, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -98,6 +99,43 @@ _EXT_TABLE_RE = re.compile(
 )
 
 _EXT_FORMATS = {"parquet": "parquet", "csv": "csv", "json": "json", "avro": "avro"}
+
+_PLAN_SCHEMA = T.StructType([T.StructField("plan", T.StringType())])
+
+# stand-in value for a NOT NULL column in local_frame's placeholder row
+_PLACEHOLDER = {"long": 0, "integer": 0, "string": ""}
+
+
+def _sql_literal(v: Any) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        # Spark substitutes ${...} in SQL text, literals included; \{ reads as {
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'").replace("${", "$\\{") + "'"
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    raise TypeError(f"local_frame: no SQL literal for {type(v).__name__}")
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-held ``rows`` as a DataFrame planned as a ``LocalTableScan``
+    with exactly ``schema`` (nullability included).
+
+    The rows are rendered as an inline ``VALUES`` table, so no Spark job
+    and no Python worker ever touches them.  ``createDataFrame`` over a
+    Python list parallelizes it into a PythonRDD instead: every scan of
+    it is a ``Scan ExistingRDD`` that forks Python workers.  Arrow
+    ``createDataFrame`` avoids the workers but pays Arrow's first-use
+    cost on the driver, over a CPU-second at engine set-up.  One
+    placeholder row, cut off by the ``LIMIT``, carries NULL in each
+    nullable column and a plain value in the others, which gives every
+    column the declared nullability and an empty ``rows`` its column
+    types.
+    """
+    placeholder = tuple(None if f.nullable else _PLACEHOLDER[f.dataType.typeName()] for f in schema)
+    values = ", ".join(f"({', '.join(map(_sql_literal, row))})" for row in [*rows, placeholder])
+    cols = ", ".join(f"`{f.name}`" for f in schema)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols}) LIMIT {len(rows)}").to(schema)
 
 
 def get_spark(
@@ -306,8 +344,8 @@ class EngineSession:
                 if shim_re.match(body):
                     if mode == "analyze":
                         self.sql(body, args)  # ANALYZE = run-then-report
-                    return self.spark.createDataFrame(
-                        [(f"== Engine Shim ==\n{tag}; no Spark plan",)], "plan string"
+                    return local_frame(
+                        self.spark, [(f"== Engine Shim ==\n{tag}; no Spark plan",)], _PLAN_SCHEMA
                     )
             # DML/DDL bodies also EXECUTE eagerly in self.sql — plain
             # EXPLAIN INSERT must not insert (PG: only ANALYZE executes).
@@ -334,7 +372,7 @@ class EngineSession:
                 mode = "extended"
             jmode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
             text = df._jdf.queryExecution().explainString(jmode)
-            return self.spark.createDataFrame([(text,)], "plan string")
+            return local_frame(self.spark, [(text,)], _PLAN_SCHEMA)
         m = _COPY_RE.match(query)
         if m:
             return self._copy_to(m)
@@ -380,14 +418,15 @@ class EngineSession:
         rewritten = rewrite_groups_frames(query)
         if rewritten is not None:
             query = rewritten
-        if "information_schema" in query.lower():
-            # refresh-on-use: snapshot views over the live catalog state
+        query, views = rewrite_information_schema_refs(query)
+        if views:
+            # refresh-on-use: snapshot the views this statement reads from
+            # the live catalog state
             from dataclod_spark.catalog.information_schema import (
                 register_information_schema,
             )
 
-            register_information_schema(self.spark)
-            query = rewrite_information_schema_refs(query)
+            register_information_schema(self.spark, views)
         if args is not None and not isinstance(args, Mapping):
             # positional $n parameters: rename to :__pN and map the list on
             query, args = _positional_to_named(query, args)
@@ -475,7 +514,7 @@ class EngineSession:
         fmt = m.group("fmt").lower()
         if fmt not in _EXT_FORMATS:
             raise ValueError(f"CREATE EXTERNAL TABLE: unsupported format {fmt!r}")
-        if m.group("ine") and name in [t.name for t in self.spark.catalog.listTables()]:
+        if m.group("ine") and self.spark.catalog.tableExists(name):
             return self.spark.range(0).select()
         reader = self.spark.read.format(_EXT_FORMATS[fmt])
         if m.group("cols"):

@@ -5,8 +5,8 @@ action (or the noop sink) at a given scale dir.  Usage:
     python scripts/timeq.py [-n N] [--noop] [--sf DIR] query [query ...]
 
 Prints one JSON line per query: {"q": name, "runs": [...], "best": s}.
-Methodology mirrors bench.py: one EngineSession warm pass, clearCache
-between runs, best-of-N steady.
+Methodology is bench.py's (its warm-up and forcing action are imported),
+clearCache between runs, best-of-N steady.
 """
 from __future__ import annotations
 
@@ -29,26 +29,17 @@ def main() -> None:
                     help="print .explain('formatted') instead of timing")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
+    from bench import force, warm_up
     from dataclod_spark.registry import load_all_queries
-    from dataclod_spark.session import EngineSession, get_spark
+    from dataclod_spark.session import get_spark
 
     spark = get_spark(app_name="timeq")
     registry = load_all_queries()
-    spark.read.parquet(f"{args.sf}/region.parquet").count()
-    EngineSession(spark)
+    warm_dir = warm_up(spark, registry, args.sf)
+    def noop(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
 
-    def force(df) -> None:
-        if args.noop:
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
-            df.agg(F.bit_xor(F.xxhash64(F.struct(*cols)))).collect()
-
-    warm_dir = os.path.join(os.path.dirname(args.sf.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = args.sf
+    sink = noop if args.noop else force
 
     for name in args.queries:
         qd = registry[name]
@@ -56,12 +47,12 @@ def main() -> None:
             qd.fn(spark, args.sf).explain("formatted")
             continue
         spark.sparkContext.setJobDescription(f"timeq:{name}")
-        force(qd.fn(spark, warm_dir))  # per-query JIT warm at tiny sf
+        sink(qd.fn(spark, warm_dir))  # per-query JIT warm at tiny sf
         runs = []
         for _ in range(args.n):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
-            force(qd.fn(spark, args.sf))
+            sink(qd.fn(spark, args.sf))
             runs.append(round(time.perf_counter() - t0, 3))
         print(json.dumps({"q": name, "runs": runs, "best": min(runs)}),
               flush=True)

@@ -7,7 +7,7 @@ query lands inside the driver's ~50-slot window.
 
 import os
 
-from dataclod_spark.rotation import load_history, rotation_order
+from dataclod_spark.rotation import iter_round_files, load_history, rotation_order
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
@@ -137,3 +137,13 @@ def test_window_report_matches_rotation_order():
             assert classes[n] == ("green" if history[n][1] else "red")
     greens = [history[n][0] for n in rep["carried"] if classes.get(n) == "green"]
     assert rep["freshness_floor_after"] == (min(greens) if greens else None)
+
+
+def test_iter_round_files(tmp_path):
+    (tmp_path / "BENCH_r03.json").write_text('{"a": 1}')
+    (tmp_path / "BENCH_r11.json").write_text('{"a": 2}')
+    (tmp_path / "BENCH_rX.json").write_text('{"a": 3}')   # no round number
+    (tmp_path / "BENCH_r04.json").write_text('{oops')     # unreadable: skipped
+    got = list(iter_round_files(str(tmp_path), "BENCH"))
+    assert got == [(3, {"a": 1}), (11, {"a": 2})]
+    assert list(iter_round_files(str(tmp_path), "CORRECTNESS")) == []

@@ -130,7 +130,8 @@ def test_pg_catalog_rewrite_leaves_literals_alone():
     assert "'pg_catalog.pg_class'" in out          # literal is data
     assert "FROM pg_catalog_pg_class" in out        # reference is rewritten
     q2 = "SELECT c FROM t WHERE c = 'information_schema.tables' -- information_schema.columns"
-    out2 = rewrite_information_schema_refs(q2)
+    out2, views2 = rewrite_information_schema_refs(q2)
+    assert views2 == set()                          # nothing to build
     assert "'information_schema.tables'" in out2
     assert "-- information_schema.columns" in out2  # comment untouched
 
