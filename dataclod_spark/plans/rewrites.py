@@ -7,77 +7,32 @@ engine-specific rewrite handles a Spark limitation instead: inline ``VALUES``
 tables must be foldable, so rows containing non-foldable expressions (e.g.
 Python-backed ``ST_*`` UDF calls) are rewritten to a ``UNION ALL`` chain of
 SELECTs, which Spark evaluates fine.
+
+Every lexical decision (literals, comments, paren depth, top-level
+splitting, keyword search over code) comes from ``plans/sqltext.py``.
 """
 
 from __future__ import annotations
 
 import re
 
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on top-level ``sep``, noncode-aware via
-    :func:`scan_noncode_span` — the file's single source of truth for
-    quotes/comments.  (A private doubled-quote-only scanner used to live
-    here; it diverged from ``_quoted_span`` on backslash escapes, so
-    ``'O\\'Brien'`` broke the depth tracking.)"""
-    parts: list[str] = []
-    cur: list[str] = []
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        j = _scan_code(s, i)
-        if j != i:
-            cur.append(s[i:j])
-            i = j
-            continue
-        ch = s[i]
-        if ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    return parts
-
-
-def _find_matching(s: str, start: int) -> int:
-    """Index of the ')' matching the '(' at s[start] (noncode-aware)."""
-    depth, i, n = 0, start, len(s)
-    while i < n:
-        j = _scan_code(s, i)
-        if j != i:
-            i = j
-            continue
-        ch = s[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses")
-
+from dataclod_spark.plans.sqltext import (
+    IDENT_RE,
+    RESERVED_ALIAS,
+    code_matches,
+    code_positions,
+    masked,
+    matching_paren,
+    noncode_spans,
+    search_code,
+    split_top,
+    sub_code,
+)
 
 _VALUES_RE = re.compile(r"\(\s*VALUES\b", re.IGNORECASE)
 _ST_CALL_RE = re.compile(r"\bst_\w+\s*\(", re.IGNORECASE)
 _ALIAS_RE = re.compile(r"\s*(?:AS\s+)?(\w+)\s*\(([^)]*)\)", re.IGNORECASE)
 _ALIAS_WORD_RE = re.compile(r"\s*(?:AS\s+)?(\w+)", re.IGNORECASE)
-_IDENT_RE = re.compile(r"[A-Za-z_]\w*$")
-# words that can legally follow a closing ')' and must never be consumed as a
-# table alias (otherwise e.g. `... (VALUES (f(x))) AND (y > 1)` mis-captures
-# `AND (y > 1)` as an alias-with-columns and corrupts the statement)
-_RESERVED_ALIAS = frozenset(
-    """and or not in is between like where group order union intersect except
-    join inner left right full cross natural on using having limit offset
-    select from when then else end window qualify asc desc""".split()
-)
 
 
 def _match_alias(after: str):
@@ -89,12 +44,12 @@ def _match_alias(after: str):
     if m:
         word = m.group(1)
         cols = [c.strip() for c in m.group(2).split(",")]
-        if word.lower() not in _RESERVED_ALIAS and all(
-            _IDENT_RE.fullmatch(c) for c in cols
+        if word.lower() not in RESERVED_ALIAS and all(
+            IDENT_RE.fullmatch(c) for c in cols
         ):
             return word, cols, m.end()
     m = _ALIAS_WORD_RE.match(after)
-    if m and m.group(1).lower() not in _RESERVED_ALIAS:
+    if m and m.group(1).lower() not in RESERVED_ALIAS:
         return m.group(1), None, m.end()
     return None, None, 0
 
@@ -111,22 +66,24 @@ def rewrite_values_tables(sql: str) -> str:
         return sql
     out = sql
     while True:
-        m = _VALUES_RE.search(out)
+        m = search_code(_VALUES_RE, out)
         if m is None:
             return out
         open_paren = m.start()
-        close_paren = _find_matching(out, open_paren)
+        close_paren = matching_paren(out, open_paren)
+        if close_paren is None:
+            raise ValueError("unbalanced parentheses")
         inner = out[m.end() : close_paren]  # the rows: (..), (..)
         after = out[close_paren + 1 :]
         alias, cols, consumed = _match_alias(after)
         after = after[consumed:]
-        rows = _split_top_level(inner.strip())
+        rows = split_top(inner.strip())
         selects = []
         for row in rows:
             row = row.strip()
             if not (row.startswith("(") and row.endswith(")")):
                 return sql  # unexpected shape — leave untouched
-            exprs = _split_top_level(row[1:-1])
+            exprs = split_top(row[1:-1])
             if cols is not None:
                 if len(exprs) != len(cols):
                     return sql
@@ -157,109 +114,21 @@ class SqlFragmentParam:
         return f"SqlFragmentParam({self.fragment!r})"
 
 
-def _quoted_span(sql: str, i: int) -> int:
-    """``sql[i]`` is a quote character (``'``, ``"`` or backtick): return
-    the index one past the closing quote.  Matches Spark's default
-    tokenization: backslash escapes are live inside ``'…'`` and ``"…"``
-    string literals (``escapedStringLiterals=false``), doubled quotes
-    escape in all three forms, backticks know no backslash."""
-    q = sql[i]
-    n = len(sql)
-    backslash = q in "'\""
-    j = i + 1
-    while j < n:
-        c = sql[j]
-        if backslash and c == "\\":
-            j += 2
-            continue
-        if c == q:
-            if j + 1 < n and sql[j + 1] == q:
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-_DOLLAR_TAG_RE = re.compile(r"\$(?:[A-Za-z_][A-Za-z0-9_]*)?\$")
-
-
-def scan_noncode_span(sql: str, i: int) -> tuple[str | None, int]:
-    """If ``sql[i]`` starts a non-code span, return ``(kind, end)`` with
-    ``end`` one past the span; otherwise ``(None, i)``.  Kinds:
-
-    * ``"quote"`` — single/double/backtick literal (Spark escape rules,
-      via :func:`_quoted_span`);
-    * ``"dollar"`` — PG dollar-quoted string (tags may contain digits
-      after the first character, e.g. ``$q1$``);
-    * ``"line"`` — ``--`` comment, ending BEFORE the newline (the newline
-      stays code so statement splitting keeps it as whitespace);
-    * ``"block"`` — ``/* */`` comment; PG block comments NEST (scan.l).
-
-    This is the single source of truth for "what is not SQL code" —
-    statement splitting (:meth:`_split_statements`), statement-head
-    classification (``_top_level_words``) and any future scanner must all
-    consume it so their escape rules cannot diverge."""
-    n = len(sql)
-    ch = sql[i]
-    if ch in "'\"`":
-        return "quote", _quoted_span(sql, i)
-    if ch == "$":
-        m = _DOLLAR_TAG_RE.match(sql, i)
-        if m:
-            tag = m.group(0)
-            end = sql.find(tag, i + len(tag))
-            return "dollar", (n if end < 0 else end + len(tag))
-        return None, i
-    if ch == "-" and sql[i : i + 2] == "--":
-        nl = sql.find("\n", i)
-        return "line", (n if nl < 0 else nl)
-    if ch == "/" and sql[i : i + 2] == "/*":
-        depth, j = 1, i + 2
-        while j < n and depth:
-            if sql[j : j + 2] == "/*":
-                depth, j = depth + 1, j + 2
-            elif sql[j : j + 2] == "*/":
-                depth, j = depth - 1, j + 2
-            else:
-                j += 1
-        return "block", j
-    return None, i
+_NAMED_PARAM_RE = re.compile(r":(\w+)")
+_DOLLAR_PARAM_RE = re.compile(r"\$(\d+)")
 
 
 def splice_named_params(sql: str, fragments: dict[str, str]) -> str:
-    """Replace ``:name`` markers with server-generated SQL fragments
-    (parenthesized), using the same literal-aware scan as
-    :func:`rewrite_dollar_params` (shared ``_quoted_span``): quoted
-    strings, quoted identifiers and backticked identifiers are never
-    touched, so a literal that happens to contain ``:__p1`` survives.
-    Only for :class:`SqlFragmentParam` values, which have no
-    ``spark.sql(args=…)`` representation; plain string concatenation (no
-    regex templates) so fragments containing backslashes pass through
-    verbatim."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"`":
-            j = _quoted_span(sql, i)
-            out.append(sql[i:j])
-            i = j
-        elif ch == ":":
-            j = i + 1
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            name = sql[i + 1 : j]
-            if name in fragments:
-                out.append(f"({fragments[name]})")
-                i = j
-            else:
-                out.append(ch)
-                i += 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+    """Replace ``:name`` markers in code with server-generated SQL
+    fragments (parenthesized); literals, quoted identifiers and comments
+    are never touched, so a literal that happens to contain ``:__p1``
+    survives.  Only for :class:`SqlFragmentParam` values, which have no
+    ``spark.sql(args=…)`` representation; the fragment is returned by a
+    function (no regex template), so backslashes pass through verbatim."""
+    return sub_code(
+        _NAMED_PARAM_RE, sql,
+        lambda m: f"({fragments[m.group(1)]})" if m.group(1) in fragments else m.group(0),
+    )
 
 
 def rewrite_dollar_params(sql: str) -> tuple[str, list[int]]:
@@ -270,61 +139,22 @@ def rewrite_dollar_params(sql: str) -> tuple[str, list[int]]:
     (``server/src/postgres/parser.rs:31-44`` → LogicalPlan parameter
     substitution); Spark's parameterized SQL uses named ``:name`` markers,
     so the shim renames them and EngineSession maps a positional argument
-    list onto the generated names.  Quoted strings, quoted identifiers and
-    backticked identifiers are left untouched (shared ``_quoted_span``
-    scan — backslash escapes honored the way Spark's parser does).
+    list onto the generated names.  Code only: a ``$2`` inside a literal,
+    a dollar string or a comment (``-- fallback for $2``) is not a
+    parameter, or Bind would reject a valid statement.
 
     Returns (rewritten_sql, sorted list of parameter indices used).
     """
-    out: list[str] = []
     used: set[int] = set()
-    i, n = 0, len(sql)
-    while i < n:
-        # ALL noncode spans skip substitution — quotes, dollar-quoted
-        # strings AND comments (a `$2` inside `-- fallback for $2` must
-        # not count toward n_params, or Bind rejects a valid statement)
-        kind, end = scan_noncode_span(sql, i)
-        if kind:
-            out.append(sql[i:end])
-            i = end
-            continue
-        ch = sql[i]
-        if ch == "$" and i + 1 < n and sql[i + 1].isdigit():
-            j = i + 1
-            while j < n and sql[j].isdigit():
-                j += 1
-            idx = int(sql[i + 1 : j])
-            used.add(idx)
-            out.append(f":__p{idx}")
-            i = j
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out), sorted(used)
+
+    def repl(m: "re.Match[str]") -> str:
+        used.add(int(m.group(1)))
+        return f":__p{int(m.group(1))}"
+
+    return sub_code(_DOLLAR_PARAM_RE, sql, repl), sorted(used)
 
 
 _PG_CATALOG_QUAL_RE = re.compile(r"\bpg_catalog\s*\.\s*(\w+)", re.IGNORECASE)
-
-
-def _sub_outside_noncode(sql: str, regex: "re.Pattern[str]", repl) -> str:
-    """Apply ``regex.sub(repl, ...)`` to the CODE spans of ``sql`` only —
-    string literals, quoted identifiers and comments pass through
-    untouched.  A plain ``regex.sub`` over the whole statement corrupts
-    literals (``SELECT 'pg_catalog.pg_class'`` must return the original
-    string, not the rewritten view name)."""
-    out: list[str] = []
-    i, seg_start, n = 0, 0, len(sql)
-    while i < n:
-        kind, end = scan_noncode_span(sql, i)
-        if kind:
-            out.append(regex.sub(repl, sql[seg_start:i]))
-            out.append(sql[i:end])
-            i = end
-            seg_start = i
-        else:
-            i += 1
-    out.append(regex.sub(repl, sql[seg_start:]))
-    return "".join(out)
 
 
 def rewrite_pg_catalog_refs(sql: str) -> str:
@@ -349,7 +179,7 @@ def rewrite_pg_catalog_refs(sql: str) -> str:
             return f"pg_catalog_{name}"
         return name
 
-    return _sub_outside_noncode(sql, _PG_CATALOG_QUAL_RE, repl)
+    return sub_code(_PG_CATALOG_QUAL_RE, sql, repl)
 
 
 # bare zero-arg calls that must resolve to the pg-compat UDFs instead of
@@ -369,10 +199,8 @@ def rewrite_pgcompat_calls(sql: str) -> str:
     """Map bare ``version()`` / ``current_schema()`` calls to the pg-compat
     UDF spellings (code spans only).  Runs AFTER rewrite_pg_catalog_refs,
     so ``pg_catalog.version()`` de-qualifies first and lands here."""
-    return _sub_outside_noncode(
-        sql,
-        _PGCOMPAT_CALL_RE,
-        lambda m: f"{_PGCOMPAT_CALL_MAP[m.group(1).lower()]}()",
+    return sub_code(
+        _PGCOMPAT_CALL_RE, sql, lambda m: f"{_PGCOMPAT_CALL_MAP[m.group(1).lower()]}()"
     )
 
 
@@ -394,7 +222,7 @@ def rewrite_information_schema_refs(sql: str) -> tuple[str, set[str]]:
         views.add(m.group(1).lower())
         return f"information_schema_{m.group(1).lower()}"
 
-    return _sub_outside_noncode(sql, _INFO_SCHEMA_REF_RE, repl), views
+    return sub_code(_INFO_SCHEMA_REF_RE, sql, repl), views
 
 
 # --- GROUPS window frames -> dense_rank + RANGE emulation ------------------
@@ -432,70 +260,35 @@ _GB = r"(?:UNBOUNDED\s+PRECEDING|UNBOUNDED\s+FOLLOWING|CURRENT\s+ROW|\d+\s+(?:PR
 _GROUPS_FRAME_RE = re.compile(
     rf"(?is)\bGROUPS\s+(?:BETWEEN\s+(?P<lo>{_GB})\s+AND\s+(?P<hi>{_GB})|(?P<single>{_GB}))\s*$"
 )
-_WORD_RE = re.compile(r"[A-Za-z_]\w*")
+_OVER_RE = re.compile(r"(?<!\w)OVER(?!\w)", re.IGNORECASE)
+_SPEC_KW_RE = re.compile(r"(?<!\w)(?:PARTITION|ORDER|GROUPS)(?!\w)", re.IGNORECASE)
+_BLOCK_KW_RE = re.compile(
+    r"(?<!\w)(?:SELECT|FROM|GROUP|HAVING|QUALIFY|WINDOW|UNION|INTERSECT|EXCEPT"
+    r"|ORDER|LIMIT|OFFSET|DISTINCT)(?!\w)",
+    re.IGNORECASE,
+)
+# what the select-list walk stops at: a paren group or an OVER keyword
+_PAREN_OR_OVER_RE = re.compile(r"\(|(?<!\w)OVER(?!\w)", re.IGNORECASE)
+_LPAREN_RE = re.compile(r"\(")
 
 
-def _kw_at(sql: str, i: int, word: str) -> bool:
-    """True when ``sql[i:]`` starts keyword ``word`` at a word boundary."""
-    n = len(word)
-    if sql[i : i + n].upper() != word:
-        return False
-    if i > 0 and (sql[i - 1].isalnum() or sql[i - 1] == "_"):
-        return False
-    j = i + n
-    return j >= len(sql) or not (sql[j].isalnum() or sql[j] == "_")
+def _span_end(sql: str, lp: int) -> int:
+    """Index one past the ')' matching ``sql[lp] == '('``; ``len(sql)``
+    when unbalanced."""
+    close = matching_paren(sql, lp)
+    return len(sql) if close is None else close + 1
 
 
-def _scan_code(sql: str, i: int) -> int:
-    """Advance past a non-code span starting at ``i`` (or return ``i``)."""
-    kind, end = scan_noncode_span(sql, i)
-    return end if kind else i
+def _over_paren(sql: str, end: int) -> int | None:
+    """Index of the '(' opening the window spec of an ``OVER`` keyword
+    ending at ``end`` (whitespace and comments skipped), else None."""
+    j = next((j for j, _ in code_positions(sql, end) if not sql[j].isspace()), None)
+    return j if j is not None and sql[j] == "(" else None
 
 
-def _match_paren_span(sql: str, lp: int) -> int:
-    """Index one past the ')' matching ``sql[lp] == '('`` (noncode-aware);
-    ``len(sql)`` when unbalanced."""
-    depth, i, n = 0, lp, len(sql)
-    while i < n:
-        j = _scan_code(sql, i)
-        if j != i:
-            i = j
-            continue
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return n
-
-
-def _top_level_kw(sql: str, words: tuple[str, ...], start: int = 0, end: int | None = None):
-    """Yield (word, position) for each keyword hit at paren depth 0."""
-    n = len(sql) if end is None else end
-    depth, i = 0, start
-    while i < n:
-        j = _scan_code(sql, i)
-        if j != i:
-            i = j
-            continue
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            for w in words:
-                if _kw_at(sql, i, w):
-                    yield w, i
-                    i += len(w)
-                    break
-            else:
-                i += 1
-            continue
-        i += 1
+def _top_level_kw(sql: str, regex: "re.Pattern[str]") -> list[tuple[str, int]]:
+    """(WORD, position) for each keyword hit at paren depth 0."""
+    return [(m.group().upper(), m.start()) for m in code_matches(regex, sql, depth=0)]
 
 
 def _rewrite_window_body(body: str) -> tuple[str, str, str] | None:
@@ -507,7 +300,7 @@ def _rewrite_window_body(body: str) -> tuple[str, str, str] | None:
     0)`` inside PARTITION BY) as format fields and raise IndexError.
     None when there is no GROUPS frame; raises _Decline on an
     unsupported GROUPS shape."""
-    hits = {w: p for w, p in _top_level_kw(body, ("PARTITION", "ORDER", "GROUPS"))}
+    hits = dict(_top_level_kw(body, _SPEC_KW_RE))
     if "GROUPS" not in hits:
         return None
     if "ORDER" not in hits:
@@ -537,42 +330,12 @@ class _Decline(Exception):
     """Internal: this statement shape is out of rewrite scope."""
 
 
-def _split_top_commas(text: str) -> list[str]:
-    """Split an expression list on top-level commas (code-span aware)."""
-    parts: list[str] = []
-    depth, i, last, n = 0, 0, 0, len(text)
-    while i < n:
-        j = _scan_code(text, i)
-        if j != i:
-            i = j
-            continue
-        ch = text[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[last:i].strip())
-            last = i + 1
-        i += 1
-    tail = text[last:].strip()
-    if tail:
-        parts.append(tail)
-    return parts
-
-
-_QUALREF_RE = re.compile(r"(?:[A-Za-z_]\w*|\x01)\s*\.\s*(?:[A-Za-z_]\w*|\x01)")
-_IDENT_RE = re.compile(r"[A-Za-z_]\w*")
-
-
-def _read_ident_end(text: str, i: int) -> int | None:
-    """One past the identifier at ``i`` (plain or backtick-quoted), else
-    None."""
-    if i < len(text) and text[i] == "`":
-        kind, end = scan_noncode_span(text, i)
-        return end if kind == "quote" else None
-    m = _IDENT_RE.match(text, i)
-    return m.end() if m else None
+_QUALREF_RE = re.compile(r"(?:[A-Za-z_]\w*|\x01)[\s\0]*\.[\s\0]*(?:[A-Za-z_]\w*|\x01)")
+# a column-reference chain: identifier parts (plain or backtick-quoted)
+# joined by dots; ``last`` is the chain's terminal part
+_PART = r"(?:[A-Za-z_]\w*|`(?:[^`]|``)*`)"
+_CHAIN_RE = re.compile(rf"{_PART}(?:\s*\.\s*(?P<last>{_PART}))*")
+_CHAIN_TAIL_RE = re.compile(r"\s*(?:\.\s*(?P<star>\*)|\()")
 
 
 def _inline_qualified_refs(
@@ -594,63 +357,23 @@ def _inline_qualified_refs(
     subs: dict[str, str] = {}
     terminals: dict[str, str] = {}
     proj: list[str] = []
-    out_segs: list[str] = []
-    for text in segments:
-        out: list[str] = []
-        i, n = 0, len(text)
-        while i < n:
-            # a backtick span can START a chain (`t`.`x`) — try the
-            # identifier reader first for backticks, the noncode scan for
-            # every other span kind
-            if text[i] != "`":
-                kind, end = scan_noncode_span(text, i)
-                if kind:
-                    out.append(text[i:end])
-                    i = end
-                    continue
-            end = _read_ident_end(text, i)
-            if end is None:
-                out.append(text[i])
-                i += 1
-                continue
-            j, chain_end, ndots, term_start = end, end, 0, i
-            while True:
-                k = j
-                while k < n and text[k].isspace():
-                    k += 1
-                if k < n and text[k] == ".":
-                    k += 1
-                    while k < n and text[k].isspace():
-                        k += 1
-                    if k < n and text[k] == "*":
-                        raise _Decline("alias.* expansion in join wrap")
-                    e2 = _read_ident_end(text, k)
-                    if e2 is None:
-                        break
-                    ndots += 1
-                    j = chain_end = e2
-                    term_start = k
-                else:
-                    break
-            if ndots == 0:
-                out.append(text[i:end])
-                i = end
-                continue
-            k = chain_end
-            while k < n and text[k].isspace():
-                k += 1
-            if k < n and text[k] == "(":
-                raise _Decline("qualified function call in join wrap")
-            chain = text[i:chain_end]
-            key = re.sub(r"\s+", "", chain)
-            if key not in subs:
-                subs[key] = f"__gq{len(subs)}"
-                proj.append(f"{chain} AS {subs[key]}")
-                terminals[subs[key]] = text[term_start:chain_end]
-            out.append(subs[key])
-            i = chain_end
-        out_segs.append("".join(out))
-    return out_segs, proj, terminals
+
+    def repl(m: "re.Match[str]") -> str:
+        tail = _CHAIN_TAIL_RE.match(m.string, m.end())
+        if tail and tail.group("star"):
+            raise _Decline("alias.* expansion in join wrap")
+        if m.group("last") is None:
+            return m.group()
+        if tail:
+            raise _Decline("qualified function call in join wrap")
+        key = re.sub(r"\s+", "", m.group())
+        if key not in subs:
+            subs[key] = f"__gq{len(subs)}"
+            proj.append(f"{m.group()} AS {subs[key]}")
+            terminals[subs[key]] = m.group("last")
+        return subs[key]
+
+    return [sub_code(_CHAIN_RE, text, repl) for text in segments], proj, terminals
 
 
 def _alias_bare_gq_items(select_list: str, terminals: dict[str, str]) -> str:
@@ -669,26 +392,8 @@ def _alias_bare_gq_items(select_list: str, terminals: dict[str, str]) -> str:
     restored (ADVICE r9).  Items where the alias is embedded in a larger
     expression or already carries an AS are left alone — their output
     name is unaffected (or ambiguous) and conservatism is free here."""
-    # top-level comma positions, code-span aware
-    cuts: list[int] = []
-    depth, i, n = 0, 0, len(select_list)
-    while i < n:
-        j = _scan_code(select_list, i)
-        if j != i:
-            i = j
-            continue
-        ch = select_list[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            cuts.append(i)
-        i += 1
-    bounds = list(zip([0] + [c + 1 for c in cuts], cuts + [n]))
     out: list[str] = []
-    for idx, (lo, hi) in enumerate(bounds):
-        seg = select_list[lo:hi]
+    for idx, seg in enumerate(split_top(select_list)):
         body = seg
         if idx == 0:
             m = re.match(r"(?is)^\s*DISTINCT\b", body)
@@ -723,17 +428,8 @@ def _split_trailing_comments(seg: str) -> tuple[str, str]:
     suffix made solely of ``--``/``/* */`` comments and whitespace
     (noncode-aware, so a ``--`` inside a string literal never counts).
     ``tail == ""`` when the segment ends in code."""
-    spans: list[tuple[int, int, str]] = []
-    i, n = 0, len(seg)
-    while i < n:
-        kind, end = scan_noncode_span(seg, i)
-        if kind:
-            spans.append((i, end, kind))
-            i = end
-        else:
-            i += 1
-    cut = n
-    for start, end, kind in reversed(spans):
+    cut = len(seg)
+    for start, end, kind in reversed(noncode_spans(seg)):
         if kind not in ("line", "block") or seg[end:cut].strip():
             break
         cut = start
@@ -747,20 +443,10 @@ def _has_qualified_ref(text: str) -> bool:
     join product is hidden behind one subquery alias, so any qualified
     reference left OUTSIDE the subquery would stop resolving — those
     statements decline instead.  Conservative by design (a dotted
-    function name also declines).  Works on a shadow copy where backtick
-    identifiers collapse to a ``\\x01`` marker and strings/comments to
-    spaces, so quoting cannot hide or fake a dot."""
-    shadow: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        kind, end = scan_noncode_span(text, i)
-        if kind:
-            shadow.append("\x01" if text[i] == "`" else " ")
-            i = end
-            continue
-        shadow.append(text[i])
-        i += 1
-    return _QUALREF_RE.search("".join(shadow)) is not None
+    function name also declines).  Reads the lexer's masked copy, where a
+    quoted identifier is a ``\\x01`` run and a string or comment a NUL run
+    (whitespace around the dot), so quoting cannot hide or fake a dot."""
+    return _QUALREF_RE.search(masked(text, ident="\x01")) is not None
 
 
 def _rewrite_nested_selects(sql: str) -> tuple[str, bool]:
@@ -772,36 +458,28 @@ def _rewrite_nested_selects(sql: str) -> tuple[str, bool]:
     makes the OUTER block decline via the survival checks).  Returns the
     spliced text and whether anything changed."""
     out: list[str] = []
-    i, n = 0, len(sql)
+    last = skip = 0
     changed = False
-    while i < n:
-        kind, end = scan_noncode_span(sql, i)
-        if kind:
-            out.append(sql[i:end])
-            i = end
-            continue
-        if sql[i] == "(":
-            span_end = _match_paren_span(sql, i)
-            inner = sql[i + 1 : span_end - 1]
-            if _GROUPS_HINT_RE.search(inner):
-                if re.match(r"(?is)^\s*SELECT\b", inner):
-                    try:
-                        nb = _rewrite_block_groups(inner)
-                    except _Decline:
-                        nb = None
-                else:
-                    nb, ch = _rewrite_nested_selects(inner)
-                    nb = nb if ch else None
-                if nb is not None:
-                    out.append("(" + nb + ")")
-                    i = span_end
-                    changed = True
-                    continue
-            out.append(sql[i:span_end])
-            i = span_end
-            continue
-        out.append(sql[i])
-        i += 1
+    for m in code_matches(_LPAREN_RE, sql):
+        i = m.start()
+        if i < skip:
+            continue  # inside a group already handled whole
+        skip = _span_end(sql, i)
+        inner = sql[i + 1 : skip - 1]
+        nb = None
+        if _GROUPS_HINT_RE.search(inner):
+            if re.match(r"(?is)^\s*SELECT\b", inner):
+                try:
+                    nb = _rewrite_block_groups(inner)
+                except _Decline:
+                    nb = None
+            else:
+                nb, ch = _rewrite_nested_selects(inner)
+                nb = nb if ch else None
+        if nb is not None:
+            out += [sql[last:i], "(" + nb + ")"]
+            last, changed = skip, True
+    out.append(sql[last:])
     return "".join(out), changed
 
 
@@ -819,16 +497,7 @@ def _rewrite_block_groups(sql: str) -> str | None:
         return sql if pre_changed else None
 
     # ---- locate SELECT ... FROM ... at top level -----------------------
-    kws = list(
-        _top_level_kw(
-            sql,
-            (
-                "SELECT", "FROM", "GROUP", "HAVING", "QUALIFY", "WINDOW",
-                "UNION", "INTERSECT", "EXCEPT", "ORDER", "LIMIT", "OFFSET",
-                "DISTINCT",
-            ),
-        )
-    )
+    kws = _top_level_kw(sql, _BLOCK_KW_RE)
     if not kws or kws[0][0] != "SELECT":
         raise _Decline("not a plain SELECT block")
     sel_pos = kws[0][1]
@@ -879,39 +548,27 @@ def _rewrite_block_groups(sql: str) -> str | None:
         raise _Decline("no FROM relation")
 
     # ---- bare * / alias.* in the select list leaks rank columns --------
-    depth, i, n = 0, 0, len(select_list)
     prev_code = ""
-    while i < n:
-        j = _scan_code(select_list, i)
-        if j != i:
-            i = j
-            continue
+    for i, depth in code_positions(select_list):
         ch = select_list[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "*" and depth == 0 and prev_code in ("", ",", "."):
+        if ch == "*" and depth == 0 and prev_code in ("", ",", "."):
             raise _Decline("top-level * in select list")
         if not ch.isspace():
             prev_code = ch
-        i += 1
 
     # ---- rewrite each OVER (...) spec in the select list ---------------
     # key -> (rank_col_name, partition_clause_text, order_keys_text,
     #         partition_key_expr_list)
     ranks: dict[tuple[str, str], tuple[str, str, str, list[str]]] = {}
     out: list[str] = []
-    i, n = 0, len(select_list)
+    last = skip = 0
     changed = False
-    while i < n:
-        kind, end = scan_noncode_span(select_list, i)
-        if kind:
-            out.append(select_list[i:end])
-            i = end
+    for m in code_matches(_PAREN_OR_OVER_RE, select_list):
+        i = m.start()
+        if i < skip:
             continue
-        if select_list[i] == "(":
-            span_end = _match_paren_span(select_list, i)
+        if m.group() == "(":
+            span_end = _span_end(select_list, i)
             inner = select_list[i + 1 : span_end - 1]
             if re.match(r"(?is)^\s*SELECT\b", inner):
                 # nested scalar subquery: its window functions belong to
@@ -920,60 +577,46 @@ def _rewrite_block_groups(sql: str) -> str | None:
                     for _, bl, br in _find_over_specs(inner):
                         if _GROUPS_FRAME_RE.search(inner[bl + 1 : br - 1]):
                             raise _Decline("GROUPS frame in nested subquery")
-                out.append(select_list[i:span_end])
-                i = span_end
-                continue
-        if _kw_at(select_list, i, "OVER"):
-            j = i + 4
-            while j < n:
-                k2 = _scan_code(select_list, j)
-                if k2 != j:
-                    j = k2
-                    continue
-                if select_list[j].isspace():
-                    j += 1
-                    continue
-                break
-            if j < n and select_list[j] == "(":
-                span_end = _match_paren_span(select_list, j)
-                body = select_list[j + 1 : span_end - 1]
-                res = _rewrite_window_body(body)
-                if res is None:
-                    out.append(select_list[i:span_end])
-                else:
-                    part, order_keys, frame = res
-                    key = (
-                        re.sub(r"(?is)\s+", " ", part).strip().upper(),
-                        re.sub(r"(?is)\s+", " ", order_keys).strip().upper(),
-                    )
-                    if key not in ranks:
-                        mp = re.match(r"(?is)^PARTITION\s+BY\s+(.*)$", part)
-                        pks = _split_top_commas(mp.group(1)) if mp else []
-                        ranks[key] = (f"__grp{len(ranks)}", part, order_keys, pks)
-                    grp, part, _, pks = ranks[key]
-                    if join_mode:
-                        # partition keys were projected inside the subquery
-                        # as __gpk{N}_{j}; reference those, not the original
-                        # expressions (whose relation aliases are hidden)
-                        pclause = (
-                            "PARTITION BY "
-                            + ", ".join(
-                                f"__gpk{grp[5:]}_{j}" for j in range(len(pks))
-                            )
-                            + " "
-                            if pks
-                            else ""
-                        )
-                    else:
-                        pclause = (part + " ") if part else ""
-                    out.append(
-                        "OVER (" + pclause + "ORDER BY " + grp + " " + frame + ")"
-                    )
-                    changed = True
-                i = span_end
-                continue
-        out.append(select_list[i])
-        i += 1
+                skip = span_end
+            continue
+        j = _over_paren(select_list, m.end())
+        if j is None:
+            continue
+        skip = _span_end(select_list, j)
+        res = _rewrite_window_body(select_list[j + 1 : skip - 1])
+        if res is None:
+            continue
+        part, order_keys, frame = res
+        key = (
+            re.sub(r"(?is)\s+", " ", part).strip().upper(),
+            re.sub(r"(?is)\s+", " ", order_keys).strip().upper(),
+        )
+        if key not in ranks:
+            mp = re.match(r"(?is)^PARTITION\s+BY\s+(.*)$", part)
+            pks = [p.strip() for p in split_top(mp.group(1))] if mp else []
+            if pks and not pks[-1]:
+                pks.pop()
+            ranks[key] = (f"__grp{len(ranks)}", part, order_keys, pks)
+        grp, part, _, pks = ranks[key]
+        if join_mode:
+            # partition keys were projected inside the subquery as
+            # __gpk{N}_{j}; reference those, not the original expressions
+            # (whose relation aliases are hidden)
+            pclause = (
+                "PARTITION BY "
+                + ", ".join(f"__gpk{grp[5:]}_{j}" for j in range(len(pks)))
+                + " "
+                if pks
+                else ""
+            )
+        else:
+            pclause = (part + " ") if part else ""
+        out += [
+            select_list[last:i],
+            "OVER (" + pclause + "ORDER BY " + grp + " " + frame + ")",
+        ]
+        last, changed = skip, True
+    out.append(select_list[last:])
     if not changed:
         # hint word was an identifier / in a string — nothing to do here,
         # but a GROUPS frame elsewhere in the block (outer ORDER BY, a
@@ -1057,29 +700,12 @@ def _rewrite_block_groups(sql: str) -> str | None:
 def _find_over_specs(sql: str) -> list[tuple[int, int, int]]:
     """Every ``OVER ( ... )`` span in code: (over_pos, lparen, end)."""
     res: list[tuple[int, int, int]] = []
-    i, n = 0, len(sql)
-    while i < n:
-        j = _scan_code(sql, i)
-        if j != i:
-            i = j
-            continue
-        if _kw_at(sql, i, "OVER"):
-            j = i + 4
-            while j < n:
-                k2 = _scan_code(sql, j)
-                if k2 != j:
-                    j = k2
-                    continue
-                if sql[j].isspace():
-                    j += 1
-                    continue
-                break
-            if j < n and sql[j] == "(":
-                end = _match_paren_span(sql, j)
-                res.append((i, j, end))
-                i = end
-                continue
-        i += 1
+    skip = 0
+    for m in code_matches(_OVER_RE, sql):
+        j = _over_paren(sql, m.end()) if m.start() >= skip else None
+        if j is not None:
+            skip = _span_end(sql, j)
+            res.append((m.start(), j, skip))
     return res
 
 
@@ -1104,7 +730,7 @@ def rewrite_groups_frames(sql: str) -> str | None:
                 if not h:
                     return None  # recursive/exotic WITH: out of scope
                 body_start = h.end()  # one past '('
-                body_end = _match_paren_span(sql, body_start - 1)  # past ')'
+                body_end = _span_end(sql, body_start - 1)  # past ')'
                 body = sql[body_start : body_end - 1]
                 new_body = _rewrite_block_groups(body)
                 pieces.append(sql[pos : body_start])

@@ -13,7 +13,8 @@ reference hooks its logical rewrite): a join whose ON condition is a
 recognized spatial predicate is rewritten into the *same* grid equi-join the
 DataFrame operator ``operators.spatial_join`` produces —
 
-  1. each side gains ``__bb`` (bbox struct, one Arrow-batched UDF) and
+  1. each side gains flat bbox columns ``__bbx0…__bbe`` (one
+     Arrow-batched UDF, or codegen expressions over a registered bbox) and
      explodes to its grid cells (pure-JVM quantile-bucket arithmetic over
      boundary literals sampled from the build side);
   2. the ON condition becomes ``a.__cell = b.__cell`` + bbox-overlap
@@ -38,6 +39,9 @@ unchanged, which is always correct, just slower):
   temp view and the statement's alias-qualified references are rewritten
   against it — mirroring ``optimizer.rs:33-113`` + ``exec.rs:47-131``
   supporting every join type.
+
+Every lexical decision (literals, comments, paren depth, top-level
+splitting, keyword search over code) comes from ``plans/sqltext.py``.
 """
 
 from __future__ import annotations
@@ -46,7 +50,18 @@ import itertools
 import re
 from typing import Optional
 
-from dataclod_spark.plans.rewrites import scan_noncode_span
+from dataclod_spark.plans.sqltext import (
+    IDENT_RE,
+    RESERVED_ALIAS,
+    code_matches,
+    code_positions,
+    masked,
+    matching_paren,
+    search_code,
+    split_top,
+    sub_code,
+    uncommented,
+)
 
 # join predicates recognized by the reference's planner
 # (spatial_expr_utils.rs:20-76)
@@ -63,11 +78,6 @@ _FROM_JOIN_RE = re.compile(
     r"ON\s+",
     re.IGNORECASE,
 )
-
-_RESERVED_ALIAS = {
-    "on", "where", "group", "order", "having", "limit", "join", "inner",
-    "left", "right", "full", "cross", "union", "intersect", "except",
-}
 
 # ST_Pred(a.g, b.g[, extra literal args])
 _PRED_CALL_RE = re.compile(
@@ -105,7 +115,7 @@ _PRED_KEY = {
 }
 
 _ON_END_KEYWORDS = re.compile(
-    r"\b(WHERE|GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|UNION|INTERSECT|EXCEPT|WINDOW"
+    r"(?<!\w)(WHERE|GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|UNION|INTERSECT|EXCEPT|WINDOW"
     r"|(?:LEFT|RIGHT|FULL|INNER|CROSS)\s+(?:OUTER\s+)?JOIN|JOIN)\b",
     re.IGNORECASE,
 )
@@ -113,204 +123,42 @@ _ON_END_KEYWORDS = re.compile(
 
 def _scan_on_clause(sql: str, start: int) -> tuple[str, int]:
     """Return (on_text, end_index): the ON expression from ``start`` up to
-    the next top-level (paren-balanced) clause keyword or end of string.
-    Literal/comment spans are skipped via the shared scanner so a ``(``
-    or clause keyword inside a string cannot corrupt the scan."""
-    depth = 0
-    i = start
+    the next top-level clause keyword, the closing paren of an enclosing
+    group (the join sits inside a derived table / CTE body), or the end
+    of the string.  Literals and comments never end it."""
     end = len(sql)
-    while i < len(sql):
-        kind, j = scan_noncode_span(sql, i)
-        if kind is not None:
-            i = j
-            continue
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                # closing paren of an ENCLOSING group (the join sits inside
-                # a derived table / CTE body): the ON expression ends here
-                end = i
-                break
-        elif depth == 0:
-            m = _ON_END_KEYWORDS.match(sql, i)
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                end = i
-                break
-        i += 1
+    for i, depth in code_positions(sql, start):
+        if depth < 0 or (depth == 0 and _ON_END_KEYWORDS.match(sql, i)):
+            end = i
+            break
     return sql[start:end].strip(), end
 
 
 def _split_top_and(expr: str) -> list[str]:
-    """Split an expression on top-level AND keywords (outside literals)."""
-    parts: list[str] = []
-    depth = 0
-    last = 0
-    i = 0
-    up = expr.upper()
-    while i < len(expr):
-        kind, j = scan_noncode_span(expr, i)
-        if kind is not None:
-            i = j
-            continue
-        ch = expr[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and up.startswith("AND", i):
-            before_ok = i == 0 or not (expr[i - 1].isalnum() or expr[i - 1] == "_")
-            after = i + 3
-            after_ok = after >= len(expr) or not (expr[after].isalnum() or expr[after] == "_")
-            if before_ok and after_ok:
-                parts.append(expr[last:i].strip())
-                last = after
-                i = after
-                continue
-        i += 1
-    parts.append(expr[last:].strip())
+    """Split an expression on top-level AND keywords (outside literals),
+    unwrapping each conjunct's enclosing parens."""
+    parts = (p.strip() for p in split_top(expr, "AND"))
     return [p[1:-1].strip() if _is_wrapped(p) else p for p in parts if p]
 
 
-def _split_top_commas(expr: str) -> list[str]:
-    """Split a select list on top-level commas (outside parens/literals)."""
-    parts: list[str] = []
-    depth, last, i = 0, 0, 0
-    while i < len(expr):
-        kind, j = scan_noncode_span(expr, i)
-        if kind is not None:
-            i = j
-            continue
-        ch = expr[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(expr[last:i])
-            last = i + 1
-        i += 1
-    parts.append(expr[last:])
-    return parts
-
-
-def _paren_depth_at(sql: str, pos: int) -> int:
-    """Paren depth of code position ``pos`` (literals/comments skipped)."""
-    depth, i = 0, 0
-    while i < pos:
-        kind, j = scan_noncode_span(sql, i)
-        if kind is not None:
-            i = j
-            continue
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    return depth
+_SUBQUERY_OPEN_RE = re.compile(r"\([\s\0]*SELECT\b", re.IGNORECASE)
 
 
 def _subquery_spans(sql: str) -> list[tuple[int, int]]:
     """(start, end) index pairs of every parenthesized ``(SELECT …)``
     group — subqueries and CTE bodies; expression parens are excluded."""
-    spans: list[tuple[int, int]] = []
-    stack: list[int] = []
-    i, n = 0, len(sql)
-    while i < n:
-        kind, j = scan_noncode_span(sql, i)
-        if kind is not None:
-            i = j
-            continue
-        ch = sql[i]
-        if ch == "(":
-            stack.append(i)
-        elif ch == ")" and stack:
-            s = stack.pop()
-            k = s + 1
-            while k < i:
-                kd, j2 = scan_noncode_span(sql, k)
-                if kd is not None:
-                    k = j2
-                    continue
-                if sql[k].isspace():
-                    k += 1
-                    continue
-                break
-            if re.match(r"SELECT\b", sql[k:i], re.IGNORECASE):
-                spans.append((s, i))
-        i += 1
-    return spans
+    opens = _SUBQUERY_OPEN_RE.finditer(masked(sql, ident=" "))
+    spans = ((m.start(), matching_paren(sql, m.start())) for m in opens)
+    return [(s, e) for s, e in spans if e is not None]
 
 
-def _noncode_spans(sql: str) -> list[tuple[int, int]]:
-    """(start, end) index pairs of every literal/comment span."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(sql)
-    while i < n:
-        kind, j = scan_noncode_span(sql, i)
-        if kind is not None:
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def _search_code(pattern: re.Pattern, sql: str) -> Optional[re.Match]:
-    """First match of ``pattern`` whose start lies OUTSIDE every literal
-    and comment — a ``FROM x JOIN y`` inside a string must not anchor a
-    rewrite against the wrong (or non-existent) relations."""
-    spans = _noncode_spans(sql)
-    for m in pattern.finditer(sql):
-        if not any(s <= m.start() < e for s, e in spans):
-            return m
-    return None
-
-
-def _code_text(fragment: str) -> str:
-    """``fragment`` with comments removed (string literals kept verbatim),
-    for matching select-list items: ``* -- note`` must still be
-    recognized as a bare star, or the unexpanded star would leak the
-    rewrite's internal columns."""
-    out: list[str] = []
-    i, n = 0, len(fragment)
-    while i < n:
-        kind, j = scan_noncode_span(fragment, i)
-        if kind in ("line", "block"):
-            out.append(" ")
-            i = j
-        elif kind is not None:
-            out.append(fragment[i:j])
-            i = j
-        else:
-            out.append(fragment[i])
-            i += 1
-    return "".join(out).strip()
+_SETOP_RE = re.compile(r"(?<!\w)(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE)
 
 
 def _setop_positions(sql: str) -> list[int]:
     """Indexes of every depth-0 UNION/INTERSECT/EXCEPT keyword (outside
     literals) — the set-op arm boundaries of the statement."""
-    out: list[int] = []
-    i, depth, n = 0, 0, len(sql)
-    while i < n:
-        kind, j = scan_noncode_span(sql, i)
-        if kind is not None:
-            i = j
-            continue
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "UIEuie":
-            m = re.match(r"(UNION|INTERSECT|EXCEPT)\b", sql[i:], re.IGNORECASE)
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                out.append(i)
-        i += 1
-    return out
+    return [m.start() for m in code_matches(_SETOP_RE, sql, depth=0)]
 
 
 def _arm_bounds(sql: str, pos: int) -> tuple[int, int]:
@@ -332,9 +180,7 @@ def _has_top_level_setop(sql: str) -> bool:
     """True when a depth-0 UNION/INTERSECT/EXCEPT exists outside literals
     — each set-op arm has its own FROM, so single-relation rewrites must
     decline rather than attach the first arm's table metadata to every
-    arm's predicates.  One scanner: ``_setop_positions`` IS the
-    definition (a second hand-rolled copy of the scan drifted once —
-    review find, round 5)."""
+    arm's predicates."""
     return bool(_setop_positions(sql))
 
 
@@ -366,21 +212,11 @@ def _star_leaks_into_expression(code: str, expansions: dict[str, str]) -> bool:
     it falsely declined the dispatch, which for OUTER spatial joins means
     an unplannable fallback: second-pass review find, round 5); backtick
     identifier spans stay visible so quoted alias stars are caught."""
-    out: list[str] = []
-    i, n = 0, len(code)
-    while i < n:
-        kind, j = scan_noncode_span(code, i)
-        if kind is not None:
-            # blind literals to a LETTER, not a space: a space placeholder
-            # turned ('a' * 'b') into '(  *  )', which the argument-
-            # position star regex matched — a real multiplication of two
-            # literals falsely declined the dispatch (third-pass find)
-            out.append(code[i:j] if code[i] == "`" else "L")
-            i = j
-            continue
-        out.append(code[i])
-        i += 1
-    blinded = "".join(out)
+    # literals are NUL runs, not spaces: a space placeholder turned
+    # ('a' * 'b') into '(  *  )', which the argument-position star regex
+    # matched — a real multiplication of two literals falsely declined
+    # the dispatch (third-pass find)
+    blinded = masked(code)
     for am in _ALIAS_STAR_ANY_RE.finditer(blinded):
         if am.group(1).lower() in expansions:
             return True
@@ -392,7 +228,7 @@ def _expand_select_stars(
 ) -> Optional[str]:
     """Expand ``*`` / ``alias.*`` items of the select list OWNING the FROM
     being rewritten to explicit column lists.  The grid rewrite substitutes
-    derived relations carrying internal ``__cell``/``__bb``/``__ix0``/
+    derived relations carrying internal ``__cell``/``__bb*``/``__ix0``/
     ``__iy0`` columns, so a star over a rewritten side would silently
     change the query's output schema.
 
@@ -410,26 +246,13 @@ def _expand_select_stars(
     depth-0 ``*`` inside an expression is multiplication; ``count(*)``
     sits inside parens); when nothing matches, the prefix is returned
     unchanged."""
-    from_depth = _paren_depth_at(prefix, len(prefix))
+    from_depth = 0
+    for _, from_depth in code_positions(prefix):
+        pass
     # locate the owning SELECT: last SELECT keyword at the FROM's depth
-    depth, i, sel_end = 0, 0, None
-    while i < len(prefix):
-        kind, j = scan_noncode_span(prefix, i)
-        if kind is not None:
-            i = j
-            continue
-        ch = prefix[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == from_depth:
-            m = _SELECT_KW_RE.match(prefix, i)
-            if m and (i == 0 or not (prefix[i - 1].isalnum() or prefix[i - 1] == "_")):
-                sel_end = m.end()
-                i = m.end()
-                continue
-        i += 1
+    sel_end = None
+    for m in code_matches(_SELECT_KW_RE, prefix, depth=from_depth):
+        sel_end = m.end()
     if sel_end is None:
         return prefix  # no owning select list (shouldn't happen) — unchanged
     head, body = prefix[:sel_end], prefix[sel_end:]
@@ -437,11 +260,13 @@ def _expand_select_stars(
     lm = re.match(r"\s*(DISTINCT|ALL)\b", body, re.IGNORECASE)
     if lm:
         lead, body = body[: lm.end()], body[lm.end() :]
-    items = _split_top_commas(body)
+    items = split_top(body)
     out_items: list[str] = []
     changed = False
     for it in items:
-        s = _code_text(it)
+        # comments dropped: `* -- note` must still read as a bare star, or
+        # the unexpanded star would leak the rewrite's internal columns
+        s = uncommented(it).strip()
         if s == "*":
             if all_sides is None:
                 return None
@@ -465,17 +290,8 @@ def _expand_select_stars(
 
 
 def _is_wrapped(p: str) -> bool:
-    if not (p.startswith("(") and p.endswith(")")):
-        return False
-    depth = 0
-    for i, ch in enumerate(p):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i == len(p) - 1
-    return False
+    """True when one paren group encloses all of ``p``."""
+    return p.startswith("(") and matching_paren(p, 0) == len(p) - 1
 
 
 def _match_spatial_conjunct(c: str):
@@ -522,8 +338,9 @@ def _side_sql(
     repartition: int | None = None,
     bbox_meta=None,
 ) -> str:
-    """Derived relation with ``__bb`` + one ``__cell`` row per grid cell the
-    (expanded) bbox intersects — the grid's side projection
+    """Derived relation with the flat bbox columns (``__bbx0``, ``__bby0``,
+    ``__bbx1``, ``__bby1``, ``__bbe``) + one ``__cell`` row per grid cell
+    the (expanded) bbox intersects — the grid's side projection
     (``_Grid.cells_sql``), nested as subqueries.  The min cell indices stay
     exposed as ``__ix0``/``__iy0`` so the per-pair reference-point dedup in
     the ON clause is O(1).
@@ -550,15 +367,7 @@ def _side_sql(
         )
     for i, items in enumerate(grid.cells_sql(expand), 1):
         rel = f"(SELECT {', '.join(items)} FROM {rel} __s{i})"
-    # the bbox rides through the explodes as FLAT doubles; the __bb struct is
-    # rebuilt above the Generates (struct extraction over a top-level
-    # named_struct folds in SimplifyExtractValueOps — pushing extraction
-    # through Generate trips Catalyst's nested-column aliasing instead)
-    return (
-        "(SELECT * EXCEPT (__bbx0, __bby0, __bbx1, __bby1, __bbe), "
-        "named_struct('xmin', __bbx0, 'ymin', __bby0, 'xmax', __bbx1, 'ymax', __bby1, "
-        f"'bbox_exact', __bbe) AS __bb FROM {rel} __s)"
-    )
+    return rel
 
 
 _WITH_START_RE = re.compile(r"^\s*WITH\s+", re.IGNORECASE)
@@ -583,17 +392,10 @@ def _parse_with_prefix(sql: str) -> tuple[str, list[str]]:
         if not h:
             return "", []
         names.append(h.group("name"))
-        depth = 1
-        i = h.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = matching_paren(sql, h.end() - 1)
+        if close is None:
             return "", []
-        pos = i
+        pos = close + 1
         nxt = re.match(r"\s*,", sql[pos:])
         if nxt:
             pos += nxt.end()
@@ -620,26 +422,18 @@ def _resolve_relation(session, sql: str, name: str):
         return None
 
 
-def _bbox_meta(session, table: str, geom_col: str):
-    """The bbox registered for (table, geometry column), or None."""
-    return session.bbox_meta(table, geom_col) if hasattr(session, "bbox_meta") else None
-
-
 def _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta):
     """Session-cached quantile grid sampled from the build (right) side,
     falling back to the probe side when the build sample is empty."""
     from dataclod_spark.operators.spatial_join import _sample_grid
 
     cache_key = (rt.lower(), rgeom.lower(), session.spatial_join_cells)
-    grid = getattr(session, "_grid_cache", {}).get(cache_key)
-    if grid is not None:
-        return grid
-    grid = _sample_grid(
-        rdf, rgeom, rmeta and rmeta.bbox, ldf, lgeom, lmeta and lmeta.bbox,
-        session.spatial_join_cells,
-    )
-    if hasattr(session, "_grid_cache"):
-        session._grid_cache[cache_key] = grid
+    grid = session._grid_cache.get(cache_key)
+    if grid is None:
+        grid = session._grid_cache[cache_key] = _sample_grid(
+            rdf, rgeom, rmeta and rmeta.bbox, ldf, lgeom, lmeta and lmeta.bbox,
+            session.spatial_join_cells,
+        )
     return grid
 
 
@@ -648,13 +442,13 @@ def _operator_args(session, lt, lgeom, rt, rgeom, expand, predicate) -> dict:
     relations: geometry columns, distance, the session's cell budget, the
     registered bbox operands (exactness flag included), and
     ``refine="none"`` when both sides are declared bbox-exact."""
-    lmeta, rmeta = _bbox_meta(session, lt, lgeom), _bbox_meta(session, rt, rgeom)
+    lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(rt, rgeom)
     both_exact = lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact
     return dict(
         left_geom=lgeom,
         right_geom=rgeom,
         distance=(expand if predicate == "dwithin" else None),
-        cell_target=getattr(session, "spatial_join_cells", None),
+        cell_target=session.spatial_join_cells,
         left_bbox=lmeta and lmeta.bbox,
         right_bbox=rmeta and rmeta.bbox,
         refine="none" if both_exact else "auto",
@@ -672,7 +466,7 @@ def _grid_on_parts(
     from dataclod_spark.operators.spatial_join import _tighten_sql, _verdict_sql
 
     def bb(a: str) -> tuple:
-        return tuple(f"{a}.__bb.{f}" for f in ("xmin", "ymin", "xmax", "ymax"))
+        return tuple(f"{a}.__bb{f}" for f in ("x0", "y0", "x1", "y1"))
 
     on_parts = grid.candidate_sql(f"{la}.", f"{ra}.", bb(la), bb(ra), e)
     # predicate-direction bbox refs (a1 holds the predicate's 1st argument)
@@ -694,7 +488,7 @@ def _grid_on_parts(
         # column is pruned from the scan entirely
         spatial_sql = _verdict_sql(pred_key, b1, b2, e, strict)
     else:
-        both = f"({la}.__bb.bbox_exact AND {ra}.__bb.bbox_exact)"
+        both = f"({la}.__bbe AND {ra}.__bbe)"
         verdict = _verdict_sql(pred_key, b1, b2, e, strict)
         g1 = f"IF(NOT {both}, {a1}.`{c1}`, NULL)"
         g2 = f"IF(NOT {both}, {a2}.`{c2}`, NULL)"
@@ -732,11 +526,11 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
     spatial segment is rewritten and the remaining joins ride along
     verbatim (left-associative parse order is unchanged).
     """
-    m = _search_code(_FROM_JOIN_RE, sql)
+    m = search_code(_FROM_JOIN_RE, sql)
     if not m:
         return None
     lt, la, rt, ra = m.group("lt"), m.group("la"), m.group("rt"), m.group("ra")
-    if la.lower() in _RESERVED_ALIAS or ra.lower() in _RESERVED_ALIAS:
+    if la.lower() in RESERVED_ALIAS or ra.lower() in RESERVED_ALIAS:
         return None
     on_text, on_end = _scan_on_clause(sql, m.end())
     conjuncts = _split_top_and(on_text)
@@ -765,7 +559,7 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
         return None
     # registered bbox expressions (session.register_bbox): bbox pass and
     # grid sampling become pure JVM on that side
-    lmeta, rmeta = _bbox_meta(session, lt, lgeom), _bbox_meta(session, rt, rgeom)
+    lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(rt, rgeom)
     grid = _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
 
     # parallelism guard (mirrors the DataFrame operator): repartition a
@@ -784,7 +578,7 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
         f"JOIN {_side_sql(rt, rgeom, grid, 0.0, rpar, rmeta)} {ra} "
         f"ON {' AND '.join(on_parts)} "
     )
-    # the derived sides carry internal __cell/__bb columns: stars in the
+    # the derived sides carry internal __cell/__bb* columns: stars in the
     # outer select list must expand to the ORIGINAL columns or the result
     # schema silently changes.  A bare `*` is only expandable when the two
     # spatial relations are the WHOLE from-list: with ride-along joins
@@ -833,8 +627,8 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
     copies of the probe side are collapsed by the reference-point dedup in
     the rewritten ON, so inner-chain multiplicities are unchanged.
     """
-    fm = _search_code(_CHAIN_FROM_RE, sql)
-    if not fm or fm.group("a").lower() in _RESERVED_ALIAS:
+    fm = search_code(_CHAIN_FROM_RE, sql)
+    if not fm or fm.group("a").lower() in RESERVED_ALIAS:
         return None
     # rels: (table, alias, span of the "table alias" text)
     rels = [(fm.group("t"), fm.group("a"), (fm.start("t"), fm.end("a")))]
@@ -844,7 +638,7 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
         jm = _CHAIN_JOIN_RE.match(sql, pos)
         if not jm:
             break
-        if jm.group("a").lower() in _RESERVED_ALIAS:
+        if jm.group("a").lower() in RESERVED_ALIAS:
             return None
         on_text, on_end = _scan_on_clause(sql, jm.end())
         rels.append((jm.group("t"), jm.group("a"), (jm.start("t"), jm.end("a"))))
@@ -882,7 +676,7 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
                 return None
             if lgeom not in ldf.columns or rgeom not in rdf.columns:
                 return None
-            lmeta, rmeta = _bbox_meta(session, lt, lgeom), _bbox_meta(session, jt, rgeom)
+            lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(jt, rgeom)
             grid = _get_grid(session, jt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
             par = session.spark.sparkContext.defaultParallelism
             lpar = par if ldf.rdd.getNumPartitions() < par else None
@@ -964,7 +758,19 @@ _OUTER_CONJ_ALLOWED = {
     "nvl", "exp", "ln", "log", "log10", "log2",
 }
 
-_IDENT_RE = re.compile(r"[A-Za-z_]\w*")
+
+def _alias_ref_re(*aliases: str) -> "re.Pattern[str]":
+    """``alias.col`` / ``alias.`col``` / ``alias.*`` for any of
+    ``aliases``: group 1 is the alias, group 2 the part after the dot as
+    written, group 3 the bare column (None for the star).  Apply it with
+    ``sqltext.sub_code``/``code_matches`` so text inside literals and
+    comments is never taken for a reference."""
+    names = "|".join(re.escape(a) for a in aliases)
+    return re.compile(rf"\b({names})\s*\.\s*(\*|`?(\w+)`?)", re.IGNORECASE)
+
+
+# any qualified column reference: (alias, column)
+_QUAL_REF_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*`?(\w+)`?")
 
 
 def _map_outer_conjunct(
@@ -975,74 +781,39 @@ def _map_outer_conjunct(
     ``_right`` on overlap), validating that every other identifier is a
     whitelisted keyword/function.  Returns the mapped SQL expression, or
     None when the conjunct is out of the conservative scope."""
-    qual_re = re.compile(
-        rf"\b(?P<al>{re.escape(la)}|{re.escape(ra)})\s*\.\s*`?(?P<col>\w+)`?",
-        re.IGNORECASE,
-    )
+    qual_re = _alias_ref_re(la, ra)
     bad = False
 
     def _sub(mm: re.Match) -> str:
         nonlocal bad
-        al, col = mm.group("al").lower(), mm.group("col")
-        if al == la.lower():
-            if col not in lcols:
-                bad = True
-                return mm.group(0)
-            return f"`{col}`"
-        if col not in rcols:
+        left = mm.group(1).lower() == la.lower()
+        col = mm.group(3)
+        if col is None or col not in (lcols if left else rcols):
             bad = True
             return mm.group(0)
-        return f"`{col}_right`" if col in lcols else f"`{col}`"
+        return f"`{col}_right`" if not left and col in lcols else f"`{col}`"
 
-    # substitute outside literals/comments only
-    out: list[str] = []
-    i, n = 0, len(c)
-    while i < n:
-        kind, j = scan_noncode_span(c, i)
-        if kind is not None:
-            out.append(c[i:j])
-            i = j
-            continue
-        mm = qual_re.match(c, i)
-        if mm:
-            out.append(_sub(mm))
-            i = mm.end()
-            continue
-        out.append(c[i])
-        i += 1
+    mapped = sub_code(qual_re, c, _sub)  # outside literals/comments only
     if bad:
         return None
-    mapped = "".join(out)
-    # validate the residue of the ORIGINAL conjunct: skip string literals
-    # and comments, skip the alias-qualified refs we substituted, then
-    # (a) DECLINE on any other backtick span — an unqualified backticked
-    # column (`flag` = 1) is an identifier, not a literal, and stripping
-    # it as a quote span let it bypass the whitelist entirely: a query
-    # Spark would reject as ambiguous got silently rewritten against the
-    # join output (review find, round 5) — and (b) whitelist every
-    # remaining bare identifier
-    residue: list[str] = []
-    i = 0
-    while i < len(c):
-        mm = qual_re.match(c, i)
-        if mm:
-            i = mm.end()
-            continue
-        kind, j = scan_noncode_span(c, i)
-        if kind is not None:
-            if c[i] == "`":
-                return None
-            i = j
-            continue
-        residue.append(c[i])
-        i += 1
-    for ident in _IDENT_RE.findall("".join(residue)):
+    # validate the residue of the ORIGINAL conjunct: drop the alias-
+    # qualified refs substituted above, then (a) DECLINE on any other
+    # backtick span — an unqualified backticked column (`flag` = 1) is an
+    # identifier, not a literal, and stripping it as a quote span let it
+    # bypass the whitelist entirely: a query Spark would reject as
+    # ambiguous got silently rewritten against the join output (review
+    # find, round 5) — and (b) whitelist every remaining bare identifier
+    # outside literals and comments
+    residue = masked(sub_code(qual_re, c, lambda mm: " "))
+    if "`" in residue:
+        return None
+    for ident in IDENT_RE.findall(residue):
         if ident.lower() not in _OUTER_CONJ_ALLOWED:
             return None
     return mapped
 
 
-def try_outer_spatial_join(session, sql: str) -> Optional[str]:
+def try_outer_spatial_join(session, sql: str) -> Optional[tuple[str, str]]:
     """Rewrite ``FROM a LEFT|RIGHT|FULL JOIN b ON ST_Pred(...)`` through the
     DataFrame spatial-join operator (which owns outer completion —
     anti-join recovery of unmatched rows), exposed back to SQL as a temp
@@ -1056,13 +827,15 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
     ride along against the temp view.  Without this dispatch these
     queries are not merely slow but UNPLANNABLE: Spark rejects a Python
     UDF in an outer-join condition outright.
-    Returns the rewritten SQL or None (fall back to default planning)."""
-    m = _search_code(_OUTER_FROM_JOIN_RE, sql)
+    Returns the rewritten SQL and the temp view it reads (the caller drops
+    the view once the statement is analyzed), or None (fall back to
+    default planning)."""
+    m = search_code(_OUTER_FROM_JOIN_RE, sql)
     if not m:
         return None
     lt, la, rt, ra = m.group("lt"), m.group("la"), m.group("rt"), m.group("ra")
     how = m.group("jt").lower()
-    if la.lower() in _RESERVED_ALIAS or ra.lower() in _RESERVED_ALIAS:
+    if la.lower() in RESERVED_ALIAS or ra.lower() in RESERVED_ALIAS:
         return None
     on_text, on_end = _scan_on_clause(sql, m.end())
     conjuncts = _split_top_and(on_text)
@@ -1150,28 +923,20 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
     joined.createOrReplaceTempView(view)
     rest = prefix + f"FROM {view} " + sql[on_end:]
     # rewrite remaining alias-qualified references (a.x / b.`x` / a.* in
-    # clauses outside the owning select list) against the view — but only
-    # within THIS set-op arm: a later UNION/INTERSECT/EXCEPT arm has its
-    # own FROM whose identical aliases must stay untouched (the fixpoint
-    # loop in session.sql rewrites that arm on its own pass)
+    # clauses outside the owning select list) against the view, in code
+    # only — but only within THIS set-op arm: a later UNION/INTERSECT/
+    # EXCEPT arm has its own FROM whose identical aliases must stay
+    # untouched (the fixpoint loop in session.sql rewrites that arm on its
+    # own pass)
     arm_start, cut = _arm_bounds(rest, len(prefix))
     head, arm, rest_tail = rest[:arm_start], rest[arm_start:cut], rest[cut:]
-    arm = re.sub(
-        rf"\b{re.escape(la)}\.\*", star_l.replace("`", ""), arm, flags=re.IGNORECASE
+    star_r_bare = ", ".join(_map_ref(ra, c) for c in rdf.columns)
+    arm = sub_code(
+        _alias_ref_re(la, ra), arm,
+        lambda mm: _map_ref(mm.group(1), mm.group(3)) if mm.group(3)
+        else star_l.replace("`", "") if mm.group(1).lower() == la.lower() else star_r_bare,
     )
-    arm = re.sub(
-        rf"\b{re.escape(ra)}\.\*",
-        ", ".join(_map_ref(ra, c) for c in rdf.columns),
-        arm,
-        flags=re.IGNORECASE,
-    )
-    arm = re.sub(
-        rf"\b({re.escape(la)}|{re.escape(ra)})\.`?(\w+)`?",
-        lambda mm: _map_ref(mm.group(1), mm.group(2)),
-        arm,
-        flags=re.IGNORECASE,
-    )
-    return head + arm + rest_tail
+    return head + arm + rest_tail, view
 
 
 _EXISTS_RE = re.compile(
@@ -1187,7 +952,7 @@ _EXISTS_SUB_RE = re.compile(
 )
 
 
-def try_exists_spatial_join(session, sql: str) -> Optional[str]:
+def try_exists_spatial_join(session, sql: str) -> Optional[tuple[str, str]]:
     """Rewrite a correlated spatial ``[NOT] EXISTS`` into the grid
     semi/anti join.
 
@@ -1212,34 +977,29 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
     conjuncts>]`` — right-only conjuncts become a pre-filter on the inner
     side; any conjunct touching the outer alias beyond the spatial
     predicate falls back.
+
+    Returns the rewritten SQL and the temp view it reads (the caller drops
+    the view once the statement is analyzed), or None.
     """
-    m = _search_code(_EXISTS_RE, sql)
+    m = search_code(_EXISTS_RE, sql)
     if not m:
         return None
     lt, la, neg = m.group("lt"), m.group("la"), bool(m.group("neg"))
     if la is None:
         la = lt  # no alias: the subquery correlates by table name
-    elif la.lower() in _RESERVED_ALIAS:
+    elif la.lower() in RESERVED_ALIAS:
         return None
-    # balanced-paren scan for the subquery body
-    depth = 1
-    i = m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = matching_paren(sql, m.end() - 1)
+    if close is None:
         return None
-    sub, sub_end = sql[m.end() : i - 1], i
+    sub, sub_end = sql[m.end() : close], close + 1
     sm = _EXISTS_SUB_RE.match(sub)
     if not sm:
         return None
     rt, ra, conds = sm.group("rt"), sm.group("ra"), sm.group("conds")
     if ra is None:
         ra = rt  # no alias: predicate references the inner table name
-    elif ra.lower() in _RESERVED_ALIAS:
+    elif ra.lower() in RESERVED_ALIAS:
         return None
     if ra.lower() == la.lower():
         return None
@@ -1279,8 +1039,9 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
     extras = [c for ci, c in enumerate(conjuncts) if ci != spatial_idx]
     right_filters: list[str] = []
     correlated_filters: list[str] = []
+    refs_re = _alias_ref_re(la, ra)
     for extra in extras:
-        refs = re.findall(r"\b([A-Za-z_]\w*)\s*\.\s*`?(\w+)`?", extra)
+        refs = [mm.groups() for mm in code_matches(_QUAL_REF_RE, extra)]
         aliases = {a.lower() for a, _ in refs}
         if not aliases <= {la.lower(), ra.lower()}:
             return None
@@ -1288,11 +1049,9 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
             have = lcols_lower if a.lower() == la.lower() else rcols_lower
             if col.lower() not in have:
                 return None
-        stripped = re.sub(
-            rf"\b(?:{re.escape(la)}|{re.escape(ra)})\s*\.\s*`?\w+`?", "", extra,
-            flags=re.IGNORECASE,
-        )
-        bare = {b.lower() for b in re.findall(r"\b[A-Za-z_]\w*\b", stripped)}
+        # backtick text stays: an unqualified `col` names a column too
+        stripped = masked(sub_code(refs_re, extra, lambda mm: " "))
+        bare = {b.lower() for b in IDENT_RE.findall(stripped)}
         if la.lower() in aliases:
             if bare & (lcols_lower | rcols_lower):
                 return None
@@ -1300,12 +1059,7 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
         else:
             if (bare & lcols_lower) - rcols_lower:
                 return None
-            right_filters.append(
-                re.sub(
-                    rf"\b{re.escape(ra)}\s*\.\s*(`?\w+`?)", r"\1", extra,
-                    flags=re.IGNORECASE,
-                )
-            )
+            right_filters.append(sub_code(_alias_ref_re(ra), extra, lambda mm: mm.group(2)))
 
     from dataclod_spark.operators.spatial_join import _rowid_sql, spatial_join
 
@@ -1330,20 +1084,14 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
         overlap = set(ldf.columns) & set(rdf.columns)
 
         def _qref(mm: re.Match) -> str:
-            alias, col = mm.group(1), mm.group(2)
+            alias, col = mm.group(1), mm.group(3)
+            if col is None:
+                return mm.group(0)
             if alias.lower() == la.lower():
                 return col
             return f"{col}_right" if col in overlap else col
 
-        flt = " AND ".join(
-            "("
-            + re.sub(
-                rf"\b({re.escape(la)}|{re.escape(ra)})\s*\.\s*`?(\w+)`?",
-                _qref, c, flags=re.IGNORECASE,
-            )
-            + ")"
-            for c in correlated_filters
-        )
+        flt = " AND ".join(f"({sub_code(refs_re, c, _qref)})" for c in correlated_filters)
         eid = f"{_rowid_sql(ldf.columns)} AS __eid"
         try:
             matched = inner.where(flt).selectExpr(eid).distinct()
@@ -1363,11 +1111,8 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
     arm_start, cut = _arm_bounds(rest, m.start())
     head, arm, rest_tail = rest[:arm_start], rest[arm_start:cut], rest[cut:]
     star_l = ", ".join(ldf.columns)
-    arm = re.sub(rf"\b{re.escape(la)}\.\*", star_l, arm, flags=re.IGNORECASE)
-    arm = re.sub(
-        rf"\b{re.escape(la)}\.`?(\w+)`?", r"\1", arm, flags=re.IGNORECASE
-    )
-    return head + arm + rest_tail
+    arm = sub_code(_alias_ref_re(la), arm, lambda mm: mm.group(3) or star_l)
+    return head + arm + rest_tail, view
 
 
 # ST_Pred(alias.col | col, ST_GeomFromText('WKT'[, srid])[, d]) — both
@@ -1438,7 +1183,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
         return None
     # any JOIN anywhere (token match, not whitespace-fragile substring)
     # declines the single-relation rewrite; declining is always safe
-    if _search_code(_JOIN_TOKEN_RE, sql):
+    if search_code(_JOIN_TOKEN_RE, sql):
         return None
     # set-op arms each have their own FROM: attaching the first arm's
     # covering metadata to the other arms' predicates would be wrong
@@ -1448,21 +1193,12 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
     # statement's own (depth-0) FROM — a match inside a CTE body, a
     # subquery, or a string literal would attach the wrong table's
     # covering columns
-    lit_spans = _noncode_spans(sql)
-    fm = next(
-        (
-            m_
-            for m_ in _FROM_SINGLE_RE.finditer(sql)
-            if not any(s <= m_.start() < e_ for s, e_ in lit_spans)
-            and _paren_depth_at(sql, m_.start()) == 0
-        ),
-        None,
-    )
+    fm = search_code(_FROM_SINGLE_RE, sql, depth=0)
     if not fm:
         return None
     table = fm.group("t")
     alias = fm.group("a")
-    if alias and alias.lower() in _RESERVED_ALIAS:
+    if alias and alias.lower() in RESERVED_ALIAS:
         alias = None
     # predicates inside subqueries scan OTHER relations: only rewrite
     # matches that sit outside every (SELECT ...) span
@@ -1501,7 +1237,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
             return orig
         if al is not None and (alias is None or al.lower() != alias.lower()):
             return orig
-        meta = _bbox_meta(session, table, col)
+        meta = session.bbox_meta(table, col)
         if meta is None:
             return orig
         try:

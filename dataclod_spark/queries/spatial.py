@@ -402,7 +402,7 @@ def g9_sql_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .createOrReplaceTempView("g9_points")
     )
     # bbox covering-column registration (≈ GeoParquet bbox metadata): the
-    # dispatch derives __bb with codegen expressions, skips the refine
+    # dispatch derives the bbox columns with codegen expressions, skips the refine
     # stage (both sides exact), and Catalyst prunes the WKB constructor
     # UDFs out of the plan — the dispatched join runs 100% JVM-side.
     sess.register_bbox("g9_points", "geom", "px", "py", "px", "py", exact=True)

@@ -329,20 +329,9 @@ def _has_code(s: str) -> bool:
     same parse error PG gives); a comment-only segment does not — PG
     ignores a trailing comment after the last semicolon rather than
     executing it as a statement."""
-    from dataclod_spark.plans.rewrites import scan_noncode_span
+    from dataclod_spark.plans.sqltext import uncommented
 
-    i, n = 0, len(s)
-    while i < n:
-        kind, end = scan_noncode_span(s, i)
-        if kind in ("line", "block"):
-            i = end
-        elif kind is not None:
-            return True
-        elif not s[i].isspace():
-            return True
-        else:
-            i += 1
-    return False
+    return bool(uncommented(s).strip())
 
 
 def md5_password_hash(user: str, password: str, salt: bytes) -> str:
@@ -587,34 +576,17 @@ class _Connection:
 
     @staticmethod
     def _split_statements(sql: str) -> list[str]:
-        """Split a simple-protocol query string on top-level semicolons
-        (the PG simple protocol executes each statement in order).  Aware
-        of single/double quotes (Spark tokenization: backslash and doubled
-        escapes), dollar-quoting (tags may contain digits after the first
-        char, e.g. $q1$), line comments, and nesting block comments, so
-        semicolons inside literals or comments don't split.  All span
-        rules come from the one shared scanner
-        (plans.rewrites.scan_noncode_span) also used by the statement-head
-        classifier — they cannot diverge."""
-        from dataclod_spark.plans.rewrites import scan_noncode_span
+        """Split a simple-protocol query string on semicolons in code
+        (the PG simple protocol executes each statement in order).
+        Literals (Spark tokenization: backslash and doubled escapes),
+        dollar-quoting (tags may contain digits after the first char, e.g.
+        $q1$), line comments and nesting block comments never split: the
+        rules come from the engine's one SQL lexer (``plans/sqltext.py``),
+        the same one behind the statement-head classifier and the
+        rewrites."""
+        from dataclod_spark.plans.sqltext import split_top
 
-        out, buf = [], []
-        i, n = 0, len(sql)
-        while i < n:
-            kind, j = scan_noncode_span(sql, i)
-            if kind is not None:
-                buf.append(sql[i:j])
-                i = j
-                continue
-            ch = sql[i]
-            if ch == ";":
-                out.append("".join(buf))
-                buf = []
-                i += 1
-                continue
-            buf.append(ch)
-            i += 1
-        out.append("".join(buf))
+        out = split_top(sql, ";")
         # a segment with no CODE at all ("-- done", "/* tag */", "") is
         # not a statement: PG ignores trailing comments after the last
         # semicolon rather than executing them (and Parse must not count
@@ -1023,38 +995,21 @@ _COMMAND_TAG_HEADS = _DML_HEADS | frozenset(
 )
 
 
+# a word, or the placeholder a quoted identifier becomes
+_WORD_OR_IDENT_RE = re.compile(r"[^\W\d]\w*|\x01+")
+
+
 def _top_level_words(sql: str):
     """Yield lowercased word tokens at parenthesis depth 0, outside string
     literals, comments (line + nesting block) and dollar-quoted strings —
-    span rules from the one shared scanner
-    (plans.rewrites.scan_noncode_span, also behind ``_split_statements``).
-    Quoted/backticked IDENTIFIERS yield a ``"?"`` placeholder token so
-    grammar positions survive (a backticked CTE name must still count as
-    a name)."""
-    from dataclod_spark.plans.rewrites import scan_noncode_span
+    the rules of the engine's one SQL lexer (``plans/sqltext.py``, also
+    behind ``_split_statements``).  Quoted/backticked IDENTIFIERS yield a
+    ``"?"`` placeholder token so grammar positions survive (a backticked
+    CTE name must still count as a name)."""
+    from dataclod_spark.plans.sqltext import code_matches, masked
 
-    i, n, depth = 0, len(sql), 0
-    while i < n:
-        ch = sql[i]
-        kind, j = scan_noncode_span(sql, i)
-        if kind is not None:
-            if kind == "quote" and ch != "'" and depth == 0:
-                yield "?"  # quoted identifier placeholder
-            i = j
-        elif ch == "(":
-            depth += 1
-            i += 1
-        elif ch == ")":
-            depth -= 1
-            i += 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            yield sql[i:j].lower()
-            i = j
-        else:
-            i += 1
+    for m in code_matches(_WORD_OR_IDENT_RE, masked(sql, ident="\x01"), depth=0):
+        yield "?" if m.group()[0] == "\x01" else m.group().lower()
 
 
 def _statement_head(sql: str) -> str:

@@ -313,9 +313,12 @@ class EngineSession:
         """
         # single trailing statement terminator: harmless to Spark but it
         # defeats the $-anchored dispatch/shim regexes below
+        from dataclod_spark.plans.sqltext import split_top
+
         query = query.strip()
-        if query.endswith(";") and ";" not in query[:-1]:
-            query = query[:-1].rstrip()
+        pieces = split_top(query, ";")
+        if len(pieces) == 2 and not pieces[1]:
+            query = pieces[0].rstrip()
         if _TXN_RE.match(query):
             # BEGIN/COMMIT/ROLLBACK accepted as no-ops returning empty result
             return self.spark.range(0).select()
@@ -440,35 +443,48 @@ class EngineSession:
         # patterns), so the loop strictly consumes spatial joins; the cap
         # is a safety net, and the filter pushdown runs once at the end
         # (it wraps the original predicate into its own output, so a
-        # second pass would re-match it).
-        for _ in range(8):
-            rewritten = try_rewrite_spatial_join(self, query)
-            if rewritten is None:
-                # spatial join deeper in an inner-join chain (any position)
-                rewritten = try_chain_spatial_join(self, query)
-            if rewritten is None:
-                # LEFT/RIGHT/FULL spatial joins route through the DataFrame
-                # operator's outer completion (exec.rs:47-131 parity)
-                rewritten = try_outer_spatial_join(self, query)
-            if rewritten is None:
-                # correlated spatial [NOT] EXISTS → grid semi/anti join
-                rewritten = try_exists_spatial_join(self, query)
-            if rewritten is None:
-                break
-            query = rewritten
-        # region query: spatial predicate vs literal geometry → inject
-        # bbox covering-column conjuncts that push to the parquet scan
-        rewritten = try_spatial_filter_pushdown(self, query)
-        if rewritten is not None:
-            query = rewritten
-        if args:
-            # server-generated fragments (typed empty arrays etc.) have
-            # no spark.sql(args=...) representation — splice them with
-            # the literal-aware scanner (never inside quoted strings)
-            query, args = _splice_fragments(query, args)
-        if args:
-            return self.spark.sql(query, args=dict(args))
-        return self.spark.sql(query)
+        # second pass would re-match it).  The outer and EXISTS dispatches
+        # read a temp view of the operator's result; each is dropped once
+        # spark.sql has analyzed the statement (the analyzed plan holds
+        # the view's plan, so the frame still runs), so none outlives its
+        # statement.
+        views: list[str] = []
+        try:
+            for _ in range(8):
+                rewritten = try_rewrite_spatial_join(self, query)
+                if rewritten is None:
+                    # spatial join deeper in an inner-join chain (any position)
+                    rewritten = try_chain_spatial_join(self, query)
+                if rewritten is None:
+                    # LEFT/RIGHT/FULL spatial joins route through the
+                    # DataFrame operator's outer completion (exec.rs:47-131
+                    # parity), then correlated spatial [NOT] EXISTS → grid
+                    # semi/anti join
+                    via_view = try_outer_spatial_join(self, query) or try_exists_spatial_join(
+                        self, query
+                    )
+                    if via_view is not None:
+                        rewritten, view = via_view
+                        views.append(view)
+                if rewritten is None:
+                    break
+                query = rewritten
+            # region query: spatial predicate vs literal geometry → inject
+            # bbox covering-column conjuncts that push to the parquet scan
+            rewritten = try_spatial_filter_pushdown(self, query)
+            if rewritten is not None:
+                query = rewritten
+            if args:
+                # server-generated fragments (typed empty arrays etc.) have
+                # no spark.sql(args=...) representation — splice them with
+                # the lexer (never inside literals or comments)
+                query, args = _splice_fragments(query, args)
+            if args:
+                return self.spark.sql(query, args=dict(args))
+            return self.spark.sql(query)
+        finally:
+            for view in views:
+                self.spark.catalog.dropTempView(view)
 
     # -- DDL/DML shims (inherited DataFusion surface, SURVEY §2.B) ---------
     def _copy_to(self, m: "re.Match[str]") -> DataFrame:

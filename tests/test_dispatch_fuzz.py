@@ -124,6 +124,7 @@ def _gen_queries(rnd: random.Random) -> tuple[str, str]:
         "p.pid * 2 AS dbl, b.bid",  # depth-0 multiplication star lookalike
         "p.pid, instr('x(*)y', '(*)') AS k",  # '(*)' as string DATA
         "p.pid, b.bid -- trailing comment\n",
+        "p.pid, 'b.bid' AS lit",  # alias-qualified text as string DATA
     ])
     tail = rnd.choice([
         "",
@@ -136,11 +137,16 @@ def _gen_queries(rnd: random.Random) -> tuple[str, str]:
 
     shape = rnd.random()
     if shape < 0.15:
-        cte = "WITH even_b AS (SELECT * FROM fz_boxes WHERE bid % 2 = 0) "
-        return (
-            cte + core(pred).replace("fz_boxes b", "even_b b"),
-            cte + core(plain).replace("fz_boxes b", "even_b b"),
-        )
+        if rnd.random() < 0.5:
+            cte = "WITH even_b AS (SELECT * FROM fz_boxes WHERE bid % 2 = 0) "
+            return (
+                cte + core(pred).replace("fz_boxes b", "even_b b"),
+                cte + core(plain).replace("fz_boxes b", "even_b b"),
+            )
+        # a CTE that shadows the view it reads, with a paren literal in
+        # its body: the dispatch must join the CTE, not the catalog view
+        cte = "WITH fz_boxes AS (SELECT * FROM fz_boxes WHERE bid % 3 <> 0 AND ')' <> '(') "
+        return cte + core(pred), cte + core(plain)
     if shape < 0.3:
         outer_sel = rnd.choice(["*", "q.*", "count(*) AS n"])
         return (
@@ -164,11 +170,15 @@ def _gen_queries(rnd: random.Random) -> tuple[str, str]:
     if shape < 0.6 and not outer:
         kw = rnd.choice(["EXISTS", "NOT EXISTS"])
         p2, plain2 = _pred_pair(rnd, "fz_pts", "b2")
+        # literals holding parens and alias-qualified text in the select
+        # list and in the EXISTS body are data
+        esel = rnd.choice(["pid", "pid, 'fz_pts.pid' AS lit"])
+        ebody = rnd.choice(["", " AND concat(b2.bid, ')') <> '('"])
         return (
-            f"SELECT pid FROM fz_pts WHERE {kw} "
-            f"(SELECT 1 FROM fz_boxes b2 WHERE {p2})",
-            f"SELECT pid FROM fz_pts WHERE {kw} "
-            f"(SELECT 1 FROM fz_boxes b2 WHERE {plain2})",
+            f"SELECT {esel} FROM fz_pts WHERE {kw} "
+            f"(SELECT 1 FROM fz_boxes b2 WHERE {p2}{ebody})",
+            f"SELECT {esel} FROM fz_pts WHERE {kw} "
+            f"(SELECT 1 FROM fz_boxes b2 WHERE {plain2}{ebody})",
         )
     if shape < 0.72:
         # literal-geometry filter (pushdown path; fz_pts has exact meta).

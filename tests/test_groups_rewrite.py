@@ -639,15 +639,13 @@ def test_split_trailing_comments_properties():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from dataclod_spark.plans.rewrites import (
-        _split_trailing_comments,
-        scan_noncode_span,
-    )
+    from dataclod_spark.plans.rewrites import _split_trailing_comments
+    from dataclod_spark.plans.sqltext import noncode_span
 
     def only_comments_ws(tail: str) -> bool:
         i, n = 0, len(tail)
         while i < n:
-            kind, end = scan_noncode_span(tail, i)
+            kind, end = noncode_span(tail, i)
             if kind in ("line", "block"):
                 i = end
             elif tail[i].isspace():
@@ -673,7 +671,7 @@ def test_split_trailing_comments_properties():
         assert only_comments_ws(tail)        # tail is inert
         if tail:
             # tail starts at a genuine comment opener in code position
-            kind, _ = scan_noncode_span(tail, 0)
+            kind, _ = noncode_span(tail, 0)
             assert kind in ("line", "block")
 
     run()

@@ -1498,3 +1498,50 @@ def test_text_array_param_string_escaping_not_injectable(client):
         [b"{\"it's'); DROP--\",NULL}"], [1009],
     )
     assert rows == [[b"it's'); DROP--", None]]
+
+
+def _describe_execute(client, sql: str) -> list:
+    """Parse/Bind/Describe(portal)/Execute/Sync, as psycopg3 sends it;
+    returns the DataRows' first cells."""
+    client.send(b"P", b"\x00" + sql.encode() + b"\x00" + struct.pack("!h", 0))
+    client.send(b"B", b"\x00\x00" + struct.pack("!hhh", 0, 0, 0))
+    client.send(b"D", b"P\x00")
+    client.send(b"E", b"\x00" + struct.pack("!i", 0))
+    client.send(b"S")
+    rows = []
+    while True:
+        t, body = client.read_message()
+        assert t != b"E", body
+        if t == b"D":
+            (ln,) = struct.unpack("!i", body[2:6])
+            rows.append(body[6 : 6 + ln])
+        if t == b"Z":
+            return rows
+
+
+def test_dispatch_views_dropped_over_wire(engine, client):
+    """Outer and EXISTS spatial dispatch over Describe→Execute: the rows
+    are right and no ``__spatial_*`` temp view survives the statements."""
+    from dataclod_spark.geo import core as GC
+    from dataclod_spark.geo.algos import make_envelope, make_point
+
+    spark = engine.spark
+    spark.createDataFrame(
+        [(i, GC.wkb_write(make_point(i + 0.5, 0.5))) for i in range(4)], "id long, geom binary"
+    ).createOrReplaceTempView("wire_lx_pts")
+    spark.createDataFrame(
+        [(0, GC.wkb_write(make_envelope(0.0, 0.0, 2.0, 1.0)))], "bid long, geom binary"
+    ).createOrReplaceTempView("wire_lx_boxes")
+    outer = _describe_execute(
+        client,
+        "SELECT p.id FROM wire_lx_pts p LEFT JOIN wire_lx_boxes b "
+        "ON ST_Intersects(p.geom, b.geom) WHERE b.bid IS NULL ORDER BY p.id",
+    )
+    semi = _describe_execute(
+        client,
+        "SELECT id FROM wire_lx_pts p WHERE EXISTS (SELECT 1 FROM wire_lx_boxes b "
+        "WHERE ST_Intersects(p.geom, b.geom)) ORDER BY id",
+    )
+    assert (outer, semi) == ([b"2", b"3"], [b"0", b"1"])
+    _, tables, _ = client.query("SHOW TABLES")
+    assert not [r for r in tables if r[1].startswith(b"__spatial_")], tables

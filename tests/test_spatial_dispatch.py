@@ -1113,3 +1113,105 @@ def test_verdict_table_boundaries_both_paths(engine, boundary_views, predicate):
     plan = _plan(sql)  # crosses folds to an empty relation
     assert "EvalPython" not in plan and "BroadcastNestedLoopJoin" not in plan
 
+
+
+# --- one lexer: literals never steer the dispatch ---------------------------
+
+
+@pytest.fixture(scope="module")
+def lexer_views(engine):
+    """Six points inside one box; odd ids carry the paren literal '(' as
+    their tag, so a scanner that counts parens inside literals misreads
+    any statement that names the tag."""
+    spark = engine.spark
+    schema = "id long, tag string, geom binary"
+    spark.createDataFrame(
+        [(i, "(" if i % 2 else "x", GC.wkb_write(make_point(i + 0.5, i + 0.5))) for i in range(6)],
+        schema,
+    ).createOrReplaceTempView("lx_pts")
+    spark.createDataFrame(
+        [(0, "b.q", GC.wkb_write(make_envelope(0.0, 0.0, 10.0, 10.0)))],
+        "bid long, tag string, geom binary",
+    ).createOrReplaceTempView("lx_boxes")
+
+
+def _spatial_views(spark) -> set[str]:
+    return {r.tableName for r in spark.sql("SHOW TABLES").collect()
+            if r.tableName.startswith("__spatial_")}
+
+
+def test_outer_dispatch_leaves_select_literal_alone(engine, lexer_views):
+    """An alias-qualified text inside a select-list literal is data: the
+    outer dispatch's alias substitution must not turn 'p.id' into 'id'."""
+    rows = engine.sql(
+        "SELECT p.id, 'p.id' AS lbl, b.bid FROM lx_pts p "
+        "LEFT JOIN lx_boxes b ON ST_Intersects(p.geom, b.geom)"
+    ).collect()
+    assert sorted((r.id, r.lbl, r.bid) for r in rows) == [(i, "p.id", 0) for i in range(6)]
+
+
+def test_exists_dispatch_leaves_literals_alone(engine, lexer_views):
+    """The same for EXISTS: the select-list literal keeps its text, and so
+    does a right-side filter literal ('b.q', which is no column ref)."""
+    want = [(i, "p.id") for i in range(6)]
+    for cond in ("", " AND b.tag = 'b.q'"):
+        df = engine.sql(
+            "SELECT id, 'p.id' AS lbl FROM lx_pts p WHERE EXISTS (SELECT 1 FROM lx_boxes b "
+            f"WHERE ST_Intersects(p.geom, b.geom){cond})"
+        )
+        assert sorted((r.id, r.lbl) for r in df.collect()) == want, cond
+        assert "BroadcastNestedLoopJoin" not in _plan(df)
+
+
+def test_paren_literal_in_cte_body_shadows_view(engine, lexer_views):
+    """A CTE whose body holds a '(' literal still shadows the catalog view
+    of the same name: the dispatch joins the filtered CTE (3 rows), not
+    the unfiltered view (6)."""
+    rows = engine.sql(
+        "WITH lx_pts AS (SELECT * FROM lx_pts WHERE tag <> '(') "
+        "SELECT p.id, b.bid FROM lx_pts p LEFT JOIN lx_boxes b ON ST_Intersects(p.geom, b.geom)"
+    ).collect()
+    assert sorted((r.id, r.bid) for r in rows) == [(0, 0), (2, 0), (4, 0)]
+
+
+def test_paren_literal_in_exists_body_dispatches(engine, lexer_views):
+    """A ')' literal inside the EXISTS body must not end the body scan:
+    the statement dispatches (default planning cannot plan a Python UDF
+    in the decorrelated join condition)."""
+    df = engine.sql(
+        "SELECT id FROM lx_pts p WHERE EXISTS (SELECT 1 FROM lx_boxes b "
+        "WHERE ST_Intersects(p.geom, b.geom) AND b.tag <> ')')"
+    )
+    assert sorted(r.id for r in df.collect()) == list(range(6))
+
+
+def test_exists_backticked_bare_column_declines(engine, lexer_views):
+    """An unqualified backticked column in a correlated EXISTS conjunct
+    names the inner relation's column (``b.tag`` here, so no row matches).
+    On the join output it would read the outer side's ``tag``, so every
+    row would match: the dispatch must decline, as it does unquoted."""
+    from dataclod_spark.plans.spatial_dispatch import try_exists_spatial_join
+
+    for col in ("`tag`", "tag"):
+        sql = ("SELECT id FROM lx_pts p WHERE EXISTS (SELECT 1 FROM lx_boxes b "
+               f"WHERE ST_Intersects(p.geom, b.geom) AND p.tag = {col})")
+        assert try_exists_spatial_join(engine, sql) is None, col
+    assert _spatial_views(engine.spark) == set()
+
+
+def test_dispatch_views_do_not_outlive_their_statement(engine, lexer_views):
+    """Outer and EXISTS dispatch read a temp view of the operator's result;
+    the session drops it once the statement is analyzed, and the frame
+    still runs (collect and a limited local iterator) after the drop."""
+    before = _spatial_views(engine.spark)
+    outer = engine.sql(
+        "SELECT p.id, b.bid FROM lx_pts p LEFT JOIN lx_boxes b ON ST_Intersects(p.geom, b.geom)"
+    )
+    semi = engine.sql(
+        "SELECT id FROM lx_pts p WHERE NOT EXISTS (SELECT 1 FROM lx_boxes b "
+        "WHERE ST_Intersects(p.geom, b.geom))"
+    )
+    assert _spatial_views(engine.spark) == before == set()
+    assert sorted((r.id, r.bid) for r in outer.collect()) == [(i, 0) for i in range(6)]
+    assert len(list(outer.limit(2).toLocalIterator())) == 2
+    assert semi.collect() == []
