@@ -11,10 +11,13 @@ parameters (``auth.rs:91-103``), and executes SQL through
 
 Protocol scope (matching the reference's handlers):
 
-* **Simple protocol** (``handler.rs:34-77``): ``Q`` messages; BEGIN /
-  COMMIT / ABORT / ROLLBACK answered with bare tags (no real txn — same
-  no-op semantics), everything else planned and streamed back in text
-  format capped at ``DEFAULT_ROW_LIMIT`` = 1024 rows (``handler.rs:21,74``).
+* **Simple protocol** (``handler.rs:34-77``): ``Q`` messages; each
+  statement runs as a text-format portal through the extended protocol's
+  Execute path, its result capped at ``DEFAULT_ROW_LIMIT`` = 1024 rows
+  (``handler.rs:21,74``).  Transaction control (BEGIN, START TRANSACTION,
+  COMMIT, END, ROLLBACK, ABORT, each with or without WORK / TRANSACTION)
+  is a no-op (no real txn, as in the reference) answered with PG's tag:
+  END answers COMMIT, ABORT answers ROLLBACK.
 * **Extended protocol** (``handler.rs:96-147``, ``parser.rs:31-44``):
   Parse / Bind / Describe / Execute / Close / Sync / Flush; ``$n``
   placeholders are bound positionally (plans/rewrites.rewrite_dollar_params
@@ -31,9 +34,14 @@ Protocol scope (matching the reference's handlers):
   honoring the Bind message's result-format codes; remaining non-primitive
   columns requested in binary raise a clean protocol error.
 
-Driver-side streaming: rows leave via ``df.toLocalIterator`` so a large
-result never materializes on the driver beyond one partition (the reference
-streams record batches the same way, ``types.rs:71-108``).
+Bounded fetch with cursor fallback: a statement's first Execute collects
+``df.limit(k + 1)`` once (a top-N or early-stopping plan), ``k`` being its
+row limit capped at ``DEFAULT_ROW_LIMIT``.  A result of at most ``k`` rows
+is sent whole and no cursor is opened.  The simple protocol cuts a longer
+one at the cap; the extended protocol opens one local-iterator cursor,
+which holds at most one partition on the driver (the reference streams
+record batches the same way, ``types.rs:71-108``) and suspends at each
+Execute's row limit.
 
 Start programmatically::
 
@@ -46,7 +54,6 @@ or ``python -m dataclod_spark.server.pgwire --port 5432``.
 from __future__ import annotations
 
 import hashlib
-import itertools
 import os
 import re
 import socket
@@ -58,14 +65,6 @@ from decimal import Decimal
 from typing import Iterable, Optional
 
 DEFAULT_ROW_LIMIT = 1024  # handler.rs:21
-# Execute row limits up to this size take the probe fast path (limit
-# pushed into the plan → Spark top-N, probe collected on the driver);
-# larger limits go straight to the streaming cursor.  Deliberately small:
-# when the probe overflows it is discarded and the full cursor opened (so
-# every delivered row comes from one iteration), which costs one extra
-# top-(N+1) execution — capping N bounds that waste while keeping the
-# common psql/ORM bounded-fetch sizes on the cheap path.
-_FAST_FETCH_CAP = 1024
 PG_VERSION = "10.0"  # auth.rs:17
 _DEFAULT_PASSWORD = "dataclod"  # auth.rs:18
 
@@ -416,9 +415,6 @@ class _Proto:
 
 # -- per-connection handler ---------------------------------------------------
 
-_TXN_TAGS = {"begin": "BEGIN", "commit": "COMMIT", "rollback": "ROLLBACK", "abort": "ROLLBACK"}
-
-
 class _PreparedStatement:
     __slots__ = ("sql", "n_params", "param_oids")
 
@@ -530,15 +526,12 @@ class _Connection:
     def _run_sql(self, sql: str, params: Optional[list] = None):
         """Returns (DataFrame|None, tag_word).  None DataFrame = tag-only."""
         bare = sql.strip().rstrip(";").strip()
-        tag = _TXN_TAGS.get(bare.lower())
-        if tag is not None:  # handler.rs:44-66
-            return None, tag
         if not bare:
             return None, ""
         df = self.engine.sql(bare, args=params if params else None)
         if not df.columns:
-            # SET/txn shims and Spark DML/DDL commands return zero-column
-            # frames: answer the PG command tag for the statement head.
+            # SET/txn shims (handler.rs:44-66) and Spark DML/DDL commands
+            # return zero-column frames: answer the PG command tag.
             # Spark does not report affected-row counts for file-format
             # DML, so the count in INSERT/UPDATE/DELETE tags is 0.
             return None, _command_tag(bare)
@@ -562,17 +555,57 @@ class _Connection:
             for v, oid, fmt in zip(row, po.oids, po.fmts)
         )
 
-    def _stream_result(self, df, limit: int, describe_only: bool = False) -> int:
+    def _send_row_description(self, df, po: Optional[_Portal] = None) -> None:
+        """RowDescription of ``df``'s columns in ``po``'s result formats
+        (all text without a portal: Describe of a statement)."""
         fields = [(f.name, _spark_type_oid(f.dataType)) for f in df.schema.fields]
-        self.p.send_row_description(fields)
-        if describe_only:
-            return 0
-        n = 0
-        it = df.limit(limit).toLocalIterator() if limit else df.toLocalIterator()
-        for row in itertools.islice(it, limit if limit else None):
-            self.p.send_data_row(_text_encode(v) for v in row)
-            n += 1
-        return n
+        self.p.send_row_description(fields, po.column_formats(len(fields)) if po else None)
+
+    def _run_portal(self, po: _Portal, max_rows: int, simple: bool = False) -> bool:
+        """First Execute of ``po``: plan its statement unless Describe did,
+        then answer it.  Returns False only when the result overflowed the
+        first fetch and waits on the ``po.iter`` cursor for the caller.
+
+        Without a result set: the command tag (for COPY and DML the count
+        frame's; Describe answered NoData, so no DataRow may follow).  With
+        one: a RowDescription when no Describe could have sent it (simple
+        protocol; statements Describe must not plan, e.g. EXECUTE
+        IMMEDIATE), then one ``limit(k + 1)`` fetch, ``k`` the row limit
+        capped at DEFAULT_ROW_LIMIT.  On overflow the simple protocol sends
+        the first DEFAULT_ROW_LIMIT rows (handler.rs:74); the extended one
+        discards the probe and opens the one cursor, so every row a client
+        sees comes from one iteration of a possibly nondeterministic plan.
+        """
+        sql = po.stmt.sql
+        # a frame Describe planned is read, not consumed: later Describes
+        # of a suspended portal answer from it without re-planning
+        df = po.df
+        if df is None:
+            df, tag = self._run_sql(sql, po.params or None)
+            if df is None:
+                po.done, po.tag = True, (tag or "SET")
+                self.p.send_command_complete(po.tag)
+                return True
+        returns_rows = _returns_rows(sql)
+        if not returns_rows and (head := _statement_head(sql)) in _COMMAND_TAG_HEADS:
+            po.done, po.tag = True, self._count_frame_tag(head, df)
+            self.p.send_command_complete(po.tag)
+            return True
+        if simple or not returns_rows:
+            self._send_row_description(df, po)
+        po.oids = [_spark_type_oid(f.dataType) for f in df.schema.fields]
+        po.fmts = po.column_formats(len(po.oids))
+        k = max_rows if 0 < max_rows <= DEFAULT_ROW_LIMIT else DEFAULT_ROW_LIMIT
+        rows = df.limit(k + 1).collect()
+        if len(rows) > k and not simple:
+            po.iter = df.toLocalIterator()
+            return False
+        del rows[k:]
+        for row in rows:
+            self._send_portal_row(po, row)
+        po.done = True
+        self.p.send_command_complete(f"SELECT {len(rows)}")
+        return True
 
     @staticmethod
     def _split_statements(sql: str) -> list[str]:
@@ -611,19 +644,8 @@ class _Connection:
             return
         for stmt in statements:
             try:
-                df, tag = self._run_sql(stmt)
-                if df is None:
-                    self.p.send_command_complete(tag or "SET")
-                elif (head := _statement_head(stmt)) in _COMMAND_TAG_HEADS:
-                    # count/status frame (COPY): answer the PG tag, same
-                    # as the extended path — psql shows "COPY 5", not a
-                    # one-row result set.  (_COMMAND_TAG_HEADS is disjoint
-                    # from every row-returning head, so this one resolved
-                    # head decides; no second scan.)
-                    self.p.send_command_complete(self._count_frame_tag(head, df))
-                else:
-                    n = self._stream_result(df, DEFAULT_ROW_LIMIT)
-                    self.p.send_command_complete(f"SELECT {n}")
+                # a local text-format portal (psql shows "COPY 5", not rows)
+                self._run_portal(_Portal(_PreparedStatement(stmt, 0, []), [], []), 0, simple=True)
             except Exception as e:  # noqa: BLE001 - protocol boundary
                 self.p.send_error("XX000", str(e)[:1000])
                 break
@@ -731,7 +753,7 @@ class _Connection:
                 if df is None:
                     self.p.send(b"n")  # NoData
                 else:
-                    self._stream_result(df, 0, describe_only=True)
+                    self._send_row_description(df)
                 return
             if not _returns_rows(po.stmt.sql):
                 # Describe of an INSERT/CTAS/COPY portal is NoData in PG;
@@ -759,8 +781,7 @@ class _Connection:
                 # Describe of a suspended-portal fetch loop re-planned
                 # the statement (second-pass review find, round 5)
                 po.df = df
-                fields = [(f.name, _spark_type_oid(f.dataType)) for f in df.schema.fields]
-                self.p.send_row_description(fields, po.column_formats(len(fields)))
+                self._send_row_description(df, po)
         except Exception as e:  # noqa: BLE001
             self._ext_error("XX000", str(e)[:1000])
 
@@ -784,63 +805,8 @@ class _Connection:
             if po.done and po.iter is None and po.pushback is None:
                 self.p.send_command_complete("SELECT 0")
                 return
-            if po.iter is None and not po.done:
-                # first Execute of this portal: run the statement and put
-                # the result iterator on the portal so a limited fetch can
-                # suspend and resume (PG portal semantics)
-                if po.df is not None:
-                    # Describe already planned this portal (lazily — the
-                    # row-returning path never executes at Describe time).
-                    # READ without consuming: nulling it made the first
-                    # Describe after a suspension re-plan the statement
-                    # (third-pass find); the frame is a plan object, so
-                    # pinning it on the portal costs nothing
-                    df = po.df
-                else:
-                    df, tag = self._run_sql(po.stmt.sql, po.params or None)
-                    if df is None:
-                        po.done, po.tag = True, (tag or "SET")
-                        self.p.send_command_complete(po.tag)
-                        return
-                if not _returns_rows(po.stmt.sql):
-                    head = _statement_head(po.stmt.sql) or "ok"
-                    if head in _COMMAND_TAG_HEADS:
-                        # Describe answered NoData for this statement, so
-                        # Execute must not stream rows (a DataRow with no
-                        # RowDescription is a protocol violation) — surface
-                        # the count frame (COPY / DML) in the
-                        # CommandComplete tag instead
-                        po.done, po.tag = True, self._count_frame_tag(head, df)
-                        self.p.send_command_complete(po.tag)
-                        return
-                    # a row-returning statement Describe could not safely
-                    # plan (e.g. EXECUTE IMMEDIATE — planning executes
-                    # whatever it wraps): libpq and its descendants treat a
-                    # RowDescription arriving here as the start of a
-                    # tuple-bearing result, so send the late descriptor and
-                    # stream instead of silently swallowing the rows
-                    fields = [
-                        (f.name, _spark_type_oid(f.dataType)) for f in df.schema.fields
-                    ]
-                    self.p.send_row_description(fields, po.column_formats(len(fields)))
-                po.oids = [_spark_type_oid(f.dataType) for f in df.schema.fields]
-                po.fmts = po.column_formats(len(po.oids))
-                if 0 < max_rows <= _FAST_FETCH_CAP:
-                    # bounded first fetch: probe with the limit pushed into
-                    # the plan (Spark turns ORDER BY + limit into a cheap
-                    # top-N).  Complete within the limit → never compute
-                    # the full plan.  More rows exist → discard the probe
-                    # and open the real cursor, so every row the client
-                    # ever sees comes from ONE iteration (re-running a
-                    # nondeterministic plan could skip/duplicate rows).
-                    probe = df.limit(max_rows + 1).collect()
-                    if len(probe) <= max_rows:
-                        for row in probe:
-                            self._send_portal_row(po, row)
-                        po.done = True
-                        self.p.send_command_complete(f"SELECT {len(probe)}")
-                        return
-                po.iter = df.toLocalIterator()
+            if po.iter is None and not po.done and self._run_portal(po, max_rows):
+                return
             n = 0
             while po.iter is not None:
                 if po.pushback is not None:
@@ -864,7 +830,7 @@ class _Connection:
             self.p.send_command_complete(f"SELECT {n}")
         except Exception as e:  # noqa: BLE001
             # release the cursor too: a FAILED portal can never run again,
-            # so a pinned toLocalIterator would leak driver-side state
+            # so a pinned cursor would leak driver-side state
             po.failed, po.iter, po.pushback = True, None, None
             self._ext_error("XX000", str(e)[:1000])
 
@@ -1046,6 +1012,10 @@ _DDL_MODIFIERS = frozenset(
      "unique", "if", "not", "exists", "concurrently")
 )
 
+# PG's tag for the transaction-control verbs that are not their own tag
+# (BEGIN, COMMIT and ROLLBACK are); session._TXN_RE accepts the spellings
+_TXN_VERB_TAGS = {"end": "COMMIT", "abort": "ROLLBACK", "start": "START TRANSACTION"}
+
 
 def _command_tag(sql: str) -> str:
     """PG CommandComplete tag for a statement that produced no result set.
@@ -1071,6 +1041,11 @@ def _command_tag(sql: str) -> str:
             idx += 1
         obj = words[idx].upper() if idx < len(words) else ""
         return f"{head.upper()} {obj}".strip()
+    if head in _TXN_VERB_TAGS:
+        from dataclod_spark.session import _TXN_RE
+
+        if _TXN_RE.match(sql):
+            return _TXN_VERB_TAGS[head]
     return head.upper() if head else "SET"
 
 

@@ -7,7 +7,8 @@ provides the SQL entry point with PostgreSQL-client compatibility shims:
 
 * ``SET`` of variables outside the engine's namespace is swallowed and
   returns an empty result (``context.rs:110-124``),
-* ``BEGIN`` / ``COMMIT`` / ``ROLLBACK`` are accepted as no-ops
+* ``BEGIN`` / ``COMMIT`` / ``ROLLBACK`` (and ``START TRANSACTION``,
+  ``END``, ``ABORT``) are accepted as no-ops
   (``src/server/src/postgres/handler.rs:43-64``),
 * prepared-statement style parameters are supported via Spark's
   parameterized SQL (``handler.rs:134-144`` → ``spark.sql(sql, args=...)``).
@@ -43,7 +44,7 @@ TABLES = (
 _ENGINE_SET_NAMESPACES = ("spark.", "dataclod.", "datafusion.")
 
 _SET_RE = re.compile(r"^\s*SET\s+(?:SESSION\s+|LOCAL\s+)?([\w.]+)\s*(?:=|\s+TO\s+)\s*(.+?)\s*;?\s*$", re.IGNORECASE)
-_TXN_RE = re.compile(r"^\s*(BEGIN|START\s+TRANSACTION|COMMIT|ROLLBACK|END)(\s+(WORK|TRANSACTION))?\s*;?\s*$", re.IGNORECASE)
+_TXN_RE = re.compile(r"^\s*(BEGIN|START\s+TRANSACTION|COMMIT|ROLLBACK|END|ABORT)(\s+(WORK|TRANSACTION))?\s*;?\s*$", re.IGNORECASE)
 _EXPLAIN_RE = re.compile(
     r"^\s*EXPLAIN(?:\s+(?P<mode>ANALYZE|VERBOSE|EXTENDED|FORMATTED|CODEGEN|COST))?\s+(?P<body>.+)$",
     re.IGNORECASE | re.DOTALL,
@@ -149,6 +150,10 @@ def get_spark(
     Defaults follow the scale guidance: AQE on (runtime re-plan + skew
     handling), Arrow enabled for the pandas-UDF slow path, UTC session
     timezone (the reference's timestamps are naive UTC, SURVEY.md §1.3).
+    Local mode is sized from the host: one task slot per CPU this process
+    may run on, and a driver heap of half the physical memory, at most
+    24g.  ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override
+    both for a deployment.
     """
     import os
 
@@ -156,8 +161,12 @@ def get_spark(
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if driver_mem is None:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+        driver_mem = f"{min(half_mb, 24 * 1024)}m"
     builder = (
         builder.master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -171,7 +180,7 @@ def get_spark(
         .config("spark.python.daemon.module", "dataclod_spark.warm_daemon")
         # driver testdata writes events.ts as TIMESTAMP(NANOS); read as long
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
     )

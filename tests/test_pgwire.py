@@ -215,10 +215,18 @@ def test_simple_null_and_float(client):
 
 
 def test_txn_tags(client):
-    assert client.query("BEGIN")[2] == "BEGIN"
-    assert client.query("COMMIT")[2] == "COMMIT"
-    assert client.query("ROLLBACK")[2] == "ROLLBACK"
-    assert client.query("abort")[2] == "ROLLBACK"
+    """Every transaction-control spelling is a no-op answered with PG's
+    tag over both protocols: END is COMMIT's synonym, ABORT ROLLBACK's."""
+    spellings = [("START TRANSACTION", "START TRANSACTION"), ("abort", "ROLLBACK"),
+                 ("end work;", "COMMIT")] + [
+        (verb + suffix, tag)
+        for verb, tag in (("BEGIN", "BEGIN"), ("COMMIT", "COMMIT"), ("END", "COMMIT"),
+                          ("ROLLBACK", "ROLLBACK"), ("ABORT", "ROLLBACK"))
+        for suffix in ("", " WORK", " TRANSACTION")
+    ]
+    for sql, tag in spellings:
+        assert client.query(sql)[2] == tag, sql
+        assert client.extended(sql, [], []) == ([], tag), sql
 
 
 def test_set_swallowed(client):
@@ -1279,6 +1287,36 @@ def test_bounded_fetch_completes_via_probe(client):
             break
     assert b"s" not in events, events
     assert rows == [b"0", b"1", b"2"] and tags == ["SELECT 3"], (rows, tags)
+
+
+def test_bounded_result_opens_no_cursor(client, monkeypatch):
+    """A result within the row cap comes from the one bounded fetch over
+    either protocol, and the simple protocol cuts a longer one at the cap:
+    neither opens the cursor, which only an overflowing Execute needs."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def no_cursor(self, *args, **kwargs):
+        raise AssertionError("cursor opened")
+
+    monkeypatch.setattr(DataFrame, "toLocalIterator", no_cursor)
+    sql = "SELECT id FROM range(1024) ORDER BY id"
+    _, rows, tag = client.query(sql)
+    assert (len(rows), tag) == (1024, "SELECT 1024")
+    rows, tag = client.extended(sql, [], [])
+    assert (len(rows), tag) == (1024, "SELECT 1024")
+    _, rows, tag = client.query("SELECT id FROM range(5000)")
+    assert (len(rows), tag) == (1024, "SELECT 1024")
+    # the patch reaches the server thread: an overflowing Execute fails
+    with pytest.raises(RuntimeError, match="cursor opened"):
+        client.extended("SELECT id FROM range(1025)", [], [])
+
+
+def test_extended_fetch_all_past_the_cap(client):
+    """Execute with max_rows = 0 over more rows than the first fetch
+    holds: the cursor sends every row once, in order."""
+    rows, tag = client.extended("SELECT id FROM range(3000) ORDER BY id", [], [])
+    assert [int(r[0]) for r in rows] == list(range(3000))
+    assert tag == "SELECT 3000"
 
 
 def test_from_multi_insert_command_tag():
