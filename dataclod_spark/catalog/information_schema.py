@@ -71,9 +71,11 @@ def register_information_schema(
     spark: SparkSession, views: Collection[str] = INFORMATION_SCHEMA_VIEWS
 ) -> None:
     """(Re)build the ``information_schema_{view}`` temp views named in
-    ``views`` from the live catalog state (DataFusion column layout)."""
-    from dataclod_spark.catalog.pg_catalog import PG_CATALOG_TABLE_NAMES
+    ``views`` from the live catalog state (DataFusion column layout).
+    The pg_catalog views are built first, so they are always listed."""
+    from dataclod_spark.catalog.pg_catalog import PG_CATALOG_TABLE_NAMES, register_pg_catalog
 
+    register_pg_catalog(spark)
     cat = "datafusion"  # the reference's default catalog name
     listed = []  # (table_schema, table_name, qualified name, temporary)
     for namespace, name, is_temp in spark.sql("SHOW TABLES").collect():

@@ -1,4 +1,5 @@
-"""pg_catalog emulation — static in-memory catalog tables as temp views.
+"""pg_catalog emulation — static in-memory catalog tables as temp views,
+built on first reference.
 
 Mirrors the reference's PostgreSQL catalog emulation
 (``src/datafusion-extra/catalog/src/postgres/``): `pg_type` (28 rows, data
@@ -15,6 +16,9 @@ OIDs are LongType here (documented narrowing, SURVEY.md §1.3).
 """
 
 from __future__ import annotations
+
+import threading
+from typing import Collection
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -108,29 +112,39 @@ PG_DESCRIPTION_SCHEMA = T.StructType(
 )
 
 
-PG_CATALOG_TABLE_NAMES = (
-    "pg_type",
-    "pg_namespace",
-    "pg_database",
-    "pg_class",
-    "pg_description",
-)
+# view name -> (rows, schema)
+_VIEWS = {
+    "pg_type": (PG_TYPE_ROWS, PG_TYPE_SCHEMA),
+    "pg_namespace": (PG_NAMESPACE_ROWS, PG_NAMESPACE_SCHEMA),
+    "pg_database": (PG_DATABASE_ROWS, PG_DATABASE_SCHEMA),
+    "pg_class": ([], PG_CLASS_SCHEMA),
+    "pg_description": ([], PG_DESCRIPTION_SCHEMA),
+}
+PG_CATALOG_TABLE_NAMES = tuple(_VIEWS)
+
+# one build per view and Spark session, also when pgwire connections
+# sharing a session name a view for the first time at once
+_BUILD_LOCK = threading.Lock()
 
 
-def register_pg_catalog(spark: SparkSession) -> None:
-    """Register the pg_catalog tables as temp views (both alias spellings)."""
-    if getattr(spark, "_dataclod_pg_catalog_registered", False):
-        return
-    tables = [
-        ("pg_type", PG_TYPE_ROWS, PG_TYPE_SCHEMA),
-        ("pg_namespace", PG_NAMESPACE_ROWS, PG_NAMESPACE_SCHEMA),
-        ("pg_database", PG_DATABASE_ROWS, PG_DATABASE_SCHEMA),
-        ("pg_class", [], PG_CLASS_SCHEMA),
-        ("pg_description", [], PG_DESCRIPTION_SCHEMA),
-    ]
-    for name, rows, schema in tables:
-        df = local_frame(spark, rows, schema)
-        df.createOrReplaceTempView(name)
-        df.createOrReplaceTempView(f"pg_catalog_{name}")
-    # flag AFTER success so a failed registration retries next session
-    spark._dataclod_pg_catalog_registered = True
+def register_pg_catalog(
+    spark: SparkSession, views: Collection[str] = PG_CATALOG_TABLE_NAMES
+) -> None:
+    """Register the pg_catalog tables named in ``views`` as temp views
+    (both alias spellings), each once per Spark session.
+
+    ``EngineSession.sql`` calls this with the views a statement reads, so
+    a session that never introspects builds none of them."""
+    with _BUILD_LOCK:
+        built = getattr(spark, "_dataclod_pg_views", None)
+        if built is None:
+            built = spark._dataclod_pg_views = set()
+        for name in views:
+            if name in built:
+                continue
+            rows, schema = _VIEWS[name]
+            df = local_frame(spark, rows, schema)
+            df.createOrReplaceTempView(name)
+            df.createOrReplaceTempView(f"pg_catalog_{name}")
+            # marked AFTER success so a failed build retries on next use
+            built.add(name)

@@ -155,9 +155,15 @@ def rewrite_dollar_params(sql: str) -> tuple[str, list[int]]:
 
 
 _PG_CATALOG_QUAL_RE = re.compile(r"\bpg_catalog\s*\.\s*(\w+)", re.IGNORECASE)
+# a pg_catalog view once qualified names are rewritten: the pg_catalog_
+# spelling or the bare public alias
+_PG_VIEW_REF_RE = re.compile(
+    r"\b(?:pg_catalog_)?(pg_type|pg_namespace|pg_database|pg_class|pg_description)\b",
+    re.IGNORECASE,
+)
 
 
-def rewrite_pg_catalog_refs(sql: str) -> str:
+def rewrite_pg_catalog_refs(sql: str) -> tuple[str, set[str]]:
     """``pg_catalog.pg_X`` → ``pg_catalog_pg_X``; ``pg_catalog.other`` →
     bare ``other``.
 
@@ -171,7 +177,9 @@ def rewrite_pg_catalog_refs(sql: str) -> str:
     under both names); everything else de-qualifies to the bare name
     (format_type, array_upper, current_schemas, version, current_schema —
     no view shares those names).  Code spans only — the qualified name
-    inside a string literal is data, not a reference."""
+    inside a string literal is data, not a reference.  Returns the
+    rewritten statement and the pg_catalog views (``pg_type``, …) it
+    reads in any spelling, which EngineSession.sql builds on first use."""
 
     def repl(m: "re.Match[str]") -> str:
         name = m.group(1)
@@ -179,7 +187,8 @@ def rewrite_pg_catalog_refs(sql: str) -> str:
             return f"pg_catalog_{name}"
         return name
 
-    return sub_code(_PG_CATALOG_QUAL_RE, sql, repl)
+    sql = sub_code(_PG_CATALOG_QUAL_RE, sql, repl)
+    return sql, {m.group(1).lower() for m in code_matches(_PG_VIEW_REF_RE, sql)}
 
 
 # bare zero-arg calls that must resolve to the pg-compat UDFs instead of

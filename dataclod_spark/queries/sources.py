@@ -120,7 +120,7 @@ ORDER BY oid
 def pg1_pg_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.catalog.pg_catalog import register_pg_catalog
 
-    register_pg_catalog(spark)
+    register_pg_catalog(spark, ["pg_type"])
     return spark.sql(
         "SELECT oid, typname, typcategory FROM pg_catalog_pg_type ORDER BY oid"
     )

@@ -369,7 +369,7 @@ def g9_sql_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, sf_dir, "events")
     (
         e.filter(F.col("event_id") % 50 == 0)
@@ -449,7 +449,7 @@ def g11_sql_outer_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, sf_dir, "events")
     (
         e.filter(F.col("event_id") % 50 == 0)
@@ -528,7 +528,7 @@ def g12_sql_cte_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, sf_dir, "events")
     (
         e.filter(F.col("event_id") % 50 == 0)
@@ -702,7 +702,7 @@ def g14_sql_multi_join_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, sf_dir, "events")
     load(spark, sf_dir, "region").createOrReplaceTempView("g14_region")
     (
@@ -812,7 +812,7 @@ WHERE EXISTS (
 def g15_sql_exists_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     _semi_views(spark, sf_dir, sess, "g15")
     return sess.sql(
         """
@@ -852,7 +852,7 @@ WHERE NOT EXISTS (
 def g16_sql_not_exists_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     _semi_views(spark, sf_dir, sess, "g16")
     return sess.sql(
         """
@@ -893,7 +893,7 @@ def g17_sql_region_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.operators.spatial_join import point_wkb
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, sf_dir, "events")
     (
         e.select(
@@ -944,7 +944,7 @@ def g18_sql_chain_spatial_second(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.operators.spatial_join import envelope_wkb, point_wkb
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, sf_dir, "events")
     load(spark, sf_dir, "region").createOrReplaceTempView("g18_region")
     (
@@ -1041,7 +1041,7 @@ FROM a JOIN b ON (ax - bx) * (ax - bx) + (ay - by) * (ay - by) <= 25.0
 def g19_sql_dwithin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     _dist_views(spark, sf_dir, sess, "g19")
     return sess.sql(
         """
@@ -1073,7 +1073,7 @@ FROM a JOIN b ON (ax - bx) * (ax - bx) + (ay - by) * (ay - by) < 25.0
 def g20_sql_distance_lt_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     _dist_views(spark, sf_dir, sess, "g20")
     return sess.sql(
         """

@@ -319,7 +319,7 @@ def w8_groups_frame_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning, Spark plans one sort)."""
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("w8_orders")
     return sess.sql("""
 SELECT o_custkey, o_orderkey, o_orderdate,
@@ -369,7 +369,7 @@ def w9_groups_frame_join_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves both the dense_rank and the RANGE emulation."""
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("w9_orders")
     load(spark, sf_dir, "customer").createOrReplaceTempView("w9_customer")
     return sess.sql("""
@@ -420,7 +420,7 @@ def w10_groups_frame_join_qualified_sql(spark: SparkSession, sf_dir: str) -> Dat
     shared (segment, date) window sort as w9."""
     from dataclod_spark.session import EngineSession
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("w10_orders")
     load(spark, sf_dir, "customer").createOrReplaceTempView("w10_customer")
     return sess.sql("""

@@ -2,8 +2,9 @@
 
 Mirrors the reference's ``QueryContext`` (reference:
 ``src/core/src/context.rs:19-124``): a thin wrapper that owns the underlying
-session, registers the custom function/catalog surface at construction, and
-provides the SQL entry point with PostgreSQL-client compatibility shims:
+session, registers the custom function surface at construction (the
+catalog views are built when a statement first names them), and provides
+the SQL entry point with PostgreSQL-client compatibility shims:
 
 * ``SET`` of variables outside the engine's namespace is swallowed and
   returns an empty result (``context.rs:110-124``),
@@ -181,6 +182,10 @@ def get_spark(
         # driver testdata writes events.ts as TIMESTAMP(NANOS); read as long
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", driver_mem)
+        # generated-class cache (static; Spark's default holds 100): one
+        # pass over the bench queries compiles ~230 classes, so at 100 a
+        # repeated query recompiles all of its own
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
     )
@@ -213,15 +218,17 @@ class _BBoxMeta:
 class EngineSession:
     """Engine session: SparkSession + registered custom surface.
 
-    Registration order mirrors the reference's context construction
-    (``src/core/src/context.rs:32-67``): catalog (pg_catalog views), then
-    compat UDFs, then the spatial function library.
+    Construction registers the compat UDFs, then the spatial function
+    library (the reference's context construction,
+    ``src/core/src/context.rs:32-67``, also registers its catalog there).
+    It runs no Spark job and creates no temp view: the pg_catalog and
+    information_schema views are built by ``sql`` when a statement first
+    names them, so a batch that never introspects never builds them.
     """
 
     def __init__(
         self,
         spark: SparkSession | None = None,
-        register_catalog: bool = True,
         register_functions: bool = True,
     ) -> None:
         self.spark = spark or get_spark()
@@ -240,10 +247,6 @@ class EngineSession:
         # view -> (geom_col -> _BBoxMeta): registered bbox expressions for
         # SQL spatial-join dispatch (see register_bbox).
         self._bbox_meta: dict[str, dict[str, "_BBoxMeta"]] = {}
-        if register_catalog:
-            from dataclod_spark.catalog.pg_catalog import register_pg_catalog
-
-            register_pg_catalog(self.spark)
         if register_functions:
             from dataclod_spark.functions.pgcompat import register_pgcompat_functions
             from dataclod_spark.functions.spatial import register_spatial_functions
@@ -255,11 +258,14 @@ class EngineSession:
 
     # -- table loading -----------------------------------------------------
     def load_tables(self, sf_dir: str, tables: Iterable[str] = TABLES) -> None:
-        """Register the driver parquet tables as temp views."""
+        """Register the driver parquet tables as temp views, each with its
+        schema pinned from the footer (no inference job)."""
+        from dataclod_spark.registry import read_parquet
+
         for name in tables:
             path = f"{sf_dir}/{name}.parquet"
             try:
-                self.spark.read.parquet(path).createOrReplaceTempView(name)
+                read_parquet(self.spark, path).createOrReplaceTempView(name)
             except Exception:  # table missing at this sf — skip
                 pass
 
@@ -421,9 +427,13 @@ class EngineSession:
             try_spatial_filter_pushdown,
         )
 
-        query = rewrite_pgcompat_calls(
-            rewrite_pg_catalog_refs(rewrite_values_tables(query))
-        )
+        query, pg_views = rewrite_pg_catalog_refs(rewrite_values_tables(query))
+        query = rewrite_pgcompat_calls(query)
+        if pg_views:
+            # built on first reference, once per Spark session
+            from dataclod_spark.catalog.pg_catalog import register_pg_catalog
+
+            register_pg_catalog(self.spark, pg_views)
         # GROUPS window frames (DataFusion default surface; Spark lacks
         # them) → the proven dense_rank+RANGE emulation (w5 recipe).  Out
         # -of-scope shapes return None and keep today's parse error.
@@ -517,7 +527,8 @@ class EngineSession:
         fmt = (m.group("fmt") or m.group("fmt2") or "parquet").lower()
         if fmt not in _EXT_FORMATS:
             raise ValueError(f"COPY: unsupported format {fmt!r}")
-        df = self.sql(src[1:-1]) if src.startswith("(") else self.spark.table(src)
+        # a table source goes through sql() too, which builds a pg_* view
+        df = self.sql(src[1:-1] if src.startswith("(") else f"TABLE {src}")
         obs = Observation()
         writer = (
             df.observe(obs, F.count(F.lit(1)).alias("n"))

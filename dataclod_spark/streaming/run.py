@@ -51,15 +51,17 @@ WATERMARK_SEC = 600
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet.
 
-    Mirrors registry.load's TIMESTAMP(NANOS) handling: read ``ts`` as long
-    nanos (``legacy.parquet.nanosAsLong``), convert to micros timestamps.
+    Mirrors registry.load's TIMESTAMP(NANOS) handling: the schema pinned
+    from the footer reads ``ts`` as long nanos, converted to micros
+    timestamps.
     """
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from dataclod_spark.registry import parquet_schema
+
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path) or spark.read.parquet(path).schema
     try:
         if os.path.isdir(path):
             # a directory-shaped parquet table: os.path.getsize would read
@@ -84,15 +86,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
-    """Normalize the parquet TIMESTAMP(NANOS) ``ts`` column to a streaming-
-    safe TIMESTAMP, whichever way this Spark version surfaced it."""
+    """Normalize the parquet ``ts`` column to a streaming-safe TIMESTAMP,
+    whichever type the file gives it."""
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
+        # TIMESTAMP(NANOS), pinned as long nanos
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
-        # Spark 4.1 ignores nanosAsLong and reads TIMESTAMP(NANOS) parquet as
-        # TIMESTAMP_NTZ, which withWatermark rejects.  The session zone is
-        # pinned UTC above, so naive → instant is a pure type change.
+        # a naive (not UTC-adjusted) micros column reads as TIMESTAMP_NTZ,
+        # which withWatermark rejects.  The session zone is pinned UTC
+        # above, so naive → instant is a pure type change.
         df = df.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
     return df
 
@@ -114,22 +117,18 @@ def _stage_multibatch(
     neither).  Shared by the events and documents multibatch readers."""
     import os
 
-    src = spark.read.parquet(src_path)
+    from dataclod_spark.registry import parquet_schema, read_parquet
+
+    src = read_parquet(spark, src_path)
     if pred_sql is not None:
         src = src.where(pred_sql)
     src.repartition(n_files, key_col).write.mode("overwrite").parquet(stage_dir)
-    schema = spark.read.parquet(stage_dir).schema
-    try:
-        _record_stream_source_bytes(
-            spark,
-            sum(
-                e.stat().st_size
-                for e in os.scandir(stage_dir)
-                if e.is_file() and e.name.endswith(".parquet")
-            ),
-        )
-    except OSError:
-        pass
+    parts = sorted(
+        e.path for e in os.scandir(stage_dir) if e.is_file() and e.name.endswith(".parquet")
+    )
+    # the part files of one write share its schema: pin it from one footer
+    schema = (parts and parquet_schema(spark, parts[0])) or spark.read.parquet(stage_dir).schema
+    _record_stream_source_bytes(spark, sum(os.path.getsize(p) for p in parts))
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -142,7 +141,6 @@ def read_events_stream_multibatch(
 ) -> DataFrame:
     """Events as a MULTI-micro-batch stream (see :func:`_stage_multibatch`;
     each user's events land in different batches out of time order)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = _stage_multibatch(
         spark, f"{sf_dir}/events.parquet", stage_dir, "event_id", n_files

@@ -10,13 +10,27 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _dec
 import math
-from typing import Any
+import uuid
+from typing import Any, Callable
 
 import duckdb
 
 from dataclod_spark.session import TABLES
 
 FLOAT_DIGITS = 6
+
+
+def count_jobs(spark, fn: Callable[[], Any]) -> int:
+    """Number of Spark jobs ``fn()`` launches on this thread."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def duckdb_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":

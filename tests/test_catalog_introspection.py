@@ -13,7 +13,6 @@ import json
 import os
 import sys
 import tempfile
-import uuid
 
 import pytest
 
@@ -97,19 +96,6 @@ def _dumps(snap: dict) -> str:
     return "{\n " + ",\n ".join(items) + "\n}\n"
 
 
-def _jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` launches on this thread."""
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -134,11 +120,12 @@ def test_catalog_views_match_golden(iso):
 
 def test_information_schema_build_runs_no_spark_job(iso):
     from dataclod_spark.catalog.information_schema import register_information_schema
+    from dataclod_spark.testing import count_jobs
 
-    assert _jobs(iso.spark, lambda: register_information_schema(iso.spark)) == 0
+    assert count_jobs(iso.spark, lambda: register_information_schema(iso.spark)) == 0
     # and the statement itself: LocalTableScan collects on the driver
     stmt = "SELECT * FROM information_schema.tables"
-    assert _jobs(iso.spark, lambda: iso.sql(stmt).collect()) == 0
+    assert count_jobs(iso.spark, lambda: iso.sql(stmt).collect()) == 0
 
 
 def test_catalog_views_are_local_table_scans(iso):
@@ -172,6 +159,52 @@ def test_statement_builds_only_the_views_it_names(iso):
     assert not spark.catalog.tableExists("information_schema_columns")
 
 
+def _temp_views(spark) -> list[str]:
+    return [r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary]
+
+
+def test_engine_session_construction_runs_no_job_and_builds_no_view(spark):
+    from dataclod_spark.session import EngineSession
+    from dataclod_spark.testing import count_jobs
+
+    fresh = spark.newSession()
+    assert _temp_views(fresh) == []
+    assert count_jobs(fresh, lambda: EngineSession(fresh)) == 0
+    assert _temp_views(fresh) == []
+
+
+def test_pg_catalog_views_are_built_on_first_reference(spark, tmp_path):
+    from dataclod_spark.catalog.pg_catalog import PG_CATALOG_TABLE_NAMES
+    from dataclod_spark.session import EngineSession
+
+    engine = EngineSession(spark.newSession(), register_functions=False)
+    fresh = engine.spark
+    # a name inside a string literal or a comment builds nothing
+    engine.sql("SELECT 'pg_catalog.pg_type' AS a, 'pg_namespace' AS b -- pg_class").collect()
+    assert _temp_views(fresh) == []
+    # a bare name builds that view, under both spellings, and no other
+    assert engine.sql("SELECT count(*) AS n FROM pg_namespace").collect()[0].n == 3
+    assert sorted(_temp_views(fresh)) == ["pg_catalog_pg_namespace", "pg_namespace"]
+    # qualified and implementation spellings
+    engine.sql("SELECT * FROM pg_catalog.pg_type JOIN pg_catalog_pg_database ON true").collect()
+    assert sorted(_temp_views(fresh)) == sorted(
+        p + n for n in ("pg_type", "pg_namespace", "pg_database") for p in ("", "pg_catalog_")
+    )
+    # a COPY of a table goes through the same path
+    copied = engine.sql(f"COPY pg_namespace TO '{tmp_path}/ns' (FORMAT parquet)")
+    assert copied.collect()[0]["count"] == 3
+    engine.sql(f"COPY pg_class TO '{tmp_path}/cls' (FORMAT parquet)")
+    assert fresh.catalog.tableExists("pg_class")
+    # information_schema lists all five, so it builds the rest first
+    listed = {
+        r.table_name
+        for r in engine.sql(
+            "SELECT table_name FROM information_schema.tables WHERE table_schema = 'pg_catalog'"
+        ).collect()
+    }
+    assert listed == set(PG_CATALOG_TABLE_NAMES)
+
+
 def test_replaced_view_shows_new_columns(iso):
     spark = iso.spark
     name = "replaced_view"
@@ -195,13 +228,15 @@ def test_replaced_view_shows_new_columns(iso):
 
 
 def test_create_external_table_if_not_exists_runs_no_job(iso, tmp_path):
+    from dataclod_spark.testing import count_jobs
+
     spark = iso.spark
     path = str(tmp_path / "ext.parquet")
     spark.range(2).write.parquet(path)
     iso.sql(f"CREATE EXTERNAL TABLE zz_ext STORED AS PARQUET LOCATION '{path}'")
     try:
         stmt = f"CREATE EXTERNAL TABLE IF NOT EXISTS zz_ext STORED AS PARQUET LOCATION '{path}'"
-        assert _jobs(spark, lambda: iso.sql(stmt)) == 0
+        assert count_jobs(spark, lambda: iso.sql(stmt)) == 0
     finally:
         spark.catalog.dropTempView("zz_ext")
 

@@ -178,7 +178,7 @@ def test_groups_sql_executes_with_peer_semantics(spark):
     from dataclod_spark.session import EngineSession
 
     _groups_fixture(spark)
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     got = {
         (r.p, r.k, r.v): r.s
         for r in sess.sql(
@@ -203,7 +203,7 @@ def test_groups_sql_unbounded_and_following(spark):
     from dataclod_spark.session import EngineSession
 
     _groups_fixture(spark)
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     got = {
         (r.p, r.k, r.v): (r.s1, r.s2)
         for r in sess.sql(
@@ -230,7 +230,7 @@ def test_out_of_scope_still_parse_errors(spark):
     from dataclod_spark.session import EngineSession
 
     _groups_fixture(spark)
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     with pytest.raises(Exception, match="(?i)syntax|parse|GROUPS"):
         sess.sql(
             "SELECT groups_t.*, sum(v) OVER (ORDER BY k GROUPS 1 PRECEDING) "
@@ -253,7 +253,7 @@ def test_groups_frames_match_python_reference(spark):
     ]
     df = spark.createDataFrame(rows, "id long, p string, k int, v int")
     df.createOrReplaceTempView("groups_fuzz")
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
 
     data = rows
 
@@ -427,7 +427,7 @@ def test_join_groups_bare_qualified_item_output_schema(spark):
     spark.createDataFrame(
         [Row(p="a", seg="S1"), Row(p="b", seg="S2")]
     ).createOrReplaceTempView("groups_dim")
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     df = sess.sql(
         "SELECT groups_dim.seg, k, sum(v) OVER (PARTITION BY groups_dim.seg "
         "ORDER BY k GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) AS s "
@@ -463,7 +463,7 @@ def test_join_groups_sql_executes_with_peer_semantics(spark):
         [Row(p="a", seg="S1"), Row(p="b", seg="S2")]
     )
     dim.createOrReplaceTempView("groups_dim")
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     got = {
         (r.seg, r.k, r.v): r.s
         for r in sess.sql(
@@ -505,7 +505,7 @@ def test_join_groups_frames_match_python_reference(spark):
     dim = [(g, f"seg{g % 2}") for g in range(4)]
     spark.createDataFrame(dim, "grp_id int, seg string")\
         .createOrReplaceTempView("jg_dim")
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
 
     joined = [(i, dict(dim)[g], k, v) for (i, g, k, v) in rows]
 
@@ -564,7 +564,7 @@ def test_distinct_and_derived_groups_execute(spark):
     from dataclod_spark.session import EngineSession
 
     _groups_fixture(spark)
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     got = sorted(
         tuple(r)
         for r in sess.sql(

@@ -565,6 +565,57 @@ def test_concurrent_clients(server):
     assert results == {"a": True, "b": True}
 
 
+def test_first_pg_catalog_statements_at_once_build_the_views_once(spark, monkeypatch):
+    """Two connections of a fresh shared session send their first
+    pg_catalog statement at the same moment: both get the serial reply,
+    and the view is built once."""
+    import threading
+
+    from dataclod_spark.catalog import pg_catalog
+    from dataclod_spark.session import EngineSession
+
+    builds = []
+    real = pg_catalog.local_frame
+
+    def counting(*args):
+        builds.append(args[2])
+        return real(*args)
+
+    monkeypatch.setattr(pg_catalog, "local_frame", counting)
+    sql = "SELECT oid, typname, typcategory FROM pg_catalog.pg_type ORDER BY oid"
+    srv = PgWireServer(EngineSession(spark.newSession(), register_functions=False), port=0)
+    srv.start()
+    try:
+        barrier = threading.Barrier(2)
+        replies = {}
+
+        def worker(i):
+            c = MiniPgClient(srv.port)
+            try:
+                c.login()
+                barrier.wait(30)
+                replies[i] = c.query(sql)
+            finally:
+                c.close()
+
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        c = MiniPgClient(srv.port)
+        try:
+            c.login()
+            serial = c.query(sql)
+        finally:
+            c.close()
+    finally:
+        srv.stop()
+    assert len(serial[1]) == 28
+    assert replies == {0: serial, 1: serial}
+    assert builds == [pg_catalog.PG_TYPE_SCHEMA]
+
+
 def test_binary_format_parameters(client):
     """Bind parameters in binary format: int8, float8, numeric, date, and
     a 1-D int4 array — the decode side of the types.rs parameter matrix."""

@@ -126,9 +126,10 @@ def test_pg_catalog_rewrite_leaves_literals_alone():
     )
 
     q = "SELECT 'pg_catalog.pg_class' AS n FROM pg_catalog.pg_class"
-    out = rewrite_pg_catalog_refs(q)
+    out, views = rewrite_pg_catalog_refs(q)
     assert "'pg_catalog.pg_class'" in out          # literal is data
     assert "FROM pg_catalog_pg_class" in out        # reference is rewritten
+    assert views == {"pg_class"}                    # the one view to build
     q2 = "SELECT c FROM t WHERE c = 'information_schema.tables' -- information_schema.columns"
     out2, views2 = rewrite_information_schema_refs(q2)
     assert views2 == set()                          # nothing to build

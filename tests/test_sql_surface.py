@@ -114,7 +114,7 @@ def test_explain_spatial_join_shows_dispatched_plan(spark):
     from conftest import SF_SMOKE
     from dataclod_spark.registry import load
 
-    sess = EngineSession(spark, register_catalog=False)
+    sess = EngineSession(spark)
     e = load(spark, SF_SMOKE, "events")
     e.select(
         F.col("event_id").alias("pid"),
