@@ -100,8 +100,7 @@ def st1_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
-    # adaptive_width=False: the pandas state function is the cost; see run_to_memory
-    out = run_to_memory(sessionize_stream(ev), spark, adaptive_width=False)
+    out = run_to_memory(sessionize_stream(ev))
     return out.orderBy("user_id", "session_start")
 
 
@@ -132,7 +131,7 @@ def st2_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_to_memory(tumbling_stream(ev), spark)
+    out = run_to_memory(tumbling_stream(ev))
     return out.orderBy("window_start", "event_type")
 
 
@@ -170,7 +169,7 @@ def st3_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_to_memory(sliding_stream(ev), spark)
+    out = run_to_memory(sliding_stream(ev))
     return out.orderBy("window_start", "event_type")
 
 
@@ -204,7 +203,7 @@ def st4_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_to_memory(interval_join_stream(ev), spark)
+    out = run_to_memory(interval_join_stream(ev))
     return out.orderBy("purchase_id", "click_id")
 
 
@@ -236,7 +235,7 @@ def st5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the dedup stream runs append-mode into the memory sink; the rollup is
     # a batch aggregate over the deduplicated sink contents
-    out = run_to_memory(deduped, spark)
+    out = run_to_memory(deduped)
     return (
         out.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_users"))
@@ -273,7 +272,7 @@ def st6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir)
     dim = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    out = run_to_memory(static_enrich_stream(ev, dim), spark)
+    out = run_to_memory(static_enrich_stream(ev, dim))
     return (
         out.groupBy("c_mktsegment")
         .agg(
@@ -329,8 +328,7 @@ def st7_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
-    # adaptive_width=False: the pandas state function is the cost; see run_to_memory
-    out = run_to_memory(asof_join_stream(ev), spark, adaptive_width=False)
+    out = run_to_memory(asof_join_stream(ev))
     return out.select(
         "user_id",
         "purchase_id",
@@ -373,7 +371,7 @@ def st8_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_to_memory(heavy_hitters_stream(ev, k=3), spark)
+    out = run_to_memory(heavy_hitters_stream(ev, k=3))
     return _latest_topk_snapshot(out)
 
 
@@ -460,7 +458,7 @@ def st10_stream_heavy_hitters_multibatch(
     stage = tempfile.mkdtemp(prefix="dataclod_hh_stage_")
     try:
         ev = read_events_stream_multibatch(spark, sf_dir, stage, n_files=3)
-        out = run_to_memory(heavy_hitters_stream(ev, k=3), spark)
+        out = run_to_memory(heavy_hitters_stream(ev, k=3))
     finally:
         # memory-sink rows live on the driver; the staging dir can go
         shutil.rmtree(stage, ignore_errors=True)
@@ -552,7 +550,7 @@ def st12_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     out = tempfile.mkdtemp(prefix="dataclod_incdedup_out_")
     try:
         ds = read_documents_stream_multibatch(spark, sf_dir, stage, n_files=3)
-        res = streaming_incremental_dedup(spark, ds, old, out, jaccard_threshold=0.2)
+        res = streaming_incremental_dedup(ds, old, out, jaccard_threshold=0.2)
         # localCheckpoint: survives the sink directory's removal (st9 pattern)
         return incremental_rollup(res).localCheckpoint()
     finally:
@@ -615,7 +613,7 @@ def st13_stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, stage, n_files=3,
             pred_sql="doc_id % 3 = 0 OR doc_id % 7 = 0",
         ).select("doc_id", "source", F.col("text").cast("binary").alias("content"))
-        res = streaming_media_dedup(spark, ds, snapshot, out)
+        res = streaming_media_dedup(ds, snapshot, out)
         dup = F.col("is_duplicate").cast("int")
         return (
             res.groupBy("source")
@@ -693,7 +691,7 @@ def st14_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds = read_documents_stream_multibatch(
             spark, sf_dir, stage, n_files=3, pred_sql="doc_id % 3 = 0"
         ).select("doc_id", "text")
-        res = streaming_dsir_score(spark, ds, snapshot, out)
+        res = streaming_dsir_score(ds, snapshot, out)
         return res.select("doc_id", "n_tok", "log_weight").orderBy(
             "doc_id"
         ).localCheckpoint()
@@ -890,7 +888,7 @@ def st17_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds = read_documents_stream_multibatch(
             spark, sf_dir, stage, n_files=3, pred_sql="doc_id % 97 <> 0"
         ).select("doc_id", "text")
-        res = streaming_contamination(spark, ds, bench, out)
+        res = streaming_contamination(ds, bench, out)
         return res.select(
             "doc_id", "n_grams", "n_hits", "contamination"
         ).orderBy("doc_id").localCheckpoint()
@@ -960,7 +958,7 @@ def st18_stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds = read_documents_stream_multibatch(
             spark, sf_dir, stage, n_files=3, pred_sql="doc_id % 3 <> 0"
         ).select("doc_id", "source", "text")
-        res = streaming_calibration(spark, ds, snap, out)
+        res = streaming_calibration(ds, snap, out)
         return res.select(
             "doc_id", "source", "quality", "cal_bucket", "calibrated"
         ).orderBy("doc_id").localCheckpoint()
@@ -1046,7 +1044,7 @@ def st19_stream_span_decontamination(spark: SparkSession, sf_dir: str) -> DataFr
         ds = read_documents_stream_multibatch(
             spark, sf_dir, stage, n_files=3, pred_sql="doc_id % 8 <> 0"
         ).select("doc_id", "text")
-        res = streaming_span_decontamination(spark, ds, bench, out)
+        res = streaming_span_decontamination(ds, bench, out)
         return res.select(
             "doc_id", "n_bench_docs", "max_span_tokens"
         ).orderBy("doc_id").localCheckpoint()

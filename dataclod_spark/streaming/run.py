@@ -2,7 +2,7 @@
 
 The reference has no streaming subsystem; this module is the engine's
 streaming surface over the driver's ``events`` shape, exercised for real
-(``readStream`` → stateful transform → ``writeStream``), not just as batch
+(``readStream`` → stateful transform → sink), not just as batch
 twins:
 
 * :func:`read_events_stream` — file-source stream over the events parquet
@@ -13,7 +13,15 @@ twins:
 * :func:`tumbling_stream` — watermarked tumbling window in append mode;
 * :func:`run_to_memory` — drive any streaming frame with
   ``trigger(availableNow=True)`` into a memory sink and hand back the
-  result as a batch DataFrame.
+  result as a batch DataFrame;
+* :func:`_drain` — the one start/await/stop routine behind
+  :func:`run_to_memory` and every ``foreachBatch`` helper.
+
+Sessions: the readers build each stream in a new session of the caller's
+context whose shuffle width is sized to the source
+(:func:`_stream_session`) — a stream binds its state-partition count from
+the session it starts in.  No function here writes the caller's conf or
+leaves a temp view behind, so one session can serve concurrent callers.
 
 Determinism contract (what the oracles encode): with ``availableNow`` over
 one parquet file the data arrives as a single micro-batch, then Spark runs
@@ -40,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_memory_sink_counter = itertools.count()
+_stream_names = itertools.count()
 
 # gap/delay used by the gate queries (odd delay avoids watermark boundary
 # ties with second-granularity event times)
@@ -49,7 +57,8 @@ WATERMARK_SEC = 600
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet.
+    """File-source stream over the events parquet, in a session of its own
+    (:func:`_stream_session`).
 
     Mirrors registry.load's TIMESTAMP(NANOS) handling: the schema pinned
     from the footer reads ``ts`` as long nanos, converted to micros
@@ -59,26 +68,26 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dataclod_spark.registry import parquet_schema
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/events.parquet"
     schema = parquet_schema(spark, path) or spark.read.parquet(path).schema
     try:
-        if os.path.isdir(path):
-            # a directory-shaped parquet table: os.path.getsize would read
-            # the directory inode (~4 KB) and clamp the adaptive width to 2
-            size = sum(
+        # a directory-shaped parquet table: os.path.getsize would read the
+        # directory inode (~4 KB) and clamp the width to the floor
+        size = (
+            sum(
                 e.stat().st_size
                 for e in os.scandir(path)
                 if e.is_file() and e.name.endswith(".parquet")
             )
-        else:
-            size = os.path.getsize(path)
-        _record_stream_source_bytes(spark, size)
+            if os.path.isdir(path)
+            else os.path.getsize(path)
+        )
     except OSError:
-        pass
+        size = None
     # the file source wants a directory; glob-filter to the events file
     df = (
-        spark.readStream.schema(schema)
+        _stream_session(spark, size)
+        .readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -87,17 +96,65 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
     """Normalize the parquet ``ts`` column to a streaming-safe TIMESTAMP,
-    whichever type the file gives it."""
+    whichever type the file gives it, without reading the session zone."""
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         # TIMESTAMP(NANOS), pinned as long nanos
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
         # a naive (not UTC-adjusted) micros column reads as TIMESTAMP_NTZ,
-        # which withWatermark rejects.  The session zone is pinned UTC
-        # above, so naive → instant is a pure type change.
-        df = df.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
+        # which withWatermark rejects.  Its wall clock is UTC, and
+        # timestamp_diff measures TIMESTAMP_NTZ in UTC: the epoch micros
+        # come out the same in any session zone.  A round trip through the
+        # session zone's wall clock would misplace the hour a DST change
+        # repeats.
+        epoch = F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+        df = df.withColumn(
+            "ts", F.timestamp_micros(F.timestamp_diff("MICROSECOND", epoch, F.col("ts")))
+        )
     return df
+
+
+_STREAM_TARGET_BYTES = 32 << 20  # ~32 MB of source per state partition
+
+
+def _stream_width(caller_width: int, slots: int, n_bytes: int | None) -> int:
+    """Shuffle/state-partition width for a bounded stream of ``n_bytes``.
+
+    Every stateful operator (stream-stream join, window agg,
+    dropDuplicates, applyInPandasWithState) creates one state store PER
+    SHUFFLE PARTITION, and each store pays per-micro-batch snapshot/
+    delta/commit I/O regardless of rows.  Width = ceil(bytes / 32 MB),
+    floored at the task-slot count and capped at the caller's width: below
+    the slot count cores idle in the Python state functions, above it each
+    batch adds waves of state-store commits (4 cores, sf0.1, drain + count
+    at widths 2 / 4 / 32: st1 6.65 / 4.50 / 15.48 s, st7 3.58 / 2.09 /
+    5.40 s).  Production-sized sources, and sources of unknown size, keep
+    the caller's width."""
+    import math
+
+    if n_bytes is None:
+        return caller_width
+    return min(caller_width, max(slots, math.ceil(n_bytes / _STREAM_TARGET_BYTES)))
+
+
+def _stream_session(spark: SparkSession, n_bytes: int | None) -> SparkSession:
+    """A new session of ``spark``'s context for one stream, its
+    ``spark.sql.shuffle.partitions`` set by :func:`_stream_width`.
+
+    A stream binds its state-partition count from the session it starts
+    in, so the width goes on a session of its own and the caller's conf is
+    never written.  The new session starts from the builder conf, not the
+    caller's runtime conf, hence the caller's width is copied explicitly;
+    nothing in this module reads the session time zone."""
+    width = _stream_width(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+        n_bytes,
+    )
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", str(width))
+    return session
 
 
 def _stage_multibatch(
@@ -114,7 +171,8 @@ def _stage_multibatch(
     scatters related rows across batches in non-time order — the arrival
     pattern that exercises cross-batch state carry-over and out-of-order
     guards for real (single-file sources collapse to one batch and prove
-    neither).  Shared by the events and documents multibatch readers."""
+    neither).  Shared by the events and documents multibatch readers; the
+    stream runs in a session of its own (:func:`_stream_session`)."""
     import os
 
     from dataclod_spark.registry import parquet_schema, read_parquet
@@ -128,9 +186,9 @@ def _stage_multibatch(
     )
     # the part files of one write share its schema: pin it from one footer
     schema = (parts and parquet_schema(spark, parts[0])) or spark.read.parquet(stage_dir).schema
-    _record_stream_source_bytes(spark, sum(os.path.getsize(p) for p in parts))
     return (
-        spark.readStream.schema(schema)
+        _stream_session(spark, sum(os.path.getsize(p) for p in parts))
+        .readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage_dir)
     )
@@ -141,7 +199,6 @@ def read_events_stream_multibatch(
 ) -> DataFrame:
     """Events as a MULTI-micro-batch stream (see :func:`_stage_multibatch`;
     each user's events land in different batches out of time order)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = _stage_multibatch(
         spark, f"{sf_dir}/events.parquet", stage_dir, "event_id", n_files
     )
@@ -430,110 +487,82 @@ def asof_join_stream(
     )
 
 
-_SRC_BYTES_CONF = "spark.dataclod.streamSourceBytes"
-_STREAM_TARGET_BYTES = 32 << 20  # ~32 MB of source per state partition
+def _drain(
+    stream: DataFrame,
+    timeout_sec: int,
+    out_dir: str | None = None,
+    transform=None,
+    each_batch=None,
+) -> DataFrame | None:
+    """Run a bounded stream to completion with ``trigger(availableNow=True)``
+    — the module's one start/await/stop.
 
+    A drain still running after ``timeout_sec`` is stopped and raises
+    ``TimeoutError``: a truncated drain (missing later micro-batches) would
+    flow on as silently wrong rows, and the multibatch gates depend on
+    every batch having run.  The sink is one of:
 
-def _record_stream_source_bytes(spark: SparkSession, n_bytes: int) -> None:
-    """Stash the stream source's size for :func:`run_to_memory`'s
-    scale-adaptive width (a session conf, set fresh by every reader)."""
-    spark.conf.set(_SRC_BYTES_CONF, str(int(n_bytes)))
+    * memory (no ``out_dir``): returns the rows as a batch frame of the
+      stream's session.  The sink's temp view is dropped on every exit —
+      the returned frame's analyzed plan already holds the rows, and a
+      timed-out drain leaves no partial view behind;
+    * ``transform``: ``foreachBatch`` writes ``transform(batch_df)`` to
+      ``<out_dir>/batches/batch_id=<n>``, overwriting, so a crash-replayed
+      batch rewrites itself instead of appending duplicates.  Returns the
+      union with ``batch_id`` dropped (a partition-discovery column of the
+      sink layout, not a label: the same rows under another batching carry
+      other ids).  Zero micro-batches (an empty source) write no
+      directory; then the result is ``transform`` of an empty typed frame;
+    * ``each_batch``: a plain ``foreachBatch`` function; returns None.
 
-
-def _adaptive_stream_width(spark: SparkSession) -> int | None:
-    """Scale-adaptive shuffle/state-partition width for a bounded stream.
-
-    Every stateful operator (stream-stream join, window agg,
-    dropDuplicates, applyInPandasWithState) creates one state store PER
-    SHUFFLE PARTITION, and each store pays per-micro-batch snapshot/
-    delta/commit I/O regardless of rows — at the session's 32-partition
-    default a 10 MB interval join spent 10.7 s where 4 partitions take
-    2.8 s (pure fixed cost, measured).  Width = ceil(source bytes /
-    32 MB) clamped to [2, session default]: production-sized sources
-    keep the session default (the conf stays the scaling knob), and the
-    driver's low-core bench keeps its own default — this only SHRINKS
-    the width when the bounded source is demonstrably small.  Returns
-    None (leave the conf alone) when no reader recorded a source size.
+    Both ``foreachBatch`` forms checkpoint to ``<out_dir>/_ckpt``.
     """
-    import math
+    import os
 
-    try:
-        raw = spark.conf.get(_SRC_BYTES_CONF, None)
-    except Exception:
-        raw = None
-    if not raw:
-        return None
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    width = max(2, math.ceil(int(raw) / _STREAM_TARGET_BYTES))
-    return min(cur, width)
+    spark = stream.sparkSession
+    name = f"__stream_result_{next(_stream_names)}"
+    writer = stream.writeStream.queryName(name).trigger(availableNow=True)
+    if out_dir is None:
+        writer = writer.format("memory").outputMode("append")
+    else:
+        res_dir = os.path.join(out_dir, "batches")
+        if transform is not None:
 
+            def each_batch(batch_df: DataFrame, batch_id: int) -> None:
+                transform(batch_df).write.mode("overwrite").parquet(
+                    os.path.join(res_dir, f"batch_id={batch_id}")
+                )
 
-def run_to_memory(
-    df: DataFrame,
-    spark: SparkSession,
-    timeout_sec: int = 300,
-    adaptive_width: bool = True,
-) -> DataFrame:
-    """Execute a streaming frame to completion (availableNow) into a memory
-    sink; returns the sink contents as a batch DataFrame.
-
-    The stream starts under the scale-adaptive shuffle width (state
-    partition count binds at first start — see
-    :func:`_adaptive_stream_width`); the session conf is restored after
-    the drain, so batch queries in the same session are untouched.
-    ``adaptive_width=False`` keeps the session width: streams whose state
-    function does REAL per-row Python work (applyInPandasWithState
-    sessionize/asof) lose more to the narrower Python-worker parallelism
-    than they save in state-store fixed cost (measured st1 4.1 -> 6.2 s,
-    st7 1.8 -> 3.1 s under width 2 vs 32).
-
-    SINGLE-THREADED-SESSION assumption: the adaptive width is applied by
-    mutating the session-global ``spark.sql.shuffle.partitions`` for the
-    duration of the drain (state partition count binds at stream start;
-    there is no per-stream conf for it), so a concurrent batch query
-    planned on the same session inside that window would silently inherit
-    the narrowed width.  The registry gates run one query at a time; a
-    concurrent caller must pass ``adaptive_width=False``."""
-    name = f"__stream_result_{next(_memory_sink_counter)}"
-    width = _adaptive_stream_width(spark) if adaptive_width else None
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if width is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        writer = writer.foreachBatch(each_batch).option(
+            "checkpointLocation", os.path.join(out_dir, "_ckpt")
         )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-        finally:
-            if q.isActive:
-                q.stop()
+    q = writer.start()
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"streaming query {name} did not finish within {timeout_sec}s"
+            )
+        if out_dir is None:
+            return spark.table(name)
     finally:
-        if width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        # the recorded source size is consumed by THIS drain — clear it so
-        # a later run_to_memory on a stream not built through the engine's
-        # readers cannot inherit a stale adaptive width
-        try:
-            spark.conf.unset(_SRC_BYTES_CONF)
-        except Exception:
-            pass
-    if not finished:
-        # a truncated memory sink (missing later micro-batches) would flow
-        # into downstream snapshot logic as silently-wrong data — the
-        # multibatch gates (st10/st11) depend on EVERY batch having run.
-        # Drop the partial sink so a long-lived session doesn't accumulate
-        # leaked temp views full of wrong rows.
-        df.sparkSession.catalog.dropTempView(name)
-        raise TimeoutError(
-            f"streaming query {name} did not finish within {timeout_sec}s; "
-            "partial sink contents discarded"
-        )
-    return df.sparkSession.table(name)
+        if q.isActive:
+            q.stop()
+        if out_dir is None:
+            spark.catalog.dropTempView(name)
+    if transform is None:
+        return None
+    if not os.path.exists(res_dir):
+        return transform(spark.createDataFrame([], stream.schema))
+    return spark.read.parquet(res_dir).drop("batch_id")
+
+
+def run_to_memory(df: DataFrame, timeout_sec: int = 300) -> DataFrame:
+    """Execute a streaming frame to completion (availableNow) into a memory
+    sink; returns the sink contents as a batch DataFrame of the stream's
+    session (see :func:`_drain`).  The stream runs at the width of the
+    session it was read in — the readers give each stream a session of its
+    own — so nothing here touches any session's conf."""
+    return _drain(df, timeout_sec)
 
 
 def static_enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -746,21 +775,7 @@ def streaming_cdc_apply(
         if old and old != nxt and os.path.exists(old):
             shutil.rmtree(old, ignore_errors=True)
 
-    q = (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(snapshot_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # same drain contract as every other foreachBatch helper: a hung
-    # micro-batch surfaces as TimeoutError instead of wedging the caller
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError(f"streaming CDC apply did not finish within {timeout_sec}s")
+    _drain(events, timeout_sec, snapshot_dir, each_batch=apply_batch)
     cur = os.path.join(snapshot_dir, "current")
     if not os.path.exists(cur):  # zero micro-batches ran
         return spark.createDataFrame([], snap_schema).filter(~F.col("__deleted"))
@@ -779,38 +794,6 @@ def read_documents_stream_multibatch(
     return _stage_multibatch(
         spark, f"{sf_dir}/documents.parquet", stage_dir, "doc_id", n_files, pred_sql
     )
-
-
-def _drain_sink(spark, q, res_dir, timeout_sec, what, empty_df_fn):
-    """Await an ``availableNow`` foreachBatch drain, then read the sink.
-
-    The one shared tail for every foreachBatch helper (the block used to
-    be copy-pasted per helper, and two of the three contract pieces had
-    drifted out of some copies):
-
-    * try/await/finally-stop with a ``TimeoutError`` — a hung micro-batch
-      must surface after ``timeout_sec``, not wedge the caller;
-    * zero-micro-batch guard — an empty source runs no batches, so the
-      sink directory never exists; return ``empty_df_fn()`` (the per-batch
-      transform applied to an empty typed frame) instead of raising
-      ``PATH_NOT_FOUND``;
-    * drop ``batch_id`` — it is a partition-discovery column of the sink
-      layout, not a label; leaving it in made the documented
-      "drained output is batching-invariant" contract false (the same
-      corpus under a different batching carries different batch_ids).
-    """
-    import os
-
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError(f"{what} did not finish within {timeout_sec}s")
-    if not os.path.exists(res_dir):  # zero micro-batches ran
-        return empty_df_fn()
-    return spark.read.parquet(res_dir).drop("batch_id")
 
 
 def _spread_batch(batch_df: DataFrame) -> DataFrame:
@@ -837,7 +820,6 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
 
 
 def streaming_incremental_dedup(
-    spark: SparkSession,
     docs_stream: DataFrame,
     snapshot: DataFrame,
     out_dir: str,
@@ -856,43 +838,26 @@ def streaming_incremental_dedup(
     oracle checks across 3 hash-scattered micro-batches.
 
     Idempotent per micro-batch: each batch OVERWRITES its own
-    ``batch_id=<n>`` partition directory, so a crash-replayed batch
-    rewrites itself instead of appending duplicates (same recovery
-    contract as streaming_cdc_apply's version swap).  At scale the sink
-    becomes a real table-format MERGE/append; the index lives as parquet
-    next to the corpus and is refreshed when the snapshot compacts the
-    accepted deltas in.
+    ``batch_id=<n>`` partition directory (:func:`_drain`), so a
+    crash-replayed batch rewrites itself instead of appending duplicates
+    (same recovery contract as streaming_cdc_apply's version swap).  At
+    scale the sink becomes a real table-format MERGE/append; the index
+    lives as parquet next to the corpus and is refreshed when the snapshot
+    compacts the accepted deltas in.
     """
-    import os
-
     from dataclod_spark.operators.dedup import build_dedup_index, incremental_dedup
 
     index = build_dedup_index(snapshot)
-    res_dir = os.path.join(out_dir, "labeled")
 
-    def screen(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_dedup(
+    def screen(batch_df: DataFrame) -> DataFrame:
+        return incremental_dedup(
             _spread_batch(batch_df), index=index, jaccard_threshold=jaccard_threshold
-        ).write.mode("overwrite").parquet(
-            os.path.join(res_dir, f"batch_id={batch_id}")
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_sink(
-        spark, q, res_dir, timeout_sec, "streaming incremental dedup",
-        lambda: spark.createDataFrame([], docs_stream.schema).withColumn(
-            "drop_reason", F.lit(None).cast("string")
-        ),
-    )
+    return _drain(docs_stream, timeout_sec, out_dir, transform=screen)
 
 
 def streaming_media_dedup(
-    spark: SparkSession,
     media_stream: DataFrame,
     snapshot: DataFrame,
     out_dir: str,
@@ -909,8 +874,6 @@ def streaming_media_dedup(
     Labels depend only on the batch's rows + the static digest set, so
     the drained output is batching-invariant and equals the batch
     formulation on the union of batches."""
-    import os
-
     from pyspark.sql import functions as F
 
     digests = (
@@ -919,7 +882,6 @@ def streaming_media_dedup(
         .withColumn("__hit", F.lit(1))
         .localCheckpoint(eager=True)
     )
-    res_dir = os.path.join(out_dir, "labeled")
 
     def _label(batch_df: DataFrame) -> DataFrame:
         return (
@@ -929,25 +891,10 @@ def streaming_media_dedup(
             .drop("__dg", "__hit")
         )
 
-    def screen(batch_df: DataFrame, batch_id: int) -> None:
-        _label(batch_df).write.mode("overwrite").parquet(
-            os.path.join(res_dir, f"batch_id={batch_id}")
-        )
-
-    q = (
-        media_stream.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_sink(
-        spark, q, res_dir, timeout_sec, "streaming media dedup",
-        lambda: _label(spark.createDataFrame([], media_stream.schema)),
-    )
+    return _drain(media_stream, timeout_sec, out_dir, transform=_label)
 
 
 def streaming_dsir_score(
-    spark: SparkSession,
     docs_stream: DataFrame,
     snapshot: DataFrame,
     out_dir: str,
@@ -973,35 +920,16 @@ def streaming_dsir_score(
     ``lang = 'en'`` default as the batch-side
     :func:`~dataclod_spark.operators.sampling.dsir_weights` API —
     callers whose snapshot has no ``lang`` column must supply one)."""
-    import os
-
     from dataclod_spark.operators.sampling import dsir_bucket_weights, dsir_score
 
     wtab = dsir_bucket_weights(
         snapshot, text_col=text_col, target=target, n_buckets=n_buckets
     ).localCheckpoint(eager=True)
-    res_dir = os.path.join(out_dir, "scored")
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            dsir_score(batch_df, wtab, text_col=text_col, n_buckets=n_buckets)
-            .write.mode("overwrite")
-            .parquet(os.path.join(res_dir, f"batch_id={batch_id}"))
-        )
+    def score(batch_df: DataFrame) -> DataFrame:
+        return dsir_score(batch_df, wtab, text_col=text_col, n_buckets=n_buckets)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_sink(
-        spark, q, res_dir, timeout_sec, "streaming DSIR scoring",
-        lambda: dsir_score(
-            spark.createDataFrame([], docs_stream.schema),
-            wtab, text_col=text_col, n_buckets=n_buckets,
-        ),
-    )
+    return _drain(docs_stream, timeout_sec, out_dir, transform=score)
 
 
 def streaming_weighted_topk(
@@ -1061,19 +989,7 @@ def streaming_weighted_topk(
         )
         last["id"] = max(last["id"], batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(upd)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError(f"streaming weighted top-k did not finish within {timeout_sec}s")
+    _drain(docs_stream, timeout_sec, out_dir, each_batch=upd)
     if last["id"] < 0:
         raise ValueError("streaming weighted top-k saw no micro-batches")
     return spark.read.parquet(os.path.join(state_root, f"b{last['id']}"))
@@ -1128,21 +1044,7 @@ def streaming_source_drift(
         )
         last["id"] = max(last["id"], batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(upd)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"streaming source drift did not finish within {timeout_sec}s"
-        )
+    _drain(docs_stream, timeout_sec, out_dir, each_batch=upd)
     if last["id"] < 0:
         raise ValueError("streaming source drift saw no micro-batches")
     state = spark.read.parquet(os.path.join(state_root, f"b{last['id']}"))
@@ -1150,7 +1052,6 @@ def streaming_source_drift(
 
 
 def streaming_contamination(
-    spark: SparkSession,
     docs_stream: DataFrame,
     benchmark: DataFrame,
     out_dir: str,
@@ -1175,8 +1076,6 @@ def streaming_contamination(
 
     Returns flagged rows: ``(id, n_grams, n_hits, contamination)`` at or
     above ``threshold`` (hits/distinct-grams as exact int-over-int)."""
-    import os
-
     from dataclod_spark.operators.dedup import word_ngrams
 
     from dataclod_spark.functions.text import explode_nonnull
@@ -1190,7 +1089,6 @@ def streaming_contamination(
         .withColumn("__b", F.lit(1))
         .localCheckpoint(eager=True)
     )
-    res_dir = os.path.join(out_dir, "flagged")
 
     def _flag(batch_df: DataFrame) -> DataFrame:
         ex = explode_nonnull(
@@ -1214,25 +1112,10 @@ def streaming_contamination(
             .select(F.col("__id").alias(id_col), "n_grams", "n_hits", "contamination")
         )
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        _flag(batch_df).write.mode("overwrite").parquet(
-            os.path.join(res_dir, f"batch_id={batch_id}")
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_sink(
-        spark, q, res_dir, timeout_sec, "streaming contamination",
-        lambda: _flag(spark.createDataFrame([], docs_stream.schema)),
-    )
+    return _drain(docs_stream, timeout_sec, out_dir, transform=_flag)
 
 
 def streaming_calibration(
-    spark: SparkSession,
     docs_stream: DataFrame,
     snapshot: DataFrame,
     out_dir: str,
@@ -1261,8 +1144,6 @@ def streaming_calibration(
     the correct behavior; production alerts on it and refits).
 
     Returns ``(id, group, quality, cal_bucket, calibrated)``."""
-    import os
-
     from dataclod_spark.functions.text import quality_score
     from dataclod_spark.operators.quantiles import group_quantiles_exact
 
@@ -1276,7 +1157,6 @@ def streaming_calibration(
         .agg(F.sort_array(F.collect_list("value")).alias("__grid"))
         .localCheckpoint(eager=True)
     )
-    res_dir = os.path.join(out_dir, "calibrated")
 
     def _calibrate(batch_df: DataFrame) -> DataFrame:
         b = batch_df.withColumn("quality", quality_score(F.col(text_col)))
@@ -1294,25 +1174,10 @@ def streaming_calibration(
             F.round(bucket / F.lit(float(n_buckets)), 6).alias("calibrated"),
         )
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        _calibrate(batch_df).write.mode("overwrite").parquet(
-            os.path.join(res_dir, f"batch_id={batch_id}")
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_sink(
-        spark, q, res_dir, timeout_sec, "streaming calibration",
-        lambda: _calibrate(spark.createDataFrame([], docs_stream.schema)),
-    )
+    return _drain(docs_stream, timeout_sec, out_dir, transform=_calibrate)
 
 
 def streaming_span_decontamination(
-    spark: SparkSession,
     docs_stream: DataFrame,
     benchmark: DataFrame,
     out_dir: str,
@@ -1345,8 +1210,6 @@ def streaming_span_decontamination(
 
     Returns flagged docs: ``(id, n_bench_docs, max_span_tokens)`` with
     a shared run of ≥ ``min_span`` tokens."""
-    import os
-
     from pyspark.sql import Window
 
     from dataclod_spark.functions.text import _kgram_hashes_from, _token_values
@@ -1373,7 +1236,6 @@ def streaming_span_decontamination(
         )
         bench_pos = bench_pos.join(kept_h, "__h")
     bidx = bench_pos.localCheckpoint(eager=True)
-    res_dir = os.path.join(out_dir, "flagged")
 
     def _spans(batch_df: DataFrame) -> DataFrame:
         pos = _positions(batch_df, "__id", "__pos")
@@ -1402,20 +1264,4 @@ def streaming_span_decontamination(
             F.max("__mx").cast("bigint").alias("max_span_tokens"),
         ).select(F.col("__id").alias(id_col), "n_bench_docs", "max_span_tokens")
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        _spans(batch_df).write.mode("overwrite").parquet(
-            os.path.join(res_dir, f"batch_id={batch_id}")
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_sink(
-        spark, q, res_dir, timeout_sec, "streaming span decontamination",
-        lambda: _spans(
-            spark.createDataFrame([], docs_stream.select(id_col, text_col).schema)
-        ),
-    )
+    return _drain(docs_stream, timeout_sec, out_dir, transform=_spans)

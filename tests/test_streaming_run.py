@@ -40,7 +40,7 @@ def crafted_stream(spark, tmp_path_factory):
 
 
 def test_stateful_sessionization_semantics(spark, crafted_stream):
-    out = run_to_memory(sessionize_stream(crafted_stream), spark)
+    out = run_to_memory(sessionize_stream(crafted_stream))
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in out.collect()
@@ -59,7 +59,7 @@ def test_tumbling_append_only_finalized_windows(spark, crafted_stream):
     ev = crafted_stream.withColumnRenamed("user_id", "event_type").selectExpr(
         "CAST(event_type AS STRING) AS event_type", "ts", "1.0 AS value"
     )
-    out = run_to_memory(tumbling_stream(ev), spark)
+    out = run_to_memory(tumbling_stream(ev))
     starts = sorted(r.window_start for r in out.collect())
     base = int(_ts(0, 0).replace(tzinfo=timezone.utc).timestamp())
     # watermark = 10:00 - 10min = 09:50 → the 09:00-10:00 window (containing
@@ -111,10 +111,10 @@ def test_sessionization_state_across_microbatches(spark, multibatch_src):
     state must survive the batch boundary and merge), and the final result
     equals the single-batch run."""
     multi = run_to_memory(
-        sessionize_stream(_mb_stream(spark, multibatch_src, 1)), spark
+        sessionize_stream(_mb_stream(spark, multibatch_src, 1))
     )
     single = run_to_memory(
-        sessionize_stream(_mb_stream(spark, multibatch_src, 3)), spark
+        sessionize_stream(_mb_stream(spark, multibatch_src, 3))
     )
     key = lambda r: (r.user_id, r.session_start, r.session_end, r.n_events)  # noqa: E731
     got_multi = sorted(map(key, multi.collect()))
@@ -136,7 +136,7 @@ def test_tumbling_across_microbatches_matches_single_batch(spark, multibatch_src
         ev = _mb_stream(spark, multibatch_src, per_trigger).selectExpr(
             "CAST(user_id AS STRING) AS event_type", "ts", "1.0 AS value"
         )
-        out = run_to_memory(tumbling_stream(ev), spark)
+        out = run_to_memory(tumbling_stream(ev))
         return sorted(
             (r.window_start, r.event_type, r.n_events, r.total_value)
             for r in out.collect()
@@ -199,7 +199,7 @@ def test_asof_state_across_microbatches(spark, asof_multibatch_src):
         .option("maxFilesPerTrigger", "1")
         .parquet(asof_multibatch_src)
     )
-    out = {r["purchase_id"]: r for r in run_to_memory(asof_join_stream(ev), spark).collect()}
+    out = {r["purchase_id"]: r for r in run_to_memory(asof_join_stream(ev)).collect()}
     assert out[200]["click_id"] == 100 and out[200]["click_value"] == 1.5
     assert out[201]["click_id"] is None   # click older than the lookback
     assert out[202]["click_id"] is None   # no click history at all
@@ -219,7 +219,7 @@ def test_heavy_hitters_state_across_microbatches(spark, multibatch_src):
         .option("maxFilesPerTrigger", "1")
         .parquet(multibatch_src)
     ).withColumn("event_type", F.lit("click"))
-    out = run_to_memory(heavy_hitters_stream(ev, k=10), spark)
+    out = run_to_memory(heavy_hitters_stream(ev, k=10))
     last = out.filter(
         F.col("batch_seq") == out.agg(F.max("batch_seq")).collect()[0][0]
     )
@@ -375,7 +375,7 @@ def test_streaming_incremental_dedup_empty_delta(spark, tmp_path):
     ds = read_documents_stream_multibatch(
         spark, str(src), stage, n_files=2, pred_sql="doc_id < 0"
     )
-    res = streaming_incremental_dedup(spark, ds, old, out, jaccard_threshold=0.5)
+    res = streaming_incremental_dedup(ds, old, out, jaccard_threshold=0.5)
     assert res.count() == 0
     assert "drop_reason" in res.columns and "doc_id" in res.columns
 
@@ -408,7 +408,7 @@ def test_streaming_calibration_unseen_source_is_null(spark, tmp_path):
         str(d)
     )
     out = streaming_calibration(
-        spark, ds, snap, str(tmp_path / "out"), timeout_sec=120
+        ds, snap, str(tmp_path / "out"), timeout_sec=120
     )
     got = {r.doc_id: r for r in out.collect()}
     assert got[102].cal_bucket is None and got[102].calibrated is None
@@ -480,7 +480,7 @@ def test_streaming_span_decontamination_planted_multibatch(spark, tmp_path):
             n_files=n_files, pred_sql="doc_id >= 0",
         ).select("doc_id", "text")
         res = streaming_span_decontamination(
-            spark, ds, bench, str(tmp_path / f"out_{tag}"), timeout_sec=180
+            ds, bench, str(tmp_path / f"out_{tag}"), timeout_sec=180
         )
         return {
             r.doc_id: (r.n_bench_docs, r.max_span_tokens) for r in res.collect()
@@ -530,7 +530,7 @@ def test_asof_state_ignores_out_of_order_older_click(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    out = run_to_memory(asof_join_stream(src), spark)
+    out = run_to_memory(asof_join_stream(src))
     rows = {r.purchase_id: r for r in out.collect()}
     assert rows[3].click_id == 1 and rows[3].click_us == 100 * 1_000_000
 
@@ -576,7 +576,7 @@ def test_sessionize_out_of_order_events_stay_consistent(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    out = run_to_memory(sessionize_stream(src), spark)
+    out = run_to_memory(sessionize_stream(src))
     got = sorted(
         (r.session_start - base, r.session_end - base, r.n_events)
         for r in out.collect()
@@ -620,7 +620,7 @@ def test_streaming_helpers_empty_source_and_no_batch_id(spark, tmp_path):
         spark, str(src), str(tmp_path / "st0"), n_files=2, pred_sql="doc_id < 0"
     ).select("doc_id", "text")
     out0 = streaming_contamination(
-        spark, ds0, bench, str(tmp_path / "o0"), threshold=0.01, timeout_sec=120
+        ds0, bench, str(tmp_path / "o0"), threshold=0.01, timeout_sec=120
     )
     assert out0.count() == 0
     assert set(out0.columns) == {"doc_id", "n_grams", "n_hits", "contamination"}
@@ -629,74 +629,152 @@ def test_streaming_helpers_empty_source_and_no_batch_id(spark, tmp_path):
         spark, str(src), str(tmp_path / "st1"), n_files=2, pred_sql="doc_id >= 0"
     ).select("doc_id", "text")
     out1 = streaming_contamination(
-        spark, ds1, bench, str(tmp_path / "o1"), threshold=0.01, timeout_sec=120
+        ds1, bench, str(tmp_path / "o1"), threshold=0.01, timeout_sec=120
     )
     assert "batch_id" not in out1.columns
     assert {r.doc_id for r in out1.collect()} == {1, 3}
 
 
-def test_adaptive_stream_width_clamps_and_restores(spark):
-    """The scale-adaptive stream width shrinks only for demonstrably small
-    sources (ceil(bytes/32MB) clamped to [2, session default]), leaves the
-    conf alone when no reader recorded a size, and run_to_memory restores
-    the session conf after the drain."""
-    from dataclod_spark.streaming.run import (
-        _SRC_BYTES_CONF,
-        _adaptive_stream_width,
-        _record_stream_source_bytes,
-    )
+def test_stream_width_rule():
+    """ceil(source bytes / 32 MB), floored at the task-slot count and capped
+    at the caller's width; a source of unknown size keeps the caller's."""
+    from dataclod_spark.streaming.run import _stream_width
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.unset(_SRC_BYTES_CONF)
-        assert _adaptive_stream_width(spark) is None  # no reader ran
-        _record_stream_source_bytes(spark, 10 << 20)  # 10 MB -> floor
-        assert _adaptive_stream_width(spark) == 2
-        _record_stream_source_bytes(spark, 100 << 20)  # 100 MB -> 4
-        assert _adaptive_stream_width(spark) == 4
-        _record_stream_source_bytes(spark, 1 << 40)  # 1 TB -> session cap
-        assert _adaptive_stream_width(spark) == 32
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.unset(_SRC_BYTES_CONF)
+    assert _stream_width(32, 4, 10 << 20) == 4  # small -> slots
+    assert _stream_width(32, 4, 200 << 20) == 7  # ceil(200 / 32)
+    assert _stream_width(32, 4, 1 << 40) == 32  # 1 TB -> caller cap
+    assert _stream_width(2, 4, 10 << 20) == 2  # caller below slots -> caller
+    assert _stream_width(32, 4, None) == 32
 
 
-def test_run_to_memory_restores_shuffle_conf(spark, crafted_stream):
-    from dataclod_spark.streaming.run import (
-        _record_stream_source_bytes,
-        run_to_memory,
-        sessionize_stream,
-    )
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    _record_stream_source_bytes(spark, 1 << 20)
-    run_to_memory(sessionize_stream(crafted_stream), spark, timeout_sec=120)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old
-
-
-def test_st1_st7_keep_session_width(spark, monkeypatch):
-    """Negative pins for the r11 state-width opt-outs (r11 verdict item
-    9): st1/st7's applyInPandasWithState functions do real per-row Python
-    work and MEASURED a loss under the narrowed adaptive width (st1
-    4.1 -> 6.2 s, st7 1.8 -> 3.1 s), so their drains must keep passing
-    adaptive_width=False — a blanket change to run_to_memory's default
-    must not silently re-opt them in."""
-    import dataclod_spark.streaming.run as R
+def test_st_queries_leave_caller_conf_unchanged(spark):
+    """A stream's width lives in a session of its own: the caller's conf is
+    identical before and after a memory-sink drain (st2), a CDC drain
+    (st9) and a per-batch transform drain (st12)."""
     from conftest import SF_SMOKE
 
     from dataclod_spark.registry import load_all_queries
 
-    seen = {}
-    orig = R.run_to_memory
-
-    def capture(df, spark_, timeout_sec=300, adaptive_width=True):
-        seen[len(seen)] = adaptive_width
-        return orig(df, spark_, timeout_sec=timeout_sec, adaptive_width=adaptive_width)
-
-    monkeypatch.setattr(R, "run_to_memory", capture)
     reg = load_all_queries()
-    for name in ("st1_stream_sessionization", "st7_stream_asof_join"):
-        seen.clear()
+    for name in (
+        "st2_stream_tumbling",
+        "st9_stream_cdc_upsert",
+        "st12_stream_incremental_dedup",
+    ):
+        before = spark.conf.getAll
         reg[name].fn(spark, SF_SMOKE).collect()
-        assert seen and all(v is False for v in seen.values()), (name, seen)
+        assert spark.conf.getAll == before, name
+
+
+def _stream_views(session) -> list[str]:
+    return [
+        t.name for t in session.catalog.listTables() if t.name.startswith("__stream_result_")
+    ]
+
+
+def test_st2_runs_in_own_session_and_leaves_no_view(spark):
+    """st2's memory sink lives in the stream's own session, at the rule's
+    width; once drained, neither that session nor the caller's holds the
+    sink's temp view, and the returned frame still has its rows."""
+    import os
+
+    from conftest import SF_SMOKE
+
+    from dataclod_spark.registry import load_all_queries
+    from dataclod_spark.streaming.run import _stream_width
+
+    res = load_all_queries()["st2_stream_tumbling"].fn(spark, SF_SMOKE)
+    own = res.sparkSession
+    assert own is not spark
+    want = _stream_width(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+        os.path.getsize(os.path.join(SF_SMOKE, "events.parquet")),
+    )
+    assert own.conf.get("spark.sql.shuffle.partitions") == str(want)
+    assert res.count() > 0
+    assert _stream_views(own) == [] and _stream_views(spark) == []
+
+
+def _one_row_stream(spark, d):
+    spark.createDataFrame([(1,)], "id bigint").coalesce(1).write.parquet(str(d))
+    return spark.readStream.schema("id bigint").parquet(str(d))
+
+
+def test_drain_timeout_stops_stream_and_drops_partial_view(spark, tmp_path):
+    """A drain that outlives ``timeout_sec`` raises TimeoutError with the
+    stream stopped, for both sinks, and the memory sink leaves no view."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from dataclod_spark.streaming.run import _drain, run_to_memory
+
+    def slow(batch_df):
+        time.sleep(6)
+        return batch_df
+
+    with pytest.raises(TimeoutError):
+        _drain(
+            _one_row_stream(spark, tmp_path / "a"), 2, str(tmp_path / "out"), transform=slow
+        )
+    assert spark.streams.active == []
+
+    slow_id = F.udf(lambda i: time.sleep(6) or i, "bigint")
+    stream = _one_row_stream(spark, tmp_path / "b").select(slow_id("id").alias("id"))
+    with pytest.raises(TimeoutError):
+        run_to_memory(stream, timeout_sec=2)
+    assert spark.streams.active == []
+    assert _stream_views(spark) == []
+
+
+def test_events_reader_is_zone_free(spark, tmp_path):
+    """A naive-micros ``ts`` drains to the same instants under a
+    Pacific/Auckland session as under UTC, the hour Auckland repeats when
+    its DST ends included, and reading does not write the caller's time
+    zone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from dataclod_spark.registry import parquet_schema
+    from dataclod_spark.streaming.run import (
+        _events_ts_to_timestamp,
+        read_events_stream,
+        run_to_memory,
+    )
+
+    naive = [
+        datetime(2024, 1, 1, 0, 0, 0, 123456),
+        # 02:30 NZST on 2024-04-07, the second pass of the repeated hour
+        datetime(2024, 4, 6, 14, 30, 0),
+        datetime(2024, 7, 1, 12, 30, 0),
+    ]
+    want = sorted(
+        int(t.replace(tzinfo=timezone.utc).timestamp()) * 1_000_000 + t.microsecond
+        for t in naive
+    )
+    assert want[0] == 1704067200123456
+    path = tmp_path / "events.parquet"
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(naive, pa.timestamp("us")),
+        }),
+        str(path),
+    )
+
+    def epochs(stream):
+        out = run_to_memory(stream.select(F.unix_micros("ts").alias("us")))
+        return sorted(r.us for r in out.collect())
+
+    auckland = spark.newSession()
+    auckland.conf.set("spark.sql.session.timeZone", "Pacific/Auckland")
+    stream = read_events_stream(auckland, str(tmp_path))
+    assert auckland.conf.get("spark.sql.session.timeZone") == "Pacific/Auckland"
+    assert epochs(stream) == want
+    # the conversion itself, on a stream that runs in the Auckland session
+    schema = parquet_schema(auckland, str(path))
+    assert schema["ts"].dataType.typeName() == "timestamp_ntz"
+    raw = auckland.readStream.schema(schema).parquet(str(tmp_path))
+    assert epochs(_events_ts_to_timestamp(raw)) == want
