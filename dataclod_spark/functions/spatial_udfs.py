@@ -15,8 +15,10 @@ Performance note: every SQL registration is an **Arrow-batched pandas UDF**
 (``register_all`` wraps each scalar body batch-wise): argument columns cross
 the JVM/Python boundary once per Arrow batch, not once per row, matching the
 reference's vectorized evaluation over Arrow arrays (``udfs.rs`` kernels run
-per-array).  The spatial JOIN path (operators/spatial_join.py) additionally
-has fully-vectorized numpy fast paths for its hot shapes.
+per-array).  The binary predicates run through one batch kernel,
+:func:`refine_batch`, with one UDF object per predicate
+(:func:`predicate_udf`): the registered ``ST_*`` functions, the SQL spatial
+dispatch's masked refine and the spatial join operator all evaluate it.
 """
 
 from __future__ import annotations
@@ -201,19 +203,6 @@ FUNCTIONS: dict[str, tuple] = {
         ),
         _GEOM,
     ),
-    # binary predicates (udfs.rs:168-246, 373)
-    "ST_Contains": (lambda a, b: P.contains(_g(a), _g(b)), _BOOL),
-    "ST_Intersects": (lambda a, b: P.intersects(_g(a), _g(b)), _BOOL),
-    "ST_Within": (lambda a, b: P.within(_g(a), _g(b)), _BOOL),
-    "ST_Equals": (lambda a, b: P.equals(_g(a), _g(b)), _BOOL),
-    "ST_Covers": (lambda a, b: P.covers(_g(a), _g(b)), _BOOL),
-    "ST_CoveredBy": (lambda a, b: P.covered_by(_g(a), _g(b)), _BOOL),
-    "ST_Touches": (lambda a, b: P.touches(_g(a), _g(b)), _BOOL),
-    "ST_Overlaps": (lambda a, b: P.overlaps(_g(a), _g(b)), _BOOL),
-    # recognized by the reference's join planner (spatial_expr_utils.rs:51)
-    "ST_Crosses": (lambda a, b: P.crosses(_g(a), _g(b)), _BOOL),
-    "BBox_Intersects": (lambda a, b: P.bbox_intersects(_g(a), _g(b)), _BOOL),
-    "ST_DWithin": (lambda a, b, d: P.dwithin(_g(a), _g(b), float(d)), _BOOL),
     # binary measures / constructive (udfs.rs:248-284)
     "ST_Distance": (lambda a, b: A.distance(_g(a), _g(b)), _DBL),
     "ST_Intersection": (lambda a, b: _b(A.intersection(_g(a), _g(b))), _GEOM),
@@ -256,6 +245,125 @@ def _batchify(fn, rtype):
     return pandas_udf(batch, rtype)
 
 
+# -- binary predicates: one batch kernel -----------------------------------
+
+# SQL name -> predicate over parsed geometries (udfs.rs:168-246, 373);
+# ST_DWithin takes its distance as a third argument, per row
+PREDICATES = {
+    "ST_Contains": P.contains,
+    "ST_Intersects": P.intersects,
+    "ST_Within": P.within,
+    "ST_Equals": P.equals,
+    "ST_Covers": P.covers,
+    "ST_CoveredBy": P.covered_by,
+    "ST_Touches": P.touches,
+    "ST_Overlaps": P.overlaps,
+    # recognized by the reference's join planner (spatial_expr_utils.rs:51)
+    "ST_Crosses": P.crosses,
+    "BBox_Intersects": P.bbox_intersects,
+    "ST_DWithin": P.dwithin,
+}
+
+
+def refine_batch(name: str, wkb1: pd.Series, wkb2: pd.Series, *args: pd.Series) -> pd.Series:
+    """Predicate ``name`` over one Arrow batch of (E)WKB pairs; ``args``
+    are its further numeric columns (ST_DWithin's distance).
+
+    Row for row this is the scalar body under the reference's NULL
+    convention: a NULL argument, a parse failure, an exception or a NULL
+    predicate result gives NULL.  Pairs the grid join decides JVM-side
+    arrive masked to NULL and cost no per-row Python.  Each distinct blob
+    is parsed and prepared once per batch — build-side geometries repeat
+    across candidate pairs (≈ the reference's prepared-geometry cache,
+    refine/geos.rs).  Point × axis-rectangle intersects is the closed
+    bbox test: vectorized when every probe is a plain 21-byte WKB point,
+    per row otherwise."""
+    import numpy as np
+
+    pred = PREDICATES[name]
+    v1 = wkb1.to_numpy(dtype=object)
+    v2 = wkb2.to_numpy(dtype=object)
+    out = np.full(len(v1), None, dtype=object)
+    live = wkb1.notna().to_numpy() & wkb2.notna().to_numpy()
+    for a in args:
+        live &= a.notna().to_numpy()
+    args = [a.to_numpy(dtype=object) for a in args]
+    idx = np.nonzero(live)[0]
+    # one cache per side: a blob on both sides still gives two geometries,
+    # as two scalar parses do (a NaN coordinate equals itself only by
+    # identity, so sharing the object would change the predicate)
+    geoms: tuple[dict, dict] = ({}, {})
+    rects: dict[bytes, Optional[tuple]] = {}
+
+    def parse(side: int, b) -> Optional[C.Geometry]:
+        key = bytes(b)
+        if key not in geoms[side]:
+            try:
+                geoms[side][key] = P.prepare(C.wkb_parse(key))
+            except Exception:
+                geoms[side][key] = None
+        return geoms[side][key]
+
+    def rect(b) -> Optional[tuple]:
+        key = bytes(b)
+        if key not in rects:
+            g = parse(1, key)
+            rects[key] = None if g is None else A.axis_rect(g)
+        return rects[key]
+
+    point_rect = name == "ST_Intersects" and not args
+    if point_rect and len(idx) and all(len(v) == 21 and v[0] == 1 for v in v1[idx]):
+        arr = np.frombuffer(b"".join(map(bytes, v1[idx])), dtype=np.uint8).reshape(-1, 21)
+        if (arr[:, 1:5].copy().view("<u4")[:, 0] == 1).all():
+            xy = arr[:, 5:].copy().view("<f8")
+            boxes = [rect(b) for b in v2[idx]]
+            fast = np.array([r is not None for r in boxes])
+            r = np.array([r or (0.0, 0.0, 0.0, 0.0) for r in boxes], dtype="f8")
+            hit = (
+                (r[:, 0] <= xy[:, 0])
+                & (xy[:, 0] <= r[:, 2])
+                & (r[:, 1] <= xy[:, 1])
+                & (xy[:, 1] <= r[:, 3])
+            )
+            out[idx[fast]] = hit[fast].tolist()
+            idx = idx[~fast]
+
+    for i in idx:
+        g1, g2 = parse(0, v1[i]), parse(1, v2[i])
+        if g1 is None or g2 is None:
+            continue
+        try:
+            if point_rect and g1.kind == C.POINT and g1.data is not None:
+                box = rect(v2[i])
+                if box is not None:
+                    x, y = g1.data
+                    out[i] = box[0] <= x <= box[2] and box[1] <= y <= box[3]
+                    continue
+            res = pred(g1, g2, *(float(a[i]) for a in args))
+        except Exception:
+            continue
+        out[i] = None if res is None else bool(res)
+    return pd.Series(out)
+
+
+def _predicate_udf(name: str):
+    def refine(wkb1: pd.Series, wkb2: pd.Series, *args: pd.Series) -> pd.Series:
+        return refine_batch(name, wkb1, wkb2, *args)
+
+    refine.__name__ = name
+    return pandas_udf(refine, _BOOL)
+
+
+_PREDICATE_UDFS = {name.lower(): _predicate_udf(name) for name in PREDICATES}
+
+
+def predicate_udf(name: str):
+    """The pandas UDF of predicate ``name`` (matched case-insensitively, as
+    SQL resolves it): one object per predicate, which :func:`register_all`
+    registers and the spatial join operator calls directly."""
+    return _PREDICATE_UDFS[name.lower()]
+
+
 def register_all(spark: SparkSession) -> None:
     # once per SparkSession: registration is idempotent but not free (57
     # UDF catalog entries) — repeated EngineSession construction over the
@@ -271,3 +379,5 @@ def register_all(spark: SparkSession) -> None:
             spark.udf.register(name, _nullsafe(fn), rtype)
         else:
             spark.udf.register(name, _batchify(fn, rtype))
+    for name in PREDICATES:
+        spark.udf.register(name, predicate_udf(name))

@@ -40,6 +40,25 @@ def bounds(g: Geometry) -> Optional[tuple[float, float, float, float]]:
     return (min(xs), min(ys), max(xs), max(ys))
 
 
+def axis_rect(g: Geometry) -> Optional[tuple[float, float, float, float]]:
+    """(xmin, ymin, xmax, ymax) when ``g`` is a polygon equal to its own
+    envelope: one closed ring over the four distinct corners of a
+    non-degenerate box, every edge changing exactly one coordinate.  A
+    bowtie (diagonal edges) or a spike (a repeated corner) is not one."""
+    if g.kind != POLYGON or len(g.data) != 1:
+        return None
+    ring = g.data[0]
+    if len(ring) != 5 or ring[0] != ring[-1] or len(set(ring[:4])) != 4:
+        return None
+    if any((a[0] != b[0]) == (a[1] != b[1]) for a, b in _segments(ring)):
+        return None
+    xs = {p[0] for p in ring}
+    ys = {p[1] for p in ring}
+    if len(xs) != 2 or len(ys) != 2:
+        return None
+    return (min(xs), min(ys), max(xs), max(ys))
+
+
 def npoints(g: Geometry) -> int:
     return len(g.points())
 

@@ -155,13 +155,11 @@ def _segs(g: Geometry) -> list[tuple[Coord, Coord]]:
     else:
         segs = []
     if getattr(g, "_prepared", False):
-        # prepared-geometry mode (≈ GEOS PreparedGeometry / the reference's
-        # ExecutionMode::PrepareProbe, refine/geo.rs): a geometry flagged
-        # prepared keeps its segment list, so a complex polygon evaluated
-        # against many candidate pairs builds it once instead of per pair.
-        # Contents are identical either way — preparation trades memory for
-        # rebuild time, which is why it is only enabled when the sampled
-        # mean point count says geometries are complex (exec_mode_selector)
+        # prepared geometry (≈ GEOS PreparedGeometry, refine/geo.rs): it
+        # keeps its segment list, so a polygon evaluated against many
+        # candidate pairs builds it once instead of per pair.  Contents are
+        # identical either way; the refine kernel prepares every geometry
+        # it caches, which bounds the memos by one batch's distinct blobs
         g._segs_memo = segs
     return segs
 

@@ -27,8 +27,8 @@ Spark's execution model:
    ``stream.rs:82-86``): a candidate pair is emitted only in the cell that
    contains the top-left corner of the bbox intersection — each pair
    survives exactly once, with no distinct/shuffle.
-6. **Exact refinement** (≈ ``refine/{geo,geos,tg}.rs``): one pandas UDF
-   evaluates the exact predicate on candidate WKB pairs.
+6. **Exact refinement** (≈ ``refine/{geo,geos,tg}.rs``): the SQL ``ST_*``
+   predicate's own pandas UDF evaluates it on candidate WKB pairs.
 7. **Outer-join completion** (≈ ``stream.rs`` final emission): unmatched
    rows are recovered with anti-joins on row ids and unioned in.
 
@@ -42,7 +42,7 @@ that one cell's build rows fit an executor; heavily skewed data can lower
 from __future__ import annotations
 
 import math
-from typing import Iterable, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,8 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from dataclod_spark.functions.spatial_udfs import predicate_udf
 from dataclod_spark.geo import core as GC
-from dataclod_spark.geo import predicates as GP
 
 # mirrors the reference's bbox sampler bounds (option.rs:60-70):
 # 1% target rate, bounded to [1k, 10k] samples, deterministic seed
@@ -61,9 +61,9 @@ BBOX_SAMPLE_RATE = 0.01
 SAMPLE_SEED = 42
 
 # adaptive grid sizing (≈ the reference choosing partition count from
-# GeoStatistics during build collection, exec_mode_selector.rs /
-# memory_plan.rs): aim for this many build rows per cell, bounded so the
-# grid neither under-parallelizes nor explodes large bboxes across cells
+# GeoStatistics during build collection, memory_plan.rs): aim for this
+# many build rows per cell, bounded so the grid neither under-parallelizes
+# nor explodes large bboxes across cells
 TARGET_BUILD_ROWS_PER_CELL = 2048
 MIN_AUTO_CELLS = 64
 MAX_AUTO_CELLS = 65_536
@@ -105,90 +105,6 @@ def auto_cell_target(sample: list[tuple]) -> int:
     )
     return max(1, int(min(shape_cap, rows_cells)))
 
-# Speculative refine-mode selection (refine/exec_mode_selector.rs:12-100 +
-# the geo backend's selector, refine/geo.rs:23-47): distance predicates
-# never prepare; relation predicates prepare when the sampled mean point
-# count per probe geometry exceeds this threshold (geo.rs uses 50.0)
-SPECULATIVE_MEAN_POINTS = 50.0
-
-
-def select_exec_mode(predicate: str, mean_points: Optional[float]) -> str:
-    """Pick the refinement execution mode from sampled GeoStatistics.
-
-    ≈ ``GeoOptimalModeSelector::select`` (refine/geo.rs:23-40): ``dwithin``
-    (the distance predicate) → ``"none"``; relation predicates → ``"none"``
-    for simple geometries (mean points <= 50, where building prepared
-    structures costs more than it saves) and ``"prepare"`` for complex ones.
-    Unknown stats (no sample — e.g. bbox-exact column sides that never
-    reach Python refinement) default to ``"none"``."""
-    if predicate == "dwithin":
-        return "none"
-    if mean_points is None or mean_points <= SPECULATIVE_MEAN_POINTS:
-        return "none"
-    return "prepare"
-
-
-_MEAN_POINTS_CACHE: dict[int, Optional[float]] = {}
-_PLAN_MEMO_MAX = 32
-
-
-def _plan_memoized(cache: dict, pool: DataFrame, compute):
-    """Memoize ``compute()`` by the semantic hash of ``pool``'s plan, with
-    bounded FIFO eviction — shared by the bbox grid sample and the
-    exec-mode mean-points stats (both invalidated together by
-    :func:`clear_bbox_sample_cache`; semanticHash does not see file
-    rewrites at the same path)."""
-    try:
-        key: Optional[int] = pool.semanticHash()
-    except Exception:
-        key = None
-    if key is not None and key in cache:
-        return cache[key]
-    out = compute()
-    if key is not None:
-        if len(cache) >= _PLAN_MEMO_MAX:
-            cache.pop(next(iter(cache)))
-        cache[key] = out
-    return out
-
-
-def collect_mean_points(src: DataFrame, geom_col: str) -> Optional[float]:
-    """Sampled mean point count per geometry (``GeoStatistics.
-    mean_points_per_geometry``, statistics.rs): the same seeded 1%/cap
-    sample policy as the grid sample, analyzed by the geo_stats summary
-    UDF and aggregated to one row — the Spark analogue of the reference
-    analyzing the first ``min_required_count`` probe geometries
-    (exec_mode_selector.rs:63-71).  Memoized per semantic plan like
-    ``_cached_sample`` so rebuilding the same join doesn't re-run the
-    sampling job."""
-    from dataclod_spark.operators.geo_stats import geometry_statistics
-
-    base = src.select(F.col(geom_col).alias("__g")).dropna()
-    samp = base.sample(fraction=BBOX_SAMPLE_RATE, seed=SAMPLE_SEED).limit(
-        MAX_BBOX_SAMPLES
-    )
-    pool = samp.unionAll(base.limit(MIN_BBOX_SAMPLES)).coalesce(1)
-
-    def compute() -> Optional[float]:
-        row = geometry_statistics(pool, "__g").collect()[0]
-        if not row["total_geometries"]:
-            return None
-        return float(row["total_points"]) / float(row["total_geometries"])
-
-    return _plan_memoized(_MEAN_POINTS_CACHE, pool, compute)
-
-
-PREDICATES = {
-    "intersects": GP.intersects,
-    "contains": GP.contains,
-    "within": GP.within,
-    "covers": GP.covers,
-    "covered_by": GP.covered_by,
-    "touches": GP.touches,
-    "overlaps": GP.overlaps,
-    "equals": GP.equals,
-    "crosses": GP.crosses,
-}
 
 _BBOX_SCHEMA = T.StructType(
     [
@@ -208,7 +124,7 @@ _BBOX_SCHEMA = T.StructType(
 def _bbox_udf_impl(wkb: pd.Series) -> pd.DataFrame:
     import numpy as np
 
-    from dataclod_spark.geo.algos import bounds
+    from dataclod_spark.geo.algos import axis_rect, bounds
 
     vals = wkb.to_numpy()
     n = len(vals)
@@ -248,7 +164,7 @@ def _bbox_udf_impl(wkb: pd.Series) -> pd.DataFrame:
                 try:
                     g = GC.wkb_parse(key)
                     bb = bounds(g)
-                    exact = g.kind == GC.POINT or _axis_rect(g) is not None
+                    exact = g.kind == GC.POINT or axis_rect(g) is not None
                 except Exception:
                     bb = None
                 cache[key] = (bb, exact)
@@ -275,136 +191,6 @@ def _bbox_udf_impl(wkb: pd.Series) -> pd.DataFrame:
 # expressions are a pushdown/substitution barrier, so the UDF runs exactly
 # once per side.
 _bbox_udf = _bbox_udf_impl.asNondeterministic()
-
-
-def _axis_rect(g: GC.Geometry):
-    """(xmin,ymin,xmax,ymax) if g is an axis-aligned rectangle polygon."""
-    if g.kind != GC.POLYGON or len(g.data) != 1:
-        return None
-    ring = g.data[0]
-    if len(ring) != 5 or ring[0] != ring[-1]:
-        return None
-    xs = {p[0] for p in ring}
-    ys = {p[1] for p in ring}
-    if len(xs) != 2 or len(ys) != 2:
-        return None
-    return (min(xs), min(ys), max(xs), max(ys))
-
-
-def _refine_udf(predicate: str, distance: Optional[float], prepare: bool = False):
-    pred_fn = None if predicate == "dwithin" else PREDICATES[predicate]
-
-    @pandas_udf(T.BooleanType())
-    def refine(wkb1: pd.Series, wkb2: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from dataclod_spark.geo.predicates import dwithin
-
-        n = len(wkb1)
-        out = np.zeros(n, dtype=bool)
-        # pairs already decided JVM-side arrive masked to NULL — skip them
-        # at batch level, no per-row Python
-        mask = wkb1.notna().to_numpy() & wkb2.notna().to_numpy()
-        idx = np.nonzero(mask)[0]
-        if len(idx) == 0:
-            return pd.Series(out)
-
-        # build-side geometries repeat across many candidate pairs — parse
-        # each distinct blob once per batch (≈ the reference's prepared-
-        # geometry caching, refine/geos.rs)
-        cache: dict[bytes, GC.Geometry] = {}
-        rect_cache: dict[bytes, tuple | None] = {}
-
-        vals1 = wkb1.to_numpy()
-        vals2 = wkb2.to_numpy()
-
-        # fully vectorized path: homogeneous point-WKB probe batch against
-        # axis-aligned rectangles, intersects predicate
-        if predicate == "intersects":
-            sub1 = vals1[idx]
-            m = len(sub1)
-            if m and all(len(v) == 21 and v[0] == 1 for v in sub1):
-                buf = b"".join(bytes(v) for v in sub1)
-                arr = np.frombuffer(buf, dtype=np.uint8).reshape(m, 21)
-                if (arr[:, 1:5].copy().view("<u4")[:, 0] == 1).all():
-                    xy = arr[:, 5:21].copy().view("<f8")
-                    rects = np.empty((m, 4), dtype="f8")
-                    general_rows = []
-                    for j, b2 in enumerate(vals2[idx]):
-                        key = bytes(b2)
-                        if key not in rect_cache:
-                            try:
-                                g2 = GC.wkb_parse(key)
-                                cache[key] = g2
-                                rect_cache[key] = _axis_rect(g2)
-                            except Exception:
-                                rect_cache[key] = None
-                        rect = rect_cache[key]
-                        if rect is None:
-                            general_rows.append(j)
-                            rects[j] = (1.0, 1.0, 0.0, 0.0)  # never matches
-                        else:
-                            rects[j] = rect
-                    res_arr = (
-                        (rects[:, 0] <= xy[:, 0])
-                        & (xy[:, 0] <= rects[:, 2])
-                        & (rects[:, 1] <= xy[:, 1])
-                        & (xy[:, 1] <= rects[:, 3])
-                    )
-                    if general_rows:
-                        from dataclod_spark.geo.predicates import intersects as gen_int
-
-                        for j in general_rows:
-                            i = idx[j]
-                            try:
-                                g1 = GC.wkb_parse(bytes(vals1[i]))
-                                g2 = cache.get(bytes(vals2[i]))
-                                if g2 is None:
-                                    g2 = GC.wkb_parse(bytes(vals2[i]))
-                                res_arr[j] = bool(gen_int(g1, g2))
-                            except Exception:
-                                res_arr[j] = False
-                    out[idx] = res_arr
-                    return pd.Series(out)
-
-        def parse(b) -> GC.Geometry:
-            key = bytes(b)
-            g = cache.get(key)
-            if g is None:
-                g = GC.wkb_parse(key)
-                if prepare:
-                    # prepared mode: parsed geometries memoize their derived
-                    # segment structures across the candidate pairs of the
-                    # batch (selected by sampled GeoStatistics — see
-                    # select_exec_mode)
-                    GP.prepare(g)
-                cache[key] = g
-                rect_cache[key] = _axis_rect(g)
-            return g
-
-        for i in idx:
-            b1, b2 = vals1[i], vals2[i]
-            try:
-                g1 = parse(b1)
-                g2 = parse(b2)
-                if pred_fn is None:
-                    out[i] = bool(dwithin(g1, g2, distance))
-                    continue
-                # point × axis-aligned rectangle: intersects ≡ closed bbox
-                # test (boundary inclusive on both sides) — skip the general
-                # predicate machinery for the dominant point-in-box workload
-                if predicate == "intersects" and g1.kind == GC.POINT and g1.data is not None:
-                    rect = rect_cache.get(bytes(b2))
-                    if rect is not None:
-                        x, y = g1.data
-                        out[i] = rect[0] <= x <= rect[2] and rect[1] <= y <= rect[3]
-                        continue
-                out[i] = bool(pred_fn(g1, g2))
-            except Exception:
-                out[i] = False
-        return pd.Series(out)
-
-    return refine
 
 
 @pandas_udf(T.BinaryType())
@@ -488,11 +274,6 @@ def _flat_bbox_sql(bbox: tuple) -> list[str]:
         f"CAST(({y1}) AS DOUBLE) AS __bby1",
         f"{exact[0] if exact else 'true'} AS __bbe",
     ]
-
-
-def _asserted_exact(bbox: Optional[tuple]) -> bool:
-    """True when a bbox operand declares every geometry bbox-exact."""
-    return bbox is not None and tuple(bbox[4:]) in ((), ("true",))
 
 
 def _rowid_sql(cols: list[str]) -> str:
@@ -715,25 +496,31 @@ def _tighten_sql(key: str, lf: tuple, rf: tuple) -> Optional[str]:
 # expressions — changes the key.  Bounded FIFO (each entry ≤11k tuples);
 # ≈ the dispatch path's per-EngineSession grid cache, at the operator level.
 _SAMPLE_CACHE: dict[int, list[tuple]] = {}
+_SAMPLE_CACHE_MAX = 32
 
 
 def clear_bbox_sample_cache() -> None:
-    """Clear the per-plan sample memos (bbox grid sample AND the
-    exec-mode mean-points stats — both key on semanticHash, which does
-    not see file rewrites at the same path)."""
+    """Clear the bbox-sample memo (it keys on semanticHash, which does not
+    see file rewrites at the same path)."""
     _SAMPLE_CACHE.clear()
-    _MEAN_POINTS_CACHE.clear()
 
 
 def _cached_sample(pool: DataFrame) -> list[tuple]:
-    def compute() -> list[tuple]:
-        rows = pool.collect()
-        return [
-            (r[0], r[1], r[2], r[3])
-            for r in rows[: MAX_BBOX_SAMPLES + MIN_BBOX_SAMPLES]
-        ]
-
-    return _plan_memoized(_SAMPLE_CACHE, pool, compute)
+    """``pool``'s collected bbox rows, memoized by the semantic hash of its
+    plan with bounded FIFO eviction."""
+    try:
+        key: Optional[int] = pool.semanticHash()
+    except Exception:
+        key = None
+    if key is not None and key in _SAMPLE_CACHE:
+        return _SAMPLE_CACHE[key]
+    rows = pool.collect()
+    out = [(r[0], r[1], r[2], r[3]) for r in rows[: MAX_BBOX_SAMPLES + MIN_BBOX_SAMPLES]]
+    if key is not None:
+        if len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
+            _SAMPLE_CACHE.pop(next(iter(_SAMPLE_CACHE)))
+        _SAMPLE_CACHE[key] = out
+    return out
 
 
 def collect_bbox_sample_cols(src: DataFrame, bbox: tuple) -> list[tuple]:
@@ -814,7 +601,6 @@ def spatial_join(
     left_bbox: Optional[tuple] = None,
     right_bbox: Optional[tuple] = None,
     refine: str = "auto",
-    exec_mode: str = "speculative",
     extra_condition: Optional[str] = None,
 ) -> DataFrame:
     """Spatial join of two DataFrames with WKB geometry columns.
@@ -842,14 +628,9 @@ def spatial_join(
     shape for point/rect workloads at scale; results are exact under the
     assertion, callers with arbitrary polygons must keep "auto").
 
-    exec_mode: refinement execution mode (≈ ``ExecutionMode``, option.rs:
-    230-243 + refine/exec_mode_selector.rs).  ``"speculative"`` (default)
-    samples the probe (left) side's GeoStatistics and prepares geometries
-    only when they are complex (mean points > 50, refine/geo.rs:23-40);
-    ``"prepare"`` / ``"none"`` force the choice.  Results are identical in
-    every mode — preparation memoizes derived segment structures per
-    distinct geometry, trading memory for per-pair rebuild time.  The
-    chosen mode is recorded on the result as ``_spatial_exec_mode``.
+    The exact refine is the registered ``ST_*`` predicate's own UDF
+    (:func:`~dataclod_spark.functions.spatial_udfs.predicate_udf`), so the
+    operator and SQL evaluate one kernel.
 
     extra_condition: optional SQL boolean expression over the OUTPUT
     column names (left columns + overlap-renamed ``*_right`` columns)
@@ -865,10 +646,6 @@ def spatial_join(
         raise ValueError("dwithin requires distance=")
     if refine not in ("auto", "none"):
         raise ValueError(f"refine must be 'auto' or 'none', got {refine!r}")
-    if exec_mode not in ("speculative", "prepare", "none"):
-        raise ValueError(
-            f"exec_mode must be 'speculative', 'prepare' or 'none', got {exec_mode!r}"
-        )
     expand = float(distance or 0.0)
 
     lcols = left.columns
@@ -932,27 +709,16 @@ def spatial_join(
     verdict = F.expr(_verdict_sql(predicate, lb, rb, expand))
     if refine == "none":
         matched = cand.filter(verdict)
-        chosen_mode = "none"
     else:
-        if exec_mode == "speculative":
-            # probe-side stats drive the choice (refine/geo.rs selects on
-            # probe stats only); distance predicates and bbox-declared-exact
-            # probe sides (points/rects by contract) resolve without the
-            # sampling job — select_without_probe_stats parity
-            if predicate == "dwithin" or _asserted_exact(left_bbox):
-                chosen_mode = "none"
-            else:
-                chosen_mode = select_exec_mode(
-                    predicate, collect_mean_points(left, left_geom)
-                )
-        else:
-            chosen_mode = exec_mode
-        refine_udf = _refine_udf(predicate, distance, prepare=chosen_mode == "prepare")
         both_exact = F.expr("l.__bbe AND r.__bbe")
-        refined = refine_udf(
+        args = [
             F.when(~both_exact, F.col(f"l.`{left_geom}`")),
             F.when(~both_exact, F.col(f"r.`{right_geom}`")),
-        )
+        ]
+        if predicate == "dwithin":
+            args.append(F.lit(expand))
+        # SQL's name for the predicate: covered_by -> ST_CoveredBy
+        refined = predicate_udf("st_" + predicate.replace("_", ""))(*args)
         matched = cand.filter(
             F.when(both_exact, verdict).otherwise(F.coalesce(refined, F.lit(False)))
         )
@@ -973,20 +739,14 @@ def spatial_join(
         # join *filter* runs on candidate pairs inside the join).
         pairs = pairs.filter(F.expr(extra_condition))
 
-    def _finish(df0: DataFrame) -> DataFrame:
-        # expose the refine-mode decision for tests/metrics (≈ the
-        # reference surfacing ExecutionMode::as_gauge in join metrics)
-        df0._spatial_exec_mode = chosen_mode
-        return df0
-
     if how == "inner":
-        return _finish(pairs.drop("__lid", "__rid"))
+        return pairs.drop("__lid", "__rid")
     if how == "left_semi":
         keep = pairs.select("__lid").distinct()
-        return _finish(l.join(keep, "__lid", "left_semi").select(*lcols))
+        return l.join(keep, "__lid", "left_semi").select(*lcols)
     if how == "left_anti":
         keep = pairs.select("__lid").distinct()
-        return _finish(l.join(keep, "__lid", "left_anti").select(*lcols))
+        return l.join(keep, "__lid", "left_anti").select(*lcols)
 
     if how in ("left", "full"):
         unmatched_l = l.join(pairs.select("__lid").distinct(), "__lid", "left_anti")
@@ -1002,11 +762,11 @@ def spatial_join(
         )
     res = pairs.drop("__lid", "__rid")
     if how == "left":
-        return _finish(res.unionByName(null_r))
+        return res.unionByName(null_r)
     if how == "right":
-        return _finish(res.unionByName(null_l))
+        return res.unionByName(null_l)
     if how == "full":
-        return _finish(res.unionByName(null_r).unionByName(null_l))
+        return res.unionByName(null_r).unionByName(null_l)
     raise ValueError(f"unsupported how={how}")
 
 

@@ -1140,24 +1140,6 @@ _FROM_SINGLE_RE = re.compile(
 _JOIN_TOKEN_RE = re.compile(r"\bJOIN\b", re.IGNORECASE)
 
 
-def _axis_rect_bounds(g) -> Optional[tuple[float, float, float, float]]:
-    """(xmin, ymin, xmax, ymax) when the geometry is exactly its envelope
-    (an axis-aligned rectangle, point, or degenerate axis segment)."""
-    from dataclod_spark.geo.algos import bounds as gbounds
-
-    b = gbounds(g)
-    if b is None:
-        return None
-    x0, y0, x1, y1 = b
-    if g.kind == "Point":
-        return b
-    if g.kind == "Polygon" and len(g.data) == 1:
-        corners = {(x0, y0), (x0, y1), (x1, y0), (x1, y1)}
-        if set(g.data[0]) == corners:
-            return b
-    return None
-
-
 def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
     """Inject codegen bbox conjuncts for spatial predicates against literal
     geometries — the PostGIS "region query" (``WHERE ST_Intersects(t.geom,
@@ -1204,8 +1186,8 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
     # matches that sit outside every (SELECT ...) span
     sub_spans = _subquery_spans(sql)
 
-    from dataclod_spark.geo.core import wkt_parse
-    from dataclod_spark.geo.algos import bounds as gbounds
+    from dataclod_spark.geo.core import POINT, wkt_parse
+    from dataclod_spark.geo.algos import axis_rect, bounds as gbounds
     from dataclod_spark.operators.spatial_join import (
         _sql_double,
         _tighten_sql,
@@ -1261,7 +1243,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
         )
         changed = True
         # exact elimination: covering is exact (bbox IS the geometry) and
-        # the literal is an axis rectangle → the shared JVM verdict IS the
+        # the literal is a point or an axis rectangle → the JVM verdict IS the
         # predicate (NOT the closed-interval covering conjuncts alone:
         # ST_Within is false for a point ON the boundary, so within/
         # contains need the verdict table's open-interval point cases).  The
@@ -1269,7 +1251,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
         # that reaches the parquet scan as PushedFilters.
         if (
             meta.exact
-            and _axis_rect_bounds(lit) is not None
+            and (lit.kind == POINT or axis_rect(lit) is not None)
             and key in ("intersects", "within", "covered_by", "contains", "covers")
         ):
             return f"({conj} AND {_verdict_sql(key, col_box, lit_box)})"

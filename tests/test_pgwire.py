@@ -850,13 +850,13 @@ def test_st_sql_through_wire_matches_direct(client, engine):
     import re
     from pathlib import Path
 
-    from dataclod_spark.functions.spatial_udfs import FUNCTIONS
+    from dataclod_spark.functions.spatial_udfs import FUNCTIONS, PREDICATES
     from dataclod_spark.server.pgwire import _text_encode
 
     text = (Path(__file__).parent / "data" / "st_sql.txt").read_text()
     stmts = [ln for ln in text.splitlines() if ln.strip() and not ln.startswith("--")]
     calls = {m.lower() for m in re.findall(r"\b(ST_\w+)\s*\(", "\n".join(stmts))}
-    missing = [n for n in FUNCTIONS if n.startswith("ST_") and n.lower() not in calls]
+    missing = [n for n in [*FUNCTIONS, *PREDICATES] if n.startswith("ST_") and n.lower() not in calls]
     assert not missing, f"st_sql.txt has no call to {missing}"
 
     mismatches = []

@@ -209,3 +209,58 @@ def test_seg_intersect_collinear_touch_cases():
     assert hit((0, 0), (1, 1), (1, 1), (2, 0))
     # near-miss: a1 collinear with b's line but outside b, segments apart
     assert not hit((5, 0), (6, 2), (0, 0), (2, 0))
+
+
+class TestAxisRectangleRings:
+    """A bowtie or a spike ring spans the four corners of its bbox but is
+    not that box.  Marking it bbox-exact let the JVM verdict (a plain box
+    test) decide its pairs: the operator and the exact-covering pushdown
+    returned every point of the box.  Each path must return the scalar
+    predicate's rows."""
+
+    POLYS = {
+        "bowtie": "POLYGON((0 0,1 1,0 1,1 0,0 0))",
+        "spike": "POLYGON((0 0,1 0,1 1,1 0,0 0))",
+    }
+    POINTS = [(1, 0.1, 0.5), (2, 0.5, 0.5), (3, 0.5, 0.1), (4, 0.5, 0.0)]
+
+    def test_every_path_matches_scalar(self, engine):
+        from pyspark.sql import functions as F
+
+        from dataclod_spark.operators.spatial_join import point_wkb, spatial_join
+
+        spark = engine.spark
+        pts = spark.createDataFrame(self.POINTS, "pid long, px double, py double").select(
+            "pid", "px", "py", point_wkb(F.col("px"), F.col("py")).alias("geom")
+        )
+        pts.createOrReplaceTempView("rect_ring_pts")
+        engine.register_bbox("rect_ring_pts", "geom", "px", "py", "px", "py", exact=True)
+        try:
+            for name, wkt in self.POLYS.items():
+                poly = W(wkt)
+                want = sorted(
+                    pid for pid, x, y in self.POINTS
+                    if P.intersects(W(f"POINT({x} {y})"), poly)
+                )
+                polys = spark.sql(f"SELECT 1 AS rid, ST_GeomFromText('{wkt}') AS geom")
+                polys.createOrReplaceTempView("rect_ring_polys")
+                region = (
+                    "SELECT pid FROM rect_ring_pts t WHERE "
+                    f"ST_Intersects(t.geom, ST_GeomFromText('{wkt}'))"
+                )
+                got = {
+                    "operator": spatial_join(pts, polys, "intersects"),
+                    "pushdown": engine.sql(region),
+                    "plain": spark.sql(region),
+                    "dispatch": engine.sql(
+                        "SELECT p.pid FROM rect_ring_pts p JOIN rect_ring_polys b "
+                        "ON ST_Intersects(p.geom, b.geom)"
+                    ),
+                }
+                for path, df in got.items():
+                    assert sorted(r.pid for r in df.collect()) == want, (name, path)
+            assert want == [4]  # the spike holds only the point on its edge
+        finally:
+            engine._bbox_meta.pop("rect_ring_pts", None)
+            spark.catalog.dropTempView("rect_ring_pts")
+            spark.catalog.dropTempView("rect_ring_polys")

@@ -257,19 +257,6 @@ def test_bbox_sample_cache_hits_on_identical_build_side(spark):
     SJ.clear_bbox_sample_cache()
 
 
-def test_exec_mode_selector_unit():
-    """refine/geo.rs:23-40 parity: distance predicates never prepare;
-    relation predicates flip on the 50-point mean threshold; unknown
-    stats default to the unprepared mode."""
-    from dataclod_spark.operators.spatial_join import select_exec_mode
-
-    assert select_exec_mode("dwithin", 5000.0) == "none"
-    assert select_exec_mode("intersects", 1.0) == "none"
-    assert select_exec_mode("intersects", 50.0) == "none"
-    assert select_exec_mode("intersects", 50.5) == "prepare"
-    assert select_exec_mode("within", None) == "none"
-
-
 def _ngon(cx, cy, r, n):
     import math as m
 
@@ -281,37 +268,43 @@ def _ngon(cx, cy, r, n):
     return GC.Geometry(GC.POLYGON, [ring])
 
 
-def test_speculative_mode_flips_on_geometry_complexity(spark):
-    """GeoStatistics drive the refine mode (VERDICT r3 #8): a point-heavy
-    probe side selects 'none', a complex-polygon probe side (64-gons,
-    mean points > 50) selects 'prepare', and the join results are
-    IDENTICAL across speculative/forced-none/forced-prepare."""
-    from dataclod_spark.operators.spatial_join import spatial_join
-
+def _ngon_workload(spark):
     rnd = random.Random(7)
     boxes = [(i, make_envelope(x, y, x + 10, y + 10))
              for i, (x, y) in enumerate((rnd.uniform(0, 80), rnd.uniform(0, 80)) for _ in range(12))]
-    points = [(i, make_point(rnd.uniform(0, 95), rnd.uniform(0, 95))) for i in range(60)]
     polys = [(i, _ngon(rnd.uniform(0, 90), rnd.uniform(0, 90), 4.0, 64)) for i in range(60)]
-    bdf = _df(spark, boxes).withColumnRenamed("id", "bid")
+    return (boxes, polys, _df(spark, boxes).withColumnRenamed("id", "bid"),
+            _df(spark, polys).withColumnRenamed("id", "pid"))
 
-    pdf = _df(spark, points).withColumnRenamed("id", "pid")
-    j_pt = spatial_join(pdf, bdf, "intersects", cell_target=16)
-    assert j_pt._spatial_exec_mode == "none"
 
-    gdf = _df(spark, polys).withColumnRenamed("id", "pid")
-    j_spec = spatial_join(gdf, bdf, "intersects", cell_target=16)
-    assert j_spec._spatial_exec_mode == "prepare"
+def test_complex_polygon_join_matches_brute_force(spark):
+    """64-gon probes (every geometry prepared in the refine kernel) against
+    boxes: the intersects and dwithin joins equal the brute force."""
+    from dataclod_spark.operators.spatial_join import spatial_join
 
+    boxes, polys, bdf, gdf = _ngon_workload(spark)
+    j = spatial_join(gdf, bdf, "intersects", cell_target=16)
     expected = _brute_pairs(polys, boxes, GP.intersects)
-    for mode in ("speculative", "none", "prepare"):
-        j = spatial_join(gdf, bdf, "intersects", cell_target=16, exec_mode=mode)
-        assert {(r.pid, r.bid) for r in j.collect()} == expected, mode
+    assert {(r.pid, r.bid) for r in j.collect()} == expected
     assert expected  # non-degenerate workload
 
-    # distance predicate: never prepares, regardless of complexity
     j_dw = spatial_join(gdf, bdf, "dwithin", distance=2.0, cell_target=16)
-    assert j_dw._spatial_exec_mode == "none"
+    expected_dw = _brute_pairs(polys, boxes, lambda a, b: GP.dwithin(a, b, 2.0))
+    assert {(r.pid, r.bid) for r in j_dw.collect()} == expected_dw
+    assert expected_dw >= expected
+
+
+def test_operator_build_runs_only_the_grid_sample_job(spark):
+    """Building a join with a non-exact probe side runs only the grid's
+    bbox-sample collect (3 jobs: its limits run incrementally); no
+    probe-side statistics job picks a refine mode (it took 4 more)."""
+    from dataclod_spark.operators import spatial_join as SJ
+    from dataclod_spark.testing import count_jobs
+
+    _, _, bdf, gdf = _ngon_workload(spark)
+    SJ.clear_bbox_sample_cache()
+    assert count_jobs(spark, lambda: SJ.spatial_join(gdf, bdf, "intersects", cell_target=16)) == 3
+    SJ.clear_bbox_sample_cache()
 
 
 def test_dbscan_planted_blobs(spark):
