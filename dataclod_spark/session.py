@@ -155,6 +155,13 @@ def get_spark(
     may run on, and a driver heap of half the physical memory, at most
     24g.  ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override
     both for a deployment.
+
+    The driver JVM starts with ``-Duser.timezone=UTC
+    -XX:CICompilerCount=2`` (one C1 and one C2 compiler thread), set as
+    ``spark.driver.defaultJavaOptions``.  A deployment overrides either
+    by passing its own ``spark.driver.extraJavaOptions`` in
+    ``extra_conf`` (for example ``-XX:CICompilerCount=4``): Spark places
+    those after the defaults, and the JVM keeps the last value.
     """
     import os
 
@@ -187,7 +194,16 @@ def get_spark(
         # repeated query recompiles all of its own
         .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
+        # Default, not extra, JVM options: Spark puts a caller's
+        # spark.driver.extraJavaOptions after these, so the caller's add to
+        # them (HotSpot keeps an option's last value) instead of replacing
+        # the time zone.  One C1 and one C2 compiler thread: with a single
+        # C2 thread, methods that cool off leave its queue uncompiled, which
+        # cuts cold compile CPU, while code that stays hot still reaches C2
+        # (SCALE.md, "JVM compile policy").  C1 only
+        # (-XX:TieredStopAtLevel=1) is not used: it doubles steady time at
+        # sf0.1.
+        .config("spark.driver.defaultJavaOptions", "-Duser.timezone=UTC -XX:CICompilerCount=2")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -164,9 +164,8 @@ def test_winnow_guarantee_property(spark):
     >= k + w - 1 (= 6 here) share at least one fingerprint; disjoint-token
     docs share none."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
 
-    from dataclod_spark.functions.text import winnow_fingerprints
+    from dataclod_spark.functions.text import winnow_fingerprint_rows
 
     shared = "alpha beta gamma delta epsilon zeta"  # 6-token shared run
     df = spark.createDataFrame(
@@ -176,10 +175,9 @@ def test_winnow_guarantee_property(spark):
             Row(doc_id=3, text="completely different words everywhere here now"),
         ]
     )
-    out = {
-        r["doc_id"]: set(r["f"])
-        for r in df.select("doc_id", winnow_fingerprints(F.col("text")).alias("f")).collect()
-    }
+    out: dict[int, set] = {}
+    for r in winnow_fingerprint_rows(df).collect():
+        out.setdefault(r["id"], set()).add(r["fp"])
     assert out[1] & out[2], "shared 6-token run must share a fingerprint"
     assert not (out[1] & out[3]) and not (out[2] & out[3])
 
@@ -268,15 +266,14 @@ def test_scd2_schema_mismatch_raises(spark):
 
 def test_winnow_matches_python_reference(spark):
     """Third-implementation differential: the zip-with-shifted-slices
-    winnowing expression vs a straightforward pure-Python winnow over the
+    winnowing rows vs a straightforward pure-Python winnow over the
     same token-value convention (md5-derived 32-bit values, base-31
     polynomial k-grams, window minima, distinct)."""
     import hashlib
 
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
 
-    from dataclod_spark.functions.text import winnow_fingerprints
+    from dataclod_spark.functions.text import winnow_fingerprint_rows
 
     def py_winnow(text: str, k: int = 3, w: int = 4):
         toks = " ".join(text.lower().split()).split(" ") if text.strip() else []
@@ -305,12 +302,11 @@ def test_winnow_matches_python_reference(spark):
         "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3,
     ]
     df = spark.createDataFrame([Row(i=i, text=t) for i, t in enumerate(texts)])
-    got = {
-        r["i"]: sorted(r["f"])
-        for r in df.select("i", winnow_fingerprints(F.col("text")).alias("f")).collect()
-    }
+    got: dict[int, list] = {}
+    for r in winnow_fingerprint_rows(df, id_col="i").collect():
+        got.setdefault(r["id"], []).append(r["fp"])
     for i, t in enumerate(texts):
-        assert got[i] == sorted(set(py_winnow(t))), f"text #{i}"
+        assert sorted(got.get(i, [])) == sorted(set(py_winnow(t))), f"text #{i}"
 
 
 def test_x11_x15_single_corpus_scan(spark):
