@@ -140,6 +140,11 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType
     return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols}) LIMIT {len(rows)}").to(schema)
 
 
+# HotSpot logs to stdout by default: a dump's [warning][cds] lines would
+# land after the program's last line of output
+_JAVA_OPTIONS = "-Duser.timezone=UTC -XX:CICompilerCount=2 -Xlog:disable -Xlog:all=warning:stderr"
+
+
 def get_spark(
     app_name: str = "dataclod_spark",
     master: str | None = None,
@@ -161,10 +166,37 @@ def get_spark(
     ``spark.driver.defaultJavaOptions``.  A deployment overrides either
     by passing its own ``spark.driver.extraJavaOptions`` in
     ``extra_conf`` (for example ``-XX:CICompilerCount=4``): Spark places
-    those after the defaults, and the JVM keeps the last value.
+    those after the defaults, and the JVM keeps the last value.  HotSpot's
+    own log lines go to stderr, never to the program's stdout.
+
+    The driver JVM maps Spark's classes from a dynamic CDS archive
+    (``dataclod_spark.jvm_cds``) instead of loading and verifying them.
+    The archive is keyed by the ``java`` that ``spark-class`` runs (its
+    ``libjvm.so`` included), ``SPARK_HOME``, the name, size and mtime of
+    every jar in ``$SPARK_HOME/jars``, and ``spark.driver.extraClassPath``,
+    and kept in ``${XDG_CACHE_HOME:-~/.cache}/dataclod_spark/cds/``, which
+    must be the user's own, mode 0700.  The first launch per key dumps the
+    archive at its JVM's exit; the next launch publishes it and maps it.
+    The archive is used only when the conf directory
+    (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``) holds nothing but
+    ``*.template`` files: that launch runs with ``SPARK_CONF_DIR`` pointed
+    at an empty directory beside the archive, since the JVM rejects a
+    non-empty directory on an archived class path.  A deployment opts out
+    with ``-Xshare:off`` in ``spark.driver.extraJavaOptions``; a caller
+    naming ``SharedArchiveFile`` there brings its own archive.  A launch
+    that fails with CDS flags is retried without them, and when that
+    launch works the archive is deleted.
     """
     import os
 
+    from pyspark import SparkContext
+
+    from dataclod_spark import jvm_cds
+
+    extra_conf = extra_conf or {}
+    # a JVM is launched only when the process has no gateway to reach yet
+    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    cds = jvm_cds.plan(extra_conf) if launches else None
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER")
@@ -203,11 +235,27 @@ def get_spark(
         # (SCALE.md, "JVM compile policy").  C1 only
         # (-XX:TieredStopAtLevel=1) is not used: it doubles steady time at
         # sf0.1.
-        .config("spark.driver.defaultJavaOptions", "-Duser.timezone=UTC -XX:CICompilerCount=2")
+        .config("spark.driver.defaultJavaOptions", _JAVA_OPTIONS)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if cds is None:
+        spark = builder.getOrCreate()
+    else:
+        try:
+            with cds.launching():
+                spark = builder.config(
+                    "spark.driver.defaultJavaOptions", f"{_JAVA_OPTIONS} {cds.java_options}"
+                ).getOrCreate()
+        except Exception:
+            if SparkContext._gateway is not None:
+                raise
+            cds.abandon()
+            spark = builder.config("spark.driver.defaultJavaOptions", _JAVA_OPTIONS).getOrCreate()
+            cds.refused()
+        else:
+            if cds.claim:
+                cds.started(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -16,7 +16,14 @@ of the same figures:
 - ``GC``: the collector threads (``GC Thread#N``, ``G1 ...``);
 - ``executor``: Spark's task threads (``Executor task launch worker``);
 - ``py4j``: ``Thread-N``, the threads py4j serves Python calls on;
-- ``other``: the rest (class loading on ``main``, Spark's own services).
+- ``main``: the thread named ``java``, which runs JVM start and the class
+  loading before the py4j gateway is up;
+- ``exchange``: AQE's ``shuffle-exchange-*``, ``broadcast-exchange-*``
+  and ``ResultQueryStage*`` pools, where stage planning and codegen run;
+- ``other``: the rest (Spark's own services).
+
+Linux keeps the first 15 characters of a thread name, so the groups match
+on those.
 
 Only reads under ``/proc``; exits with the command's return code.
 """
@@ -32,7 +39,7 @@ import time
 
 TICK_S = 1.0 / os.sysconf("SC_CLK_TCK")
 POLL_S = 0.25
-GROUPS = ("C2", "C1", "GC", "executor", "py4j", "other")
+GROUPS = ("C2", "C1", "GC", "executor", "py4j", "main", "exchange", "other")
 
 
 def _stat(path: str) -> tuple[str, list[str]] | None:
@@ -74,6 +81,10 @@ def group(name: str) -> str:
         return "executor"
     if re.fullmatch(r"Thread-\d+", name):
         return "py4j"
+    if name == "java":
+        return "main"
+    if name.startswith(("shuffle-exchang", "broadcast-excha", "ResultQueryStag")):
+        return "exchange"
     return "other"
 
 

@@ -10,6 +10,7 @@ JSON.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -38,22 +39,35 @@ def test_compiler_threads_and_timezone_in_effect(spark):
     assert got["timezone"] == "UTC"
 
 
-def test_caller_java_options_add_to_the_defaults():
-    """A caller's extraJavaOptions no longer replace the defaults: under a
-    non-UTC ``TZ`` the JVM still runs in UTC with one C2 thread, and the
-    caller's own option is in effect too."""
+def run_script(**env) -> dict:
+    """This module's JSON line, run as a script under a non-UTC ``TZ``."""
     env = {
         **os.environ,
         "TZ": "Pacific/Auckland",
         "SPARK_GRAFT_CPUS": "2",
         "SPARK_GRAFT_DRIVER_MEM": "1g",
+        **env,
     }
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__)],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=300, check=True,
     ).stdout
-    got = json.loads(out.strip().splitlines()[-1])
-    assert got == {"CICompilerCount": "2", "timezone": "UTC", "x": "y"}
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def test_caller_java_options_add_to_the_defaults():
+    """A caller's extraJavaOptions no longer replace the defaults: under a
+    non-UTC ``TZ`` the JVM still runs in UTC with one C2 thread, and the
+    caller's own option is in effect too."""
+    assert run_script() == {"CICompilerCount": "2", "timezone": "UTC", "x": "y"}
+
+
+def test_caller_java_options_add_to_the_defaults_on_a_cold_cds_cache(tmp_path):
+    """The same with no class-data archive yet: the JVM dumps one at its
+    exit, and its log lines stay off stdout, whose last line is still the
+    program's own."""
+    assert run_script(XDG_CACHE_HOME=str(tmp_path)) == {"CICompilerCount": "2", "timezone": "UTC", "x": "y"}
+    assert glob.glob(os.path.join(tmp_path, "dataclod_spark", "cds", "*.part"))
 
 
 if __name__ == "__main__":
