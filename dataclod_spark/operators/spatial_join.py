@@ -69,15 +69,15 @@ MIN_AUTO_CELLS = 64
 MAX_AUTO_CELLS = 65_536
 
 
-def auto_cell_target(sample: list[tuple]) -> int:
+def auto_cell_target(sample: list[tuple], rows: float) -> int:
     """Pick the grid cell budget from the bbox sample's GeoStatistics.
 
     Two constraints, both computed from the (≤11k-row) driver-side sample —
     no extra job over the data:
 
-    * **row budget**: estimated build rows / TARGET_BUILD_ROWS_PER_CELL,
-      clamped to [MIN_AUTO_CELLS, MAX_AUTO_CELLS] — more rows, finer grid
-      (the sample size inverts the 1%/10k-cap sampling policy);
+    * **row budget**: ``rows`` (the sampled side's row count, as
+      :func:`bbox_sample` estimates it) / TARGET_BUILD_ROWS_PER_CELL,
+      clamped to [MIN_AUTO_CELLS, MAX_AUTO_CELLS] — more rows, finer grid;
     * **explode budget**: a cell must not be smaller than the mean bbox,
       or every build row explodes into many cells (the reference's
       partitioner derives leaf extents from the same sampled boxes) —
@@ -99,9 +99,8 @@ def auto_cell_target(sample: list[tuple]) -> int:
     shape_cap = (ext_w / mean_w if mean_w > 0 else float("inf")) * (
         ext_h / mean_h if mean_h > 0 else float("inf")
     )
-    est_rows = max(n, (n - MIN_BBOX_SAMPLES) / BBOX_SAMPLE_RATE)
     rows_cells = min(
-        max(est_rows / TARGET_BUILD_ROWS_PER_CELL, MIN_AUTO_CELLS), MAX_AUTO_CELLS
+        max(max(n, rows) / TARGET_BUILD_ROWS_PER_CELL, MIN_AUTO_CELLS), MAX_AUTO_CELLS
     )
     return max(1, int(min(shape_cap, rows_cells)))
 
@@ -495,7 +494,7 @@ def _tighten_sql(key: str, lf: tuple, rf: tuple) -> Optional[str]:
 # semantic hash, so any change to the plan — source files, filters,
 # expressions — changes the key.  Bounded FIFO (each entry ≤11k tuples);
 # ≈ the dispatch path's per-EngineSession grid cache, at the operator level.
-_SAMPLE_CACHE: dict[int, list[tuple]] = {}
+_SAMPLE_CACHE: dict[int, tuple[list[tuple], float]] = {}
 _SAMPLE_CACHE_MAX = 32
 
 
@@ -505,17 +504,61 @@ def clear_bbox_sample_cache() -> None:
     _SAMPLE_CACHE.clear()
 
 
-def _cached_sample(pool: DataFrame) -> list[tuple]:
-    """``pool``'s collected bbox rows, memoized by the semantic hash of its
-    plan with bounded FIFO eviction."""
+def _bbox_rows(df: DataFrame) -> list[tuple]:
+    return [(r[0], r[1], r[2], r[3]) for r in df.collect()]
+
+
+def bbox_sample(
+    src: DataFrame, geom_col: str, bbox: Optional[tuple] = None
+) -> tuple[list[tuple], float]:
+    """Seeded bbox sample of one join side and the side's estimated row
+    count (≈ BoundingBoxSampler, ``join/utils/bbox_sampler.rs:61-88`` +
+    ``option.rs:60-70``: 1% target, 1k min, 10k max).
+
+    ``bbox`` (SQL expressions over ``src``'s columns, see
+    :func:`spatial_join`) makes the sample pure JVM; without it the bbox
+    UDF runs over ``geom_col`` of the sampled rows only.
+
+    One Spark job and no shuffle when the side reads local parquet files:
+    their footers (:func:`~dataclod_spark.registry.scan_layout`) give the
+    row count ``R`` with no job.  ``R`` ≤ 11k collects the whole side
+    (in one task, limited to 11k rows); otherwise a Bernoulli sample with fraction
+    clamp(1%, 1k/R, 10k/R) is collected with no ``limit`` (a limit's
+    collect runs as incremental jobs) and capped at 11k rows on the
+    driver.  A side of unknown size (driver-held rows, remote or
+    non-parquet files) first takes a head ``limit(1k)``, and a Bernoulli
+    sample under 500 rows (a filter above the scan kept few of the
+    footers' rows) takes one after it: a head that comes back short is
+    the whole side, a full one joins the sample (for an unknown size the
+    1% sample, limited to 10k rows).  No shuffle either way.
+
+    The row count is the whole side's size, or the sample size over its
+    fraction.  Memoized in ``_SAMPLE_CACHE``.
+    """
+    if bbox is not None:
+        base = src.selectExpr(*_flat_bbox_sql(bbox)[:4]).dropna()
+
+        def to_bbox(df: DataFrame) -> DataFrame:
+            return df
+
+    else:
+        base = src.select(F.col(geom_col).alias("__g")).dropna()
+
+        def to_bbox(df: DataFrame) -> DataFrame:
+            return (
+                df.select(_bbox_udf(F.col("__g")).alias("__bb"))
+                .selectExpr(*_flat_bbox_sql(_UDF_BBOX)[:4])
+                .dropna()
+            )
+
+    whole = to_bbox(base)
     try:
-        key: Optional[int] = pool.semanticHash()
+        key: Optional[int] = whole.semanticHash()
     except Exception:
         key = None
     if key is not None and key in _SAMPLE_CACHE:
         return _SAMPLE_CACHE[key]
-    rows = pool.collect()
-    out = [(r[0], r[1], r[2], r[3]) for r in rows[: MAX_BBOX_SAMPLES + MIN_BBOX_SAMPLES]]
+    out = _draw_sample(src, base, whole, to_bbox)
     if key is not None:
         if len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
             _SAMPLE_CACHE.pop(next(iter(_SAMPLE_CACHE)))
@@ -523,43 +566,48 @@ def _cached_sample(pool: DataFrame) -> list[tuple]:
     return out
 
 
-def collect_bbox_sample_cols(src: DataFrame, bbox: tuple) -> list[tuple]:
-    """Bbox sample from a bbox operand (SQL expressions over ``src``'s
-    columns) — same seeded sample/limit policy as
-    :func:`collect_bbox_sample`, zero Python."""
-    base = src.selectExpr(*_flat_bbox_sql(bbox)[:4]).dropna()
-    samp = base.sample(fraction=BBOX_SAMPLE_RATE, seed=SAMPLE_SEED).limit(
-        MAX_BBOX_SAMPLES
-    )
-    pool = samp.unionAll(base.limit(MIN_BBOX_SAMPLES)).coalesce(1)
-    return _cached_sample(pool)
+def _draw_sample(
+    src: DataFrame, base: DataFrame, whole: DataFrame, to_bbox
+) -> tuple[list[tuple], float]:
+    """:func:`bbox_sample`'s jobs: ``base`` is the side's sampled column(s),
+    ``whole`` its bbox rows and ``to_bbox`` the step between them."""
+    from dataclod_spark.registry import scan_layout
+
+    cap = MAX_BBOX_SAMPLES + MIN_BBOX_SAMPLES
+    layout = scan_layout(src.sparkSession, src.inputFiles())
+    if layout is not None and layout.rows <= cap:
+        # one task over every split: a limit over several partitions
+        # collects in incremental jobs
+        rows = _bbox_rows(whole.coalesce(1).limit(cap))
+        return rows, float(len(rows))
+    frac = BBOX_SAMPLE_RATE
+    head: list[tuple] = []
+    if layout is None:
+        head = _bbox_rows(whole.limit(MIN_BBOX_SAMPLES))
+        if len(head) < MIN_BBOX_SAMPLES:
+            return head, float(len(head))
+        samp = _bbox_rows(
+            to_bbox(base.sample(fraction=frac, seed=SAMPLE_SEED)).limit(MAX_BBOX_SAMPLES)
+        )
+    else:
+        frac = min(max(frac, MIN_BBOX_SAMPLES / layout.rows), MAX_BBOX_SAMPLES / layout.rows)
+        samp = _bbox_rows(to_bbox(base.sample(fraction=frac, seed=SAMPLE_SEED)))[:cap]
+        if len(samp) < MIN_BBOX_SAMPLES // 2:
+            head = _bbox_rows(whole.limit(MIN_BBOX_SAMPLES))
+            if len(head) < MIN_BBOX_SAMPLES:
+                return head, float(len(head))
+    rows = samp + head
+    return rows, max(len(rows), len(samp) / frac)
 
 
 def collect_bbox_sample(src: DataFrame, geom_col: str) -> list[tuple]:
-    """Seeded 1% bbox sample, 10k cap / 1k min (≈ BoundingBoxSampler,
-    ``join/utils/bbox_sampler.rs:61-88`` + ``option.rs:60-70``).
+    """:func:`bbox_sample`'s rows for a geometry column."""
+    return bbox_sample(src, geom_col)[0]
 
-    Sampling happens on the raw geometry column, so the bbox UDF runs only
-    over sampled rows; for small inputs (where 1% is under the minimum) the
-    head of the data is used instead — at that size partition skew is moot.
-    """
-    base = src.select(F.col(geom_col).alias("__g")).dropna()
-    # one job: the seeded 1% sample plus a fixed head slice.  For large
-    # inputs the head is a ≤10% admixture of the 10k-cap sample; for small
-    # inputs (where 1% yields almost nothing) the head alone provides the
-    # minimum sample — no second fallback pass over the data.  The ≤11k
-    # pooled rows are coalesced to ONE partition before the bbox UDF so the
-    # sampling job costs one task + one Python worker, not one per input
-    # partition.
-    samp = base.sample(fraction=BBOX_SAMPLE_RATE, seed=SAMPLE_SEED).limit(
-        MAX_BBOX_SAMPLES
-    )
-    pool = samp.unionAll(base.limit(MIN_BBOX_SAMPLES)).coalesce(1)
-    return _cached_sample(
-        pool.select(_bbox_udf(F.col("__g")).alias("__bb"))
-        .selectExpr(*_flat_bbox_sql(_UDF_BBOX)[:4])
-        .dropna()
-    )
+
+def collect_bbox_sample_cols(src: DataFrame, bbox: tuple) -> list[tuple]:
+    """:func:`bbox_sample`'s rows for a bbox operand, zero Python."""
+    return bbox_sample(src, "", bbox)[0]
 
 
 def _sample_grid(
@@ -571,22 +619,42 @@ def _sample_grid(
     probe_bbox: Optional[tuple],
     cell_target: Optional[int],
 ) -> _Grid:
-    """Quantile grid from a seeded 1% sample of the build side, 10k cap /
-    1k min (option.rs:60-70), falling back to the probe side when the
-    build side has no geometries.  ``cell_target`` None sizes the grid
-    from the sample (:func:`auto_cell_target`)."""
+    """Quantile grid from a :func:`bbox_sample` of the build side, falling
+    back to the probe side when the build side has no geometries.
+    ``cell_target`` None sizes the grid from the sample
+    (:func:`auto_cell_target`)."""
+    s, rows = bbox_sample(build, build_geom, build_bbox)
+    if not s:
+        s, rows = bbox_sample(probe, probe_geom, probe_bbox)
+    if not s:
+        s = [(0.0, 0.0, 1.0, 1.0)]
+    return _Grid(s, cell_target or auto_cell_target(s, rows))
 
-    def sample(df: DataFrame, geom: str, bbox: Optional[tuple]) -> list[tuple]:
-        if bbox is None:
-            return collect_bbox_sample(df, geom)
-        return collect_bbox_sample_cols(df, bbox)
 
-    s = (
-        sample(build, build_geom, build_bbox)
-        or sample(probe, probe_geom, probe_bbox)
-        or [(0.0, 0.0, 1.0, 1.0)]
-    )
-    return _Grid(s, cell_target or auto_cell_target(s))
+def _spread_width(df: DataFrame) -> int:
+    """Width of the round-robin exchange a join side takes before its bbox
+    and cell projection; 0 for none.  No Spark job: the side's rows and
+    scan splits come from its parquet footers
+    (:func:`~dataclod_spark.registry.scan_layout`).
+
+    ``width = min(defaultParallelism, rows // arrow.maxRecordsPerBatch)``,
+    taken only when it exceeds the scan's splits: no spread task gets less
+    than one Arrow batch of rows, or it would pay a Python worker and a
+    stage for a partial batch (JVM-only sides cost less per row, so for
+    them the rule is conservative).  A single-split table of 10k rows
+    keeps its one task; 100k rows spread to 4 on 4 cores; inputs with many
+    splits — every input at scale — and sides of unknown layout (no local
+    parquet files) are left as they are, as is a batch size of 0 or less
+    (Spark's "no limit")."""
+    from dataclod_spark.registry import scan_layout
+
+    spark = df.sparkSession
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    layout = scan_layout(spark, df.inputFiles())
+    if layout is None or batch <= 0:
+        return 0
+    width = min(spark.sparkContext.defaultParallelism, layout.rows // batch)
+    return width if width > layout.splits else 0
 
 
 def spatial_join(
@@ -659,15 +727,14 @@ def spatial_join(
         right, right_geom, right_bbox, left, left_geom, left_bbox, cell_target
     )
 
-    # Parallelism guard: a small local input may arrive as a single file
-    # split, serializing the whole pipeline onto one core.  Round-robin
-    # repartition up to the cluster's parallelism — a no-op at scale, where
-    # the scan already yields >= defaultParallelism splits.
-    par = left.sparkSession.sparkContext.defaultParallelism
-    if left.rdd.getNumPartitions() < par:
-        left = left.repartition(par)
-    if right.rdd.getNumPartitions() < par:
-        right = right.repartition(par)
+    # A side whose scan has fewer splits than its rows can keep busy
+    # (:func:`_spread_width`) is round-robined up to that width — a no-op
+    # at scale, where the scan already has many splits.
+    lw, rw = _spread_width(left), _spread_width(right)
+    if lw:
+        left = left.repartition(lw)
+    if rw:
+        right = right.repartition(rw)
 
     # Each side gains its flat bbox (the bbox expressions resolve against
     # the side's own column names — overlapping right columns are renamed

@@ -335,7 +335,7 @@ def _side_sql(
     geom_col: str,
     grid,
     expand: float,
-    repartition: int | None = None,
+    repartition: int = 0,
     bbox_meta=None,
 ) -> str:
     """Derived relation with the flat bbox columns (``__bbx0``, ``__bby0``,
@@ -345,9 +345,9 @@ def _side_sql(
     exposed as ``__ix0``/``__iy0`` so the per-pair reference-point dedup in
     the ON clause is O(1).
 
-    ``repartition`` injects a REPARTITION hint below the bbox UDF when the
-    source scan has fewer splits than the cluster's parallelism (the
-    DataFrame path's parallelism guard; a no-op at scale).
+    ``repartition`` is the side's spread width
+    (``spatial_join._spread_width``, 0 for none): a REPARTITION hint below
+    the bbox UDF, as the DataFrame operator spreads its sides.
 
     ``bbox_meta`` (session.register_bbox) replaces the ``__st_bbox`` pandas
     UDF with pure codegen expressions over the view's own columns — the
@@ -561,12 +561,7 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
     # grid sampling become pure JVM on that side
     lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(rt, rgeom)
     grid = _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
-
-    # parallelism guard (mirrors the DataFrame operator): repartition a
-    # single-split local source up to the cluster's parallelism
-    par = session.spark.sparkContext.defaultParallelism
-    lpar = par if ldf.rdd.getNumPartitions() < par else None
-    rpar = par if rdf.rdd.getNumPartitions() < par else None
+    from dataclod_spark.operators.spatial_join import _spread_width
 
     e = float(expand)
     on_parts = _grid_on_parts(
@@ -574,8 +569,8 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
         lmeta, rmeta, conjuncts, spatial_idx,
     )
     new_from = (
-        f"FROM {_side_sql(lt, lgeom, grid, e, lpar, lmeta)} {la} "
-        f"JOIN {_side_sql(rt, rgeom, grid, 0.0, rpar, rmeta)} {ra} "
+        f"FROM {_side_sql(lt, lgeom, grid, e, _spread_width(ldf), lmeta)} {la} "
+        f"JOIN {_side_sql(rt, rgeom, grid, 0.0, _spread_width(rdf), rmeta)} {ra} "
         f"ON {' AND '.join(on_parts)} "
     )
     # the derived sides carry internal __cell/__bb* columns: stars in the
@@ -678,9 +673,8 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
                 return None
             lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(jt, rgeom)
             grid = _get_grid(session, jt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
-            par = session.spark.sparkContext.defaultParallelism
-            lpar = par if ldf.rdd.getNumPartitions() < par else None
-            rpar = par if rdf.rdd.getNumPartitions() < par else None
+            from dataclod_spark.operators.spatial_join import _spread_width
+
             e = float(expand)
             on_parts = _grid_on_parts(
                 la, ra, a1, c1, a2, c2, grid, e, pred_key, strict,
@@ -689,8 +683,8 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
             # splice: both relation texts swapped for their exploded forms,
             # the spatial ON replaced, everything else verbatim
             pieces = [
-                (lrel_span, f"{_side_sql(lt, lgeom, grid, e, lpar, lmeta)} {la}"),
-                (jrel_span, f"{_side_sql(jt, rgeom, grid, 0.0, rpar, rmeta)} {ra}"),
+                (lrel_span, f"{_side_sql(lt, lgeom, grid, e, _spread_width(ldf), lmeta)} {la}"),
+                (jrel_span, f"{_side_sql(jt, rgeom, grid, 0.0, _spread_width(rdf), rmeta)} {ra}"),
                 (jon_span, " AND ".join(on_parts) + " "),
             ]
             pieces.sort(key=lambda pr: pr[0][0])

@@ -19,7 +19,8 @@ import json
 import os
 import stat
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Callable, NamedTuple, Optional
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -191,21 +192,65 @@ def _parse_bytes(v: str) -> int:
 
 
 @functools.lru_cache(maxsize=1024)
-def _parquet_layout(path: str) -> tuple[int, int, int]:
-    """(bytes, row_groups, rows) for one parquet FILE, from the footer only.
+def _parquet_layout(path: str, mtime_ns: int, size: int) -> tuple[int, int] | None:
+    """(row_groups, rows) for one parquet FILE, from the footer only;
+    ``None`` when it is not a readable parquet file.
 
-    Cached: the driver data is immutable and ``load`` runs per query
-    construction — re-reading the same footer hundreds of times per bench
-    would be driver-side waste (guide §5).  Planning metadata, not results.
+    Cached by the file's ``(path, mtime_ns, size)``: ``load`` and the
+    spatial join's spread run per query construction, and re-reading the
+    same footer hundreds of times per bench would be driver-side waste
+    (guide §5).  Planning metadata, not results.
     """
-    size = os.path.getsize(path)
     try:
         import pyarrow.parquet as pq
 
         meta = pq.ParquetFile(path).metadata
-        return size, meta.num_row_groups, meta.num_rows
+        return meta.num_row_groups, meta.num_rows
     except Exception:
-        return size, 1 << 30, 1 << 62  # unknown: assume splittable/large
+        return None
+
+
+class ScanLayout(NamedTuple):
+    rows: int
+    # scan tasks that get rows: a task reads a row group iff the group's
+    # start offset falls inside its byte-range split
+    splits: int
+    byte_splits: int
+
+
+def scan_layout(spark: SparkSession, files: list[str]) -> ScanLayout | None:
+    """Rows and scan splits of a set of parquet files (a DataFrame's
+    ``inputFiles()``), read from their footers on the driver: no Spark job.
+
+    ``splits`` = Σ min(row groups, ⌈bytes / maxPartitionBytes⌉) per file,
+    ``byte_splits`` the byte-range term alone.  ``None`` when the layout is
+    unknown: no files, or one that is not a local parquet file (a remote
+    URI, another format).
+    """
+    if not files:
+        return None
+    max_bytes = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    rows = splits = byte_splits = 0
+    for f in files:
+        uri = urlparse(f)
+        if uri.scheme not in ("", "file"):
+            return None
+        path = unquote(uri.path) if uri.scheme else f
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        if not stat.S_ISREG(st.st_mode):
+            return None
+        layout = _parquet_layout(path, st.st_mtime_ns, st.st_size)
+        if layout is None:
+            return None
+        row_groups, n = layout
+        b = max(1, -(-st.st_size // max_bytes))
+        rows += n
+        splits += min(row_groups, b)
+        byte_splits += b
+    return ScanLayout(rows, splits, byte_splits)
 
 
 def _spread_unsplittable_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -213,40 +258,34 @@ def _spread_unsplittable_scan(spark: SparkSession, df: DataFrame, path: str) -> 
     session's core count (optimization guide §2.5 "input skew: one huge
     unsplittable file ... repartition immediately after the read").
 
-    A parquet ROW GROUP is the unit of split assignment: a task reads a row
-    group iff the group's start offset falls inside its byte-range split, so
-    a file with fewer row groups than the session has cores runs its whole
-    scan-side pipeline on that few tasks no matter what
-    ``spark.sql.files.maxPartitionBytes`` says.  The driver test data is
-    written as ONE row group per table — measured on d2 (5000 docs, 1.36M
-    md5 calls): the entire signature pass ran on 1 of 32 cores.
+    A parquet ROW GROUP is the unit of split assignment (see
+    :func:`scan_layout`), so a file with fewer row groups than the session
+    has cores runs its whole scan-side pipeline on that few tasks no matter
+    what ``spark.sql.files.maxPartitionBytes`` says.  The driver test data
+    is written as ONE row group per table — measured on d2 (5000 docs,
+    1.36M md5 calls): the entire signature pass ran on 1 of 32 cores.
 
     Scale-adaptive, not a local-mode constant: the decision compares the
-    file's effective parallelism ``min(byte_splits, row_groups)`` against
-    ``defaultParallelism`` (which follows ``local[$SPARK_GRAFT_CPUS]`` and,
-    on a cluster, the executor count), so production-sized inputs — many
-    files, many row groups — never take the extra exchange, and the shuffle
-    this adds for small inputs moves at most ``cores × maxPartitionBytes``
-    bytes.  ``spark.dataclod.spreadSmallScans=false`` disables it.
+    file's splits against ``defaultParallelism`` (which follows
+    ``local[$SPARK_GRAFT_CPUS]`` and, on a cluster, the executor count), so
+    production-sized inputs — many files, many row groups — never take the
+    extra exchange, and the shuffle this adds for small inputs moves at
+    most ``cores × maxPartitionBytes`` bytes.  An unreadable footer adds no
+    exchange.  ``spark.dataclod.spreadSmallScans=false`` disables it.
     """
     try:
         cores = spark.sparkContext.defaultParallelism
-        if cores <= 1 or not os.path.isfile(path):
+        if cores <= 1:
             return df
-        size, row_groups, rows = _parquet_layout(path)
-        max_bytes = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        byte_splits = max(1, -(-size // max_bytes))
-        effective = min(byte_splits, row_groups)
-        if effective >= cores:
+        layout = scan_layout(spark, [path])
+        if layout is None or layout.splits >= cores:
             return df
         # fewer rows than ~4/core: the exchange costs more than it feeds
-        if rows < 4 * cores:
+        if layout.rows < 4 * cores:
             return df
     except Exception:
         return df
-    return df.repartition(max(cores, byte_splits))
+    return df.repartition(max(cores, layout.byte_splits))
 
 
 def dsum(col, scale: int = 6):

@@ -805,10 +805,11 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
     transform measured a clear win (st17's gram join 7.9 -> 3.9 s, st12's
     dedup screen ~2 s); light per-batch transforms (dsir score, token
     buckets, quality grid, span positions) measured wash-to-loss from the
-    extra exchange and stay narrow.  Guarded like the spatial operator's
-    runtime spread: an already-wide batch (a production trigger covering
-    many files) passes through untouched, so this only fires when the
-    batch is demonstrably narrower than the session.  Per-id exact
+    extra exchange and stay narrow.  An already-wide batch (a production
+    trigger covering many files) passes through untouched, so this only
+    fires when the batch is demonstrably narrower than the session (a
+    micro-batch has no footers to read, unlike the spatial join's spread,
+    so this counts its partitions).  Per-id exact
     aggregates downstream make the result partitioning-invariant."""
     sc = batch_df.sparkSession.sparkContext
     try:

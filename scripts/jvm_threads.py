@@ -18,8 +18,9 @@ of the same figures:
 - ``py4j``: ``Thread-N``, the threads py4j serves Python calls on;
 - ``main``: the thread named ``java``, which runs JVM start and the class
   loading before the py4j gateway is up;
-- ``exchange``: AQE's ``shuffle-exchange-*``, ``broadcast-exchange-*``
-  and ``ResultQueryStage*`` pools, where stage planning and codegen run;
+- ``exchange``: AQE's ``shuffle-exchange-*``, ``broadcast-exchange-*``,
+  ``ResultQueryStage*`` and ``QueryStageCreator*`` pools, where stage
+  planning and codegen run;
 - ``other``: the rest (Spark's own services).
 
 Linux keeps the first 15 characters of a thread name, so the groups match
@@ -83,7 +84,9 @@ def group(name: str) -> str:
         return "py4j"
     if name == "java":
         return "main"
-    if name.startswith(("shuffle-exchang", "broadcast-excha", "ResultQueryStag")):
+    if name.startswith(
+        ("shuffle-exchang", "broadcast-excha", "ResultQueryStag", "QueryStageCreat")
+    ):
         return "exchange"
     return "other"
 

@@ -106,3 +106,17 @@ def test_measured_opt_outs_stay_unspread(spark):
     assert "roundrobinpartitioning" in _physical_plan(
         reg["q1_pricing_summary"].fn(spark, sf)
     ).lower()
+
+
+def test_scan_layout_from_footers(spark, tmp_path):
+    """Rows and splits come from the footers of local parquet files; any
+    other input (no files, a remote URI, another format) is unknown."""
+    from dataclod_spark.registry import scan_layout
+
+    events = load(spark, SF_SMOKE, "events")
+    layout = scan_layout(spark, events.inputFiles())
+    assert layout.rows == events.count() and layout.splits == layout.byte_splits == 1
+    (tmp_path / "t.csv").write_text("a\n1\n")
+    assert scan_layout(spark, []) is None
+    assert scan_layout(spark, ["s3a://bucket/t.parquet"]) is None
+    assert scan_layout(spark, [(tmp_path / "t.csv").as_uri()]) is None

@@ -1215,3 +1215,40 @@ def test_dispatch_views_do_not_outlive_their_statement(engine, lexer_views):
     assert sorted((r.id, r.bid) for r in outer.collect()) == [(i, 0) for i in range(6)]
     assert len(list(outer.limit(2).toLocalIterator())) == 2
     assert semi.collect() == []
+
+
+def test_dispatch_over_parquet_views_runs_only_the_grid_sample(engine, tmp_path):
+    """A dispatched join over registered parquet views plans with one Spark
+    job, the grid sample, on a cold grid cache and none on a warm one: no
+    partition-count probe and no sampling shuffle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataclod_spark.operators.spatial_join import clear_bbox_sample_cache
+    from dataclod_spark.registry import read_parquet
+    from dataclod_spark.testing import count_jobs
+
+    rnd = random.Random(17)
+    points = [(i, make_point(rnd.uniform(0, 100), rnd.uniform(0, 100))) for i in range(300)]
+    boxes = []
+    for i in range(30):
+        x, y = rnd.uniform(0, 90), rnd.uniform(0, 90)
+        boxes.append((i, make_envelope(x, y, x + rnd.uniform(1, 10), y + rnd.uniform(1, 10))))
+    for name, rows in (("pq_pts", points), ("pq_boxes", boxes)):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"id": [i for i, _ in rows],
+                                 "geom": [GC.wkb_write(g) for _, g in rows]}), path)
+        read_parquet(engine.spark, path).createOrReplaceTempView(name)
+    sql = ("SELECT p.id AS pid, b.id AS bid FROM pq_pts p JOIN pq_boxes b "
+           "ON ST_Intersects(p.geom, b.geom)")
+    clear_bbox_sample_cache()
+    engine.clear_spatial_grid_cache()
+    frames = []
+    assert count_jobs(engine.spark, lambda: frames.append(engine.sql(sql))) == 1
+    assert count_jobs(engine.spark, lambda: frames.append(engine.sql(sql))) == 0
+    want = {(pi, bi) for pi, pg in points for bi, bg in boxes if GP.intersects(pg, bg)}
+    for df in frames:
+        assert "__cell" in _plan(df)
+        assert {(r.pid, r.bid) for r in df.collect()} == want and want
+    clear_bbox_sample_cache()
+    engine.clear_spatial_grid_cache()

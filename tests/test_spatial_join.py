@@ -187,21 +187,73 @@ def test_auto_cell_target_adapts():
         auto_cell_target,
     )
 
-    # 10k-point sample (cap hit => >=1M estimated rows): fine grid
+    # 10k-point sample of a 1M-row side: fine grid
     import random
 
     rnd = random.Random(7)
     pts = [(x, y, x, y) for x, y in ((rnd.uniform(0, 100), rnd.uniform(0, 100)) for _ in range(10_000))]
-    fine = auto_cell_target(pts)
-    # 1.2k-point sample (small input): coarse grid
-    coarse = auto_cell_target(pts[:1_200])
+    fine = auto_cell_target(pts, 1_000_000)
+    # a 1.2k-row side sampled whole: coarse grid
+    coarse = auto_cell_target(pts[:1_200], 1_200)
     assert fine > coarse >= MIN_AUTO_CELLS
     # huge overlapping boxes (each ~half the extent): explode budget wins,
     # grid collapses to a handful of cells
     big = [(x, y, x + 50, y + 50) for x, y, _, _ in pts[:5_000]]
-    assert auto_cell_target(big) <= 16
+    assert auto_cell_target(big, 5_000) <= 16
     # empty sample: sane default
-    assert auto_cell_target([]) == 1024
+    assert auto_cell_target([], 0) == 1024
+
+
+def _write_points(path, n: int) -> None:
+    """A one-file, one-row-group parquet side of ``n`` WKB points with
+    their coordinates (written by pyarrow: no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rnd = random.Random(n)
+    xs = [rnd.uniform(0, 100) for _ in range(n)]
+    ys = [rnd.uniform(0, 100) for _ in range(n)]
+    pq.write_table(
+        pa.table({
+            "id": list(range(n)),
+            "x": xs,
+            "y": ys,
+            "geom": [GC.wkb_write(make_point(x, y)) for x, y in zip(xs, ys)],
+        }),
+        str(path),
+        row_group_size=n,
+    )
+
+
+def test_whole_side_sample_sizes_grid_by_its_rows(spark, tmp_path):
+    """A side the footers show at ≤ 11k rows is sampled whole, in one job,
+    and the grid is sized by its row count: 5,000 points give 64 cells
+    (the old estimate from a head ∪ 1% pool read 400,000 rows, 195 cells).
+    A larger side takes one Bernoulli job: max(1%, 1k rows) of 40,000."""
+    from dataclod_spark.operators import spatial_join as SJ
+    from dataclod_spark.registry import read_parquet
+    from dataclod_spark.testing import count_jobs
+
+    _write_points(tmp_path / "small.parquet", 5_000)
+    _write_points(tmp_path / "big.parquet", 40_000)
+    small = read_parquet(spark, str(tmp_path / "small.parquet"))
+    big = read_parquet(spark, str(tmp_path / "big.parquet"))
+    SJ.clear_bbox_sample_cache()
+    out = []
+    assert count_jobs(spark, lambda: out.append(SJ.bbox_sample(small, "geom"))) == 1
+    sample, rows = out[0]
+    assert len(sample) == rows == 5_000
+    assert SJ.auto_cell_target(sample, rows) == SJ.MIN_AUTO_CELLS
+    assert count_jobs(spark, lambda: out.append(SJ.bbox_sample(big, "", ("x", "y", "x", "y")))) == 1
+    sample, rows = out[1]
+    assert 800 <= len(sample) <= 1_200 and 32_000 <= rows <= 48_000
+    # the small side read as several byte-range partitions: still one job
+    split = spark.newSession()
+    split.conf.set("spark.sql.files.maxPartitionBytes", "32k")
+    small = read_parquet(split, str(tmp_path / "small.parquet")).select("id", "geom")
+    assert count_jobs(split, lambda: out.append(SJ.bbox_sample(small, "geom"))) == 1
+    assert len(out[2][0]) == 5_000
+    SJ.clear_bbox_sample_cache()
 
 
 def test_auto_cell_target_default_join_correct(spark):
@@ -294,17 +346,88 @@ def test_complex_polygon_join_matches_brute_force(spark):
     assert expected_dw >= expected
 
 
-def test_operator_build_runs_only_the_grid_sample_job(spark):
-    """Building a join with a non-exact probe side runs only the grid's
-    bbox-sample collect (3 jobs: its limits run incrementally); no
-    probe-side statistics job picks a refine mode (it took 4 more)."""
+def test_filtered_side_sample_tops_up_with_a_head_slice(spark, tmp_path):
+    """A filter above the scan thins the footer-sized Bernoulli sample (1k
+    of 40k rows, 1 in 50 kept: about 20): a head limit(1k) follows, which
+    here comes back short and so is the whole filtered side."""
     from dataclod_spark.operators import spatial_join as SJ
+    from dataclod_spark.registry import read_parquet
+    from dataclod_spark.testing import count_jobs
+
+    _write_points(tmp_path / "pts.parquet", 40_000)
+    kept = read_parquet(spark, str(tmp_path / "pts.parquet")).filter("id % 50 = 0")
+    SJ.clear_bbox_sample_cache()
+    out = []
+    assert count_jobs(spark, lambda: out.append(SJ.bbox_sample(kept, "", ("x", "y", "x", "y")))) == 2
+    sample, rows = out[0]
+    assert len(sample) == rows == 800
+    SJ.clear_bbox_sample_cache()
+
+
+def test_operator_build_runs_only_the_grid_sample_job(spark, tmp_path):
+    """Building a join runs only the grid's bbox-sample collect: one job
+    for a file-backed build side (its footers give its size), at most two
+    for a driver-held one (a head limit over its partitions).  No
+    partition-count probe, no probe-side statistics job, no shuffle."""
+    from dataclod_spark.operators import spatial_join as SJ
+    from dataclod_spark.registry import read_parquet
     from dataclod_spark.testing import count_jobs
 
     _, _, bdf, gdf = _ngon_workload(spark)
     SJ.clear_bbox_sample_cache()
-    assert count_jobs(spark, lambda: SJ.spatial_join(gdf, bdf, "intersects", cell_target=16)) == 3
+    assert count_jobs(spark, lambda: SJ.spatial_join(gdf, bdf, "intersects", cell_target=16)) <= 2
+    _write_points(tmp_path / "pts.parquet", 2_000)
+    pts = read_parquet(spark, str(tmp_path / "pts.parquet"))
+    assert count_jobs(spark, lambda: SJ.spatial_join(gdf, pts, "intersects")) == 1
     SJ.clear_bbox_sample_cache()
+
+
+def test_spread_decision_runs_no_job(spark):
+    from conftest import SF_CORRECT
+
+    from dataclod_spark.operators.spatial_join import _spread_width
+    from dataclod_spark.registry import load
+    from dataclod_spark.testing import count_jobs
+
+    events = load(spark, SF_CORRECT, "events").filter("event_id % 50 = 0")
+    assert count_jobs(spark, lambda: _spread_width(events)) == 0
+
+
+def test_single_split_side_spreads_by_arrow_batches(spark):
+    """A one-split side takes a RoundRobinPartitioning(min(slots, rows //
+    batch)) exchange when its rows fill that many Arrow batches, and none
+    at the default batch size; the join's rows are the same both ways."""
+    from conftest import SF_SMOKE
+
+    from dataclod_spark.operators.spatial_join import spatial_join
+    from dataclod_spark.registry import load, scan_layout
+
+    def join(session):
+        e = load(session, SF_SMOKE, "events")
+        pts = e.select("event_id", (F.col("event_id") % 89).cast("double").alias("px"),
+                       (F.col("user_id") % 43).cast("double").alias("py"))
+        boxes = e.filter(F.col("event_id") % 50 == 0).select(
+            F.col("event_id").alias("box_id"),
+            (F.col("event_id") % 97).cast("double").alias("bx"),
+            (F.col("user_id") % 41).cast("double").alias("by"),
+        )
+        j = spatial_join(pts, boxes, "intersects", left_bbox=("px", "py", "px", "py"),
+                         right_bbox=("bx", "by", "bx + 4", "by + 3"), refine="none")
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted((r.event_id, r.box_id) for r in j.collect()), e
+
+    slots = spark.sparkContext.defaultParallelism
+    plan, want, e = join(spark)
+    assert "RoundRobinPartitioning" not in plan
+    rows = scan_layout(spark, e.inputFiles()).rows
+    batch = max(1, rows // slots)
+    small = spark.newSession()
+    small.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+    plan, got, _ = join(small)
+    width = min(slots, rows // batch)
+    if width > 1:
+        assert f"RoundRobinPartitioning({width})" in plan
+    assert got == want and got
 
 
 def test_dbscan_planted_blobs(spark):
